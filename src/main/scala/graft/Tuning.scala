@@ -11,6 +11,14 @@ import org.apache.spark.storage.StorageLevel
   *    small partitions after each exchange. At 1000 executors × 4
   *    cores that's 8000 — never the 200 default, which would put
   *    12.5 GB in every reducer at 100 TB.
+  *  - `parallelPartitionDiscovery.parallelism`: the same ~2× total
+  *    cores. Above 32 root paths (a directory glob expands to one
+  *    root path per file) `InMemoryFileIndex` lists them with a Spark
+  *    job of `min(paths, this)` tasks. Spark's default of 10000 means
+  *    one task per file, so every file-stream trigger would launch a
+  *    task per file in the drop directory. At 2× cores the listing
+  *    stays distributed (a 100k-object S3 prefix is still listed in
+  *    parallel) without per-file scheduling overhead.
   *  - `files.maxPartitionBytes` 128 MiB: a scan task's working set
   *    must fit the per-core memory slice (executor-mem ×
   *    memory-fraction / cores, typically ~1 GiB) with room for the
@@ -31,18 +39,27 @@ import org.apache.spark.storage.StorageLevel
   */
 object Tuning {
 
+  /** The sizing rules for a deployment with `totalCores` cores, as
+    * (conf key, value) pairs in the order [[configure]] applies them. */
+  def rules(totalCores: Int): Seq[(String, String)] = {
+    val fanOut = math.max(totalCores * 2, 8).toString
+    Seq(
+      "spark.sql.shuffle.partitions" -> fanOut,
+      "spark.sql.sources.parallelPartitionDiscovery.parallelism" -> fanOut,
+      "spark.sql.files.maxPartitionBytes" -> s"${128 * 1024 * 1024}",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> s"${64 * 1024 * 1024}",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+  }
+
   /** Apply the sizing rules for a deployment with `totalCores` cores.
     * Local test sessions pass the local core count; a cluster deploy
     * passes executors × cores-per-executor. */
-  def configure(b: SparkSession.Builder, totalCores: Int): SparkSession.Builder = b
-    .config("spark.sql.shuffle.partitions", math.max(totalCores * 2, 8))
-    .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def configure(b: SparkSession.Builder, totalCores: Int): SparkSession.Builder =
+    rules(totalCores).foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** Pin a multi-consumer frame so its upstream scan runs exactly once
     * (Catalyst reuses exchanges only for byte-identical subtrees, which

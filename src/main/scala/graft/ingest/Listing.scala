@@ -1,22 +1,29 @@
 package graft.ingest
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Directory-listing scan (SURVEY.md §2 #1-4): Spark's `binaryFile`
-  * source replaces the reference's `FtpFileLister` (`FtpFileLister.scala:
-  * 27-53`). The glob goes straight into the load path, where Catalyst's
-  * `InMemoryFileIndex` performs the same directory-pruned descent the
-  * reference hand-rolls (it never lists subtrees that can't match), but
-  * parallelized across the cluster for large directory trees.
+/** Directory listing and fetch (SURVEY.md §2 #1-4), replacing the
+  * reference's `FtpFileLister` (`FtpFileLister.scala:27-53`).
   *
-  * Listing is metadata-only: `content` is not selected, and the
-  * binaryFile source prunes the column, so no byte is downloaded before
-  * the change-detection filter decides it must be (mirrors the
-  * reference's list-before-fetch split, at executor scale).
+  * Listing expands each monitored glob with Hadoop `globStatus`, the
+  * same directory-pruned descent the reference hand-rolls (it never
+  * lists subtrees that can't match). [[list]] runs it on the driver, as
+  * the reference's LIST did; only [[listAll]] with `distributeThreshold`
+  * (8) or more specs distributes, one executor task per slice of specs.
+  * The streaming face instead hands its glob to Spark's file source,
+  * whose `InMemoryFileIndex` lists the expansion with a Spark job sized
+  * by `Tuning`'s listing fan-out rule.
+  *
+  * Listing is metadata-only: no byte is downloaded before the
+  * change-detection filter decides it must be ([[fetch]] reads only the
+  * changed rows), mirroring the reference's list-before-fetch split.
   */
 object Listing {
+
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   /** binaryFile's fixed schema (needed explicitly for readStream). */
   val binaryFileSchema: StructType = StructType(Seq(
@@ -188,7 +195,7 @@ object Listing {
   /** `skipped` (when given) counts files dropped by the per-file
     * IOException catch below — a permanently unreadable file (e.g.
     * bad permissions) is otherwise skipped on EVERY poll with only an
-    * executor-stderr line to show for it; the accumulator makes the
+    * executor log line to show for it; the accumulator makes the
     * condition observable from the driver (see Monitor.PollOutput). */
   def fetch(
       spark: SparkSession,
@@ -266,7 +273,7 @@ object Listing {
             // IOException subclass). Logged so a permanently
             // unreadable file is diagnosable from the executor log.
             case e: java.io.IOException =>
-              System.err.println(
+              log.warn(
                 s"[graft.fetch] skipping unreadable $uri (retry next poll): $e")
               skipped.foreach(_.add(1L))
               Iterator.empty

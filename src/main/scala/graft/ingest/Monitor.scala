@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,6 +26,8 @@ import org.apache.spark.sql.functions._
   *    streaming variant keep it in the state store) between polls.
   */
 object Monitor {
+
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   /** `cleanup` releases the poll's cached intermediate — call it once
     * `records` and `newState` have both been materialized (collected or
@@ -171,7 +174,7 @@ object Monitor {
             // fail the whole batch. Logged so a permanently
             // unreadable file is diagnosable from the executor log.
             case e: java.io.IOException =>
-              System.err.println(
+              log.warn(
                 s"[graft.poll] skipping unreadable $path (retry next poll): $e")
               skippedAcc.add(1L)
               Iterator.empty

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The poll *task* loop (SURVEY.md §3.2 steps 1-3; reference
@@ -146,7 +147,7 @@ final class PollDriver(
         // a swallowed cause turns every operational problem into a
         // silent -1 stall; surface it before escalating the backoff
         // (the reference lets the Connect framework log it)
-        System.err.println(
+        PollDriver.log.warn(
           s"[graft.PollDriver] poll failed (backoff ${backoff.intervalMs} ms " +
             s"-> next attempt gated): $e")
         lastFailureCause = Some(e)
@@ -169,4 +170,8 @@ final class PollDriver(
         Thread.sleep(cfg.refresh.toMillis)
     }
   }
+}
+
+private object PollDriver {
+  private val log = LogManager.getLogger(classOf[PollDriver])
 }

@@ -23,6 +23,14 @@ import graft.ingest.{FileChangeRecord, Listing}
   * the batch poll loop (`graft.ingest.Monitor`), which the driver can run
   * on a `Trigger.AvailableNow`-style schedule with parquet state.
   *
+  * Listing cost: the file source expands the glob into one root path
+  * per matched file and lists that whole expansion three times per
+  * `Trigger.AvailableNow` drain (twice at start, once in `getBatch`)
+  * and once per `ProcessingTime` trigger, so the glob's expansion size,
+  * not the number of new files, sets the per-trigger cost. Above 32
+  * paths each listing is a Spark job whose task count
+  * `graft.Tuning.rules` caps at ~2× cores.
+  *
   * Rate limiting: `maxFilesPerTrigger` is the streaming analog of the
   * reference's `ftp.max.poll.records` carry-over pagination
   * (`FtpSourceTask.scala:47-52`) — excess files stay queued in the

@@ -6,7 +6,7 @@ import java.nio.file.{Files, StandardOpenOption}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.TestSpark
+import graft.{TestSpark, Tuning}
 
 /** Streaming tail over chunked uploads: chunks of a logical file arrive
   * across micro-batches; `flatMapGroupsWithState` stitches them into
@@ -49,6 +49,68 @@ class FileStreamPipelineSpec extends AnyFunSuite with Matchers {
       // reconstructing the logical file from deltas yields the full content
       aRows.map(_._3).mkString shouldBe "hello world!"
     } finally q.stop()
+  }
+
+  test("an AvailableNow drain above the parallel-listing threshold lists " +
+      "with Tuning's fan-out and stitches every logical file") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-drain")
+    val ckpt = Files.createTempDirectory("graft-drain-ckpt")
+    // 8 logical files x 5 parts = 40 root paths, above the 32-path
+    // threshold where InMemoryFileIndex lists with a Spark job
+    val parts = for (f <- 0 until 8; i <- 0 until 5) yield (f, i, s"f$f-p$i" * (i + 1))
+    parts.foreach { case (f, i, body) =>
+      Files.write(dir.resolve(s"log$f.part$i"), body.getBytes(UTF_8))
+    }
+
+    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    val listingTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = s"sentinel-$dir"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (desc.startsWith("Listing leaf files") && desc.contains(dir.toString))
+          listingTasks.add(e.stageInfos.map(_.numTasks).sum)
+        if (desc == sentinel) sentinelSeen.countDown()
+      }
+    }
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, Tuning.rules(4).toMap.apply(key))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = FileStreamPipeline.changeRecords(spark, s"$dir/*", "drain")
+        .writeStream.format("memory").queryName("drain_out")
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      // listener events arrive in order: once the sentinel job is seen,
+      // every listing job of the drain has been seen too
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+
+      listingTasks.size should be > 0
+      // one task per path would be 40; Tuning caps the fan-out at 8 on 4 cores
+      listingTasks.asScala.foreach(_ should be <= 8)
+
+      val got = spark.table("drain_out").collect()
+        .map(r => (r.getAs[String]("path").split('/').last, r.getAs[Long]("offset"),
+          new String(r.getAs[Array[Byte]]("value"), UTF_8)))
+        .sortBy(r => (r._1, r._2)).toSeq
+      val expected = parts.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (f, ps) =>
+        val bodies = ps.sortBy(_._2).map(_._3)
+        val offsets = bodies.scanLeft(0L)(_ + _.length)
+        bodies.zip(offsets).map { case (b, o) => (s"log$f", o, b) }
+      }
+      got shouldBe expected
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("watermarked ingest stats: append mode emits a window only after the watermark passes it") {
