@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 
 /** Session sizing for the target deployment, stated as rules rather
   * than magic numbers (SURVEY.md §7; the 100 TB design contract):
@@ -61,34 +60,11 @@ object Tuning {
   def configure(b: SparkSession.Builder, totalCores: Int): SparkSession.Builder =
     rules(totalCores).foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
-  /** Pin a multi-consumer frame so its upstream scan runs exactly once
-    * (Catalyst reuses exchanges only for byte-identical subtrees, which
-    * self-join alias resolution breaks — without pinning, each consumer
-    * re-runs the source scan).
-    *
-    * Strategy is a deployment choice, selected by `spark.graft.scanOnce`:
-    *  - `localCheckpoint` (default): eager materialization on executor
-    *    local storage — fastest, right for local/ephemeral sessions and
-    *    for plans that also need lineage truncation. NOT fault-tolerant:
-    *    losing an executor aborts the query.
-    *  - `persist`: lazy `DISK_ONLY_2` persistence — 2-replica blocks
-    *    survive a single executor loss and missing partitions recompute
-    *    from lineage, the right trade on a 1000-executor cluster where
-    *    some executor loss per 100 TB query is expected.
-    *
-    * Callers that need checkpointing for CORRECTNESS (frozen layout or
-    * frozen nondeterministic ids, e.g. `Relational.globalNtile`) must
-    * keep calling `localCheckpoint` directly, not this. */
-  def scanOnce(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.scanOnce", "localCheckpoint") match {
-      case "persist" => df.persist(StorageLevel.DISK_ONLY_2)
-      case _         => df.localCheckpoint(eager = true)
-    }
-
   /** Root of the persisted-artifact tier (PQ/IVF/NSW indexes, z-order
     * cut tables, compaction output, multimodal tar shards), selected by
-    * `spark.graft.artifactsRoot` — a deployment choice like
-    * [[scanOnce]]'s:
+    * `spark.graft.artifactsRoot` — a deployment choice like the pin
+    * strategy (`spark.graft.pin`, see
+    * [[org.apache.spark.sql.graftshim.Shim.pin]]):
     *
     *  - default `file:<java.io.tmpdir>/graft_artifacts`: right for
     *    local/single-JVM sessions (tests, the bench), where driver and

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.logging.log4j.LogManager
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -103,7 +104,7 @@ object Monitor {
     // driver memory. The checkpoint pins the small metadata frame for
     // its three consumers (empty probe, spec map, fetch).
     val toFetch = changed.join(keptPaths, Seq("path"), "left_semi")
-      .localCheckpoint(true)
+      .pin()
 
     if (toFetch.isEmpty) return PollOutput(spark.emptyDataset[FileChangeRecord], state)
     // one row per (path, spec): a path matched by several monitored specs

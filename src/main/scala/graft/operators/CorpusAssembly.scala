@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -248,7 +249,7 @@ object CorpusAssembly extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val docs = Tables.documents(s, d).select($"doc_id", $"source")
-          .localCheckpoint(true) // anchor side + negative side
+          .pin() // anchor side + negative side
         val n = docs.agg(count(lit(1)).as("n_docs"))
         docs.crossJoin(broadcast(n))
           .select($"doc_id", $"source".as("a_source"),
@@ -312,7 +313,7 @@ object CorpusAssembly extends QueryPack {
           .withColumn("quota",
             $"base" + when($"rk" <= $"extras", 1L).otherwise(0L))
           .select($"lang", $"n", $"wu", $"quota")
-          .localCheckpoint(true) // join side + output side
+          .pin() // join side + output side
         val wS = Window.partitionBy($"lang")
           .orderBy(expr(gateExpr), $"doc_id")
         val sampled = Tables.documents(s, d)
@@ -385,7 +386,7 @@ object CorpusAssembly extends QueryPack {
     "llm_dataset_card" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val docs = Tables.documents(s, d).localCheckpoint(true)
+        val docs = Tables.documents(s, d).pin()
         val a1 = docs.agg(
           count(lit(1)).as("n_docs"),
           countDistinct($"lang").as("n_langs"),
@@ -582,7 +583,7 @@ object CorpusAssembly extends QueryPack {
           .groupBy($"band")
           .agg(sum(when($"is_train", 1L).otherwise(0L)).as("n_train"),
             sum(when(!$"is_train", 1L).otherwise(0L)).as("n_val"))
-          .localCheckpoint(true) // totals + the term projection
+          .pin() // totals + the term projection
         val tot = bands.agg(
           (sum($"n_train") + 8L).as("tt"), (sum($"n_val") + 8L).as("tv"))
         bands.crossJoin(broadcast(tot))
@@ -742,7 +743,7 @@ object CorpusAssembly extends QueryPack {
           // checkpointed: the eval and train splits below both read this
           // frame — without it each side re-runs the gram expansion and
           // its distinct shuffle
-          .localCheckpoint(true)
+          .pin()
         val eval = grams.filter($"source".isin("src0", "src1"))
           .select($"doc_id".as("eval_doc"), $"gram")
         val train = grams.filter(!$"source".isin("src0", "src1"))
@@ -798,7 +799,7 @@ object CorpusAssembly extends QueryPack {
                   concat_ws(" ", slice($"tokens", i - 7, lit(8))))).as("grams")))
           .select($"doc_id", explode($"grams").as("gram"))
           .distinct()
-          .localCheckpoint(true) // first-occurrence table + per-doc census
+          .pin() // first-occurrence table + per-doc census
         val firstDoc = grams.groupBy($"gram")
           .agg(min($"doc_id").as("first_doc"))
         grams.join(firstDoc, Seq("gram"))
@@ -856,7 +857,7 @@ object CorpusAssembly extends QueryPack {
                   concat_ws(" ", slice($"tokens", i - 7, lit(8))))).as("grams")))
           .select($"doc_id", $"is_train", explode($"grams").as("gram"))
           .distinct()
-          .localCheckpoint(true) // train set + val side
+          .pin() // train set + val side
         val train = grams.filter($"is_train").select($"gram").distinct()
         val valg = grams.filter(!$"is_train").select($"doc_id", $"gram")
         val seen = valg.join(train, Seq("gram"), "left_semi")
@@ -982,7 +983,7 @@ object CorpusAssembly extends QueryPack {
             Tables.documents(s, d).select($"doc_id", tokens.as("toks")))
           .select($"doc_id", $"toks",
             length(array_join($"toks", " ")).cast(LongType).as("doc_len"))
-          .localCheckpoint(true) // ONE corpus scan: grid + rule frame
+          .pin() // ONE corpus scan: grid + rule frame
         val grams = base
           .select($"doc_id",
             explode(graft.functions.GopherGrams.gopher_grams($"toks")).as("g"))
@@ -1115,7 +1116,7 @@ object CorpusAssembly extends QueryPack {
         // counts (sum over 20 rows), not a second corpus scan
         val counts = Tables.documents(s, d).groupBy($"source")
           .agg(count(lit(1)).as("n_src"))
-          .localCheckpoint(true)
+          .pin()
         val total = counts.agg(sum($"n_src").as("n_total"))
         Tables.documents(s, d)
           .join(broadcast(weights.join(counts, "source")), "source")
@@ -1246,7 +1247,7 @@ object CorpusAssembly extends QueryPack {
               "collect_list(struct(pos, term))), x -> x.term)"), " ")
               .as("phrase"),
             count(lit(1)).as("len"))
-          .localCheckpoint(true) // word stats + the phrase-score join
+          .pin() // word stats + the phrase-score join
         val wordOcc = ph.select($"len",
           explode(split($"phrase", " ")).as("term"))
         val wsc = wordOcc.groupBy($"term")
@@ -1572,14 +1573,14 @@ object CorpusAssembly extends QueryPack {
         import s.implicits._
         val counts = Tables.documents(s, d).groupBy($"lang")
           .agg(count(lit(1)).as("n_lang"))
-          .localCheckpoint(true) // feeds the weight sum AND the rate join
+          .pin() // feeds the weight sum AND the rate join
         val sw = counts
           .agg(sum(round(sqrt($"n_lang"), 9).cast(DecimalType(27, 9)))
             .cast(DoubleType).as("sw"))
         val rates = counts.crossJoin(broadcast(sw))
           .withColumn("rate", least(lit(1.0),
             lit(TemperatureBudget) * round(sqrt($"n_lang"), 9) / $"sw" / $"n_lang"))
-          .localCheckpoint(true) // feeds the gate join AND the census
+          .pin() // feeds the gate join AND the census
         val kept = Tables.documents(s, d)
           .join(broadcast(rates.select($"lang", $"rate")), "lang")
           .filter(expr(gateExpr) < $"rate" * 1000000.0)
@@ -1630,7 +1631,7 @@ object CorpusAssembly extends QueryPack {
         import s.implicits._
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .select($"doc_id", $"source", explode($"tokens").as("term"))
-          .localCheckpoint() // vocab counts + the scored join
+          .pin() // vocab counts + the scored join
         val counts = toks.groupBy($"term").agg(count(lit(1)).as("c"))
         val total = counts.agg(sum($"c").as("n_total"))
         val dom = toks.join(counts, Seq("term"))
@@ -1643,7 +1644,7 @@ object CorpusAssembly extends QueryPack {
             count(lit(1)).as("n_tokens"),
             (sum($"surprisal") * 1000000).cast(LongType).as("su_units"))
           .withColumn("loss_micro", expr("su_units div n_tokens"))
-          .localCheckpoint(true) // ref mean + the weight rows
+          .pin() // ref mean + the weight rows
         val ref = dom.agg(expr("sum(su_units) div sum(n_tokens)")
           .as("ref_micro"))
         val wts = dom.crossJoin(broadcast(ref))
@@ -1652,7 +1653,7 @@ object CorpusAssembly extends QueryPack {
           .withColumn("w",
             round(exp($"excess_micro".cast(DoubleType) / 1000000.0 * 0.1), 6)
               .cast(DecimalType(20, 6)))
-          .localCheckpoint(true) // weight sum + the output rows
+          .pin() // weight sum + the output rows
         val sw = wts.agg(sum($"w").cast(DoubleType).as("sum_w"))
         wts.crossJoin(broadcast(sw))
           .select($"source", $"n_docs", $"n_tokens", $"loss_micro",
@@ -1730,7 +1731,7 @@ object CorpusAssembly extends QueryPack {
               $"n_toks".cast("int")), " ")))
           .select($"doc_id", expr("start div 24").as("chunk_no"),
             $"start".as("tok_start"), $"n_toks", $"fp")
-          .localCheckpoint(true) // census + the join back
+          .pin() // census + the join back
         val cnt = ch.groupBy($"fp").agg(count(lit(1)).as("fp_count"))
         ch.join(cnt, Seq("fp"))
           .select($"doc_id", $"chunk_no", $"tok_start", $"n_toks",
@@ -1815,7 +1816,7 @@ object CorpusAssembly extends QueryPack {
                   "keeper key — widen the key"))))
           .select($"doc_id", $"para_no", $"n_toks", $"para_str",
             $"fp", $"kk")
-          .localCheckpoint(true) // keeper census + the join back
+          .pin() // keeper census + the join back
         val keeper = ch.groupBy($"fp").agg(min($"kk").as("keep_kk"))
         ch.join(keeper, Seq("fp"))
           .withColumn("kept", ($"kk" === $"keep_kk").cast("long"))
@@ -1996,7 +1997,7 @@ object CorpusAssembly extends QueryPack {
     val caps = counts
       .select(col("source"), col("nd").cast(LongType).as("nd"),
         (col("nd") * epochs).cast(LongType).as("cap"))
-      .localCheckpoint(true) // pins the census for the search passes
+      .pin() // pins the census for the search passes
     val m = caps.count()
     if (m <= seqPathMax) {
       probe("sequential")
@@ -2132,7 +2133,7 @@ object CorpusAssembly extends QueryPack {
               transform(sequence(1, least($UniMaxPiece, length(word) - i + 1)),
                 k -> substring(word, i, k))))""")).as("piece"))
       .groupBy($"piece").agg(sum($"f").as("c"))
-      .localCheckpoint(true) // the top-K sort + the singles filter
+      .pin() // the top-K sort + the singles filter
     sub.orderBy($"c".desc, $"piece").limit(UniSeedK)
       .unionByName(sub.filter(length($"piece") === 1))
       .distinct()
@@ -2217,7 +2218,7 @@ object CorpusAssembly extends QueryPack {
     import seg.sparkSession.implicits._
     val vit = seg.select(explode($"pieces").as("piece"), $"f")
       .groupBy($"piece").agg(sum($"f").as("vc_n"))
-      .localCheckpoint(true) // singles join + multi-char filter
+      .pin() // singles join + multi-char filter
     vocabPrev.filter(length($"piece") === 1).select($"piece")
       .join(vit, Seq("piece"), "left")
       .select($"piece", (coalesce($"vc_n", lit(0L)) + 1L).as("c"))
@@ -2228,11 +2229,11 @@ object CorpusAssembly extends QueryPack {
   /** The full fixed-round EM: seed → (segment, recount) × rounds.
     * Exposed for CorpusAssemblySpec's hand-checked fixture gates. */
   private[operators] def uniTrain(words0: DataFrame): DataFrame = {
-    val words = words0.localCheckpoint(true) // every round re-reads it
-    var vocab = uniSeed(words).localCheckpoint(true)
+    val words = words0.pin() // every round re-reads it
+    var vocab = uniSeed(words).pin()
     for (_ <- 1 to UniRounds) {
       val seg = uniSegmented(words, uniCost(vocab))
-      vocab = uniRecount(seg, vocab).localCheckpoint(true)
+      vocab = uniRecount(seg, vocab).pin()
     }
     vocab
   }
@@ -2529,7 +2530,7 @@ object CorpusAssembly extends QueryPack {
           .select(explode(tokens).as("term"))
           .groupBy($"term").agg(count(lit(1)).as("c"))
           .select($"c", seqExpr($"term").as("seq"))
-          .localCheckpoint() // one corpus scan; M rounds re-read the vocab
+          .pin() // one corpus scan; M rounds re-read the vocab
         val (bests, _) = bpeTrain(seqs0)
         bests.zipWithIndex.map { case (b, i) =>
           b.select(lit(i + 1).as("step"), $"u".as("lhs"), $"v".as("rhs"), $"pair_n")
@@ -2570,11 +2571,11 @@ object CorpusAssembly extends QueryPack {
         import s.implicits._
         val docToks = Tables.documents(s, d)
           .select($"doc_id", explode(tokens).as("term"))
-          .localCheckpoint() // 2 consumers: vocab build + per-doc join
+          .pin() // 2 consumers: vocab build + per-doc join
         val seqs0 = docToks
           .groupBy($"term").agg(count(lit(1)).as("c"))
           .select($"term", $"c", seqExpr($"term").as("seq"))
-          .localCheckpoint() // M rounds re-read the vocab (r17: the
+          .pin() // M rounds re-read the vocab (r17: the
           // un-pinned frame re-ran its groupBy exchange once per round)
         val (_, applied) = bpeTrain(seqs0)
         val vocab = applied.select($"term",
@@ -2617,7 +2618,7 @@ object CorpusAssembly extends QueryPack {
     "llm_unigram_learn" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val vocab = uniTrain(uniWords(s, d)).localCheckpoint(true)
+        val vocab = uniTrain(uniWords(s, d)).pin()
         vocab.join(uniCost(vocab), Seq("piece"))
           .select($"piece", $"c".cast(LongType).as("cnt"), $"cost_u")
           .orderBy($"piece")
@@ -2639,7 +2640,7 @@ object CorpusAssembly extends QueryPack {
     "llm_unigram_apply" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val words = uniWords(s, d).localCheckpoint(true) // EM + apply join
+        val words = uniWords(s, d).pin() // EM + apply join
         val vocab = uniTrain(words)
         val seg = uniSegmented(words, uniCost(vocab))
           .select($"word", $"wcost",
@@ -2687,7 +2688,7 @@ object CorpusAssembly extends QueryPack {
           .select(explode(tokens).as("term"))
           .groupBy($"term").agg(count(lit(1)).as("c"))
           .select($"c", seqExpr($"term").as("seq"))
-          .localCheckpoint() // one corpus scan; M rounds re-read it
+          .pin() // one corpus scan; M rounds re-read it
         val (bests, _) = wpTrain(seqs0)
         bests.zipWithIndex.map { case (b, i) =>
           b.select(lit(i + 1).as("step"), $"u".as("lhs"), $"v".as("rhs"),
@@ -2731,11 +2732,11 @@ object CorpusAssembly extends QueryPack {
         import s.implicits._
         val docToks = Tables.documents(s, d)
           .select($"doc_id", explode(tokens).as("term"))
-          .localCheckpoint() // vocab build + per-doc join
+          .pin() // vocab build + per-doc join
         val seqs0 = docToks
           .groupBy($"term").agg(count(lit(1)).as("c"))
           .select($"term", $"c", seqExpr($"term").as("seq"))
-          .localCheckpoint(true) // chars + the merge trajectory
+          .pin() // chars + the merge trajectory
         val (bests, _) = wpTrain(seqs0.select($"c", $"seq"))
         // the shipped vocabulary: every initial character + the M
         // merge outputs — collected ONCE, ≤ |alphabet| + M rows

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -82,7 +83,7 @@ object Dedup extends QueryPack {
     * candidate-verify join twice — without the checkpoint each use
     * re-runs the tokenize+shingle+fingerprint corpus scan. */
   private def shingleFps(s: SparkSession, d: String): DataFrame =
-    fpsOf(Tables.documents(s, d)).localCheckpoint(true)
+    fpsOf(Tables.documents(s, d)).pin()
 
   /** The (doc_id, text) → (doc_id, fps) transformation behind
     * [[shingleFps]], usable on ANY document frame (e.g. a streaming
@@ -525,7 +526,7 @@ object Dedup extends QueryPack {
       s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
     var edges = pairs.select(col("doc1").as("a"), col("doc2").as("b"))
-      .filter($"a" =!= $"b").distinct().localCheckpoint(true)
+      .filter($"a" =!= $"b").distinct().pin()
     def sym(e: DataFrame) =
       e.select($"a".as("u"), $"b".as("v"))
         .unionByName(e.select($"b".as("u"), $"a".as("v")))
@@ -537,7 +538,7 @@ object Dedup extends QueryPack {
       val m1 = s1.groupBy($"u").agg(min(least($"v", $"u")).as("m"))
       val ls = s1.join(m1, Seq("u")).filter($"v" > $"u")
         .select($"v".as("a"), $"m".as("b"))
-        .filter($"a" =!= $"b").distinct().localCheckpoint(true)
+        .filter($"a" =!= $"b").distinct().pin()
       // small-star: every v ≤ u (and u itself) attaches to the
       // minimum of that closed ≤-neighborhood
       val s2 = sym(ls).filter($"v" <= $"u")
@@ -545,7 +546,7 @@ object Dedup extends QueryPack {
       val m2 = s2.groupBy($"u").agg(min($"v").as("m"))
       val ss = s2.join(m2, Seq("u")).filter($"v" =!= $"m")
         .select($"v".as("a"), $"m".as("b")).distinct()
-        .localCheckpoint(true)
+        .pin()
       changed = ss.join(edges, Seq("a", "b"), "left_anti").count() +
         edges.join(ss, Seq("a", "b"), "left_anti").count()
       edges = ss
@@ -592,21 +593,21 @@ object Dedup extends QueryPack {
         .toDF("doc_id", "cluster")
         // two consumers downstream (singleton anti-join + the union):
         // pin the one-task result so the union-find runs once
-        .localCheckpoint(true)
+        .pin()
     } else {
       val edges = pairs.select($"doc1".as("src"), $"doc2".as("dst"))
         .union(pairs.select($"doc2".as("src"), $"doc1".as("dst")))
-        .localCheckpoint(true)
+        .pin()
       // Propagate over CONNECTED vertices only: a doc with no near-dup
       // pair can never change its label, yet at corpus scale isolated
       // docs are the overwhelming majority (duplicate rates are a
       // small fraction of 100 TB) — carrying them through every
       // iteration would multiply each loop shuffle by 1/dup-rate.
       val verts = edges.select($"src".as("doc_id")).distinct()
-        .localCheckpoint(true)
+        .pin()
       var labels = verts
         .select($"doc_id", $"doc_id".as("cluster"))
-        .localCheckpoint(true)
+        .pin()
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < 25) {
@@ -624,7 +625,7 @@ object Dedup extends QueryPack {
         val updated = stepped.join(reps, Seq("mid"), "left_outer")
           .select($"doc_id", $"old",
             least($"mid", coalesce($"rep", $"mid")).as("cluster"))
-          .localCheckpoint(true)
+          .pin()
         changed = updated.filter($"cluster" =!= $"old").count()
         labels = updated.select($"doc_id", $"cluster")
         iter += 1
@@ -1128,7 +1129,7 @@ object Dedup extends QueryPack {
         val pairs = minhashLshPairs(s, docs, nBands = 8, rowsPerBand = 2,
           tau = 0.9,
           keepCand = Some((d1, d2) => d1 % 4 >= 3 || d2 % 4 >= 3))
-          .select($"doc1", $"doc2").localCheckpoint(true)
+          .select($"doc1", $"doc2").pin()
         val inc = docs.select($"doc_id").filter($"doc_id" % 4 >= 3)
         // an increment doc is blocked by ANY pair partner that is state,
         // or any smaller-id increment partner (doc1 < doc2 makes doc1
@@ -1179,7 +1180,7 @@ object Dedup extends QueryPack {
         import s.implicits._
         // one pruned (doc_id, source) scan shared by both join sides
         val src = Tables.documents(s, d).select($"doc_id", $"source")
-          .localCheckpoint(true)
+          .pin()
         minhashLshPairs(s, shingleFps(s, d), nBands = 8, rowsPerBand = 2,
             tau = 0.9)
           .join(src.select($"doc_id".as("doc1"), $"source".as("source1")), Seq("doc1"))
@@ -1287,7 +1288,7 @@ object Dedup extends QueryPack {
         // checkpoint BEFORE the union: its two branches would otherwise
         // each inline (and re-run) the whole banded-pair pipeline
         val pairs = bandedSimhashPairs(s, d).select($"doc1", $"doc2")
-          .localCheckpoint(true)
+          .pin()
         val labels = componentLabels(s, pairs)
         val isolated = Tables.documents(s, d).select($"doc_id")
           .join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
@@ -1319,7 +1320,7 @@ object Dedup extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val pairs = bandedSimhashPairs(s, d).select($"doc1", $"doc2")
-          .localCheckpoint(true)
+          .pin()
         val labels = starComponentLabels(s, pairs)
         val isolated = Tables.documents(s, d).select($"doc_id")
           .join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
@@ -1405,13 +1406,13 @@ object Dedup extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val pairs = bandedSimhashPairs(s, d).select($"doc1", $"doc2")
-          .localCheckpoint(true)
+          .pin()
         val labels = componentLabels(s, pairs)
         val mem = labels.join(
             Tables.documents(s, d)
               .select($"doc_id", $"lang", $"source", $"n_chars"),
             Seq("doc_id"))
-          .localCheckpoint(true) // base + two majority aggregates
+          .pin() // base + two majority aggregates
         val base = mem.groupBy($"cluster")
           .agg(count(lit(1)).as("n_members"),
             max($"n_chars").as("n_chars_max"),
@@ -1482,7 +1483,7 @@ object Dedup extends QueryPack {
         val docs = materialized(docsWithTokens(s, d)
             .select($"doc_id", $"lang", $"n_chars", shinglesCol.as("sh")))
           .filter(size($"sh") > 0)
-          .localCheckpoint(true) // both self-join sides read it
+          .pin() // both self-join sides read it
         docs.as("a").join(docs.as("b"),
             $"a.lang" === $"b.lang" && $"a.doc_id" < $"b.doc_id" &&
             abs($"a.n_chars" - $"b.n_chars") <= 50)
@@ -1519,7 +1520,7 @@ object Dedup extends QueryPack {
           .filter(size($"sh") > 0)
           .select($"doc_id", $"lang", $"n_chars",
             array_distinct(transform($"sh", x => rolling_hash2(x))).as("fps"))
-          .localCheckpoint(true) // posting explode + the two size joins
+          .pin() // posting explode + the two size joins
         val posts = docs.select($"doc_id", $"lang", $"n_chars",
           explode($"fps").as("fp"))
         val inter = posts.as("a").join(posts.as("b"),
@@ -1566,7 +1567,7 @@ object Dedup extends QueryPack {
           .filter(size($"sh") > 0)
           .select($"doc_id", $"lang",
             array_distinct(transform($"sh", x => rolling_hash2(x))).as("fps"))
-          .localCheckpoint(true) // the posting explode reads it twice
+          .pin() // the posting explode reads it twice
         val posts = docs.select($"doc_id", $"lang",
           size($"fps").cast(LongType).as("n"), explode($"fps").as("fp"))
         posts.as("a").join(posts.as("b"),
@@ -1610,7 +1611,7 @@ object Dedup extends QueryPack {
         import s.implicits._
         val e = Tables.embeddings(s, d)
           .select($"vec_id", VectorFunctions.toDoubleArray($"embedding").as("emb"))
-          .localCheckpoint(true) // both self-join sides read it
+          .pin() // both self-join sides read it
         e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
           .withColumn("cos",
             round(VectorFunctions.cosine($"a.emb", $"b.emb"), 9))
@@ -1647,7 +1648,7 @@ object Dedup extends QueryPack {
         val e = Tables.embeddings(s, d)
           .select($"vec_id", VectorFunctions.toDoubleArray($"embedding").as("emb"))
           .withColumn("blk", pmod($"vec_id", lit(nBlocks)).cast(IntegerType))
-          .localCheckpoint(true) // left and right block sides both read it
+          .pin() // left and right block sides both read it
         val blockPairs = (for { i <- 0 until nBlocks; j <- i until nBlocks }
           yield (i, j)).toDF("b1", "b2")
         val left = e.select($"blk".as("b1"), $"vec_id".as("vec_id_a"), $"emb".as("emb_a"))
@@ -1689,7 +1690,7 @@ object Dedup extends QueryPack {
         import s.implicits._
         val e = Tables.embeddings(s, d)
           .select($"vec_id", VectorFunctions.toDoubleArray($"embedding").as("emb"))
-          .localCheckpoint(true) // band assignment + two verify joins read it
+          .pin() // band assignment + two verify joins read it
         embeddingAnnPairs(e, nBands = 16, bitsPerBand = 4, dim = 64,
           threshold = 0.35)
           .orderBy($"vec1", $"vec2")
@@ -1815,7 +1816,7 @@ object Dedup extends QueryPack {
           floor = 0.95)
         val e = Tables.embeddings(s, d)
           .select($"vec_id", VectorFunctions.toDoubleArray($"embedding").as("emb"))
-          .localCheckpoint(true) // truth self-join + 3 ANN consumers
+          .pin() // truth self-join + 3 ANN consumers
         val truthEmb = e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
           .withColumn("cos", round(VectorFunctions.cosine($"a.emb", $"b.emb"), 9))
           .filter($"cos" >= 0.35)
@@ -1883,7 +1884,7 @@ object Dedup extends QueryPack {
         import s.implicits._
         val chunks = cdcChunkFrame(
           Tables.documents(s, d).select($"doc_id", $"text"))
-          .localCheckpoint() // 2 consumers: fp stats + per-doc shares
+          .pin() // 2 consumers: fp stats + per-doc shares
         val stats = chunks.groupBy($"cfp")
           .agg(countDistinct($"doc_id").as("ndocs"))
         chunks.join(stats, Seq("cfp"))
@@ -1973,7 +1974,7 @@ object Dedup extends QueryPack {
           .select($"doc_id", $"lang",
             substring(regexp_replace(lower($"text"), "[^a-z0-9 ]", ""),
               1, 40).as("head"))
-          .localCheckpoint(true) // both self-join sides read it
+          .pin() // both self-join sides read it
         docs.as("a").join(docs.as("b"),
             $"a.lang" === $"b.lang" && $"b.doc_id" === $"a.doc_id" + 1)
           .select($"a.doc_id".as("doc1"), $"b.doc_id".as("doc2"),
@@ -2232,7 +2233,7 @@ object Dedup extends QueryPack {
           .select($"doc_id", $"lang", $"source", $"n_chars",
             element_at(split($"text", " "), 1).as("ft"),
             element_at(split($"text", " "), -1).as("lt"))
-          .localCheckpoint(true) // 4 u-aggregates + both join sides
+          .pin() // 4 u-aggregates + both join sides
         val n = docs.agg(count(lit(1)).as("n"))
           .select(($"n" * ($"n" - 1L)).as("u_den"))
         def uNum(c: Column, name: String) = docs.groupBy(c.as("v"))
@@ -2352,7 +2353,7 @@ object Dedup extends QueryPack {
         Tables.documents(s, d).select($"doc_id", $"lang", $"n_chars"),
         Seq($"lang", $"n_chars", $"doc_id"))
       .select($"doc_id", $"rk")
-      .localCheckpoint(true) // both sides of the adjacency join
+      .pin() // both sides of the adjacency join
     val left = ranked.select($"doc_id".as("doc_a"), $"rk".as("rka"),
       expr(s"rk div $w").as("blk"))
     val right = ranked.select($"doc_id".as("doc_b"), $"rk".as("rkb"),
@@ -2364,7 +2365,7 @@ object Dedup extends QueryPack {
     val fps = fpsOf(Tables.documents(s, d))
       .filter(size($"fps") > 0)
       .withColumn("n", size($"fps").cast(LongType))
-      .localCheckpoint(true)
+      .pin()
     cand
       .join(fps.select($"doc_id".as("doc_a"), $"fps".as("fps1"),
         $"n".as("n1")), Seq("doc_a"))
@@ -2470,7 +2471,7 @@ object Dedup extends QueryPack {
     val docs = fpsOf(Tables.documents(s, d))
       .filter(size($"fps") > 0)
       .withColumn("n", size($"fps").cast(LongType))
-      .localCheckpoint(true)
+      .pin()
     prefixFilterCandidates(s, docs, positional = true)
       .join(docs.select($"doc_id".as("doc1"), $"fps".as("fps1"),
         $"n".as("n1")), Seq("doc1"))
@@ -2526,7 +2527,7 @@ object Dedup extends QueryPack {
     // branch from re-running the corpus scan per side
     val texts = docs
       .select($"doc_id", $"text", length($"text").cast(LongType).as("tlen"))
-      .localCheckpoint()
+      .pin()
     pairs
       .join(texts.select($"doc_id".as("id1"), $"text".as("text1"),
         $"tlen".as("len1")), Seq("id1"))

@@ -2,9 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 
-import graft.{QueryDef, QueryPack, Tables, Tuning}
+import graft.{QueryDef, QueryPack, Tables}
 import graft.functions.Exact._
 
 /** Event-time operators over the `events` stream table: tumbling
@@ -156,14 +157,14 @@ object EventTime extends QueryPack {
       s: org.apache.spark.sql.SparkSession,
       cells0: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val cells = cells0.localCheckpoint(true) // row sums + states + rounds
+    val cells = cells0.pin() // row sums + states + rounds
     val rowSums = cells.groupBy($"src").agg(sum($"n").as("n_out"))
-      .localCheckpoint(true)
+      .pin()
     val edges = cells.join(rowSums, Seq("src"))
-      .localCheckpoint(true)
+      .pin()
     val states = cells.select($"src".as("state"))
       .unionByName(cells.select($"dst".as("state"))).distinct()
-      .localCheckpoint(true)
+      .pin()
     val k = states.count()
     // Empty-transition-frame guard (sprtDecisions' empty-variant
     // discipline): with zero states the uniform seed 1e9/k is a
@@ -174,7 +175,7 @@ object EventTime extends QueryPack {
         lit(0L).as("n_out"))
     var pi = states
       .select($"state", lit(1000000000L / k).as("pi_nano"))
-      .localCheckpoint(true)
+      .pin()
     for (_ <- 1 to 5) {
       val contrib = pi.join(edges, $"state" === $"src")
         .select($"dst".as("state"),
@@ -187,7 +188,7 @@ object EventTime extends QueryPack {
         .crossJoin(broadcast(dang))
         .select($"state",
           (coalesce($"cin", lit(0L)) + expr(s"dm div $k")).as("pi_nano"))
-        .localCheckpoint(true)
+        .pin()
     }
     pi.join(rowSums.select($"src".as("state"), $"n_out"),
         Seq("state"), "left")
@@ -301,25 +302,25 @@ object EventTime extends QueryPack {
       daily: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = daily.sparkSession
     import s.implicits._
-    val series = daily.localCheckpoint(true) // pair join ×2 + residuals
+    val series = daily.pin() // pair join ×2 + residuals
     val pairs = series.as("a").join(series.as("b"), $"a.x" < $"b.x")
       .select(($"b.y" - $"a.y").as("num"), ($"b.x" - $"a.x").as("den"))
     val rankedP = Relational.globalRank(s,
         pairs.withColumn("v", $"num".cast(DoubleType) / $"den"),
         Seq($"v", $"num", $"den"))
-      .localCheckpoint(true) // count + the pick
+      .pin() // count + the pick
     val np = rankedP.agg(count(lit(1)).as("n_pairs"))
     val slope = rankedP.crossJoin(broadcast(np))
       .filter($"rk" === expr("(n_pairs + 1) div 2 - 1"))
       .select($"num".as("slope_num"), $"den".as("slope_den"), $"n_pairs")
-      .localCheckpoint(true) // residual broadcast + the output row
+      .pin() // residual broadcast + the output row
     val resid = series.crossJoin(broadcast(slope))
       .select(($"y" * $"slope_den" - $"slope_num" * $"x").as("rnum"),
         $"slope_den")
     val rankedR = Relational.globalRank(s,
         resid.withColumn("v", $"rnum".cast(DoubleType) / $"slope_den"),
         Seq($"v", $"rnum"))
-      .localCheckpoint(true)
+      .pin()
     val nd = rankedR.agg(count(lit(1)).as("n_days"))
     rankedR.crossJoin(broadcast(nd))
       .filter($"rk" === expr("(n_days + 1) div 2 - 1"))
@@ -483,7 +484,7 @@ object EventTime extends QueryPack {
           .agg(count(lit(1)).as("ng"),
             sum($"y".cast(big)).as("sg"),
             sum($"y".cast(big) * $"y").as("qg"))
-          .localCheckpoint(true) // totals + the contribution join
+          .pin() // totals + the contribution join
         val tot = g.agg(sum($"ng").as("n"), sum($"sg").as("s"),
           count(lit(1)).as("k"))
         g.crossJoin(broadcast(tot))
@@ -638,7 +639,7 @@ object EventTime extends QueryPack {
           .groupBy($"day").agg(sum($"y").as("y"))
         val cum = Relational.globalPrefixSum(s, daily, Seq($"day"), "y")
         val ranked = Relational.globalRank(s, cum, Seq($"day"))
-          .localCheckpoint(true) // totals + the candidate scan
+          .pin() // totals + the candidate scan
         val tot = ranked.agg(count(lit(1)).as("n"), sum($"y").as("s"))
         val best = ranked.crossJoin(broadcast(tot))
           .withColumn("n_l", $"rk" + 1L)
@@ -833,14 +834,14 @@ object EventTime extends QueryPack {
               .over(w.rowsBetween(Window.unboundedPreceding, 0)))
           .groupBy($"user_id", $"session_no")
           .agg(min($"tus").as("s_us"), max($"tus").as("e_us"))
-          .localCheckpoint(true) // week span + the binned probe side
+          .pin() // week span + the binned probe side
         val campaigns = sess
           .agg(expr(s"min(s_us) div $WeekUs").as("w0"),
             expr(s"max(e_us) div $WeekUs").as("w1"))
           .select(explode(sequence($"w0", $"w1")).as("wk"))
           .select($"wk", ($"wk" * WeekUs).as("c_start"),
             ($"wk" * WeekUs + 3 * DayUs).as("c_end"))
-          .localCheckpoint(true) // join build side + the zero spine
+          .pin() // join build side + the zero spine
         val binned = sess.select($"user_id", $"s_us", $"e_us",
           explode(sequence(expr(s"s_us div $WeekUs"),
             expr(s"e_us div $WeekUs"))).as("wk"))
@@ -1056,12 +1057,12 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         // cohort side and probe side both consume this projection:
-        // scanOnce keeps the events scan to exactly one (at 100 TB the
-        // probe-side rescan doubles source IO); on a real cluster set
-        // spark.graft.scanOnce=persist for the fault-tolerant pin
-        val ev = Tuning.scanOnce(Tables.events(s, d)
+        // the pin keeps the events scan to exactly one (at 100 TB the
+        // probe-side rescan doubles source IO)
+        val ev = Tables.events(s, d)
           .select($"user_id", $"event_type",
-            expr(s"(ts div 1000) div $DayUs").as("day")))
+            expr(s"(ts div 1000) div $DayUs").as("day"))
+          .pin()
         val cohorts = ev.filter($"event_type" === "signup")
           .groupBy($"user_id").agg(min($"day").as("cohort_day"))
         ev.join(cohorts, Seq("user_id"))
@@ -1226,11 +1227,11 @@ object EventTime extends QueryPack {
         import s.implicits._
         val big = DecimalType(38, 0)
         // moments side and probe side both consume this projection:
-        // scanOnce so the events scan runs once (fault-tolerant pin
-        // selectable via spark.graft.scanOnce=persist on real clusters)
-        val ev = Tuning.scanOnce(Tables.events(s, d)
+        // pinned so the events scan runs once
+        val ev = Tables.events(s, d)
           .select($"event_type",
-            (dec($"value") * 100).cast(LongType).cast(big).as("c")))
+            (dec($"value") * 100).cast(LongType).cast(big).as("c"))
+          .pin()
         val moments = ev.groupBy($"event_type").agg(
           count(lit(1)).cast(big).as("n"),
           sum($"c").as("sc"),
@@ -1277,10 +1278,11 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val big = DecimalType(38, 0)
-        val ev = Tuning.scanOnce(Tables.events(s, d)
+        val ev = Tables.events(s, d)
           .select($"event_type",
             expr(s"((ts div 1000) div $DayUs + 4) % 7").as("dow"),
-            (dec($"value") * 100).cast(LongType).cast(big).as("c")))
+            (dec($"value") * 100).cast(LongType).cast(big).as("c"))
+          .pin()
         val seas = ev.groupBy($"event_type", $"dow").agg(
           count(lit(1)).cast(big).as("sn"),
           sum($"c").as("ssc"), sum($"c" * $"c").as("ssc2"))
@@ -1482,7 +1484,7 @@ object EventTime extends QueryPack {
         val base = per.crossJoin(broadcast(mx))
           .withColumn("recency_days", expr(s"(mxt - last_tus) div $DayUs"))
           .select($"user_id", $"recency_days", $"n_events", $"monetary")
-          .localCheckpoint() // three quintile passes read it
+          .pin() // three quintile passes read it
         val r = Relational.globalNtile(s, base, 5L,
             Seq($"recency_days", $"user_id"))
           .withColumnRenamed("tile", "r_bin")
@@ -1691,7 +1693,7 @@ object EventTime extends QueryPack {
           .select($"user_id", expr("ts div 1000").as("tus"),
             (dec($"value") * 100).cast(LongType).as("yv"))
           .groupBy($"user_id", $"tus").agg(max($"yv").as("y"))
-          .localCheckpoint(true) // grid-range agg + the union branch
+          .pin() // grid-range agg + the union branch
         val grid = pts.groupBy($"user_id").agg(
             expr(s"min(tus) div $DayUs").as("d0"),
             expr(s"max(tus) div $DayUs").as("d1"))
@@ -2107,7 +2109,7 @@ object EventTime extends QueryPack {
         val vc = Tables.events(s, d)
           .select($"event_type", (dec($"value") * 100).cast(LongType).as("v"))
           .groupBy($"event_type", $"v").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .pin()
         val n = vc.groupBy($"event_type").agg(sum($"c").as("n"))
         // 2×-scale median of a (type, value, count) table: the two
         // middle order statistics picked off the cumulative counts
@@ -2306,7 +2308,7 @@ object EventTime extends QueryPack {
             count(when($"event_type" === "error", 1)).as("ne"),
             count(when($"event_type" === "click", 1)).as("nc"),
             count(when($"event_type" === "view", 1)).as("nv"))
-          .localCheckpoint(true) // both segment filters + the join
+          .pin() // both segment filters + the join
         val a = c.filter($"np" > $"ne").select($"user_id")
         val b = c.filter($"nc" > $"nv").select($"user_id")
         def sig(side: org.apache.spark.sql.DataFrame, p: String) = side.agg(
@@ -2408,7 +2410,7 @@ object EventTime extends QueryPack {
             count(when($"event_type" === "error", 1)).as("ne"),
             count(when($"event_type" === "click", 1)).as("nc"),
             count(when($"event_type" === "view", 1)).as("nv"))
-          .localCheckpoint(true) // segments + exact contract joins
+          .pin() // segments + exact contract joins
         val a = c.filter($"np" > $"ne").select($"user_id")
         val b = c.filter($"nc" > $"nv").select($"user_id")
         // Bottom-K = TakeOrdered (per-partition partial top-k, K-row
@@ -2417,14 +2419,14 @@ object EventTime extends QueryPack {
           .select(md5(concat($"user_id".cast("string"), lit("_kmv")))
             .as("h"))
           .select(expr(nib13).as("hv")).distinct()
-          .orderBy($"hv").limit(K).localCheckpoint(true)
+          .orderBy($"hv").limit(K).pin()
         val ska = sketch(a)
         val skb = sketch(b)
         // Union sketch: K smallest of the merged sketches — equal to
         // the K smallest of A∪B because any of those is in some
         // side's own bottom-K.
         val sku = ska.unionByName(skb).distinct()
-          .orderBy($"hv").limit(K).localCheckpoint(true)
+          .orderBy($"hv").limit(K).pin()
         def stats(sk: org.apache.spark.sql.DataFrame, p: String) =
           sk.agg(count(lit(1)).as(s"k$p"), max($"hv").as(s"mx$p"))
         val t = stats(ska, "a").crossJoin(stats(skb, "b"))
@@ -2433,7 +2435,7 @@ object EventTime extends QueryPack {
           .withColumn("theta_b", when($"kb" >= K, $"mxb").otherwise(lit(U)))
           .withColumn("theta_u", when($"ku" >= K, $"mxu").otherwise(lit(U)))
           .withColumn("theta", least($"theta_a", $"theta_b"))
-          .localCheckpoint(true)
+          .pin()
         // Retained sets: values strictly below the common θ (hv < U
         // always holds, so a complete sketch retains everything).
         val ra = ska.crossJoin(broadcast(t.select($"theta")))
@@ -2800,7 +2802,7 @@ object EventTime extends QueryPack {
             $"fp" > $"fv")
           .select(($"fp" - $"fv").as("dt"))
         val vc = conv.groupBy($"dt").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .pin()
         val n = vc.agg(sum($"c").as("n"))
         val w = org.apache.spark.sql.expressions.Window.orderBy($"dt")
           .rowsBetween(org.apache.spark.sql.expressions
@@ -2866,7 +2868,7 @@ object EventTime extends QueryPack {
         import s.implicits._
         val ev = Tables.events(s, d)
           .select($"user_id", $"event_type", expr("ts div 1000").as("tus"))
-          .localCheckpoint(true) // first-touch agg + study-end scalar
+          .pin() // first-touch agg + study-end scalar
         val tend = ev.agg(max($"tus").as("t_end"))
         val subj = ev.groupBy($"user_id")
           .agg(min(when($"event_type" === "view", $"tus")).as("fv"),
@@ -2881,7 +2883,7 @@ object EventTime extends QueryPack {
         val tbl = obs.groupBy($"t")
           .agg(sum($"died").as("d"), sum(lit(1L) - $"died").as("c"))
           .withColumn("dc", $"d" + $"c")
-          .localCheckpoint(true) // census + the prefix pass
+          .pin() // census + the prefix pass
         val n = tbl.agg(sum($"dc").as("n_subjects"))
         val steps = Relational.globalPrefixSum(s, tbl, Seq($"t"), "dc")
           .withColumnRenamed("psum", "cumall")
@@ -3043,7 +3045,7 @@ object EventTime extends QueryPack {
           .select($"event_type", $"gap")
         val vc = gaps.groupBy($"event_type", $"gap")
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
+          .pin()
         val n = vc.groupBy($"event_type").agg(sum($"c").as("n"))
         def median2(df: org.apache.spark.sql.DataFrame,
             vCol: String): org.apache.spark.sql.DataFrame = {
@@ -3195,7 +3197,7 @@ object EventTime extends QueryPack {
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("y"))
           .groupBy($"day").agg(sum($"y").as("y_cents"))
-          .localCheckpoint(true) // O(days) series
+          .pin() // O(days) series
         val w = Window.orderBy($"day").rowsBetween(-3, 3)
         val t = daily
           .withColumn("trend_num", sum($"y_cents").over(w))
@@ -3204,7 +3206,7 @@ object EventTime extends QueryPack {
           .filter($"wcnt" === 7L && $"wspan" === 6L)
           .withColumn("dow", expr("(day + 4) % 7"))
           .withColumn("r7", $"y_cents" * 7L - $"trend_num")
-          .localCheckpoint(true) // seasonal agg + the join back
+          .pin() // seasonal agg + the join back
         val seas = t.groupBy($"dow")
           .agg(sum($"r7").as("s_num"), count(lit(1)).as("s_den"))
         t.join(broadcast(seas), Seq("dow"))
@@ -3359,7 +3361,7 @@ object EventTime extends QueryPack {
           .groupBy($"y")
           .agg(sum(when($"side" === 0, 1L).otherwise(0L)).as("ca"),
             sum(when($"side" === 1, 1L).otherwise(0L)).as("cb"))
-          .localCheckpoint(true) // totals + two prefix passes
+          .pin() // totals + two prefix passes
         val nn = cnt.agg(sum($"ca").as("n_a"), sum($"cb").as("n_b"))
         val cumA = Relational.globalPrefixSum(s, cnt, Seq($"y"), "ca")
           .withColumnRenamed("psum", "cuma")
@@ -3459,7 +3461,7 @@ object EventTime extends QueryPack {
           .agg(sum(when($"side" === 0, 1L).otherwise(0L)).as("ca"),
             sum(when($"side" === 1, 1L).otherwise(0L)).as("cb"))
           .withColumn("ct", $"ca" + $"cb")
-          .localCheckpoint(true) // totals + the prefix pass
+          .pin() // totals + the prefix pass
         val nn = cnt.agg(sum($"ca").as("n_a"), sum($"cb").as("n_b"))
         val cum = Relational.globalPrefixSum(s, cnt, Seq($"y"), "ct")
         val r = cum
@@ -3562,7 +3564,7 @@ object EventTime extends QueryPack {
             sum(when($"grp" === 1, 1L).otherwise(0L)).as("c1"),
             sum(when($"grp" === 2, 1L).otherwise(0L)).as("c2"))
           .withColumn("ct", $"c0" + $"c1" + $"c2")
-          .localCheckpoint(true) // totals + the prefix pass
+          .pin() // totals + the prefix pass
         val cum = Relational.globalPrefixSum(s, cnt, Seq($"y"), "ct")
         val mid2 = lit(2L) * $"psum" - $"ct" + 1L
         val r = cum
@@ -3672,7 +3674,7 @@ object EventTime extends QueryPack {
               .as("cents"))
           .groupBy($"day")
           .agg(count(lit(1)).as("x"), sum($"cents").as("yv"))
-          .localCheckpoint(true) // two rank passes + the join
+          .pin() // two rank passes + the join
         def ranks(keyCol: String,
             outCol: String): org.apache.spark.sql.DataFrame = {
           val cnt = daily.groupBy(col(keyCol)).agg(count(lit(1)).as("t"))
@@ -3781,7 +3783,7 @@ object EventTime extends QueryPack {
               .as("cents"))
           .groupBy($"user_id")
           .agg(count(lit(1)).as("x"), sum($"cents").as("yv"))
-          .localCheckpoint(true) // tie aggregates + the inversion pass
+          .pin() // tie aggregates + the inversion pass
         def tiePairs(cols: Seq[org.apache.spark.sql.Column]): BigInt = {
           val r = perUser.groupBy(cols: _*)
             .agg(count(lit(1)).as("t"))
@@ -4024,7 +4026,7 @@ object EventTime extends QueryPack {
               .as("c"))
           .groupBy($"day")
           .agg(sum($"e").as("xc"), sum($"c").as("yv"))
-          .localCheckpoint(true) // all four lag self-joins read it
+          .pin() // all four lag self-joins read it
         val byLag = Seq(0L, 1L, 2L, 3L).map { k =>
           daily.as("a").join(daily.as("b"), $"a.day" === $"b.day" + k)
             .select(lit(k).as("lag"), $"b.xc".as("x"), $"a.yv".as("yy"))
@@ -4102,7 +4104,7 @@ object EventTime extends QueryPack {
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("c"))
           .groupBy($"seg").agg(sum($"c").as("cents"))
-          .localCheckpoint(true) // breakpoint passes + the symbol scan
+          .pin() // breakpoint passes + the symbol scan
         if (seg.isEmpty)
           Seq.empty[(Long, String, Long, Long)]
             .toDF("day", "sax", "n_segs", "day_cents")
@@ -4187,7 +4189,7 @@ object EventTime extends QueryPack {
           .filter($"c" > 0L)
           .orderBy($"c".desc)
           .limit(101)
-          .localCheckpoint(true) // the one aggregate below reads it
+          .pin() // the one aggregate below reads it
         top.agg(
             count(lit(1)).as("m"),
             coalesce(min($"c"), lit(0L)).as("xk1_cents"),
@@ -4253,7 +4255,7 @@ object EventTime extends QueryPack {
             expr(s"(ts div 1000) div $DayUs").as("day"),
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("c"))
-          .localCheckpoint(true) // the max-day scalar + the main sum
+          .pin() // the max-day scalar + the main sum
         val mx = ev.agg(max($"day").as("maxd"))
         ev.crossJoin(broadcast(mx))
           .select($"user_id", $"c", ($"maxd" - $"day").as("d"))
@@ -4313,7 +4315,7 @@ object EventTime extends QueryPack {
         val ev = Tables.events(s, d)
           .select($"event_type",
             expr(s"(ts div 1000) div $HourUs").as("hr"))
-          .localCheckpoint(true) // the span scalar + the bin counts
+          .pin() // the span scalar + the bin counts
         val rng = ev.agg((max($"hr") - min($"hr") + 1L).as("h"))
         ev.groupBy($"event_type", $"hr")
           .agg(count(lit(1)).as("c"))
@@ -4372,7 +4374,7 @@ object EventTime extends QueryPack {
         val v = Tables.events(s, d)
           .select(expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
             .as("cents"))
-          .localCheckpoint(true) // threshold passes + the excess scan
+          .pin() // threshold passes + the excess scan
         if (v.isEmpty)
           Seq.empty[(Long, Long, Long, Double)]
             .toDF("u_cents", "n_exceed", "sum_excess", "mean_excess")
@@ -4454,7 +4456,7 @@ object EventTime extends QueryPack {
             when($"dd" > 0L, 1L).otherwise(0L).as("pos"))
           .groupBy($"ad")
           .agg(sum($"pos").as("cpos"), count(lit(1)).as("ct"))
-          .localCheckpoint(true) // totals + the prefix pass
+          .pin() // totals + the prefix pass
         val nn = byAbs.agg(coalesce(sum($"ct"), lit(0L)).as("n"))
         val cum = Relational.globalPrefixSum(s, byAbs, Seq($"ad"), "ct")
         val r = cum
@@ -4539,7 +4541,7 @@ object EventTime extends QueryPack {
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("y"))
           .groupBy($"day").agg(sum($"y").as("y"))
-          .localCheckpoint(true) // both lag self-joins read it
+          .pin() // both lag self-joins read it
         val byLag = Seq(1L, 7L).map { k =>
           daily.as("a").join(daily.as("b"), $"a.day" === $"b.day" + k)
             .select(lit(k).as("lag"), $"b.y".as("x"), $"a.y".as("yy"))
@@ -4608,7 +4610,7 @@ object EventTime extends QueryPack {
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
               .as("y"))
           .groupBy($"day").agg(sum($"y").as("y"))
-          .localCheckpoint(true) // median rank + the sign pass
+          .pin() // median rank + the sign pass
         val n0 = daily.agg(count(lit(1)).as("n0"))
         val med = Relational.globalRank(s, daily, Seq($"y", $"day"))
           .crossJoin(broadcast(n0))
@@ -4618,7 +4620,7 @@ object EventTime extends QueryPack {
           .filter($"y" =!= $"ym")
           .select($"day", when($"y" > $"ym", 1L).otherwise(0L).as("sgn"))
         val ranked = Relational.globalRank(s, signed, Seq($"day"))
-          .localCheckpoint(true) // both sides of the adjacency join
+          .pin() // both sides of the adjacency join
         val r = ranked.as("a")
           .join(ranked.as("b"), $"a.rk" === $"b.rk" + 1L)
           .agg(sum(when($"a.sgn" =!= $"b.sgn", 1L).otherwise(0L))
@@ -4696,7 +4698,7 @@ object EventTime extends QueryPack {
           .select($"event_type",
             expr(s"((ts div 1000) div $DayUs + 4) % 7").as("dow"))
           .groupBy($"event_type", $"dow").agg(count(lit(1)).as("o"))
-          .localCheckpoint(true) // margins + cells
+          .pin() // margins + cells
         val rowM = cell.groupBy($"event_type").agg(sum($"o").as("r"))
         val colM = cell.groupBy($"dow").agg(sum($"o").as("c"))
         val tot = cell.agg(sum($"o").as("n"))
@@ -4756,7 +4758,7 @@ object EventTime extends QueryPack {
         val days = Tables.events(s, d)
           .select($"user_id", expr(s"(ts div 1000) div $DayUs").as("day"))
           .distinct()
-          .localCheckpoint(true) // DAU count + the interval runs
+          .pin() // DAU count + the interval runs
         val dau = days.groupBy($"day").agg(count(lit(1)).as("dau"))
         val w = Window.partitionBy($"user_id").orderBy($"day")
         val wau = days

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
@@ -585,7 +586,7 @@ object IngestAnalog extends QueryPack {
                        -sh AS ns)))).ns""")
         val routed = Tables.documents(s, d)
           .select($"doc_id", sMax(10).as("s10"), sMax(11).as("s11"))
-          .localCheckpoint(true) // both censuses read the one scan
+          .pin() // both censuses read the one scan
         val c11 = routed.groupBy($"s11".as("shard"))
           .agg(count(lit(1)).as("n_docs_11"),
             sum(when($"s10" =!= $"s11", 1L).otherwise(0L)).as("n_arrived"))
@@ -658,7 +659,7 @@ object IngestAnalog extends QueryPack {
     * at a 100 TB compaction window the census reaches millions of
     * rows and an unconditional broadcast hint would pin
     * driver/executor memory on every routing task. The count the
-    * gate pays is over the PINNED census (scanOnce), which the join
+    * gate pays is over the PINNED census, which the join
     * consumes too, so the plan computes once either way. */
   private[graft] def compactionApplied(s: org.apache.spark.sql.SparkSession,
       d: String, broadcastPlanThreshold: Long = 2000000L): String = {
@@ -670,12 +671,13 @@ object IngestAnalog extends QueryPack {
       val ev = Tables.events(s, d).select($"user_id", $"event_type",
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
           .as("cents"))
-      val plan = graft.Tuning.scanOnce(Relational.globalPrefixSum(s,
+      val plan = Relational.globalPrefixSum(s,
           ev.groupBy($"user_id", $"event_type")
             .agg(sum($"cents").as("size_b")),
           Seq($"user_id", $"event_type"), "size_b")
         .select($"user_id", $"event_type",
-          expr("(psum - size_b) div 10000000").as("bin")))
+          expr("(psum - size_b) div 10000000").as("bin"))
+        .pin()
       val routed =
         if (plan.count() <= broadcastPlanThreshold)
           ev.join(broadcast(plan), Seq("user_id", "event_type"))
@@ -683,8 +685,6 @@ object IngestAnalog extends QueryPack {
       routed
         .repartition(col("bin"))
         .write.partitionBy("bin").mode("overwrite").parquet(stage)
-      plan.unpersist()
-      ()
     }
     dir
   }
@@ -727,7 +727,7 @@ object IngestAnalog extends QueryPack {
         Seq($"file_id"), "size_b")
       .select($"file_id", $"size_b",
         expr(s"(psum - size_b) div $binSize").as("bin"))
-      .localCheckpoint(true) // the last-bin scalar + the write
+      .pin() // the last-bin scalar + the write
     // O(1) scalars: the open bin and the committed watermark. State
     // rides [[FsSwap]], not the java.io GenSwap: stateDir lives under
     // the artifacts root, which on a cluster is shared storage — a
@@ -745,7 +745,7 @@ object IngestAnalog extends QueryPack {
     }
     val toDrain = binned
       .filter($"bin" > wm && $"bin" < lastBin)
-      .localCheckpoint(true) // the write + the caller's census
+      .pin() // the write + the caller's census
     if (wm < lastBin - 1) {
       toDrain.repartition($"bin")
         .write.partitionBy("bin")

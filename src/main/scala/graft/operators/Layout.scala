@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 
 import graft.{QueryDef, QueryPack, Tables}
 
@@ -525,7 +526,7 @@ object Layout extends QueryPack {
         val keys = Tables.lineitem(s, d)
           .select(expr(ShardSql).as("shard"), $"l_orderkey")
           .distinct()
-          .localCheckpoint() // 3 consumers: sizes, bloom build, membership
+          .pin() // 3 consumers: sizes, bloom build, membership
         val sizes = keys.groupBy($"shard").agg(count(lit(1)).as("ndv"))
           .withColumn("nbits",
             expr(s"((ndv * $BitsPerKey + ${WordBits - 1}) div $WordBits) * $WordBits"))

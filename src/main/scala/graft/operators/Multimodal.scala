@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -1419,7 +1420,6 @@ object Multimodal extends QueryPack {
         val members = tarMembers(s, d)
         shardDrain(s, members, target, s"$dir/state", s"$dir/shards",
           flushOpen = true).count()
-        members.unpersist()
         val dirPath = new org.apache.hadoop.fs.Path(dir)
         Similarity.pruneStaleArtifacts(
           dirPath.getFileSystem(s.sparkContext.hadoopConfiguration),
@@ -1477,8 +1477,8 @@ object Multimodal extends QueryPack {
     * 100 TB shape: shard COUNT grows with the corpus while every
     * shard's bytes stay ≤ target + one bundle (each bundle's START
     * offset falls inside its bin's [k·target, (k+1)·target) window);
-    * member bytes are generated once ([[graft.Tuning.scanOnce]] pins
-    * the frame — a stored-binary deployment reads them instead), the
+    * member bytes are generated once (one pin — a stored-binary
+    * deployment reads them instead), the
     * bin assignment rides a metadata-sized prefix sum, and each
     * shard's entries STREAM to the open FS output via
     * [[Tar.writeEntry]] — task heap holds one member, never a shard
@@ -1514,7 +1514,6 @@ object Multimodal extends QueryPack {
         // the completed write job is an orphan, and whatever survives
         // this sweep is published into the immutable artifact
         sweepAttemptTemps(s, stage, graceMs = 0L)
-        members.unpersist()
         fs.create(new org.apache.hadoop.fs.Path(stage, "_SUCCESS"), true)
           .close()
     }
@@ -1524,19 +1523,17 @@ object Multimodal extends QueryPack {
   /** The bundle-member frame both shard builders consume — one
     * BMP/GIF/PNG/WAV member quartet per ascii document with its total
     * tar-block size — generated ONCE (the bytes a production pipeline
-    * has stored already) and pinned by [[graft.Tuning.scanOnce]].
-    * Callers unpersist when done. */
+    * has stored already) and pinned. */
   private def tarMembers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.Tuning.scanOnce(
-      asciiDocs(s, d).map { case (id, t) =>
-        val bmp = Bmp.fromText(id, t); val gif = Gif.fromText(id, t)
-        val png = Png.fromText(id, t); val wav = Wav.fromText(id, t)
-        val sz = Tar.memberLength(bmp.length) +
-          Tar.memberLength(gif.length) + Tar.memberLength(png.length) +
-          Tar.memberLength(wav.length)
-        (id, bmp, gif, png, wav, sz)
-      }.toDF("doc_id", "bmp", "gif", "png", "wav", "size_b"))
+    asciiDocs(s, d).map { case (id, t) =>
+      val bmp = Bmp.fromText(id, t); val gif = Gif.fromText(id, t)
+      val png = Png.fromText(id, t); val wav = Wav.fromText(id, t)
+      val sz = Tar.memberLength(bmp.length) +
+        Tar.memberLength(gif.length) + Tar.memberLength(png.length) +
+        Tar.memberLength(wav.length)
+      (id, bmp, gif, png, wav, sz)
+    }.toDF("doc_id", "bmp", "gif", "png", "wav", "size_b").pin()
   }
 
   /** Streams one partition's bin-grouped bundle rows
@@ -1694,7 +1691,7 @@ object Multimodal extends QueryPack {
         members.select($"doc_id", $"size_b"), Seq($"doc_id"), "size_b")
       .select($"doc_id", $"size_b",
         expr(s"(psum - size_b) div $target").as("bin"))
-      .localCheckpoint(true) // last-bin scalar + the write + census
+      .pin() // last-bin scalar + the write + census
     val lastBin = bins.agg(coalesce(max($"bin"), lit(-1L)))
       .collect()(0).getLong(0)
     val hconf = s.sparkContext.hadoopConfiguration
@@ -1708,7 +1705,7 @@ object Multimodal extends QueryPack {
     val toWrite = bins
       .filter($"bin" > wm &&
         ($"bin" < lastBin || lit(flushOpen) && $"bin" === lastBin))
-      .localCheckpoint(true) // the write + the returned census
+      .pin() // the write + the returned census
     if (!toWrite.isEmpty) {
       val outPath = new org.apache.hadoop.fs.Path(outDir)
       outPath.getFileSystem(hconf).mkdirs(outPath)

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.time.LocalDateTime
 
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -39,21 +41,6 @@ object Relational extends QueryPack {
   private val sqlOpt = "CAST(1 + CAST(l_tax AS DECIMAL(4,2)) AS DECIMAL(5,2))"
 
   private def ts(s: String): Column = lit(LocalDateTime.parse(s))
-
-  /** Pin for the layout primitives' internal two-reader frame (the
-    * sorted layout that the counts/totals collect AND the output
-    * projection read). Kept on the checkpoint family after an r16
-    * A/B: `Dataset.persist` (both MEMORY_AND_DISK and _SER) routes
-    * through the COLUMNAR CachedBatch cache — an encode on store plus
-    * a decode on every read — and measured 1.5-2.3x slower on the
-    * multi-read layouts (q_zorder_layout 5.5 -> 8.1 s SER / 12.3 s
-    * deser; the checkpoint's raw-row blocks read back for free).
-    * The checkpoint also pins layout/id determinism by construction
-    * (no recompute path at all). r17: routed through [[Shim.pin]], so
-    * `spark.graft.pin = reliable` swaps in a cluster-survivable
-    * reliable checkpoint without touching the contract. */
-  private def pinLayout(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.Shim.pin(df)
 
   /** Past this partition count the offset projection falls back to a
     * broadcast join: a literal array per offset column keeps the plan
@@ -128,11 +115,9 @@ object Relational extends QueryPack {
     * row_number window would re-shuffle the whole table on pid: the
     * checkpoint hides the layout from Catalyst, so the window's
     * clustering requirement isn't seen as satisfied). The
-    * [[pinLayout]] pin is CORRECTNESS as much as caching:
-    * repartitionByRange samples its boundaries once, so the counts
-    * job and the final job must read ONE materialized layout — see
-    * pinLayout's scaladoc for why serialized persist preserves the
-    * frozen-id contract under recomputation.
+    * pin is CORRECTNESS as much as caching: repartitionByRange
+    * samples its boundaries once, so the counts job and the final job
+    * must read ONE materialized layout (see [[Shim.pin]]).
     *
     * `sortCols` must be a total order (include a unique tiebreak) or
     * ties may land in either tile.
@@ -187,7 +172,7 @@ object Relational extends QueryPack {
     // ordered key-change counter, so the last row holds the partition
     // total): the old shape re-read the frame the pin had just frozen
     // in a whole extra groupBy job per call (r17, guide §1.2).
-    val (withLocal, stats) = org.apache.spark.sql.graftshim.Shim
+    val (withLocal, stats) = Shim
       .pinWithPartitionStats(presorted.mapPartitions { it =>
         var prev: Seq[Any] = null
         var idx = -1L
@@ -219,7 +204,7 @@ object Relational extends QueryPack {
     // per-partition row counts ride the pin's own materialization job
     // (r17, guide §1.2) — the old shape paid a whole extra groupBy job
     // re-reading the frame the pin had just frozen
-    val (sorted, stats) = org.apache.spark.sql.graftshim.Shim
+    val (sorted, stats) = Shim
       .pinWithPartitionStats(df
         .repartitionByRange(parts, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
@@ -255,7 +240,7 @@ object Relational extends QueryPack {
     val hist = values.filter($"v".isNotNull)
       .groupBy($"v").agg(count(lit(1)).as("c"))
     val ps = globalPrefixSum(s, hist, Seq($"v"), "c")
-      .localCheckpoint(true) // the n scalar + the rank probe
+      .pin() // the n scalar + the rank probe
     val nDf = ps.agg(max($"psum").as("nn"))
     ps.crossJoin(broadcast(nDf)).agg(
       min(when($"psum" >= expr("(50 * nn + 99) div 100"), $"v"))
@@ -328,14 +313,14 @@ object Relational extends QueryPack {
       measure: String): DataFrame = {
     import s.implicits._
     val approx = approxTableProfile(t, cols, measure)
-      .localCheckpoint(true) // rank probe + final row assembly
+      .pin() // rank probe + final row assembly
     val exact = t.agg(
       countDistinct(col(cols.head)).as("d1"),
       cols.tail.zipWithIndex.map { case (c, i) =>
         countDistinct(col(c)).as(s"d${i + 2}") }: _*)
     val hist = t.select(col(measure).as("v")).filter($"v".isNotNull)
       .groupBy($"v").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .pin()
     val ranks = hist
       .crossJoin(broadcast(approx.select($"ap50", $"ap99")))
       .agg(
@@ -494,7 +479,7 @@ object Relational extends QueryPack {
     * start offset (min(psum − c), a ≤-2^depth-row aggregate), then
     * two tiny per-leaf aggregates (median probe, left count) and a
     * BROADCAST plan join back to the rows. The rows frame re-plans
-    * through [[org.apache.spark.sql.graftshim.Shim.cutCheckpoint]]
+    * through [[Shim.cutCheckpoint]]
     * each level — `depth` chained broadcast joins would otherwise
     * compound plan stats (the iterative-self-join poison).
     *
@@ -529,7 +514,7 @@ object Relational extends QueryPack {
       depth: Int): (DataFrame, Seq[DataFrame]) = {
     val s = rows0.sparkSession
     import s.implicits._
-    var rows = org.apache.spark.sql.graftshim.Shim.cutCheckpoint(
+    var rows = Shim.cutCheckpoint(
       rows0.select($"id", $"d0", $"d1", lit(0L).as("leaf")))
     val splits = Seq.newBuilder[DataFrame]
     for (t <- 0 until depth) {
@@ -537,7 +522,7 @@ object Relational extends QueryPack {
       val hist = rows.groupBy($"leaf", col(dim).as("val"))
         .agg(count(lit(1)).as("c"))
       val ps = globalPrefixSum(s, hist, Seq($"leaf", $"val"), "c")
-        .localCheckpoint(true) // leaf starts + median probe + left count
+        .pin() // leaf starts + median probe + left count
       // per-leaf start offset and size — O(leaves) rows, broadcast back
       val leafAgg = ps.groupBy($"leaf")
         .agg(min($"psum" - $"c").as("start"), sum($"c").as("n"))
@@ -553,9 +538,9 @@ object Relational extends QueryPack {
         .join(broadcast(leafAgg.select($"leaf", $"n")), Seq("leaf"))
         .select($"leaf", $"med",
           ($"nleft" >= k && $"n" - $"nleft" >= k).as("do_split"))
-        .localCheckpoint(true) // the re-leaf join + the apply walk
+        .pin() // the re-leaf join + the apply walk
       splits += split
-      rows = org.apache.spark.sql.graftshim.Shim.cutCheckpoint(
+      rows = Shim.cutCheckpoint(
         rows.join(broadcast(split), Seq("leaf"))
           .select($"id", $"d0", $"d1",
             ($"leaf" * 2L + when($"do_split" && col(dim) > $"med", 1L)
@@ -597,7 +582,7 @@ object Relational extends QueryPack {
       .agg(min($"d0").as("d0_lo"), max($"d0").as("d0_hi"),
         min($"d1").as("d1_lo"), max($"d1").as("d1_hi"),
         count(lit(1)).as("base_k"))
-      .localCheckpoint(true) // one reader per applied batch
+      .pin() // one reader per applied batch
     (splits, stats)
   }
 
@@ -779,11 +764,11 @@ $walk,
     import s.implicits._
     val sym = e0.select($"u", $"v")
       .unionByName(e0.select($"v".as("u"), $"u".as("v")))
-      .localCheckpoint(true) // one degree count per round reads this
+      .pin() // one degree count per round reads this
     val deg0 = sym.groupBy($"u")
       .agg(count(lit(1)).as("deg0"))
       .select($"u".as("node"), $"deg0")
-      .localCheckpoint(true) // round-0 alive set + the output join
+      .pin() // round-0 alive set + the output join
     var alive = deg0.select($"node")
     var dropped = Seq.empty[(Long, Long)].toDF("node", "dropped_round")
     var converged = false
@@ -796,13 +781,13 @@ $walk,
         .select($"u".as("node"))
       val drop = alive.join(survivors, Seq("node"), "left_anti")
         .select($"node", lit(r.toLong).as("dropped_round"))
-        .localCheckpoint(true) // the union AND next round's anti-join
+        .pin() // the union AND next round's anti-join
       probe(r)
       if (drop.isEmpty) converged = true
       else {
         dropped = dropped.unionByName(drop)
         alive = alive.join(drop.select($"node"), Seq("node"), "left_anti")
-          .localCheckpoint(true)
+          .pin()
       }
     }
     deg0.join(dropped, Seq("node"), "left")
@@ -831,10 +816,10 @@ $walk,
       probe: (Long, Long) => Unit = (_, _) => ()): DataFrame = {
     val s = e0.sparkSession
     import s.implicits._
-    var edges = e0.select($"u", $"v").localCheckpoint(true)
+    var edges = e0.select($"u", $"v").pin()
     var nodes = edges.select($"u".as("node"))
       .unionByName(edges.select($"v".as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().pin()
     val stats = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long)]
     for (r <- 0 to rounds) {
       val nV = nodes.count()
@@ -847,12 +832,12 @@ $walk,
         val keep = sym.groupBy($"u").agg(count(lit(1)).as("deg"))
           .filter($"deg" * lit(nV) > lit(2L) * lit(nE))
           .select($"u".as("node"))
-          .localCheckpoint(true)
+          .pin()
         edges = edges
           .join(keep.select($"node".as("u")), Seq("u"), "left_semi")
           .join(keep.select($"node".as("v")), Seq("v"), "left_semi")
           .select($"u", $"v")
-          .localCheckpoint(true)
+          .pin()
         nodes = keep
       }
     }
@@ -900,7 +885,7 @@ $walk,
     import s.implicits._
     require(k >= 3, s"kTrussPeel: k = $k below the smallest truss grade")
     require(rounds >= 1, "kTrussPeel: need at least one peel round")
-    val base = e0.select($"u", $"v").localCheckpoint(true)
+    val base = e0.select($"u", $"v").pin()
     // support of every alive edge = triangles it closes, counted by
     // the oriented wedge join (each triangle once, then 3 credits)
     def support(alive: DataFrame): DataFrame = {
@@ -916,7 +901,7 @@ $walk,
           when(struct($"du", $"u") < struct($"dv", $"v"),
             struct($"dv".as("td"), $"v".as("tn")))
             .otherwise(struct($"du".as("td"), $"u".as("tn"))).as("t"))
-        .localCheckpoint(true) // wedge (twice) + closing edge
+        .pin() // wedge (twice) + closing edge
       val tri = oe.as("w1").join(oe.as("w2"),
           $"w1.s" === $"w2.s" && $"w1.t" < $"w2.t")
         .join(oe.as("e3"),
@@ -938,7 +923,7 @@ $walk,
     for (r <- 1 to rounds if !converged) {
       val sp = alive.join(support(alive), Seq("u", "v"), "left")
         .select($"u", $"v", coalesce($"supp", lit(0L)).as("supp"))
-        .localCheckpoint(true) // the drop filter AND the survivor set
+        .pin() // the drop filter AND the survivor set
       if (r == 1) supp0 = sp
       val drop = sp.filter($"supp" < (k - 2).toLong)
       probe(r)
@@ -947,7 +932,7 @@ $walk,
         dropped = dropped.unionByName(
           drop.select($"u", $"v", lit(r.toLong).as("dropped_round")))
         alive = sp.filter($"supp" >= (k - 2).toLong).select($"u", $"v")
-          .localCheckpoint(true)
+          .pin()
       }
     }
     supp0.select($"u", $"v", $"supp".as("supp0"))
@@ -985,17 +970,17 @@ $walk,
     import s.implicits._
     val sym = e0.select($"u", $"v")
       .unionByName(e0.select($"v".as("u"), $"u".as("v")))
-      .localCheckpoint(true) // one vote join per round reads this
+      .pin() // one vote join per round reads this
     var lbl = sym.select($"u".as("node")).distinct()
       .select($"node", $"node".as("label"))
-      .localCheckpoint(true)
+      .pin()
     for (_ <- 1 to rounds) {
       lbl = sym.join(lbl, $"v" === $"node")
         .groupBy($"u", $"label").agg(count(lit(1)).as("c"))
         .groupBy($"u")
         .agg(min(struct((-$"c").as("nc"), $"label".as("lb"))).as("top"))
         .select($"u".as("node"), $"top".getField("lb").as("label"))
-        .localCheckpoint(true) // barrier: round r never replays r-1
+        .pin() // barrier: round r never replays r-1
     }
     lbl.orderBy($"node")
   }
@@ -1022,11 +1007,11 @@ $walk,
   private[operators] def hitsScores(e0: DataFrame, iters: Int): DataFrame = {
     val s = e0.sparkSession
     import s.implicits._
-    val e = e0.select($"u", $"v").localCheckpoint(true)
+    val e = e0.select($"u", $"v").pin()
     val nodes = e.select($"u".as("node"))
       .unionByName(e.select($"v".as("node")))
       .distinct()
-      .localCheckpoint(true) // both half-updates + the output join
+      .pin() // both half-updates + the output join
     def rescale(raws: DataFrame): DataFrame = {
       val mx = raws.agg(max($"raw").as("mx"))
       raws.crossJoin(broadcast(mx))
@@ -1042,13 +1027,13 @@ $walk,
       auth = rescale(nodes
           .join(aRaw.select($"v".as("node"), $"raw"), Seq("node"), "left")
           .select($"node", coalesce($"raw", lit(0L)).as("raw")))
-        .localCheckpoint(true) // read by the hub half-update + output
+        .pin() // read by the hub half-update + output
       val hRaw = e.join(auth.select($"node".as("v"), $"sc"), Seq("v"))
         .groupBy($"u").agg(sum($"sc").as("raw"))
       hub = rescale(nodes
           .join(hRaw.select($"u".as("node"), $"raw"), Seq("node"), "left")
           .select($"node", coalesce($"raw", lit(0L)).as("raw")))
-        .localCheckpoint(true)
+        .pin()
     }
     nodes.join(auth.select($"node", $"sc".as("auth")), Seq("node"))
       .join(hub.select($"node", $"sc".as("hub")), Seq("node"))
@@ -1075,7 +1060,7 @@ $walk,
       e0: DataFrame, labels: DataFrame): DataFrame = {
     val s = e0.sparkSession
     import s.implicits._
-    val e = e0.select($"u", $"v").localCheckpoint(true)
+    val e = e0.select($"u", $"v").pin()
     val m = e.agg(count(lit(1)).as("m"))
     val deg = e.select($"u".as("node"))
       .unionByName(e.select($"v".as("node")))
@@ -1107,7 +1092,7 @@ $walk,
     // per-partition row counts ride the pin's own materialization job
     // (r17, guide §1.2) — the old shape paid a whole extra groupBy job
     // re-reading the frame the pin had just frozen
-    val (sorted, stats) = org.apache.spark.sql.graftshim.Shim
+    val (sorted, stats) = Shim
       .pinWithPartitionStats(df
         .repartitionByRange(parts, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
@@ -1169,7 +1154,7 @@ $walk,
       .withColumn("__gq_pid", spark_partition_id())
       .withColumn("__gq_ridx",
         monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-      .transform(pinLayout)
+      .pin()
     val ext = sorted.groupBy($"__gq_pid", col(grp).as("__gq_grp"))
       .agg(count(lit(1)).as("cnt"), min($"__gq_ridx").as("fst"))
       .orderBy($"__gq_pid", $"__gq_grp").collect()
@@ -1263,7 +1248,7 @@ $walk,
       .withColumn("rank", row_number().over(w).cast(LongType) - 1L)
       .withColumn("deg", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy($"u")))
-      .localCheckpoint(true) // three hop joins read it
+      .pin() // three hop joins read it
     def hop(frontier: DataFrame, t: Int): DataFrame =
       frontier
         .withColumn("h",
@@ -1278,7 +1263,7 @@ $walk,
     var out = frontier.select($"start", $"cur".as("node"),
       lit(0L).as("step"))
     for (t <- 1 to 3) {
-      frontier = hop(frontier, t).localCheckpoint(true)
+      frontier = hop(frontier, t).pin()
       out = out.unionByName(frontier.select($"start",
         $"cur".as("node"), lit(t.toLong).as("step")))
     }
@@ -1294,10 +1279,10 @@ $walk,
     val s = symIn.sparkSession
     import s.implicits._
     val dec206 = DecimalType(20, 6)
-    val sym = symIn.localCheckpoint(true) // forward + backward joins
+    val sym = symIn.pin() // forward + backward joins
     var lvl = sym.agg(min($"u").as("node"))
           .select($"node", lit(0L).as("lvl"), lit(1L).as("sigma"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val cand = lvl.filter($"lvl" === (r - 1L))
             .join(sym, $"node" === $"u")
@@ -1306,12 +1291,12 @@ $walk,
             .groupBy($"node")
             .agg(sum($"sigma").as("sigma"))
             .select($"node", lit(r.toLong).as("lvl"), $"sigma")
-          lvl = lvl.unionByName(fresh).localCheckpoint(true)
+          lvl = lvl.unionByName(fresh).pin()
         }
         // backward sweep: δ at the 3-level frontier is 0 by the bound
         var delta = lvl.filter($"lvl" === 3L)
           .select($"node", lit(0).cast(dec206).as("delta"))
-          .localCheckpoint(true)
+          .pin()
         var out = delta.join(lvl, Seq("node"))
           .select($"node", $"lvl", $"sigma", $"delta")
         for (ln <- 2 to 0 by -1) {
@@ -1332,7 +1317,7 @@ $walk,
             .join(contrib, Seq("node"), "left")
             .select($"node",
               coalesce($"delta", lit(0).cast(dec206)).as("delta"))
-            .localCheckpoint(true)
+            .pin()
           out = out.unionByName(delta.join(lvl, Seq("node"))
             .select($"node", $"lvl", $"sigma", $"delta"))
         }
@@ -1459,7 +1444,7 @@ $walk,
     // an ordered accumulator) and the row count: the old shape re-read
     // the frame the pin had just frozen in a whole extra groupBy job
     // per call (r17, guide §1.2).
-    val (withLocal, stats) = org.apache.spark.sql.graftshim.Shim
+    val (withLocal, stats) = Shim
       .pinWithPartitionStats(sorted.mapPartitions { it =>
         var acc = 0L
         var idx = -1L
@@ -1525,7 +1510,7 @@ $walk,
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
-      .transform(pinLayout) // totals job + the output projection
+      .pin() // totals job + the output projection
     val ext = withLocal.groupBy($"__kp_pid", col(grp).as("__kp_grp"))
       .agg(sum(col(valueCol)).as("tot"))
       .orderBy($"__kp_pid", $"__kp_grp").collect()
@@ -1627,7 +1612,7 @@ $walk,
       .repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__iv_pid", spark_partition_id())
-      .localCheckpoint(true) // three jobs read this frozen layout
+      .pin() // three jobs read this frozen layout
     val rng = sorted.agg(min($"yv").as("lo"), max($"yv").as("hi"),
       count(lit(1)).as("n")).collect()(0)
     probe(1)
@@ -1783,7 +1768,7 @@ $walk,
     // constraint-free frame with fresh ids unions safely; the
     // checkpointed partitions are reused, nothing recomputes.
     def barrier(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(true)
+      val ck = df.pin()
       s.createDataFrame(ck.rdd, ck.schema)
     }
     var p = barrier(parents.select($"node", $"parent".as("anc"),
@@ -1826,7 +1811,7 @@ $walk,
     val s = baseClosure.sparkSession
     import s.implicits._
     val within = ancestorClosure(shardParents, rounds)
-      .localCheckpoint(true) // probe count + union + the exit join
+      .pin() // probe count + union + the exit join
     probe(within.count())
     val ext = within.as("w")
       .join(baseClosure.as("b"), $"w.anc" === $"b.node")
@@ -1866,7 +1851,7 @@ $walk,
     import s.implicits._
     Tables.part(s, d).select($"p_partkey".as("node"),
         (dec($"p_retailprice") * 100).cast(LongType).as("cents"))
-      .localCheckpoint(true) // parents + value join + output spine
+      .pin() // parents + value join + output spine
   }
 
   /** Shared oracle of the hierarchy pair — the incremental plan must
@@ -2026,7 +2011,7 @@ $walk,
     "q_walk_skipgrams" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val walks = randomWalks(s, d).localCheckpoint(true)
+        val walks = randomWalks(s, d).pin()
         val pairs = walks.as("a").join(walks.as("b"),
             $"a.start" === $"b.start" &&
               $"a.step" =!= $"b.step" &&
@@ -2740,7 +2725,7 @@ $walk,
         import s.implicits._
         val h = Tables.lineitem(s, d)
           .groupBy($"l_orderkey").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true) // the aggregate + the argmax probe
+          .pin() // the aggregate + the argmax probe
         val agg = h.agg(count(lit(1)).as("n_keys"),
           sum($"c").as("n_rows"), max($"c").as("max_cnt"))
         val top = h.orderBy($"c".desc, $"l_orderkey").limit(1)
@@ -2931,10 +2916,10 @@ $walk,
             "+ 10000000) div 100000")
         val rows = Tables.customer(s, d)
           .select($"c_nationkey", $"c_mktsegment", band.as("band"))
-          .localCheckpoint(true) // global + per-group histograms
+          .pin() // global + per-group histograms
         val globalH = rows.groupBy($"band")
           .agg(count(lit(1)).as("gp"))
-          .localCheckpoint(true) // domain + the share join
+          .pin() // domain + the share join
         val groupH = rows.groupBy($"c_nationkey", $"c_mktsegment", $"band")
           .agg(count(lit(1)).as("gq"))
         val groups = groupH.groupBy($"c_nationkey", $"c_mktsegment")
@@ -3103,7 +3088,7 @@ $walk,
             count(lit(1)).as("n_arriving"),
             sum(when($"in_box", 0L).otherwise(1L)).as("n_out_box"))
           .withColumn("drift_flag", $"n_out_box" * 4L > $"n_arriving")
-          .localCheckpoint(true) // rows + the bool_or fold
+          .pin() // rows + the bool_or fold
         perLeaf.crossJoin(broadcast(
             perLeaf.agg(expr("bool_or(drift_flag)").as("rebuild_now"))))
           .orderBy($"leaf")
@@ -3154,7 +3139,7 @@ $walk,
             expr("cast(cast(value as decimal(18,2)) * 100 as bigint)"))
             .as("v"))
           .groupBy($"v").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true) // cells explode + totals
+          .pin() // cells explode + totals
         val tot = leaf.agg(sum($"c").as("n_total"),
           expr("(sum(c) + 63) div 64").as("thr"))
         val lvls = array((0 to 16).map(l =>
@@ -3163,10 +3148,10 @@ $walk,
         val cells = leaf.select($"c", explode(lvls).as("lc"))
           .groupBy($"lc.level".as("level"), $"lc.idx".as("idx"))
           .agg(sum($"c").as("c"))
-          .localCheckpoint(true) // heavy filter + the exact l12 read
+          .pin() // heavy filter + the exact l12 read
         val heavy = cells.crossJoin(broadcast(tot))
           .filter($"c" >= $"thr")
-          .localCheckpoint(true) // size scalar + the probe join
+          .pin() // size scalar + the probe join
         val l12heavy = heavy.filter($"level" === 12L)
           .select($"idx", $"c".as("ch"))
         val l12exact = cells.filter($"level" === 12L)
@@ -3341,7 +3326,7 @@ $walk,
         val cents = Tables.lineitem(s, d)
           .select((dec($"l_extendedprice") * 100).cast(LongType).as("cents"))
           .filter($"cents" > 0L)
-          .localCheckpoint(true) // total + the digit census
+          .pin() // total + the digit census
         val n = cents.agg(count(lit(1)).as("n"))
         val expDf = BenfordPpm.zipWithIndex
           .map { case (e, i) => (i + 1L, e) }.toDF("digit", "exp_ppm")
@@ -3590,7 +3575,7 @@ $walk,
         val urgent = Tables.orders(s, d)
           .filter($"o_orderpriority" === "1-URGENT")
           .select($"o_custkey")
-          .localCheckpoint(true)
+          .pin()
         val rawItems = math.max(1L,
           urgent.agg(approx_count_distinct($"o_custkey", 0.05).as("n"))
             .head().getLong(0))
@@ -3900,7 +3885,7 @@ $walk,
         import s.implicits._
         val v = Tables.lineitem(s, d)
           .select((dec($"l_extendedprice") * 100).cast(LongType).as("cents"))
-          .localCheckpoint(true) // histograms + the per-rank bucket scans
+          .pin() // histograms + the per-rank bucket scans
         selectKthCents(v, Seq(25L, 50L, 75L, 90L), W = 10000L)
       },
       oracle = Some("""
@@ -4591,7 +4576,7 @@ $walk,
         import s.implicits._
         val old = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
-          .localCheckpoint(true) // old snapshot + the mutation derive from one scan
+          .pin() // old snapshot + the mutation derive from one scan
         val neu = old.filter($"o_orderkey" % 97 =!= 0)
           .withColumn("o_totalprice",
             when($"o_orderkey" % 89 === 0, $"o_totalprice" + 1000.0)
@@ -4661,7 +4646,7 @@ $walk,
               $"a.l_partkey" < $"b.l_partkey")
           .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
           .distinct()
-          .localCheckpoint(true) // degree agg + both orientation joins
+          .pin() // degree agg + both orientation joins
         val deg = edges.select($"u".as("n")).unionByName(
             edges.select($"v".as("n")))
           .groupBy($"n").agg(count(lit(1)).as("dg"))
@@ -4674,7 +4659,7 @@ $walk,
             when(struct($"du", $"u") < struct($"dv", $"v"),
               struct($"dv".as("td"), $"v".as("tn")))
               .otherwise(struct($"du".as("td"), $"u".as("tn"))).as("t"))
-          .localCheckpoint(true) // wedge (twice) + closing edge
+          .pin() // wedge (twice) + closing edge
         val tri = oe.as("w1").join(oe.as("w2"),
             $"w1.s" === $"w2.s" && $"w1.t" < $"w2.t")
           .join(oe.as("e3"),
@@ -4781,7 +4766,7 @@ $walk,
             $"l_orderkey" === $"o_orderkey")
           .select($"o_custkey".as("cust"), $"l_partkey".as("item"))
           .distinct()
-          .localCheckpoint(true) // item counts + both co-join sides
+          .pin() // item counts + both co-join sides
         val ni = baskets.groupBy($"item").agg(count(lit(1)).as("n"))
         val co = baskets.as("a").join(baskets.as("b"),
             $"a.cust" === $"b.cust" && $"a.item" < $"b.item")
@@ -4852,7 +4837,7 @@ $walk,
         val baskets = Tables.lineitem(s, d)
           .select($"l_orderkey".as("bid"), $"l_partkey".as("item"))
           .distinct()
-          .localCheckpoint(true) // item supports + both self-join sides
+          .pin() // item supports + both self-join sides
         val nB = baskets.select($"bid").distinct()
           .agg(count(lit(1)).as("n_baskets"))
         val ni = baskets.groupBy($"item").agg(count(lit(1)).as("supp"))
@@ -4927,18 +4912,18 @@ $walk,
           .distinct()
         val sym = edges.unionByName(
             edges.select($"v".as("u"), $"u".as("v")))
-          .localCheckpoint(true) // one join per round reads this
+          .pin() // one join per round reads this
         // u < v on every raw edge, so min(u) IS the smallest vertex
         var lvl = sym.agg(min($"u").as("node"))
           .select($"node", lit(0L).as("lvl"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val frontier = lvl.filter($"lvl" === (r - 1L))
             .join(sym, $"node" === $"u")
             .select($"v".as("node")).distinct()
           val fresh = frontier.join(lvl, Seq("node"), "left_anti")
             .select($"node", lit(r.toLong).as("lvl"))
-          lvl = lvl.unionByName(fresh).localCheckpoint(true)
+          lvl = lvl.unionByName(fresh).pin()
         }
         lvl.orderBy($"lvl", $"node")
       },
@@ -4999,11 +4984,11 @@ $walk,
           .distinct()
         val sym = edges.unionByName(
             edges.select($"v".as("u"), $"u".as("v")))
-          .localCheckpoint(true) // one join per round reads this
+          .pin() // one join per round reads this
         // u < v on every raw edge, so min(u) IS the smallest vertex
         var lvl = sym.agg(min($"u").as("node"))
           .select($"node", lit(0L).as("lvl"), lit(1L).as("sigma"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val cand = lvl.filter($"lvl" === (r - 1L))
             .join(sym, $"node" === $"u")
@@ -5012,7 +4997,7 @@ $walk,
             .groupBy($"node")
             .agg(sum($"sigma").as("sigma"))
             .select($"node", lit(r.toLong).as("lvl"), $"sigma")
-          lvl = lvl.unionByName(fresh).localCheckpoint(true)
+          lvl = lvl.unionByName(fresh).pin()
         }
         lvl.orderBy($"lvl", $"node")
       },
@@ -5111,16 +5096,16 @@ $walk,
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
         val sym = e0.unionByName(
             e0.select($"v".as("u"), $"u".as("v"), $"w"))
-          .localCheckpoint(true) // one join per round reads this
+          .pin() // one join per round reads this
         var dist = sym.agg(min($"u").as("node"))
           .select($"node", lit(0L).as("dist"))
-          .localCheckpoint(true)
+          .pin()
         for (_ <- 1 to 3) {
           val relaxed = dist.join(sym, $"node" === $"u")
             .select($"v".as("node"), ($"dist" + $"w").as("dist"))
           dist = dist.unionByName(relaxed)
             .groupBy($"node").agg(min($"dist").as("dist"))
-            .localCheckpoint(true)
+            .pin()
         }
         dist.orderBy($"node")
       },
@@ -5185,7 +5170,7 @@ $walk,
           .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
           .agg(count(lit(1)).as("supp"))
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
-          .localCheckpoint(true) // both rounds' label joins read it
+          .pin() // both rounds' label joins read it
         def chosen(labels: DataFrame): DataFrame = {
           val cross = e0
             .join(labels.select($"node".as("u"), $"lbl".as("lu")), Seq("u"))
@@ -5200,9 +5185,9 @@ $walk,
         }
         val nodes = e0.select($"u".as("node"))
           .unionByName(e0.select($"v".as("node"))).distinct()
-          .localCheckpoint(true) // identity labels + round-2 fill
+          .pin() // identity labels + round-2 fill
         val ch1 = chosen(nodes.select($"node", $"node".as("lbl")))
-          .localCheckpoint(true) // contraction + output both read it
+          .pin() // contraction + output both read it
         val lab2 = nodes
           .join(Dedup.starComponentLabels(s,
               ch1.select($"u".as("doc1"), $"v".as("doc2")))
@@ -5295,10 +5280,10 @@ $walk,
           .agg(count(lit(1)).as("supp"))
           .filter($"supp" >= 2L)
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
-          .localCheckpoint(true) // every round's alive restriction
+          .pin() // every round's alive restriction
         var alive = e0.select($"u".as("n"))
           .unionByName(e0.select($"v".as("n"))).distinct()
-          .localCheckpoint(true)
+          .pin()
         var out: DataFrame = null
         for (r <- 1 to 3) {
           val ae = e0
@@ -5309,17 +5294,17 @@ $walk,
           val prop = dir.groupBy($"n")
             .agg(min(struct($"w", $"p")).as("b"))
             .select($"n", $"b.w".as("w"), $"b.p".as("p"))
-            .localCheckpoint(true) // both sides of the mutual join
+            .pin() // both sides of the mutual join
           val m = prop.as("x").join(prop.as("y"),
               $"x.n" === $"y.p" && $"x.p" === $"y.n" && $"x.n" < $"x.p")
             .select(lit(r.toLong).as("round"), $"x.n".as("u"),
               $"x.p".as("v"), $"x.w".as("w"))
-            .localCheckpoint(true) // output + the alive anti-joins
+            .pin() // output + the alive anti-joins
           out = if (out == null) m else out.unionByName(m)
           alive = alive
             .join(m.select($"u".as("n")), Seq("n"), "left_anti")
             .join(m.select($"v".as("n")), Seq("n"), "left_anti")
-            .localCheckpoint(true)
+            .pin()
         }
         out.orderBy($"round", $"u", $"v")
       },
@@ -5400,19 +5385,19 @@ $walk,
           .distinct()
         val sym = edges.unionByName(
             edges.select($"v".as("u"), $"u".as("v")))
-          .localCheckpoint(true) // one join per round reads this
+          .pin() // one join per round reads this
         val srcs = sym.select($"u").distinct()
           .orderBy($"u").limit(4).select($"u".as("src"))
         var lvl = srcs
           .select($"src", $"src".as("node"), lit(0L).as("d"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val frontier = lvl.filter($"d" === (r - 1L))
             .join(sym, $"node" === $"u")
             .select($"src", $"v".as("node")).distinct()
           val fresh = frontier.join(lvl, Seq("src", "node"), "left_anti")
             .select($"src", $"node", lit(r.toLong).as("d"))
-          lvl = lvl.unionByName(fresh).localCheckpoint(true)
+          lvl = lvl.unionByName(fresh).pin()
         }
         val q = lvl.filter($"node" < 50L)
         q.as("a").join(q.as("b"),
@@ -5498,9 +5483,9 @@ $walk,
             .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
             .distinct()
         val base = edgesOf(li.filter($"l_orderkey" % 8 =!= 0))
-          .localCheckpoint(true)
+          .pin()
         val shard = edgesOf(li.filter($"l_orderkey" % 8 === 0))
-          .localCheckpoint(true)
+          .pin()
         // frozen base labels (min reachable id), isolated = own id
         val nodes = base.select($"u".as("n"))
           .unionByName(base.select($"v".as("n")))
@@ -5511,7 +5496,7 @@ $walk,
               base.select($"u".as("doc1"), $"v".as("doc2")))
             .select($"doc_id".as("n"), $"cluster".as("c")), Seq("n"), "left")
           .select($"n", coalesce($"c", $"n").as("lbl"))
-          .localCheckpoint(true) // quotient relabel + the final compose
+          .pin() // quotient relabel + the final compose
         // quotient graph: shard edges with endpoints collapsed to base
         // labels — bounded by the shard, the ONLY thing labeled anew
         val quot = shard
@@ -5712,19 +5697,19 @@ $walk,
           .distinct()
         val sym = edges.unionByName(
             edges.select($"v".as("u"), $"u".as("v")))
-          .localCheckpoint(true) // one join per round reads this
+          .pin() // one join per round reads this
         val srcs = sym.select($"u").distinct()
           .orderBy($"u").limit(4).select($"u".as("src"))
         var lvl = srcs
           .select($"src", $"src".as("node"), lit(0L).as("d"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val frontier = lvl.filter($"d" === (r - 1L))
             .join(sym, $"node" === $"u")
             .select($"src", $"v".as("node")).distinct()
           val fresh = frontier.join(lvl, Seq("src", "node"), "left_anti")
             .select($"src", $"node", lit(r.toLong).as("d"))
-          lvl = lvl.unionByName(fresh).localCheckpoint(true)
+          lvl = lvl.unionByName(fresh).pin()
         }
         lvl.groupBy($"src")
           .agg((count(lit(1)) - 1L).as("n_reached"),
@@ -5801,7 +5786,7 @@ $walk,
           .agg(count(lit(1)).as("supp"))
           .filter($"supp" >= 2L)
           .select($"u", $"v")
-          .localCheckpoint(true) // sym (twice) + the anti-join
+          .pin() // sym (twice) + the anti-join
         val sym = e0.unionByName(e0.select($"v".as("u"), $"u".as("v")))
         val deg = sym.groupBy($"u").agg(count(lit(1)).as("dg"))
           .select($"u".as("n"), $"dg")
@@ -5881,7 +5866,7 @@ $walk,
           .agg(count(lit(1)).as("n"))
           .filter($"n" >= 12L)
           .withColumn("key", $"cx" * 1024L + $"cy")
-          .localCheckpoint(true) // neighbor explode + the label join
+          .pin() // neighbor explode + the label join
         val nb = cells.select($"key", explode(expr(
             """transform(array(-1025, -1024, -1023, -1, 1, 1023, 1024,
                  1025), o -> key + o)""")).as("nkey"))
@@ -5948,10 +5933,10 @@ $walk,
             .select($"n_nationkey", $"n_name")),
             $"n_nationkey" === $"c_nationkey")
           .select($"n_name".as("nation"), $"x")
-          .localCheckpoint(true) // group stats + the per-row term scan
+          .pin() // group stats + the per-row term scan
         val g = j.groupBy($"nation")
           .agg(count(lit(1)).as("n_cust"), sum($"x").as("rev"))
-          .localCheckpoint(true) // broadcast join + totals + output
+          .pin() // broadcast join + totals + output
         val tot = g.agg(sum($"n_cust").as("n"), sum($"rev").as("xx"))
         val w = j.join(broadcast(g), Seq("nation"))
           .select($"nation", expr(
@@ -6138,7 +6123,7 @@ $walk,
               $"a.l_partkey" < $"b.l_partkey")
           .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
           .distinct()
-          .localCheckpoint(true) // labels + degrees + intra all read it
+          .pin() // labels + degrees + intra all read it
         modularityByLabel(e0, labelPropagate(e0, rounds = 3))
       },
       oracle = Some("""
@@ -6200,7 +6185,7 @@ $walk,
         val o = Tables.orders(s, d).select($"o_orderkey",
           dec($"o_totalprice").cast(DoubleType).as("price"))
         val ranked = globalRank(s, o, Seq($"price", $"o_orderkey"))
-          .localCheckpoint(true) // tie stats + the output join
+          .pin() // tie stats + the output join
         val n = ranked.agg(count(lit(1)).as("n"))
         val ties = ranked.groupBy($"price".as("p"))
           .agg(min($"rk").as("minrk"), max($"rk").as("maxrk"))
@@ -6429,7 +6414,7 @@ $walk,
         val vc = Tables.events(s, d)
           .select((dec($"value") * 100).cast(LongType).as("v"))
           .groupBy($"v").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true) // quartiles + the outlier count
+          .pin() // quartiles + the outlier count
         val n = vc.agg(sum($"c").as("n"))
         // cumulative counts ride the two-level distributed scan — the
         // distinct VALUE domain reaches millions of centi-values at
@@ -6558,10 +6543,10 @@ $walk,
           .agg(count(lit(1)).as("w"))
         val edges = pairs.unionByName(
             pairs.select($"v".as("u"), $"u".as("v"), $"w"))
-          .localCheckpoint(true) // wsum + all 5 rounds
+          .pin() // wsum + all 5 rounds
         val wsum = edges.groupBy($"u").agg(sum($"w").as("wu"))
         val ew = edges.join(wsum, Seq("u"))
-        val srcDf = edges.agg(min($"u").as("src")).localCheckpoint(true)
+        val srcDf = edges.agg(min($"u").as("src")).pin()
         var ranks = srcDf.select($"src".as("node"),
           lit(1000000000L).as("r"))
         for (_ <- 1 to 5) {
@@ -6573,7 +6558,7 @@ $walk,
           ranks = contribs.unionByName(tele)
             .groupBy($"v").agg(sum($"c").as("r"))
             .select($"v".as("node"), $"r")
-            .localCheckpoint(true)
+            .pin()
         }
         ranks.select($"node", $"r".as("rank_nano"))
           .orderBy($"rank_nano".desc, $"node")
@@ -6719,7 +6704,7 @@ $walk,
           .crossJoin(broadcast(mx))
           .withColumn("word", expr("rid div 62"))
           .withColumn("m", expr("shiftleft(1L, cast(rid % 62 as int))"))
-          .localCheckpoint(true) // both bitmap builds + direct counts
+          .pin() // both bitmap builds + direct counts
         val bmFlag = li.groupBy($"l_returnflag", $"word")
           .agg(bit_or($"m").as("b1"))
         val bmPred = li.groupBy($"word")
@@ -6815,7 +6800,7 @@ $walk,
               .as("v1"),
             expr("cast(conv(substring(h, 9, 8), 16, 10) as bigint)")
               .as("v2"))
-          .localCheckpoint(true) // both side aggregates + the exact sum
+          .pin() // both side aggregates + the exact sum
         def sideSums(cnt: Column, p: String) = {
           val sums = (0 until 64).map { r =>
             val half = if (r < 32) $"v1" else $"v2"

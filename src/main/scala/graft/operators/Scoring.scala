@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -133,13 +134,13 @@ object Scoring extends QueryPack {
           .select($"doc_id", $"lang", explode(tokens).as("term"))
           .withColumn("b", bucket($"term"))
           .select($"doc_id", $"lang", $"b")
-          .localCheckpoint() // 3 consumers: raw counts, target counts, weight join
+          .pin() // 3 consumers: raw counts, target counts, weight join
         val raw = toks.groupBy($"b").agg(count(lit(1)).as("cr"))
         val tgt = toks.filter($"lang" === "en").groupBy($"b").agg(count(lit(1)).as("ct"))
         val stats = s.range(0, B).select($"id".as("b"))
           .join(raw, Seq("b"), "left").join(tgt, Seq("b"), "left")
           .select($"b", coalesce($"cr", lit(0L)).as("cr"), coalesce($"ct", lit(0L)).as("ct"))
-          .localCheckpoint(true) // B rows; totals + lr would otherwise
+          .pin() // B rows; totals + lr would otherwise
                                  // each re-run both token aggregations
         val totals = stats.agg(sum($"ct").as("nt"), sum($"cr").as("nr"))
         val lr = stats.crossJoin(broadcast(totals))
@@ -331,7 +332,7 @@ object Scoring extends QueryPack {
         val mg = udaf(new graft.functions.MisraGriesAggregator(HHCap))
         val toks = Tables.documents(s, d)
           .select(explode(tokens).as("term"))
-          .localCheckpoint() // 2 consumers: sketch pass + exact recount
+          .pin() // 2 consumers: sketch pass + exact recount
         val sketch = toks.agg(mg($"term").as("mg"), count(lit(1)).as("n_total"))
         val cands = sketch.select(explode($"mg.terms").as("term"), $"n_total")
         toks.join(broadcast(cands), Seq("term"))
@@ -372,7 +373,7 @@ object Scoring extends QueryPack {
         val toks = Tables.documents(s, d)
           .select(explode(tokens).as("term"))
           .withColumn("fp", rolling_hash($"term"))
-          .localCheckpoint() // 2 consumers: counters + exact counts
+          .pin() // 2 consumers: counters + exact counts
         val counters = cmCounters(toks)
         val probes = toks.groupBy($"term", $"fp")
           .agg(count(lit(1)).as("cnt_true"))
@@ -429,7 +430,7 @@ object Scoring extends QueryPack {
         val toks = Tables.documents(s, d)
           .select(($"doc_id" % 2).as("half"), explode(tokens).as("term"))
           .withColumn("fp", rolling_hash($"term"))
-          .localCheckpoint() // 2 sketch builds + the exact counts
+          .pin() // 2 sketch builds + the exact counts
         val ctrA = cmCounters(toks.filter($"half" === 0L))
         val ctrB = cmCounters(toks.filter($"half" === 1L))
         val probes = toks.groupBy($"term", $"fp")

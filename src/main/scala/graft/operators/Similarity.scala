@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -107,7 +108,7 @@ object Similarity extends QueryPack {
     * re-inlines the parquet scan, and at 10^9 vectors the embedding
     * table is the IO. One small row per vector. */
   private def embCheckpointed(s: SparkSession, d: String): DataFrame =
-    embDouble(s, d).localCheckpoint(true)
+    embDouble(s, d).pin()
 
   /** Exact cosine top-k for the 5 query vectors — the brute-force
     * baseline `sim_topk_bruteforce` exposes and `sim_ann_recall`
@@ -363,7 +364,7 @@ object Similarity extends QueryPack {
     import s.implicits._
     e.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-      .localCheckpoint(true)
+      .pin()
   }
 
   /** The shared fixed-round beam loop over [[graphEdges]], from a
@@ -398,7 +399,7 @@ object Similarity extends QueryPack {
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
     def beamLoop(): (DataFrame, DataFrame) = {
     val edges = labeled(s, "beam: edges")(
-      edgesIn.getOrElse(graphEdges(s, e)).localCheckpoint(true))
+      edgesIn.getOrElse(graphEdges(s, e)).pin())
     // With a predicate, the candidate UNIVERSE is the passers: a
     // neighbor failing it is dropped by this join BEFORE any distance
     // is computed, and the beam's width is spent on survivors only.
@@ -420,7 +421,7 @@ object Similarity extends QueryPack {
     var beam = labeled(s, "beam: entries") { score(entries)
       .withColumn("rn", row_number().over(w)).filter($"rn" <= GraphBeam)
       .select($"query_id", $"vec_id", $"cos_sim")
-      .localCheckpoint(true) }
+      .pin() }
     // Scanned-pair accounting stays LAZY: only `sim_ann_recall` ever
     // executes it, but the r15 shape unioned+distinct'd+eagerly
     // checkpointed it EVERY round, charging the three top-k faces
@@ -455,7 +456,7 @@ object Similarity extends QueryPack {
       beam = scored
         .withColumn("rn", row_number().over(w)).filter($"rn" <= GraphBeam)
         .select($"query_id", $"vec_id", $"cos_sim")
-        .localCheckpoint(true)
+        .pin()
       scannedParts += scored
     }
     val ranked = beam
@@ -524,9 +525,9 @@ object Similarity extends QueryPack {
         .groupBy($"centroid_id")
         .agg(transform(array_sort(collect_list(struct($"pos", $"m"))),
           s => s.getField("m")).as("cemb"))
-        .localCheckpoint()
+        .pin()
     }
-    (labeled(s, "ivf: assign")(assignTo(cents).localCheckpoint()), cents)
+    (labeled(s, "ivf: assign")(assignTo(cents).pin()), cents)
   }
 
   /** Multiprobe IVF candidates: each query scans its `nprobe` nearest
@@ -586,7 +587,7 @@ object Similarity extends QueryPack {
     val kept = q.crossJoin(broadcast(cents.join(radii, Seq("centroid_id"))))
       .filter(sqrt(l2sq($"qemb", $"cemb")) <= lit(r) + $"radius" + lit(1e-6))
       .select($"query_id", $"qemb", $"centroid_id".as("pcell"))
-      .localCheckpoint() // tiny; the probe gate and the scan both read
+      .pin() // tiny; the probe gate and the scan both read
     if (onProbes != null) onProbes(kept.select($"query_id", $"pcell"))
     broadcast(kept).join(cand, $"pcell" === $"centroid_id")
       .filter($"vec_id" =!= $"query_id")
@@ -613,7 +614,7 @@ object Similarity extends QueryPack {
     val r = math.sqrt(r2)
     val tagged = assigned
       .withColumn("side", pmod($"vec_id", lit(2L)))
-      .localCheckpoint(true) // radii + both scan sides read it
+      .pin() // radii + both scan sides read it
     val radii = tagged.join(broadcast(cents), Seq("centroid_id"))
       .groupBy($"centroid_id", $"side")
       .agg(max(sqrt(l2sq($"emb", $"cemb"))).as("radius"))
@@ -629,7 +630,7 @@ object Similarity extends QueryPack {
       .filter(sqrt(l2sq($"ca", $"cb")) <= lit(r) + $"rad_a" + $"rad_b"
         + lit(1e-6))
       .select($"ci", $"cj")
-      .localCheckpoint() // k²-bounded; the gate and the scan read it
+      .pin() // k²-bounded; the gate and the scan read it
     if (onCellPairs != null) onCellPairs(kept)
     val left = tagged.filter($"side" === 0L)
       .select($"vec_id".as("a_id"), $"emb".as("a_emb"),
@@ -703,7 +704,7 @@ object Similarity extends QueryPack {
     *          codebooks = (sub, code, cemb)). */
   private def pqModel(s: SparkSession, e: DataFrame): (DataFrame, DataFrame) = {
     import s.implicits._
-    val sv = pqSubvectors(s, e).localCheckpoint(true)
+    val sv = pqSubvectors(s, e).pin()
     // argmin as a per-(vec, sub) window: the group is BOUNDED at PqK
     // rows by construction (one per codeword), so this is not a
     // full-candidate sort — it parallelizes on a high-cardinality key.
@@ -724,7 +725,7 @@ object Similarity extends QueryPack {
       .select(row_number().over(Window.orderBy($"vec_id")).as("code"), $"vec_id")
     var cents = sv.join(broadcast(seedIds), Seq("vec_id"))
       .select($"sub", $"code", $"semb".as("cemb"))
-      .localCheckpoint()
+      .pin()
     for (_ <- 1 to 2) {
       cents = assignTo(cents)
         .select($"sub", $"code", posexplode($"semb").as(Seq("pos", "v")))
@@ -735,9 +736,9 @@ object Similarity extends QueryPack {
         .groupBy($"sub", $"code")
         .agg(transform(array_sort(collect_list(struct($"pos", $"m"))),
           x => x.getField("m")).as("cemb"))
-        .localCheckpoint()
+        .pin()
     }
-    (assignTo(cents).localCheckpoint(true), cents)
+    (assignTo(cents).pin(), cents)
   }
 
   /** Deployment-shaped PQ artifact: the codebook + code assignments
@@ -1157,7 +1158,7 @@ object Similarity extends QueryPack {
       .withColumn("n_cells", count(lit(1)).over(wAll))
       .withColumn("uf_rows",
         max(when($"pr" === IvfNProbe, $"cum_rows")).over(wAll))
-    if (checkpoint) cum.localCheckpoint(true) else cum
+    if (checkpoint) cum.pin() else cum
   }
 
   /** The per-cell (n_rows, n_pass) passer census of the inverted-list
@@ -1758,7 +1759,7 @@ object Similarity extends QueryPack {
     import s.implicits._
     assigned.join(broadcast(cents), Seq("centroid_id"))
       .select($"vec_id", zip_with($"emb", $"cemb", (a, c) => a - c).as("emb"))
-      .localCheckpoint(true)
+      .pin()
   }
 
   /** Probed ADC top-k shared by the residual IVFADC query and the
@@ -1936,7 +1937,7 @@ object Similarity extends QueryPack {
       .select(($"vec_id" + 1000000L).as("vec_id"),
         zip_with($"emb", $"emb2",
           (a, b) => floor((a + b) / 2 * lit(1e6)) / lit(1e6)).as("emb"))
-      .localCheckpoint() // ≥2 consumers in every caller
+      .pin() // ≥2 consumers in every caller
   }
 
   /** The retrain-decision monitor between "frozen-index append"
@@ -1984,7 +1985,7 @@ object Similarity extends QueryPack {
       .select($"centroid_id", $"n_base",
         coalesce($"n_new", lit(0L)).as("n_new"), $"base_d2u",
         coalesce($"new_d2u", lit(0L)).as("new_d2u"))
-      .localCheckpoint(true) // totals + per-cell flags
+      .pin() // totals + per-cell flags
     val tot = joined.agg(sum($"n_base").as("n0"), sum($"n_new").as("n1"))
     val flags = joined.crossJoin(broadcast(tot))
       .select($"centroid_id", $"n_base", $"n_new", $"base_d2u", $"new_d2u",
@@ -1994,7 +1995,7 @@ object Similarity extends QueryPack {
           .as("energy_flag"),
         (abs($"n_new" * $"n0" - $"n_base" * $"n1") * 2 > $"n0" * $"n1")
           .as("pop_flag"))
-      .localCheckpoint(true) // rows + the bool_or fold
+      .pin() // rows + the bool_or fold
     flags.crossJoin(broadcast(
         flags.agg(expr("bool_or(energy_flag or pop_flag)")
           .as("rebuild_now"))))
@@ -2612,7 +2613,7 @@ object Similarity extends QueryPack {
         var all = e.filter($"vec_id" === 0L)
           .select($"vec_id", $"emb", lit(1L).as("pick_no"),
             lit(0.0d).as("sep"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 2 to 6) {
           val cand = e.join(all.select($"vec_id"), Seq("vec_id"),
             "left_anti")
@@ -2630,7 +2631,7 @@ object Similarity extends QueryPack {
                 .join(e.select($"vec_id", $"emb"), Seq("vec_id"))
                 .select($"vec_id", $"emb", lit(r.toLong).as("pick_no"),
                   $"mind".as("sep")))
-            .localCheckpoint(true)
+            .pin()
         }
         all.select($"pick_no", $"vec_id", $"sep").orderBy($"pick_no")
       },
@@ -2698,7 +2699,7 @@ object Similarity extends QueryPack {
           .select($"query_id", $"p.ids".as("vec_id"), $"p.scores".as("rel"))
           .join(e.select($"vec_id", $"emb"), Seq("vec_id"))
           .select($"query_id", $"vec_id", $"rel", $"emb")
-          .localCheckpoint(true) // all 4 rounds + pick 1 read this
+          .pin() // all 4 rounds + pick 1 read this
         def argmax(cand: org.apache.spark.sql.DataFrame, score: String) =
           cand.groupBy($"query_id")
             .agg(max(struct(col(score).as("sc"), (-$"vec_id").as("nid")))
@@ -2708,7 +2709,7 @@ object Similarity extends QueryPack {
           .select($"query_id", $"vec_id", $"rel", $"emb",
             lit(1L).as("pick_no"), lit(0.0d).as("maxsim"),
             round(lit(0.7d) * $"rel", 9).as("score"))
-          .localCheckpoint(true)
+          .pin()
         var all = p1
         for (r <- 2 to 5) {
           val rem = pool.join(all.select($"query_id", $"vec_id"),
@@ -2726,7 +2727,7 @@ object Similarity extends QueryPack {
             .join(argmax(scored, "score"), Seq("query_id", "vec_id"))
             .select($"query_id", $"vec_id", $"rel", $"emb",
               lit(r.toLong).as("pick_no"), $"maxsim", $"score")
-          all = all.unionByName(pick).localCheckpoint(true)
+          all = all.unionByName(pick).pin()
         }
         all.select($"query_id", $"pick_no", $"vec_id", $"rel",
             $"maxsim", $"score")
@@ -2924,12 +2925,12 @@ object Similarity extends QueryPack {
         // parquet scan and a single resident copy for the whole eval
         val e = embCheckpointed(s, d)
         val exact = exactTopK(s, e, 5).select($"query_id", $"vec_id")
-          .localCheckpoint(true) // consumers below
+          .pin() // consumers below
         val nCorpus = e.count()
         def eval(method: String, floor: Double, cand: DataFrame): DataFrame = {
           val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
           val scored = cand.select($"query_id", $"vec_id", $"cos_sim")
-            .localCheckpoint(true) // counted AND ranked below
+            .pin() // counted AND ranked below
           val top5 = scored
             .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 5)
           // recall denominates over the TRUE top-5 rows (exact left-join
@@ -4012,7 +4013,7 @@ object Similarity extends QueryPack {
         val NQ = 50
         val e = embCheckpointed(s, d)
         val exact = exactTopK(s, e, 5, NQ).select($"query_id", $"vec_id")
-          .localCheckpoint(true) // joined against both indexes below
+          .pin() // joined against both indexes below
         val (assigned, cents) = ivfModelFor(s, d)
         val (rawCodes, rawBooks) = pqModel(s, e)
         val (resCodes, resBooks) = pqModel(s, ivfResiduals(assigned, cents))
@@ -4256,7 +4257,7 @@ object Similarity extends QueryPack {
           expr("aggregate(sequence(32, 63), 0L, (acc, i) -> " +
             "acc + IF(element_at(emb, i+1) > 0D, shiftleft(1L, i-32), 0L))")
             .as("w_hi"))
-          .localCheckpoint() // the persisted-codes stand-in: built once,
+          .pin() // the persisted-codes stand-in: built once,
                              // scanned by stage 1 and the query side
         val qw = words.filter($"vec_id" < 5)
           .select($"vec_id".as("query_id"), $"w_lo".as("q_lo"),
@@ -4350,7 +4351,7 @@ object Similarity extends QueryPack {
         val e = embCheckpointed(s, d)
         val pre = e.select($"vec_id",
           slice($"emb", 1, MrlPrefixDim).as("pemb"))
-          .localCheckpoint() // the stored prefix tier: stage-1 scan + query side
+          .pin() // the stored prefix tier: stage-1 scan + query side
         val qp = pre.filter($"vec_id" < 5)
           .select($"vec_id".as("query_id"), $"pemb".as("qpemb"))
         val topC = udaf(new graft.functions.TopKAggregator(BqRerankC))
@@ -4434,7 +4435,7 @@ object Similarity extends QueryPack {
           .agg(sum(round($"v", 7).cast(DecimalType(20, 7))).as("sv"),
             count(lit(1)).as("n"))
           .withColumn("m", $"sv".cast(DoubleType) / $"n")
-          .localCheckpoint(true) // both cohort sides of the join
+          .pin() // both cohort sides of the join
         val ref = means.filter($"cohort" === 0)
           .select($"label", $"pos", $"m".as("mr"), $"n".as("nr"))
         val cur = means.filter($"cohort" === 1)
@@ -4509,7 +4510,7 @@ object Similarity extends QueryPack {
         var cents = e.orderBy(expr(seedHashSql), $"vec_id").limit(1)
           .select($"vec_id".as("cid"), $"emb".as("cemb"),
             lit(0L).as("round_added"))
-          .localCheckpoint(true)
+          .pin()
         for (r <- 1 to 3) {
           val md = e.crossJoin(broadcast(cents.select($"cid", $"cemb")))
             .withColumn("dist", l2sq($"emb", $"cemb"))
@@ -4526,7 +4527,7 @@ object Similarity extends QueryPack {
             .join(e, Seq("vec_id"))
             .select($"vec_id".as("cid"), $"emb".as("cemb"),
               lit(r.toLong).as("round_added"))
-          cents = cents.unionByName(sampled).localCheckpoint(true)
+          cents = cents.unionByName(sampled).pin()
         }
         e.crossJoin(broadcast(cents.select($"cid", $"cemb")))
           .withColumn("dist", l2sq($"emb", $"cemb"))

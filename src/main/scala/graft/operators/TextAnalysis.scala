@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,14 +85,14 @@ object TextAnalysis extends QueryPack {
     val dl = Tables.documents(s, d)
       .select($"doc_id", size(tokens).cast(LongType).as("dl"))
       .filter($"dl" >= 1)
-      .localCheckpoint() // feeds the stats aggregate AND the score join
+      .pin() // feeds the stats aggregate AND the score join
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum($"dl").as("sumdl"))
       .withColumn("avg_u",
         expr("(sumdl div n_docs) * 1000000 + " +
           "((sumdl % n_docs) * 1000000) div n_docs"))
     val tf = toks.filter($"term".isin(BmQueryTerms: _*))
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // feeds df AND the per-doc score
+      .pin() // feeds df AND the per-doc score
     val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val idf = dfreq.crossJoin(broadcast(stats))
       .select($"term",
@@ -170,7 +172,7 @@ object TextAnalysis extends QueryPack {
       .select($"doc_id", posexplode($"grams").as(Seq("j", "gram")))
       .withColumn("fp", graft.functions.RollingHash.rolling_hash2($"gram"))
       .select($"doc_id", $"j", $"fp")
-      .localCheckpoint(true) // fp doc-count agg + span join both read it
+      .pin() // fp doc-count agg + span join both read it
     val dupFps = wfp.select($"doc_id", $"fp").distinct()
       .groupBy($"fp").agg(countDistinct($"doc_id").as("n_docs"))
       .filter($"n_docs" >= 2)
@@ -217,7 +219,7 @@ object TextAnalysis extends QueryPack {
     val toks = docs
       .withColumn("tokens", tokens)
       .select($"doc_id", $"tokens")
-      .localCheckpoint(true) // the wfp scan + the apply join both read it
+      .pin() // the wfp scan + the apply join both read it
     val wfp = toks
       .filter(size($"tokens") >= 8)
       .select($"doc_id", expr(
@@ -227,7 +229,7 @@ object TextAnalysis extends QueryPack {
       .select($"doc_id", posexplode($"grams").as(Seq("j", "gram")))
       .withColumn("fp", graft.functions.RollingHash.rolling_hash2($"gram"))
       .select($"doc_id", $"j", $"fp")
-      .localCheckpoint(true)
+      .pin()
     // duplicated fps with their canonical owner: min doc_id keeps
     val dupFps = wfp.select($"doc_id", $"fp").distinct()
       .groupBy($"fp").agg(countDistinct($"doc_id").as("n_docs"),
@@ -338,15 +340,6 @@ object TextAnalysis extends QueryPack {
       maxLen: Long,                      // max per-doc dlen (tokens + 1)
       gidBase: Long)
 
-  /** Stats-resetting eager checkpoint for the suffix machinery's
-    * round-over-round self-joins — see
-    * [[org.apache.spark.sql.graftshim.Shim.cutCheckpoint]] for why the
-    * plain `localCheckpoint(true)` is exponential planning poison in
-    * ITERATIVE self-joining operators (carried `originStats` products
-    * double in bit length every round). */
-  private def cut(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.Shim.cutCheckpoint(df)
-
   /** Label the jobs `body` submits (guide §1.5) — thread-local, reset
     * after, so the attribution is exact and costs nothing. */
   private def labeled[A](s: SparkSession, what: String)(body: => A): A = {
@@ -422,7 +415,7 @@ object TextAnalysis extends QueryPack {
             $"lcp_down".as("lcp_up")), Seq("sap"), "left")
         val ps = Relational.globalPrefixSum(s, rows, Seq($"sap"), "is_train")
           .withColumnRenamed("psum", "cnt_t")
-          .transform(cut) // the total + both windows read it
+          .transform(Shim.cutCheckpoint) // the total + both windows read it
         val tot = ps.agg(max($"cnt_t").as("tot_t"))
         val seg = ps.crossJoin(broadcast(tot))
           .withColumn("seg_t_desc", $"tot_t" - $"cnt_t" + $"is_train")
@@ -476,7 +469,7 @@ object TextAnalysis extends QueryPack {
       .withColumn("tokens", tokens)
       .select($"doc_id", $"tokens")
       .filter(size($"tokens") >= 1)
-      .transform(cut) } // offsets, positions, sentinels all read it
+      .transform(Shim.cutCheckpoint) } // offsets, positions, sentinels all read it
     val lens = toks.select($"doc_id",
       (size($"tokens") + 1).cast(LongType).as("dlen")) // +1: the sentinel
     // Corpus extents FIRST: they size every range layout below. The
@@ -511,13 +504,13 @@ object TextAnalysis extends QueryPack {
       .select($"doc_id", $"off", $"docrk")
     val withOff = labeled(s, "suffix: attach offsets")(
       toks.join(docMeta, Seq("doc_id"))
-        .transform(cut)) // real positions + sentinels both read it
+        .transform(Shim.cutCheckpoint)) // real positions + sentinels both read it
     val real = labeled(s, "suffix: positions") { withOff
       .select($"doc_id", $"off", $"tokens")
       .transform(graft.functions.TextTokens.materialized)
       .select($"doc_id", $"off", posexplode($"tokens").as(Seq("p", "term")))
       .select($"doc_id", ($"off" + $"p").as("gid"), $"term")
-      .transform(cut) } // term ranking + r0 + the final mapping
+      .transform(Shim.cutCheckpoint) } // term ranking + r0 + the final mapping
     var vocab = 0L // filled by the rank passes' own counts collects
     // Term ranking, two shapes: the APPEND base (dense = true) must
     // persist the (term, trk) directory — its vocabulary merges join
@@ -530,7 +523,7 @@ object TextAnalysis extends QueryPack {
           real.select($"term").distinct(), Seq($"term"), sized(nTotal),
           onCount = vocab = _)
         .withColumnRenamed("rk", "trk")
-        .transform(cut) // r0 + the append's level-0 floor both read
+        .transform(Shim.cutCheckpoint) // r0 + the append's level-0 floor both read
       (real.join(tr, Seq("term")).select($"gid", $"trk".as("rk")), tr)
     } else {
       val ranked = Relational.globalDenseRank(s,
@@ -549,7 +542,7 @@ object TextAnalysis extends QueryPack {
       .unionByName(withOff.select(
         ($"off" + size($"tokens")).as("gid"),
         (lit(vocab) + $"docrk").as("rk")))
-      .transform(cut) }
+      .transform(Shim.cutCheckpoint) }
     // The round count is known UPFRONT: per-doc unique sentinels make
     // every suffix distinct once the window covers the longest doc
     // (incl. its sentinel) — one O(1)-row aggregate (already taken
@@ -678,7 +671,7 @@ object TextAnalysis extends QueryPack {
         // only every FOURTH level (r16 A/B: stride 3 -> 4 saved one cut
         // job on the panel; stride 5 measured no further gain)
         if (j % 4 == 3 || j == walk.length - 1)
-          lcpF = labeled(s, s"suffix: walk cut L$j")(lcpF.transform(cut))
+          lcpF = labeled(s, s"suffix: walk cut L$j")(lcpF.transform(Shim.cutCheckpoint))
       }
     } else {
       // quad levels (r17): each retained table carries (r1, r2, r3) =
@@ -712,7 +705,7 @@ object TextAnalysis extends QueryPack {
                 .otherwise(lit(0L)))
               .otherwise(lit(0L))).as("lcp"))
         if (j % 2 == 1 || j == levels.length - 1)
-          lcpF = labeled(s, s"suffix: walk cut L$j")(lcpF.transform(cut))
+          lcpF = labeled(s, s"suffix: walk cut L$j")(lcpF.transform(Shim.cutCheckpoint))
       }
     }
     val perRank = lcpF.select($"ga".as("gid"), $"lcp")
@@ -727,7 +720,7 @@ object TextAnalysis extends QueryPack {
       .join(perRank, Seq("gid"), "left")
       .withColumn("maxrep", coalesce($"maxrep", lit(0L)))
     val perPos =
-      if (dense) labeled(s, "suffix: perPos")(perPos0.transform(cut))
+      if (dense) labeled(s, "suffix: perPos")(perPos0.transform(Shim.cutCheckpoint))
       else perPos0
     Some(SuffixIndex(real, levels, cur, lcpF, perPos,
       termRanks, vocab, nDocs, nTotal, maxLen, gidBase))
@@ -800,7 +793,7 @@ object TextAnalysis extends QueryPack {
     // COMBINED maximum document length so floors refine to final ranks
     val toksN = shardDocs.withColumn("tokens", tokens)
       .select($"doc_id", $"tokens").filter(size($"tokens") >= 1)
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     val mmN = toksN
       .agg(coalesce(max(size($"tokens") + 1).cast(LongType), lit(0L))).head
     val maxLenN = mmN.getLong(0)
@@ -819,23 +812,23 @@ object TextAnalysis extends QueryPack {
       .withColumn("off", $"psum" - $"dlen" + lit(bx.nTotal))
       .select($"doc_id", $"off")
     val docMetaN = ranked(offsN, Seq($"doc_id")).withColumnRenamed("rk", "docrk")
-    val withOffN = toksN.join(docMetaN, Seq("doc_id")).transform(cut)
+    val withOffN = toksN.join(docMetaN, Seq("doc_id")).transform(Shim.cutCheckpoint)
     val realN = withOffN.select($"doc_id", $"off", $"tokens")
       .transform(graft.functions.TextTokens.materialized)
       .select($"doc_id", $"off", posexplode($"tokens").as(Seq("p", "term")))
       .select($"doc_id", ($"off" + $"p").as("gid"), $"term")
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     val sentN = withOffN.select(($"off" + size($"tokens")).as("gid"), $"docrk")
 
     // ── level 0: place shard terms into the frozen alphabet order ──
     // (terms < sentinels; shard sentinels above base sentinels — any
     // consistent total order yields the same repeats)
     val m0 = bx.vocab + bx.nDocs
-    val newTerms = realN.select($"term").distinct().transform(cut)
+    val newTerms = realN.select($"term").distinct().transform(Shim.cutCheckpoint)
     val matched0 = newTerms.join(bx.termIdx, Seq("term"))
       .select($"term", $"trk".as("maj"), lit(0L).as("mn"))
     val novel0 = newTerms.join(bx.termIdx, Seq("term"), "left_anti")
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     // floor by one merge against the vocabulary — the single base
     // structure small enough (metadata-scale) to sort against whole
     val fl0 = Relational.globalPrefixSum(s,
@@ -848,11 +841,11 @@ object TextAnalysis extends QueryPack {
     val termMap = matched0.unionByName(
         fl0.join(novRk0, Seq("term"))
           .select($"term", $"maj", ($"nrk" + 1L).as("mn")))
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     var nl = realN.join(termMap, Seq("term")).select($"gid", $"maj", $"mn")
       .unionByName(sentN.select($"gid",
         lit(m0 - 1L).as("maj"), ($"docrk" + 1L).as("mn")))
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     var nlevels = Vector[(Long, DataFrame)]((1L, nl))
 
     // ── prefix doubling over the shard only ──
@@ -871,24 +864,24 @@ object TextAnalysis extends QueryPack {
           Seq("gid"), "left")
         .select($"rk", $"ra", coalesce($"rb", lit(-1L)).as("rb"))
         .distinct()
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       val cumFirst = dk.groupBy($"ra").agg(max($"rk").as("hi"))
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       val pairs = nl.select($"gid", $"maj".as("amaj"), $"mn".as("amn"))
         .join(nl.select(($"gid" - h).as("gid"),
           $"maj".as("bmaj"), $"mn".as("bmn")), Seq("gid"), "left")
         .select($"gid", $"amaj", $"amn",
           coalesce($"bmaj", lit(-1L)).as("bmaj"),
           coalesce($"bmn", lit(0L)).as("bmn"))
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       val dp = pairs.select($"amaj", $"amn", $"bmaj", $"bmn").distinct()
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       // exact: both halves equal old keys and the pair is a key
       val exact = dp.filter($"amn" === 0L && $"bmn" === 0L)
         .join(dk, dp("amaj") === dk("ra") && dp("bmaj") === dk("rb"))
         .select($"amaj", $"amn", $"bmaj", $"bmn",
           $"rk".as("maj"), lit(0L).as("mn"))
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       // novel first half: no old key shares A — floor is the last old
       // key whose first half <= A, i.e. cumFirst(majA) (-1 below all)
       val novA = dp.filter($"amn" >= 1L)
@@ -919,24 +912,24 @@ object TextAnalysis extends QueryPack {
       val novAll = novA.unionByName(
           aM.join(grpFloor, Seq("amaj", "bmaj"))
             .select($"amaj", $"amn", $"bmaj", $"bmn", $"fl"))
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       val novRk = ranked(novAll, Seq($"amaj", $"amn", $"bmaj", $"bmn"))
       val classified = exact.unionByName(
           novRk.select($"amaj", $"amn", $"bmaj", $"bmn",
             $"fl".as("maj"), ($"rk" + 1L).as("mn")))
-        .transform(cut)
+        .transform(Shim.cutCheckpoint)
       nl = pairs.join(classified, Seq("amaj", "amn", "bmaj", "bmn"))
-        .select($"gid", $"maj", $"mn").transform(cut)
+        .select($"gid", $"maj", $"mn").transform(Shim.cutCheckpoint)
       span *= 2
       li += 1
       nlevels = nlevels :+ ((span, nl))
     }
 
     // ── merge: insertion gaps, cross pairs, LCP walks ──
-    val nr = ranked(nl, Seq($"maj", $"mn")).transform(cut)
+    val nr = ranked(nl, Seq($"maj", $"mn")).transform(Shim.cutCheckpoint)
     val gapEnds = nr.groupBy($"maj")
       .agg(min_by($"gid", $"rk").as("fgid"), max_by($"gid", $"rk").as("lgid"))
-      .transform(cut)
+      .transform(Shim.cutCheckpoint)
     val sa = bx.finalRanks // (gid, rk): dense final ranks = SA positions
     val lower = gapEnds
       .join(sa.select($"rk".as("maj"), $"gid".as("og")), Seq("maj"))
@@ -956,12 +949,12 @@ object TextAnalysis extends QueryPack {
           .select($"maj", $"ng", $"og",
             ($"lcp" + when($"nmn" === 0L && $"nmaj" === $"ork", lit(spanJ))
               .otherwise(lit(0L))).as("lcp"))
-        if (j % 2 == 1 || j == wlk.length - 1) cw = cw.transform(cut)
+        if (j % 2 == 1 || j == wlk.length - 1) cw = cw.transform(Shim.cutCheckpoint)
       }
       cw
     }
-    val lw = crossWalk(lower).transform(cut)
-    val uw = crossWalk(upper).transform(cut)
+    val lw = crossWalk(lower).transform(Shim.cutCheckpoint)
+    val uw = crossWalk(upper).transform(Shim.cutCheckpoint)
     // shard-shard merged adjacency: consecutive merged ranks, same gap
     var nnW = nr.select($"rk".as("xrk"), $"gid".as("ga"), $"maj".as("majA"))
       .join(nr.select(($"rk" - 1L).as("xrk"), $"gid".as("gb"),
@@ -978,7 +971,7 @@ object TextAnalysis extends QueryPack {
         .select($"ga", $"gb",
           ($"lcp" + when($"ma".isNotNull && $"ma" === $"mb" &&
             $"mna" === $"mnb", lit(spanJ)).otherwise(lit(0L))).as("lcp"))
-      if (j % 2 == 1 || j == wlkN.length - 1) nnW = nnW.transform(cut)
+      if (j % 2 == 1 || j == wlkN.length - 1) nnW = nnW.transform(Shim.cutCheckpoint)
     }
 
     // ── per-position repeats: shard rows from their merged neighbors,
@@ -1074,7 +1067,7 @@ object TextAnalysis extends QueryPack {
       : org.apache.spark.sql.DataFrame = {
     val s = featsIn.sparkSession
     import s.implicits._
-    val feats = featsIn.localCheckpoint(true) // 2 aggregates per epoch
+    val feats = featsIn.pin() // 2 aggregates per epoch
     var w = Array.fill(5)(0L)
     val out = scala.collection.mutable.ListBuffer
       .empty[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
@@ -1467,7 +1460,7 @@ object TextAnalysis extends QueryPack {
           .select($"doc_id", $"lang",
             substring(regexp_replace(lower($"text"), "[^a-z0-9 ]", ""), 1, 40)
               .as("head"))
-          .localCheckpoint(true) // both self-join sides read it
+          .pin() // both self-join sides read it
         docs.as("a").join(docs.as("b"),
             $"a.lang" === $"b.lang" && $"b.doc_id" === $"a.doc_id" + 1)
           .select($"a.doc_id".as("doc1"), $"b.doc_id".as("doc2"),
@@ -1549,7 +1542,7 @@ object TextAnalysis extends QueryPack {
           .select($"doc_id",
             regexp_replace($"text", "[^\\x20-\\x7e]", "").as("t"))
           .filter(length($"t") > 0)
-          .localCheckpoint(true) // histogram job + the coding pass
+          .pin() // histogram job + the coding pass
         val freq = docs.select(explode(split($"t", "")).as("c"))
           .filter($"c" =!= "")
           .groupBy($"c").agg(count(lit(1)).as("f"))
@@ -1644,7 +1637,7 @@ object TextAnalysis extends QueryPack {
         val tok = Tables.documents(s, d)
           .select($"doc_id", posexplode(tokens).as(Seq("pos", "term")))
           .filter($"term" =!= "")
-          .localCheckpoint(true) // bigram argmax + three posting reads
+          .pin() // bigram argmax + three posting reads
         val top = tok.as("a").join(tok.as("b"),
             $"a.doc_id" === $"b.doc_id" && $"b.pos" === $"a.pos" + 1)
           .groupBy($"a.term".as("t1"), $"b.term".as("t2"))
@@ -1901,7 +1894,7 @@ object TextAnalysis extends QueryPack {
           .select($"doc_id", posexplode($"grams").as(Seq("j", "gram")))
           .withColumn("fp", graft.functions.RollingHash.rolling_hash2($"gram"))
           .select($"doc_id", $"j", $"fp")
-          .localCheckpoint(true) // doc-count agg + score join both read it
+          .pin() // doc-count agg + score join both read it
         val fpDocs = wfp.select($"doc_id", $"fp").distinct()
           .groupBy($"fp").agg(countDistinct($"doc_id").as("n_docs"))
         wfp.join(fpDocs, Seq("fp"))
@@ -2321,7 +2314,7 @@ object TextAnalysis extends QueryPack {
         // never funnels through a single-task window
         val cum = Relational.globalPrefixSum(s, ranked, Seq($"rk"), "f")
           .withColumnRenamed("psum", "cumf")
-          .localCheckpoint(true) // one pass feeds all K cuts
+          .pin() // one pass feeds all K cuts
         val tot = cum.agg(sum($"f").as("total"), count(lit(1)).as("vocab"))
         val ks = Seq(1L, 2L, 4L, 8L, 16L, 32L).toDF("k")
         broadcast(ks).join(cum, $"rk" === $"k" - 1L, "left")
@@ -2505,10 +2498,10 @@ object TextAnalysis extends QueryPack {
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .filter(size($"tokens") >= 2)
           .select($"doc_id", $"tokens")
-          .localCheckpoint() // unigram AND bigram branches
+          .pin() // unigram AND bigram branches
         val uni = toks.select(explode($"tokens").as("w"))
           .groupBy($"w").agg(count(lit(1)).as("c1"))
-          .localCheckpoint(true) // both join sides + the total
+          .pin() // both join sides + the total
         val t1 = uni.agg(sum($"c1").as("t1"))
         val bi = toks.select($"doc_id", expr(
             "transform(sequence(1, size(tokens) - 1), " +
@@ -2647,7 +2640,7 @@ object TextAnalysis extends QueryPack {
         // fires across these shapes)
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .select($"doc_id", explode($"tokens").as("term"))
-          .localCheckpoint()
+          .pin()
         val counts = toks.groupBy($"term").agg(count(lit(1)).as("c"))
         // total derives from counts — not a third pass over the corpus
         val total = counts.agg(sum($"c").as("n_total"))
@@ -2700,7 +2693,7 @@ object TextAnalysis extends QueryPack {
         import s.implicits._
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .select($"doc_id", $"lang", explode($"tokens").as("term"))
-          .localCheckpoint()
+          .pin()
         val counts = toks.groupBy($"term").agg(count(lit(1)).as("c"))
         val total = counts.agg(sum($"c").as("n_total"))
         val scored = toks.join(counts, Seq("term"))
@@ -2779,13 +2772,13 @@ object TextAnalysis extends QueryPack {
         // uses would each inline the parquet scan)
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .select($"doc_id", $"tokens")
-          .localCheckpoint()
+          .pin()
         val uni = toks.select($"doc_id", explode($"tokens").as("term"))
         // vocabulary-sized; checkpointed — three consumers (total, the
         // cw1 join, the cw2 join) would each re-run the corpus-wide
         // explode+aggregate otherwise
         val c1 = uni.groupBy($"term").agg(count(lit(1)).as("c1"))
-          .localCheckpoint()
+          .pin()
         // total derives from the vocabulary-sized c1 aggregate — not a
         // second pass over the exploded corpus (unigram-surprisal rule)
         val total = c1.agg(sum($"c1").as("n_total"))
@@ -2800,7 +2793,7 @@ object TextAnalysis extends QueryPack {
                      struct(tokens[i-1] AS w1, tokens[i] AS w2))""").as("bs")))
           .select($"doc_id", explode($"bs").as("b"))
           .select($"doc_id", $"b.w1".as("w1"), $"b.w2".as("w2"))
-          .localCheckpoint()
+          .pin()
         val c2 = big.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
         big
           .join(c2, Seq("w1", "w2"))
@@ -2867,7 +2860,7 @@ object TextAnalysis extends QueryPack {
         // a plain plan (even behind an object barrier) is inlined per
         // use, re-running tokenize+explode+agg twice
         val tf = toks.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-          .localCheckpoint()
+          .pin()
         val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
         val ndocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
         val w = org.apache.spark.sql.expressions.Window
@@ -2926,7 +2919,7 @@ object TextAnalysis extends QueryPack {
         // checkpoint: tf feeds the vocab build AND the per-doc scoring —
         // inlined plans would tokenize + count the corpus twice
         val tf = toks.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-          .localCheckpoint()
+          .pin()
         val vocab = tf.groupBy($"term").agg(sum($"tf").as("n"))
           .orderBy($"n".desc, $"term").limit(VocabK)
           .select($"term", lit(1L).as("iv"))
@@ -3000,7 +2993,7 @@ object TextAnalysis extends QueryPack {
         val edges = pairs
           .union(pairs.select($"v".as("u"), $"u".as("v")))
           .groupBy($"u", $"v").agg(count(lit(1)).as("w"))
-          .localCheckpoint() // reused by wsum, nodes, and all 5 rounds
+          .pin() // reused by wsum, nodes, and all 5 rounds
         // ew is read by EVERY power-iteration round; un-pinned, each
         // round's plan re-ran the wsum aggregate and its join (5×),
         // and the node-count 1-row frame was re-derived and
@@ -3018,7 +3011,7 @@ object TextAnalysis extends QueryPack {
         // movement itself.
         val ew = edges
           .join(edges.groupBy($"u").agg(sum($"w").as("wu")), Seq("u"))
-          .localCheckpoint(true)
+          .pin()
         val n = edges.select($"u").distinct().count()
         val r0 = math.floor(1.0e9 / n).toLong
         val damp = math.floor(0.15e9 / n).toLong
@@ -3294,7 +3287,7 @@ object TextAnalysis extends QueryPack {
         import s.implicits._
         val toks = Tables.documents(s, d).withColumn("tokens", tokens)
           .select($"doc_id", $"tokens")
-          .localCheckpoint()
+          .pin()
         val big = graft.functions.TextTokens.materialized(
             toks.filter(size($"tokens") >= 2)
               .select($"doc_id", expr(
@@ -3302,11 +3295,11 @@ object TextAnalysis extends QueryPack {
                      struct(tokens[i-1] AS w1, tokens[i] AS w2))""").as("bs")))
           .select($"doc_id", explode($"bs").as("b"))
           .select($"doc_id", $"b.w1".as("w1"), $"b.w2".as("w2"))
-          .localCheckpoint()
+          .pin()
         // the single bigram-type table; all four model statistics
         // derive from it (h, Nfw per w1; Nbw per w2; T global)
         val c2 = big.groupBy($"w1", $"w2").agg(count(lit(1)).as("c2"))
-          .localCheckpoint()
+          .pin()
         val h = c2.groupBy($"w1").agg(
           sum($"c2").as("h"), count(lit(1)).as("nfw"))
         val bw = c2.groupBy($"w2").agg(count(lit(1)).as("nbw"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -104,7 +105,7 @@ object StreamingAnnServe {
           // path so an idle tick doesn't pay the checkpoint job
           val q = batch
             .select($"query_id".cast("long").as("vec_id"), $"qemb".as("emb"))
-            .localCheckpoint(true)
+            .pin()
           val ranking = Similarity.probeRankingFor(s, cents,
             q.select($"vec_id".as("query_id"), $"emb".as("qemb")))
           val budgets = Similarity.plannerBudgetsOnCensus(census, ranking)

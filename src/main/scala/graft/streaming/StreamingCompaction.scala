@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -76,7 +77,7 @@ object StreamingCompaction {
           .select($"file_id", $"size_b",
             expr(s"($off + psum - size_b) div $binSize").as("bin"),
             lit(batchId).as("batch_id"))
-          .localCheckpoint(true) // the total, the commit, and the sink
+          .pin() // the total, the commit, and the sink
         if (batchId > lastBatch) {
           val total = assigned.agg(
             coalesce(sum($"size_b"), lit(0L)).as("t"))
@@ -163,13 +164,13 @@ object StreamingCompaction {
             Seq($"file_id"), "size_b")
           .select($"file_id", $"size_b",
             expr(s"($off + psum - size_b) div $binSize").as("bin"))
-          .localCheckpoint(true) // the total + the union below
+          .pin() // the total + the union below
         val all = pending.union(assigned)
-          .localCheckpoint(true) // open-bin scalar + split + write
+          .pin() // open-bin scalar + split + write
         val openBin = all.agg(coalesce(max($"bin"), lit(-1L)))
           .collect()(0).getLong(0)
         val closed = all.filter($"bin" < openBin)
-          .localCheckpoint(true) // the write + the census emission
+          .pin() // the write + the census emission
         val newPending = all.filter($"bin" === openBin)
         val hasClosed = closed.limit(1).count() > 0
         if (hasClosed)

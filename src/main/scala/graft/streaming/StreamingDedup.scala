@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions.{col, sha2}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -62,7 +63,7 @@ object StreamingDedup {
         // survivor plan reads — the checkpoint pins the anti-join's
         // result so the fold can't see its own writes
         val survivors = Dedup.incrementalAgainstState(s, inc, stateTable)
-          .localCheckpoint(true)
+          .pin()
         sink(survivors)
         Bucketing.appendBucketAligned(
           survivors.select("body_sha256"), stateTable)
@@ -100,7 +101,7 @@ object StreamingDedup {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         val inc = Dedup.fpsOf(batch.select(col("doc_id"), col("text")))
-          .localCheckpoint(true) // one pinned copy feeds banding,
+          .pin() // one pinned copy feeds banding,
                                  // verify, survivors, and both folds
         Bucketing.recoverCompaction(s, bandsTable)
         Bucketing.recoverCompaction(s, fpsTable)
@@ -119,7 +120,7 @@ object StreamingDedup {
         val survivors = Dedup.nearIncrementalAgainstState(
           s, inc, bandsTable, fpsTable, nBands, rowsPerBand, tau,
           incBands = Some(incBands))
-          .localCheckpoint(true) // feeds sink + both folds; must not
+          .pin() // feeds sink + both folds; must not
                                  // observe its own state writes
         sink(survivors)
         Bucketing.appendBucketAligned(
@@ -187,7 +188,7 @@ object StreamingDedup {
         // the state append, and the append writes into the very table
         // the anti-join reads
         val fresh = Dedup.cdcIncrementalAgainstState(s, chunks, stateTable)
-          .localCheckpoint(true)
+          .pin()
         sink(fresh, batchId)
         Bucketing.appendBucketAligned(fresh.select("cfp"), stateTable)
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
@@ -238,12 +239,12 @@ object StreamingDedup {
         import org.apache.spark.sql.functions.expr
         val inc = Dedup.fpsOf(batch.select(col("doc_id"), col("text")))
           .filter(expr("size(fps) > 0"))
-          .localCheckpoint(true) // feeds prefix job, verify, and the fold
+          .pin() // feeds prefix job, verify, and the fold
         Bucketing.recoverCompaction(s, prefixTable)
         Bucketing.recoverCompaction(s, fpsTable)
         // the prefix job runs ONCE per batch; the state probe, the
         // in-batch pair plan, and the fold all share this frame
-        val pref = Dedup.fixedOrderPrefix(inc).localCheckpoint(true)
+        val pref = Dedup.fixedOrderPrefix(inc).pin()
         if (!s.catalog.tableExists(prefixTable))
           Bucketing.writeBucketed(pref.limit(0), prefixTable, "fp", buckets)
         if (!s.catalog.tableExists(fpsTable))
@@ -252,7 +253,7 @@ object StreamingDedup {
         // tables the folds append to
         val pairs = Dedup.prefixIncrementalAgainstState(
           s, inc, prefixTable, fpsTable, incPrefix = Some(pref))
-          .localCheckpoint(true)
+          .pin()
         sink(pairs, batchId)
         Bucketing.appendBucketAligned(pref, prefixTable)
         Bucketing.appendBucketAligned(inc, fpsTable)
@@ -295,12 +296,12 @@ object StreamingDedup {
         import org.apache.spark.sql.functions.explode
         val inc = Dedup.containmentFpsOf(
             batch.select(col("doc_id"), col("lang"), col("text")))
-          .localCheckpoint(true) // postings, lookup, and the fold read it
+          .pin() // postings, lookup, and the fold read it
         Bucketing.recoverCompaction(s, postsTable)
         Bucketing.recoverCompaction(s, fpsTable)
         val incPosts = inc.select(col("doc_id"), col("lang"), col("n"),
             explode(col("fps")).as("fp"))
-          .localCheckpoint(true) // both candidate branches + the fold
+          .pin() // both candidate branches + the fold
         if (!s.catalog.tableExists(postsTable))
           Bucketing.writeBucketed(incPosts.limit(0), postsTable, "fp", buckets)
         if (!s.catalog.tableExists(fpsTable))
@@ -309,7 +310,7 @@ object StreamingDedup {
         // tables the folds append to
         val pairs = Dedup.containmentIncrementalAgainstState(
           s, inc, incPosts, postsTable, fpsTable)
-          .localCheckpoint(true)
+          .pin()
         sink(pairs, batchId)
         Bucketing.appendBucketAligned(incPosts, postsTable)
         Bucketing.appendBucketAligned(inc, fpsTable)
@@ -361,7 +362,7 @@ object StreamingDedup {
         val e = batch
           .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
           .filter(col("u") =!= col("v")).distinct()
-          .localCheckpoint(true) // nodes + the quotient join
+          .pin() // nodes + the quotient join
         Bucketing.recoverCompaction(s, labelsTable)
         if (!s.catalog.tableExists(labelsTable))
           Bucketing.writeBucketed(
@@ -378,7 +379,7 @@ object StreamingDedup {
           .join(broadcast(aliasDf), col("label") === col("src"), "left")
           .select($"node", $"label".as("base"),
             coalesce($"dst", $"label", $"node").as("resolved"))
-          .localCheckpoint(true) // quotient ×2 + appends + alias update
+          .pin() // quotient ×2 + appends + alias update
         val quotient = e
           .join(looked.select($"node".as("u"), $"resolved".as("lu")), Seq("u"))
           .join(looked.select($"node".as("v"), $"resolved".as("lv")), Seq("v"))
@@ -389,7 +390,7 @@ object StreamingDedup {
         val mergeMap = Dedup.componentLabels(s, quotient)
           .filter(col("doc_id") =!= col("cluster"))
           .select(col("doc_id").as("old"), col("cluster").as("root"))
-          .localCheckpoint(true) // sink + appends + both alias branches
+          .pin() // sink + appends + both alias branches
         sink(mergeMap.select($"old".as("old_label"), $"root".as("new_label")))
         // new nodes append WITH their final root — no alias entry needed
         Bucketing.appendBucketAligned(
@@ -408,7 +409,7 @@ object StreamingDedup {
           .select(col("a.src").as("src"),
             coalesce(col("root"), col("a.dst")).as("dst"))
           .unionByName(newAlias)
-          .localCheckpoint(true) // pinned BEFORE overwriting its input
+          .pin() // pinned BEFORE overwriting its input
         updated.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .format("parquet").saveAsTable(aliasTable)
         // Overwrite recreates the table at the same name: drop the
@@ -447,7 +448,7 @@ object StreamingDedup {
       labelsTable: String, aliasTable: String, buckets: Int): Unit = {
     import s.implicits._
     val resolved = resolvedComponents(s, labelsTable, aliasTable)
-      .localCheckpoint(true) // pinned before overwriting its inputs
+      .pin() // pinned before overwriting its inputs
     Bucketing.writeBucketed(resolved, labelsTable, "node", buckets)
     Seq.empty[(Long, Long)].toDF("src", "dst")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)

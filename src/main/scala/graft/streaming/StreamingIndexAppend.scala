@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -102,7 +103,7 @@ object StreamingIndexAppend {
         val q = batch
           .select($"vec_id".cast("long").as("vec_id"), $"emb",
             $"label".cast("long").as("label"))
-          .localCheckpoint(true) // scalars + encode (2 readers) + label join
+          .pin() // scalars + encode (2 readers) + label join
         var rows: DataFrame = null
         // unpersists ride a finally: the validation guards below throw
         // AFTER the eager checkpoints have pinned blocks, and a stream
@@ -132,7 +133,7 @@ object StreamingIndexAppend {
             s, cents, books, q.select($"vec_id", $"emb")))
           .join(q.select($"vec_id", $"label"), Seq("vec_id"))
           .select($"vec_id", $"codes", $"label", $"centroid_id")
-          .localCheckpoint(true) // the write + the census emission
+          .pin() // the write + the census emission
         if (!replay && !scalars.isNullAt(0)) {
           // stage → per-cell rename: one file per touched cell, named
           // by batch id — deterministic, so a crashed attempt's file

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -77,7 +78,7 @@ object StreamingScd2 {
         $"c_mktsegment", lit(batchId).as("valid_from"))
       // pinned: feeds the sink AND the fold, and the fold appends
       // into a table this plan would otherwise re-derive against
-      .localCheckpoint(true)
+      .pin()
     sink(latest)
     // idempotence guard: a replayed batch re-derives identical
     // rows stamped with the same valid_from = batchId, so "rows

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -112,12 +113,12 @@ object StreamingShards {
           .select($"doc_id".cast("long").as("doc_id"),
             $"bmp", $"gif", $"png", $"wav",
             (ml("bmp") + ml("gif") + ml("png") + ml("wav")).as("size_b"))
-          .localCheckpoint(true) // census + (non-replay) the write
+          .pin() // census + (non-replay) the write
         val assigned = Relational.globalPrefixSum(s,
             priced.select($"doc_id", $"size_b"), Seq($"doc_id"), "size_b")
           .select($"doc_id", $"size_b",
             expr(s"($off + psum - size_b) div $targetBytes").as("bin"))
-          .localCheckpoint(true) // scalars + union + (non-replay) join
+          .pin() // scalars + union + (non-replay) join
         // one tiny aggregate over the pinned frame: the batch's byte
         // total (committed as the next offset) plus the doc_id range
         // and distinctness the carried-offset arithmetic DEPENDS on
@@ -152,7 +153,7 @@ object StreamingShards {
               "order IS the bin order)")
         }
         val all = pending.union(assigned)
-          .localCheckpoint(true) // open-bin scalar + split + commit
+          .pin() // open-bin scalar + split + commit
         val openBin = all.agg(coalesce(max($"bin"), lit(-1L)))
           .collect()(0).getLong(0)
         val closed = all.filter($"bin" < openBin)
