@@ -122,31 +122,6 @@ object Listing {
       case None => listing
     }
 
-  /** Content fetch for the post-diff change set, fully DISTRIBUTED:
-    * the `uri` column of `files` streams to executors, and each task
-    * stats + reads its files directly through the Hadoop FileSystem
-    * API — no driver-side path list (the previous `binaryFile` face
-    * required `load(paths*)`, putting every fetched path in driver
-    * memory), so the fetch set is bounded by cluster IO, not by the
-    * driver. Each FileSystem resolves from its QUALIFIED uri, never
-    * from `fs.defaultFS`, so non-default filesystems fetch correctly.
-    *
-    * Missing files are skipped per-task (a file deleted between list
-    * and fetch simply retries next poll — the reference's own race
-    * posture, and binaryFile would have failed the whole batch).
-    * Zero-length files need no special case: an empty read IS the
-    * empty body (binaryFile plans zero splits for them — the other
-    * reason it lost this job). Returns (path, uri, size, timestamp,
-    * body) with `path` scheme-stripped to the record identity and
-    * size/timestamp re-stat'd at read time (binaryFile's contract).
-    *
-    * Files larger than `inlineBodyMax` are NOT read here: their `body`
-    * is null, and the tail/diff stage streams them through
-    * [[TailDiff.handleFetchedStream]] (digests + the emitted range
-    * only) — an in-memory body caps at the JVM array bound and, long
-    * before that, at the executor's per-task memory slice, so a
-    * 100 TB deployment's multi-GiB append logs must never materialize
-    * whole. */
   /** Serializable Hadoop Configuration carrier (Configuration is
     * Writable but not Serializable; Spark's own equivalent is
     * private[spark]) — lets the fetch tasks resolve FileSystems with
@@ -192,7 +167,33 @@ object Listing {
     * ~1 GiB per-core executor memory slice with operator headroom. */
   val DefaultInlineBodyMax: Long = 256L << 20
 
-  /** `skipped` (when given) counts files dropped by the per-file
+  /** Content fetch for the post-diff change set, fully DISTRIBUTED:
+    * the `uri` column of `files` streams to executors, and each task
+    * stats + reads its files directly through the Hadoop FileSystem
+    * API — no driver-side path list (the previous `binaryFile` face
+    * required `load(paths*)`, putting every fetched path in driver
+    * memory), so the fetch set is bounded by cluster IO, not by the
+    * driver. Each FileSystem resolves from its QUALIFIED uri, never
+    * from `fs.defaultFS`, so non-default filesystems fetch correctly.
+    *
+    * Missing files are skipped per-task (a file deleted between list
+    * and fetch simply retries next poll — the reference's own race
+    * posture, and binaryFile would have failed the whole batch).
+    * Zero-length files need no special case: an empty read IS the
+    * empty body (binaryFile plans zero splits for them — the other
+    * reason it lost this job). Returns (path, uri, size, timestamp,
+    * body) with `path` scheme-stripped to the record identity and
+    * size/timestamp re-stat'd at read time (binaryFile's contract).
+    *
+    * Files larger than `inlineBodyMax` are NOT read here: their `body`
+    * is null, and the tail/diff stage streams them through
+    * [[TailDiff.handleFetchedStreamChunked]] (digests + the emitted range
+    * only) — an in-memory body caps at the JVM array bound and, long
+    * before that, at the executor's per-task memory slice, so a
+    * 100 TB deployment's multi-GiB append logs must never materialize
+    * whole.
+    *
+    * `skipped` (when given) counts files dropped by the per-file
     * IOException catch below — a permanently unreadable file (e.g.
     * bad permissions) is otherwise skipped on EVERY poll with only an
     * executor log line to show for it; the accumulator makes the

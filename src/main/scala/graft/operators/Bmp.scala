@@ -15,8 +15,9 @@ package graft.operators
   * The reference's data model treats payloads as opaque bytes
   * (`/root/reference/src/main/scala/com/eneco/trading/kafka/connect/ftp/source/SimpleFileConverter.scala:50-51`);
   * this codec is the "decode step" a real media pipeline bolts onto
-  * that model, kept deliberately small (BMP only) because the
-  * container ships no image libraries.
+  * that model, kept deliberately small (BMP only). It is not ImageIO's
+  * BMP reader, which accepts a trailing byte after the pixel rows that
+  * this decoder rejects as a size mismatch.
   */
 object Bmp {
 

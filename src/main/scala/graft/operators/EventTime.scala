@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim.PinSyntax
@@ -354,6 +355,225 @@ object EventTime extends QueryPack {
          WHEN $u8 < 255 THEN 4 ELSE 5 END)"""
   }
 
+  /** Every event after a user's first, with the user's previous
+    * event type as `prev_type` (time, then event_id order) — the
+    * first-order transitions of `evt_transitions` and
+    * `evt_markov_stationary`. */
+  private def typeTransitions(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
+    Tables.events(s, d)
+      .select($"user_id", $"event_id", $"event_type",
+        expr("ts div 1000").as("tus"))
+      .withColumn("prev_type", lag($"event_type", 1).over(w))
+      .filter($"prev_type".isNotNull)
+  }
+
+  /** Per user the purchase/error/click/view counts behind the two
+    * behavioral cohorts of the sketch-overlap queries: a = more
+    * purchases than errors, b = more clicks than views. */
+  private def cohortCounts(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Tables.events(s, d).groupBy($"user_id")
+      .agg(
+        count(when($"event_type" === "purchase", 1)).as("np"),
+        count(when($"event_type" === "error", 1)).as("ne"),
+        count(when($"event_type" === "click", 1)).as("nc"),
+        count(when($"event_type" === "view", 1)).as("nv"))
+  }
+
+  /** [[cohortCounts]] and the cohorts as oracle CTEs `c`, `a`, `b`. */
+  private lazy val cohortSql: String = """c AS (
+          SELECT user_id,
+                 COUNT(*) FILTER (event_type = 'purchase') AS np,
+                 COUNT(*) FILTER (event_type = 'error') AS ne,
+                 COUNT(*) FILTER (event_type = 'click') AS nc,
+                 COUNT(*) FILTER (event_type = 'view') AS nv
+          FROM events GROUP BY user_id),
+        a AS (SELECT user_id FROM c WHERE np > ne),
+        b AS (SELECT user_id FROM c WHERE nc > nv)"""
+
+  /** Each event as a point of its user's series: (user_id, event_id,
+    * tus = epoch micros, y = value in centi-units). */
+  private def userSeries(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Tables.events(s, d).select($"user_id", $"event_id",
+      expr("ts div 1000").as("tus"),
+      (dec($"value") * 100).cast(LongType).as("y"))
+  }
+
+  /** [[userSeries]] as the oracle CTE `ev`. */
+  private lazy val userSeriesSql: String = """ev AS (
+          SELECT user_id, event_id, epoch_us(ts) AS tus,
+                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+          FROM events)"""
+
+  /** Per lag k in `lags`, the moments of the pairs (x = `xCol` at day
+    * t−k, yy = `yCol` at day t) of a pinned (day, ...) series, one
+    * day-equality self-join per lag: (lag, n_pairs, sx, sy, sxx, syy,
+    * sxy), each sum exact in DECIMAL(38) then cast to DOUBLE. */
+  private def lagMoments(daily: DataFrame, xCol: String, yCol: String,
+      lags: Seq[Long]): DataFrame = {
+    val s = daily.sparkSession
+    import s.implicits._
+    val big = DecimalType(38, 0)
+    val byLag = lags.map { k =>
+      daily.as("a").join(daily.as("b"), $"a.day" === $"b.day" + k)
+        .select(lit(k).as("lag"), col(s"b.$xCol").as("x"),
+          col(s"a.$yCol").as("yy"))
+    }.reduce(_ unionByName _)
+    byLag.groupBy($"lag")
+      .agg(count(lit(1)).as("n_pairs"),
+        sum($"x".cast(big)).cast(DoubleType).as("sx"),
+        sum($"yy".cast(big)).cast(DoubleType).as("sy"),
+        sum($"x".cast(big) * $"x").cast(DoubleType).as("sxx"),
+        sum($"yy".cast(big) * $"yy").cast(DoubleType).as("syy"),
+        sum($"x".cast(big) * $"yy").cast(DoubleType).as("sxy"))
+  }
+
+  /** Pearson correlation over [[lagMoments]] columns, NULL when either
+    * variance is zero. */
+  private val lagPearson: Column =
+    (col("n_pairs") * col("sxy") - col("sx") * col("sy")) /
+      nullif(sqrt(greatest(lit(0.0),
+        (col("n_pairs") * col("sxx") - col("sx") * col("sx")) *
+          (col("n_pairs") * col("syy") - col("sy") * col("sy")))), lit(0.0))
+
+  /** [[lagMoments]] as the oracle CTE `m` over a `pairs` (lag, x, yy)
+    * CTE. */
+  private lazy val lagMomentsSql: String = """m AS (
+          SELECT lag, COUNT(*) AS n_pairs,
+                 CAST(SUM(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
+                 CAST(SUM(CAST(yy AS HUGEINT)) AS DOUBLE) AS sy,
+                 CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx,
+                 CAST(SUM(CAST(yy AS HUGEINT) * yy) AS DOUBLE) AS syy,
+                 CAST(SUM(CAST(x AS HUGEINT) * yy) AS DOUBLE) AS sxy
+          FROM pairs GROUP BY lag)"""
+
+  /** [[lagPearson]] in the oracle's spelling. */
+  private lazy val lagPearsonSql: String = """(n_pairs * sxy - sx * sy) /
+                 NULLIF(sqrt(greatest(0.0,
+                   (n_pairs * sxx - sx * sx)
+                     * (n_pairs * syy - sy * sy))), 0.0)"""
+
+  /** Exact 2×-scale median and 4×-scale MAD per event_type of a
+    * pinned (event_type, `vCol`, c) count table: a median is the sum
+    * m2 = v1 + v2 of the two middle order statistics, picked off the
+    * cumulative counts, and the MAD is the 2×-median of
+    * dev = |2y − m2| — integers only, every window bounded by the
+    * distinct value domain. Returns (per-type count n, median table,
+    * MAD table), the last two as (event_type, m2). */
+  private def medianMad2(vc: DataFrame,
+      vCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val s = vc.sparkSession
+    import s.implicits._
+    val n = vc.groupBy($"event_type").agg(sum($"c").as("n"))
+    def median2(df: DataFrame, v: String): DataFrame = {
+      val w = Window.partitionBy($"event_type").orderBy(col(v))
+      df.withColumn("cum", sum($"c").over(w))
+        .join(broadcast(n), Seq("event_type"))
+        .groupBy($"event_type")
+        .agg(
+          min(when($"cum" >= expr("(n + 1) div 2"), col(v))).as("v1"),
+          min(when($"cum" >= expr("n div 2 + 1"), col(v))).as("v2"))
+        .select($"event_type", ($"v1" + $"v2").as("m2"))
+    }
+    val med = median2(vc, vCol)
+    val dev = vc.join(broadcast(med), Seq("event_type"))
+      .select($"event_type", abs(lit(2) * col(vCol) - $"m2").as("dv"), $"c")
+      .groupBy($"event_type", $"dv").agg(sum($"c").as("c"))
+    (n, med, median2(dev, "dv"))
+  }
+
+  /** [[medianMad2]] as oracle CTEs over a `vc` (event_type, `v`, c)
+    * CTE: the per-type count `n`, the 2×-median `med` (column `med`)
+    * and the 4×-MAD `mad` (column `mad`). */
+  private def medianMadSql(v: String, med: String, mad: String): String =
+    s"""n AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS n
+              FROM vc GROUP BY 1),
+        cum1 AS (
+          SELECT vc.event_type, vc.$v, n.n,
+                 SUM(vc.c) OVER (PARTITION BY vc.event_type
+                                 ORDER BY vc.$v) AS cum
+          FROM vc JOIN n USING (event_type)),
+        med AS (
+          SELECT event_type,
+                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN $v END)
+                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN $v END) AS $med
+          FROM cum1 GROUP BY event_type),
+        dev AS (
+          SELECT vc.event_type, abs(2 * vc.$v - med.$med) AS dv,
+                 CAST(SUM(vc.c) AS BIGINT) AS c
+          FROM vc JOIN med USING (event_type)
+          GROUP BY 1, 2),
+        cum2 AS (
+          SELECT dev.event_type, dev.dv, n.n,
+                 SUM(dev.c) OVER (PARTITION BY dev.event_type
+                                  ORDER BY dev.dv) AS cum
+          FROM dev JOIN n USING (event_type)),
+        mad AS (
+          SELECT event_type,
+                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN dv END)
+                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN dv END) AS $mad
+          FROM cum2 GROUP BY event_type)"""
+
+  /** The daily series: per day, the exact sum of event values in
+    * centi-units, as column `y`. */
+  private def dailyCents(s: SparkSession, d: String, y: String): DataFrame = {
+    import s.implicits._
+    Tables.events(s, d)
+      .select(expr(s"(ts div 1000) div $DayUs").as("day"),
+        expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
+          .as("y"))
+      .groupBy($"day").agg(sum($"y").as(y))
+  }
+
+  /** Events as (day, y = value in centi-units) crossed with the
+    * one-row (d0, d1) day range — the input of the temporal-split
+    * rank and drift tests. */
+  private def dayCents(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = Tables.events(s, d)
+      .select(expr(s"(ts div 1000) div $DayUs").as("day"),
+        expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
+          .as("y"))
+    val rng = ev.agg(min($"day").as("d0"), max($"day").as("d1"))
+    ev.crossJoin(broadcast(rng))
+  }
+
+  /** Per value y, its event counts in the first (`ca`) and second
+    * (`cb`) temporal half — the KS and Mann–Whitney count table. */
+  private def halfCounts(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    dayCents(s, d)
+      .withColumn("side",
+        when($"day" < expr("(d0 + d1 + 1) div 2"), 0).otherwise(1))
+      .groupBy($"y")
+      .agg(sum(when($"side" === 0, 1L).otherwise(0L)).as("ca"),
+        sum(when($"side" === 1, 1L).otherwise(0L)).as("cb"))
+  }
+
+  /** [[dayCents]] as oracle CTEs `ev`, `rng`. */
+  private lazy val dayCentsSql: String = s"""ev AS (
+          SELECT epoch_us(ts) // $DayUs AS day,
+                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+          FROM events),
+        rng AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev)"""
+
+  /** [[halfCounts]] as oracle CTEs (after [[dayCentsSql]]) `cnt` and
+    * the side totals `nn`. */
+  private lazy val halfCountsSql: String = s"""$dayCentsSql,
+        cnt AS (
+          SELECT y,
+                 CAST(COUNT(*) FILTER (day < (d0 + d1 + 1) // 2)
+                   AS BIGINT) AS ca,
+                 CAST(COUNT(*) FILTER (day >= (d0 + d1 + 1) // 2)
+                   AS BIGINT) AS cb
+          FROM ev, rng GROUP BY y),
+        nn AS (
+          SELECT CAST(SUM(ca) AS BIGINT) AS n_a,
+                 CAST(SUM(cb) AS BIGINT) AS n_b FROM cnt)"""
+
   override val queries: Map[String, QueryDef] = Map(
 
     // ── Poisson-bootstrap confidence intervals (per event type) ──
@@ -560,11 +780,7 @@ object EventTime extends QueryPack {
     "evt_theil_sen" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val raw = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y"))
+        val raw = dailyCents(s, d, "y")
         val d0 = raw.agg(min($"day").as("d0"))
         theilSen(raw.crossJoin(broadcast(d0))
           .select(($"day" - $"d0").as("x"), $"y"))
@@ -632,11 +848,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val big = DecimalType(38, 0)
-        val daily = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y"))
+        val daily = dailyCents(s, d, "y")
         val cum = Relational.globalPrefixSum(s, daily, Seq($"day"), "y")
         val ranked = Relational.globalRank(s, cum, Seq($"day"))
           .pin() // totals + the candidate scan
@@ -1097,12 +1309,7 @@ object EventTime extends QueryPack {
     "evt_transitions" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-        Tables.events(s, d)
-          .select($"user_id", $"event_id", $"event_type",
-            expr("ts div 1000").as("tus"))
-          .withColumn("prev_type", lag($"event_type", 1).over(w))
-          .filter($"prev_type".isNotNull)
+        typeTransitions(s, d)
           .groupBy($"prev_type", $"event_type".as("next_type"))
           .agg(count(lit(1)).as("n"))
           .withColumn("p",
@@ -1155,12 +1362,7 @@ object EventTime extends QueryPack {
     "evt_markov_stationary" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-        val cells = Tables.events(s, d)
-          .select($"user_id", $"event_id", $"event_type",
-            expr("ts div 1000").as("tus"))
-          .withColumn("prev_type", lag($"event_type", 1).over(w))
-          .filter($"prev_type".isNotNull)
+        val cells = typeTransitions(s, d)
           .groupBy($"prev_type".as("src"), $"event_type".as("dst"))
           .agg(count(lit(1)).as("n"))
         markovStationary(s, cells)
@@ -1777,9 +1979,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-        val ev = Tables.events(s, d).select($"user_id", $"event_id",
-          expr("ts div 1000").as("tus"),
-          (dec($"value") * 100).cast(LongType).as("y"))
+        val ev = userSeries(s, d)
         val taps = (0 to 7).map { i =>
           val wgt = 1L << (7 - i)
           val lv = if (i == 0) $"y" else lag($"y", i).over(w)
@@ -1791,11 +1991,8 @@ object EventTime extends QueryPack {
             taps.map(_._2).reduce(_ + _).as("smooth_den"))
           .orderBy($"user_id", $"event_id")
       },
-      oracle = Some("""
-        WITH ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS tus,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
+      oracle = Some(s"""
+        WITH $userSeriesSql,
         l AS (
           SELECT user_id, event_id, y,
                  LAG(y, 1) OVER w AS y1, LAG(y, 2) OVER w AS y2,
@@ -1839,9 +2036,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-        val ev = Tables.events(s, d).select($"user_id", $"event_id",
-          expr("ts div 1000").as("tus"),
-          (dec($"value") * 100).cast(LongType).as("y"))
+        val ev = userSeries(s, d)
         def lv(i: Int) = if (i == 0) $"y" else lag($"y", i).over(w)
         def conv(weights: IndexedSeq[Long]) = (
           weights.indices.map { i =>
@@ -1879,10 +2074,7 @@ object EventTime extends QueryPack {
         val s2d = HoltW2.zipWithIndex.map { case (w, k) => denTerm(w, k) }
           .mkString(" + ")
         s"""
-        WITH ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS tus,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
+        WITH $userSeriesSql,
         l AS (
           SELECT user_id, event_id, y, $lags
           FROM ev
@@ -1918,11 +2110,7 @@ object EventTime extends QueryPack {
     "evt_forecast_backtest" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val days = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y"))
+        val days = dailyCents(s, d, "y")
         val w = Window.orderBy($"day")
         def lv(i: Int) = lag($"y", i).over(w)
         val s1n = HoltW1.zipWithIndex.map { case (wt, k) =>
@@ -1999,9 +2187,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-        val ev = Tables.events(s, d).select($"user_id", $"event_id",
-          expr("ts div 1000").as("tus"),
-          (dec($"value") * 100).cast(LongType).as("y"))
+        val ev = userSeries(s, d)
         val lags = (0 to 4).map(i =>
           if (i == 0) $"y" else lag($"y", i).over(w))
         ev.select($"user_id", $"event_id",
@@ -2014,11 +2200,8 @@ object EventTime extends QueryPack {
               .as("med2"))
           .orderBy($"user_id", $"event_id")
       },
-      oracle = Some("""
-        WITH ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS tus,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
+      oracle = Some(s"""
+        WITH $userSeriesSql,
         l AS (
           SELECT user_id, event_id, y,
                  LAG(y, 1) OVER w AS y1, LAG(y, 2) OVER w AS y2,
@@ -2054,10 +2237,7 @@ object EventTime extends QueryPack {
         import s.implicits._
         val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        Tables.events(s, d)
-          .select($"user_id", $"event_id",
-            expr("ts div 1000").as("tus"),
-            (dec($"value") * 100).cast(LongType).as("y"))
+        userSeries(s, d)
           .withColumn("runpeak", max($"y").over(w))
           .groupBy($"user_id")
           .agg(count(lit(1)).as("n_events"),
@@ -2067,11 +2247,8 @@ object EventTime extends QueryPack {
               .as("n_underwater"))
           .orderBy($"user_id")
       },
-      oracle = Some("""
-        WITH ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS tus,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
+      oracle = Some(s"""
+        WITH $userSeriesSql,
         r AS (
           SELECT user_id, y,
                  MAX(y) OVER (PARTITION BY user_id ORDER BY tus, event_id
@@ -2110,25 +2287,8 @@ object EventTime extends QueryPack {
           .select($"event_type", (dec($"value") * 100).cast(LongType).as("v"))
           .groupBy($"event_type", $"v").agg(count(lit(1)).as("c"))
           .pin()
-        val n = vc.groupBy($"event_type").agg(sum($"c").as("n"))
-        // 2×-scale median of a (type, value, count) table: the two
-        // middle order statistics picked off the cumulative counts
-        def median2(df: org.apache.spark.sql.DataFrame,
-            vCol: String): org.apache.spark.sql.DataFrame = {
-          val w = Window.partitionBy($"event_type").orderBy(col(vCol))
-          df.withColumn("cum", sum($"c").over(w))
-            .join(broadcast(n), Seq("event_type"))
-            .groupBy($"event_type")
-            .agg(
-              min(when($"cum" >= expr("(n + 1) div 2"), col(vCol))).as("v1"),
-              min(when($"cum" >= expr("n div 2 + 1"), col(vCol))).as("v2"))
-            .select($"event_type", ($"v1" + $"v2").as("m2"))
-        }
-        val med = median2(vc, "v") // m2 = 2·median(y)
-        val dev = vc.join(broadcast(med), Seq("event_type"))
-          .select($"event_type", abs(lit(2) * $"v" - $"m2").as("dv"), $"c")
-          .groupBy($"event_type", $"dv").agg(sum($"c").as("c"))
-        val mad = median2(dev, "dv") // m2 = 4·MAD(y)
+        // med.m2 = 2·median(y), mad.m2 = 4·MAD(y)
+        val (_, med, mad) = medianMad2(vc, "v")
         vc.join(broadcast(med.select($"event_type", $"m2".as("med2"))),
             Seq("event_type"))
           .join(broadcast(mad.select($"event_type", $"m2".as("mad4"))),
@@ -2140,39 +2300,13 @@ object EventTime extends QueryPack {
           .select($"event_type", $"n_events", $"med2", $"mad4", $"n_outliers")
           .orderBy($"event_type")
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH vc AS (
           SELECT event_type,
                  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
                  COUNT(*) AS c
           FROM events GROUP BY 1, 2),
-        n AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS n
-              FROM vc GROUP BY 1),
-        cum1 AS (
-          SELECT vc.event_type, vc.v, n.n,
-                 SUM(vc.c) OVER (PARTITION BY vc.event_type
-                                 ORDER BY vc.v) AS cum
-          FROM vc JOIN n USING (event_type)),
-        med AS (
-          SELECT event_type,
-                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN v END)
-                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN v END) AS med2
-          FROM cum1 GROUP BY event_type),
-        dev AS (
-          SELECT vc.event_type, abs(2 * vc.v - med.med2) AS dv,
-                 CAST(SUM(vc.c) AS BIGINT) AS c
-          FROM vc JOIN med USING (event_type)
-          GROUP BY 1, 2),
-        cum2 AS (
-          SELECT dev.event_type, dev.dv, n.n,
-                 SUM(dev.c) OVER (PARTITION BY dev.event_type
-                                  ORDER BY dev.dv) AS cum
-          FROM dev JOIN n USING (event_type)),
-        mad AS (
-          SELECT event_type,
-                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN dv END)
-                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN dv END) AS mad4
-          FROM cum2 GROUP BY event_type)
+        ${medianMadSql("v", "med2", "mad4")}
         SELECT vc.event_type, CAST(SUM(vc.c) AS BIGINT) AS n_events,
                med.med2, mad.mad4,
                CAST(SUM(CASE WHEN 2 * abs(2 * vc.v - med.med2)
@@ -2302,13 +2436,7 @@ object EventTime extends QueryPack {
     "agg_minhash_overlap" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val c = Tables.events(s, d).groupBy($"user_id")
-          .agg(
-            count(when($"event_type" === "purchase", 1)).as("np"),
-            count(when($"event_type" === "error", 1)).as("ne"),
-            count(when($"event_type" === "click", 1)).as("nc"),
-            count(when($"event_type" === "view", 1)).as("nv"))
-          .pin() // both segment filters + the join
+        val c = cohortCounts(s, d).pin() // both segment filters + the join
         val a = c.filter($"np" > $"ne").select($"user_id")
         val b = c.filter($"nc" > $"nv").select($"user_id")
         def sig(side: org.apache.spark.sql.DataFrame, p: String) = side.agg(
@@ -2334,16 +2462,8 @@ object EventTime extends QueryPack {
               <= lit(6L) * (lit(64L) + $"m_agree") * $"exact_inter")
               .as("within_60pct"))
       },
-      oracle = Some("""
-        WITH c AS (
-          SELECT user_id,
-                 COUNT(*) FILTER (event_type = 'purchase') AS np,
-                 COUNT(*) FILTER (event_type = 'error') AS ne,
-                 COUNT(*) FILTER (event_type = 'click') AS nc,
-                 COUNT(*) FILTER (event_type = 'view') AS nv
-          FROM events GROUP BY user_id),
-        a AS (SELECT user_id FROM c WHERE np > ne),
-        b AS (SELECT user_id FROM c WHERE nc > nv),
+      oracle = Some(s"""
+        WITH $cohortSql,
         sa AS (
           SELECT r.r, MIN(md5(a.user_id::VARCHAR || '_' || r.r::VARCHAR))
                    AS h
@@ -2404,13 +2524,7 @@ object EventTime extends QueryPack {
         // and codegen hygiene more than bytes).
         def nib13: String =
           "cast(conv(reverse(substring(h, 1, 13)), 16, 10) as bigint)"
-        val c = Tables.events(s, d).groupBy($"user_id")
-          .agg(
-            count(when($"event_type" === "purchase", 1)).as("np"),
-            count(when($"event_type" === "error", 1)).as("ne"),
-            count(when($"event_type" === "click", 1)).as("nc"),
-            count(when($"event_type" === "view", 1)).as("nv"))
-          .pin() // segments + exact contract joins
+        val c = cohortCounts(s, d).pin() // segments + exact contract joins
         val a = c.filter($"np" > $"ne").select($"user_id")
         val b = c.filter($"nc" > $"nv").select($"user_id")
         // Bottom-K = TakeOrdered (per-partition partial top-k, K-row
@@ -2509,15 +2623,7 @@ object EventTime extends QueryPack {
               ELSE 5 * abs(CAST($num AS HUGEINT) - CAST($exact AS HUGEINT) * $den)
                 <= 2 * CAST($exact AS HUGEINT) * $den END"""
         s"""
-        WITH c AS (
-          SELECT user_id,
-                 COUNT(*) FILTER (event_type = 'purchase') AS np,
-                 COUNT(*) FILTER (event_type = 'error') AS ne,
-                 COUNT(*) FILTER (event_type = 'click') AS nc,
-                 COUNT(*) FILTER (event_type = 'view') AS nv
-          FROM events GROUP BY user_id),
-        a AS (SELECT user_id FROM c WHERE np > ne),
-        b AS (SELECT user_id FROM c WHERE nc > nv),
+        WITH $cohortSql,
         ha AS (SELECT DISTINCT ($nib13) AS hv FROM (
           SELECT md5(user_id::VARCHAR || '_kmv') AS h FROM a)),
         hb AS (SELECT DISTINCT ($nib13) AS hv FROM (
@@ -3046,23 +3152,7 @@ object EventTime extends QueryPack {
         val vc = gaps.groupBy($"event_type", $"gap")
           .agg(count(lit(1)).as("c"))
           .pin()
-        val n = vc.groupBy($"event_type").agg(sum($"c").as("n"))
-        def median2(df: org.apache.spark.sql.DataFrame,
-            vCol: String): org.apache.spark.sql.DataFrame = {
-          val w2 = Window.partitionBy($"event_type").orderBy(col(vCol))
-          df.withColumn("cum", sum($"c").over(w2))
-            .join(broadcast(n), Seq("event_type"))
-            .groupBy($"event_type")
-            .agg(
-              min(when($"cum" >= expr("(n + 1) div 2"), col(vCol))).as("v1"),
-              min(when($"cum" >= expr("n div 2 + 1"), col(vCol))).as("v2"))
-            .select($"event_type", ($"v1" + $"v2").as("m2"))
-        }
-        val med = median2(vc, "gap")
-        val dev = vc.join(broadcast(med), Seq("event_type"))
-          .select($"event_type", abs(lit(2) * $"gap" - $"m2").as("dv"), $"c")
-          .groupBy($"event_type", $"dv").agg(sum($"c").as("c"))
-        val mad = median2(dev, "dv")
+        val (n, med, mad) = medianMad2(vc, "gap")
         n.join(med.select($"event_type", $"m2".as("med_gap_x2")),
             Seq("event_type"))
           .join(mad.select($"event_type", $"m2".as("mad_gap_x4")),
@@ -3071,7 +3161,7 @@ object EventTime extends QueryPack {
             $"med_gap_x2", $"mad_gap_x4")
           .orderBy($"event_type")
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH g0 AS (
           SELECT event_type,
                  epoch_us(ts) - LAG(epoch_us(ts)) OVER
@@ -3082,33 +3172,7 @@ object EventTime extends QueryPack {
         vc AS (
           SELECT event_type, gap, COUNT(*) AS c
           FROM gaps GROUP BY 1, 2),
-        n AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS n
-              FROM vc GROUP BY 1),
-        cum1 AS (
-          SELECT vc.event_type, vc.gap, n.n,
-                 SUM(vc.c) OVER (PARTITION BY vc.event_type
-                                 ORDER BY vc.gap) AS cum
-          FROM vc JOIN n USING (event_type)),
-        med AS (
-          SELECT event_type,
-                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN gap END)
-                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN gap END) AS m2
-          FROM cum1 GROUP BY event_type),
-        dev AS (
-          SELECT vc.event_type, abs(2 * vc.gap - med.m2) AS dv,
-                 CAST(SUM(vc.c) AS BIGINT) AS c
-          FROM vc JOIN med USING (event_type)
-          GROUP BY 1, 2),
-        cum2 AS (
-          SELECT dev.event_type, dev.dv, n.n,
-                 SUM(dev.c) OVER (PARTITION BY dev.event_type
-                                  ORDER BY dev.dv) AS cum
-          FROM dev JOIN n USING (event_type)),
-        mad AS (
-          SELECT event_type,
-                 MIN(CASE WHEN cum >= (n + 1) // 2 THEN dv END)
-                 + MIN(CASE WHEN cum >= n // 2 + 1 THEN dv END) AS m2
-          FROM cum2 GROUP BY event_type)
+        ${medianMadSql("gap", "m2", "m2")}
         SELECT n.event_type, n.n AS n_gaps,
                med.m2 AS med_gap_x2, mad.m2 AS mad_gap_x4
         FROM n
@@ -3192,11 +3256,7 @@ object EventTime extends QueryPack {
     "evt_seasonal_decompose" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val daily = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y_cents"))
+        val daily = dailyCents(s, d, "y_cents")
           .pin() // O(days) series
         val w = Window.orderBy($"day").rowsBetween(-3, 3)
         val t = daily
@@ -3350,17 +3410,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val big = DecimalType(38, 0)
-        val ev = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-        val rng = ev.agg(min($"day").as("d0"), max($"day").as("d1"))
-        val cnt = ev.crossJoin(broadcast(rng))
-          .withColumn("side",
-            when($"day" < expr("(d0 + d1 + 1) div 2"), 0).otherwise(1))
-          .groupBy($"y")
-          .agg(sum(when($"side" === 0, 1L).otherwise(0L)).as("ca"),
-            sum(when($"side" === 1, 1L).otherwise(0L)).as("cb"))
+        val cnt = halfCounts(s, d)
           .pin() // totals + two prefix passes
         val nn = cnt.agg(sum($"ca").as("n_a"), sum($"cb").as("n_b"))
         val cumA = Relational.globalPrefixSum(s, cnt, Seq($"y"), "ca")
@@ -3393,21 +3443,7 @@ object EventTime extends QueryPack {
             "reject_at_05")
       },
       oracle = Some(s"""
-        WITH ev AS (
-          SELECT epoch_us(ts) // $DayUs AS day,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
-        rng AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
-        cnt AS (
-          SELECT y,
-                 CAST(COUNT(*) FILTER (day < (d0 + d1 + 1) // 2)
-                   AS BIGINT) AS ca,
-                 CAST(COUNT(*) FILTER (day >= (d0 + d1 + 1) // 2)
-                   AS BIGINT) AS cb
-          FROM ev, rng GROUP BY y),
-        nn AS (
-          SELECT CAST(SUM(ca) AS BIGINT) AS n_a,
-                 CAST(SUM(cb) AS BIGINT) AS n_b FROM cnt),
+        WITH $halfCountsSql,
         cum AS (
           SELECT y, SUM(ca) OVER (ORDER BY y) AS cuma,
                  SUM(cb) OVER (ORDER BY y) AS cumb
@@ -3449,17 +3485,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val big = DecimalType(38, 0)
-        val ev = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-        val rng = ev.agg(min($"day").as("d0"), max($"day").as("d1"))
-        val cnt = ev.crossJoin(broadcast(rng))
-          .withColumn("side",
-            when($"day" < expr("(d0 + d1 + 1) div 2"), 0).otherwise(1))
-          .groupBy($"y")
-          .agg(sum(when($"side" === 0, 1L).otherwise(0L)).as("ca"),
-            sum(when($"side" === 1, 1L).otherwise(0L)).as("cb"))
+        val cnt = halfCounts(s, d)
           .withColumn("ct", $"ca" + $"cb")
           .pin() // totals + the prefix pass
         val nn = cnt.agg(sum($"ca").as("n_a"), sum($"cb").as("n_b"))
@@ -3489,21 +3515,7 @@ object EventTime extends QueryPack {
           .toDF("n_a", "n_b", "u2_a", "d2", "tie_t", "reject_at_05")
       },
       oracle = Some(s"""
-        WITH ev AS (
-          SELECT epoch_us(ts) // $DayUs AS day,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
-        rng AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
-        cnt AS (
-          SELECT y,
-                 CAST(COUNT(*) FILTER (day < (d0 + d1 + 1) // 2)
-                   AS BIGINT) AS ca,
-                 CAST(COUNT(*) FILTER (day >= (d0 + d1 + 1) // 2)
-                   AS BIGINT) AS cb
-          FROM ev, rng GROUP BY y),
-        nn AS (
-          SELECT CAST(SUM(ca) AS BIGINT) AS n_a,
-                 CAST(SUM(cb) AS BIGINT) AS n_b FROM cnt),
+        WITH $halfCountsSql,
         cum AS (
           SELECT y, ca, cb, ca + cb AS ct,
                  SUM(ca + cb) OVER (ORDER BY y) AS cumt
@@ -3551,12 +3563,7 @@ object EventTime extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val big = DecimalType(38, 0)
-        val ev = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-        val rng = ev.agg(min($"day").as("d0"), max($"day").as("d1"))
-        val cnt = ev.crossJoin(broadcast(rng))
+        val cnt = dayCents(s, d)
           .withColumn("grp",
             expr("least(2, ((day - d0) * 3) div (d1 - d0 + 1))"))
           .groupBy($"y")
@@ -3591,11 +3598,7 @@ object EventTime extends QueryPack {
           "tie_t", "h_micro", "reject_at_05")
       },
       oracle = Some(s"""
-        WITH ev AS (
-          SELECT epoch_us(ts) // $DayUs AS day,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
-        rng AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM ev),
+        WITH $dayCentsSql,
         cnt AS (
           SELECT y,
                  CAST(COUNT(*) FILTER (
@@ -4018,7 +4021,6 @@ object EventTime extends QueryPack {
     "evt_cross_corr" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val big = DecimalType(38, 0)
         val daily = Tables.events(s, d)
           .select(expr(s"(ts div 1000) div $DayUs").as("day"),
             when($"event_type" === "error", 1L).otherwise(0L).as("e"),
@@ -4027,24 +4029,10 @@ object EventTime extends QueryPack {
           .groupBy($"day")
           .agg(sum($"e").as("xc"), sum($"c").as("yv"))
           .pin() // all four lag self-joins read it
-        val byLag = Seq(0L, 1L, 2L, 3L).map { k =>
-          daily.as("a").join(daily.as("b"), $"a.day" === $"b.day" + k)
-            .select(lit(k).as("lag"), $"b.xc".as("x"), $"a.yv".as("yy"))
-        }.reduce(_ unionByName _)
-        byLag.groupBy($"lag")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum($"x".cast(big)).cast(DoubleType).as("sx"),
-            sum($"yy".cast(big)).cast(DoubleType).as("sy"),
-            sum($"x".cast(big) * $"x").cast(DoubleType).as("sxx"),
-            sum($"yy".cast(big) * $"yy").cast(DoubleType).as("syy"),
-            sum($"x".cast(big) * $"yy").cast(DoubleType).as("sxy"))
+        lagMoments(daily, "xc", "yv", Seq(0L, 1L, 2L, 3L))
           .select($"lag", $"n_pairs",
             // round(12): the q_corr_manual FMA-knife-edge hardening
-            round(($"n_pairs" * $"sxy" - $"sx" * $"sy") /
-              nullif(sqrt(greatest(lit(0.0),
-                ($"n_pairs" * $"sxx" - $"sx" * $"sx") *
-                  ($"n_pairs" * $"syy" - $"sy" * $"sy"))), lit(0.0)), 12)
-              .as("crosscorr"))
+            round(lagPearson, 12).as("crosscorr"))
           .orderBy($"lag")
       },
       oracle = Some(s"""
@@ -4063,19 +4051,9 @@ object EventTime extends QueryPack {
                        (CAST(2 AS BIGINT)), (CAST(3 AS BIGINT))) k(lag)
           JOIN daily a ON true
           JOIN daily b ON a.day = b.day + k.lag),
-        m AS (
-          SELECT lag, COUNT(*) AS n_pairs,
-                 CAST(SUM(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
-                 CAST(SUM(CAST(yy AS HUGEINT)) AS DOUBLE) AS sy,
-                 CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx,
-                 CAST(SUM(CAST(yy AS HUGEINT) * yy) AS DOUBLE) AS syy,
-                 CAST(SUM(CAST(x AS HUGEINT) * yy) AS DOUBLE) AS sxy
-          FROM pairs GROUP BY lag)
+        $lagMomentsSql
         SELECT lag, n_pairs,
-               round((n_pairs * sxy - sx * sy) /
-                 NULLIF(sqrt(greatest(0.0,
-                   (n_pairs * sxx - sx * sx)
-                     * (n_pairs * syy - sy * sy))), 0.0), 12) AS crosscorr
+               round($lagPearsonSql, 12) AS crosscorr
         FROM m ORDER BY lag""")),
 
     // ── SAX symbolization (PAA + exact-quantile alphabet) ──
@@ -4535,30 +4513,10 @@ object EventTime extends QueryPack {
     "evt_autocorr" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val big = DecimalType(38, 0)
-        val daily = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y"))
+        val daily = dailyCents(s, d, "y")
           .pin() // both lag self-joins read it
-        val byLag = Seq(1L, 7L).map { k =>
-          daily.as("a").join(daily.as("b"), $"a.day" === $"b.day" + k)
-            .select(lit(k).as("lag"), $"b.y".as("x"), $"a.y".as("yy"))
-        }.reduce(_ unionByName _)
-        byLag.groupBy($"lag")
-          .agg(count(lit(1)).as("n_pairs"),
-            sum($"x".cast(big)).cast(DoubleType).as("sx"),
-            sum($"yy".cast(big)).cast(DoubleType).as("sy"),
-            sum($"x".cast(big) * $"x").cast(DoubleType).as("sxx"),
-            sum($"yy".cast(big) * $"yy").cast(DoubleType).as("syy"),
-            sum($"x".cast(big) * $"yy").cast(DoubleType).as("sxy"))
-          .select($"lag", $"n_pairs",
-            (($"n_pairs" * $"sxy" - $"sx" * $"sy") /
-              nullif(sqrt(greatest(lit(0.0),
-                ($"n_pairs" * $"sxx" - $"sx" * $"sx") *
-                  ($"n_pairs" * $"syy" - $"sy" * $"sy"))), lit(0.0)))
-              .as("autocorr"))
+        lagMoments(daily, "y", "y", Seq(1L, 7L))
+          .select($"lag", $"n_pairs", lagPearson.as("autocorr"))
           .orderBy($"lag")
       },
       oracle = Some(s"""
@@ -4573,19 +4531,9 @@ object EventTime extends QueryPack {
           FROM (VALUES (CAST(1 AS BIGINT)), (CAST(7 AS BIGINT))) k(lag)
           JOIN daily a ON true
           JOIN daily b ON a.day = b.day + k.lag),
-        m AS (
-          SELECT lag, COUNT(*) AS n_pairs,
-                 CAST(SUM(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
-                 CAST(SUM(CAST(yy AS HUGEINT)) AS DOUBLE) AS sy,
-                 CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx,
-                 CAST(SUM(CAST(yy AS HUGEINT) * yy) AS DOUBLE) AS syy,
-                 CAST(SUM(CAST(x AS HUGEINT) * yy) AS DOUBLE) AS sxy
-          FROM pairs GROUP BY lag)
+        $lagMomentsSql
         SELECT lag, n_pairs,
-               (n_pairs * sxy - sx * sy) /
-                 NULLIF(sqrt(greatest(0.0,
-                   (n_pairs * sxx - sx * sx)
-                     * (n_pairs * syy - sy * sy))), 0.0) AS autocorr
+               $lagPearsonSql AS autocorr
         FROM m ORDER BY lag""")),
 
     // ── Wald–Wolfowitz runs test (is the daily series random?) ──
@@ -4605,11 +4553,7 @@ object EventTime extends QueryPack {
     "evt_runs_test" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val daily = Tables.events(s, d)
-          .select(expr(s"(ts div 1000) div $DayUs").as("day"),
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("y"))
-          .groupBy($"day").agg(sum($"y").as("y"))
+        val daily = dailyCents(s, d, "y")
           .pin() // median rank + the sign pass
         val n0 = daily.agg(count(lit(1)).as("n0"))
         val med = Relational.globalRank(s, daily, Seq($"y", $"day"))
@@ -4811,9 +4755,7 @@ object EventTime extends QueryPack {
     "evt_cusum" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val ev = Tables.events(s, d).select($"user_id", $"event_id",
-          expr("ts div 1000").as("tus"),
-          (dec($"value") * 100).cast(LongType).as("y"))
+        val ev = userSeries(s, d)
         val st = ev.groupBy($"user_id")
           .agg(count(lit(1)).as("n"), sum($"y").as("sy"))
         val w = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
@@ -4829,11 +4771,8 @@ object EventTime extends QueryPack {
               .as("n_alarms"))
           .orderBy($"user_id")
       },
-      oracle = Some("""
-        WITH ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS tus,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM events),
+      oracle = Some(s"""
+        WITH $userSeriesSql,
         st AS (
           SELECT user_id, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS sy
           FROM ev GROUP BY user_id),

@@ -22,6 +22,9 @@ import scala.collection.mutable
   * 1987); the reference's data model treats payloads as opaque bytes
   * (`/root/reference/src/main/scala/com/eneco/trading/kafka/connect/ftp/source/SimpleFileConverter.scala:50-51`),
   * and this codec is the decode step an image pipeline bolts onto it.
+  * It is not ImageIO's GIF reader, which on `Gif.fromText(23,
+  * "portable network graphics, exactly")` (853 bytes) accepts one
+  * trailing byte and one truncation that this decoder rejects.
   */
 object Gif {
 

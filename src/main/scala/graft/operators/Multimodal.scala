@@ -5,6 +5,8 @@ import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.{QueryDef, QueryPack, Tables}
 
 /** Multimodal-column operators (SURVEY.md §2.3): media payloads are
@@ -72,6 +74,164 @@ object Multimodal extends QueryPack {
       .filter(length($"atext") > 0)
       .select($"doc_id", $"atext").as[(Long, String)]
   }
+
+  /** The map-only decode skeleton of the per-document media queries:
+    * `row(doc_id, ascii text)` builds each output row of columns
+    * `cols` over typed partitions — no shuffle but the final sort by
+    * doc_id. */
+  private def decodePerDoc[T <: Product : TypeTag](s: SparkSession,
+      d: String, cols: String*)(row: (Long, String) => T): DataFrame = {
+    import s.implicits._
+    asciiDocs(s, d).mapPartitions(_.map { case (id, t) => row(id, t) })
+      .toDF(cols: _*)
+      .orderBy($"doc_id")
+  }
+
+  /** Output columns of [[paletteReadout]]. */
+  private val paletteCols = Seq("doc_id", "width", "height", "n_pixels",
+    "sum_idx", "sum_r", "sum_g", "sum_b", "wsum")
+
+  /** The readout row of a decoded palette image (`mm_gif_decode`,
+    * `mm_rle_decode`): dims, the palette-index sum, and the
+    * [[pixelReadout]] of the looked-up colors. */
+  private def paletteReadout(id: Long, width: Int, height: Int,
+      indices: Array[Int], pixels: Array[Int])
+      : (Long, Long, Long, Long, Long, Long, Long, Long, Long) = {
+    val (sr, sg, sb, ws) = pixelReadout(pixels)
+    var sumIdx = 0L
+    indices.foreach(sumIdx += _)
+    (id, width.toLong, height.toLong, width.toLong * height, sumIdx,
+      sr, sg, sb, ws)
+  }
+
+  /** Output columns of [[pcmReadout]]. */
+  private val pcmCols = Seq("doc_id", "byte_len", "sample_rate",
+    "n_samples", "sum_s", "wsum", "peak")
+
+  /** The readout row of decoded PCM audio (`mm_wav_decode`,
+    * `mm_shard_audio`): container length, rate, sample count, the
+    * sample sum, the position-weighted sum Σ (i+1)·s and the peak |s|. */
+  private def pcmReadout(id: Long, au: Wav.Audio)
+      : (Long, Long, Long, Long, Long, Long, Long) = {
+    var sum = 0L; var ws = 0L; var peak = 0L
+    var i = 0
+    while (i < au.samples.length) {
+      val v = au.samples(i)
+      sum += v
+      ws += (i + 1).toLong * v
+      val a = math.abs(v.toLong)
+      if (a > peak) peak = a
+      i += 1
+    }
+    (id, au.fileSize, au.sampleRate.toLong, au.samples.length.toLong,
+      sum, ws, peak)
+  }
+
+  /** Oracle CTE `a`: each document's printable-ASCII text `t`. */
+  private val asciiTextSql: String = """a AS (
+          SELECT doc_id,
+                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
+          FROM documents)"""
+
+  /** Oracle CTEs `a`, `p`: [[asciiDocs]] (`t` = printable-ASCII text,
+    * `m` = its length), empty-after-strip documents dropped. */
+  private val asciiDocsSql: String = s"""$asciiTextSql,
+        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0)"""
+
+  /** Oracle CTEs through `dim`: the generated image's dims per
+    * document, w = (m % wMod) + wAdd, h = (m % hMod) + hAdd. */
+  private def imageDimsSql(wMod: Int, wAdd: Int, hMod: Int,
+      hAdd: Int): String = s"""$asciiDocsSql,
+        dim AS (
+          SELECT doc_id, t, m, (m % $wMod) + $wAdd AS w, (m % $hMod) + $hAdd AS h
+          FROM p)"""
+
+  /** [[imageDimsSql]] plus `px`: one row per top-down pixel index i. */
+  private def imagePixelsSql(wMod: Int, wAdd: Int, hMod: Int,
+      hAdd: Int): String = s"""${imageDimsSql(wMod, wAdd, hMod, hAdd)},
+        px AS (
+          SELECT doc_id, w, h, t, m,
+                 unnest(generate_series(0, w * h - 1)) AS i
+          FROM dim)"""
+
+  /** Oracle tail of [[pixelReadout]] over a `ch` (doc_id, w, h, `pos`,
+    * r, g, b) CTE, `pos` the 0-based top-down pixel index. */
+  private def readoutSql(pos: String): String = s"""CAST(SUM(r) AS BIGINT) AS sum_r,
+          CAST(SUM(g) AS BIGINT) AS sum_g,
+          CAST(SUM(b) AS BIGINT) AS sum_b,
+          CAST(SUM(($pos + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
+        FROM ch
+        GROUP BY doc_id, w, h
+        ORDER BY doc_id"""
+
+  /** Oracle of [[paletteReadout]] over a `ch` CTE carrying `idx`. */
+  private lazy val paletteReadoutSql: String = s"""SELECT doc_id,
+          CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+          CAST(w * h AS BIGINT) AS n_pixels,
+          CAST(SUM(idx) AS BIGINT) AS sum_idx,
+          ${readoutSql("i")}"""
+
+  /** Oracle of [[pcmReadout]] over the WAV generator's formula. */
+  private lazy val pcmReadoutSql: String = s"""
+        WITH $asciiDocsSql,
+        d AS (
+          SELECT doc_id, t, m, (m % 97) + 32 AS n,
+                 8000 + (m % 8) * 1000 AS rate
+          FROM p),
+        s AS (
+          SELECT doc_id, t, m, n, rate,
+                 unnest(generate_series(0, n - 1)) AS i
+          FROM d),
+        v AS (
+          SELECT doc_id, n, rate, i,
+                 ((unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) * 523
+                   + i * 1031 + doc_id) % 65536) - 32768 AS sv
+          FROM s)
+        SELECT doc_id,
+          CAST(44 + 2 * n AS BIGINT) AS byte_len,
+          CAST(rate AS BIGINT) AS sample_rate,
+          CAST(n AS BIGINT) AS n_samples,
+          CAST(SUM(sv) AS BIGINT) AS sum_s,
+          CAST(SUM((i + 1) * sv) AS BIGINT) AS wsum,
+          CAST(MAX(abs(sv)) AS BIGINT) AS peak
+        FROM v GROUP BY doc_id, n, rate
+        ORDER BY doc_id"""
+
+  /** Per document of ≥ 8 chars, the energy Σ(u − 32)² of each full
+    * 8-unit frame of its codepoints, as column `energy`: rows
+    * (doc_id, n_frames, frame, energy) — the frame extractor of
+    * `mm_energy_segments` and `mm_shot_boundary`. */
+  private def frameEnergy(s: SparkSession, d: String,
+      energy: String): DataFrame = {
+    import s.implicits._
+    Tables.documents(s, d)
+      .filter(length($"text") >= 8)
+      .select($"doc_id",
+        expr("cast(length(text) div 8 as bigint)").as("n_frames"),
+        posexplode(expr(
+          "transform(sequence(1, length(text)), " +
+            // long units: a non-BMP codepoint squared overflows INT
+            "i -> cast(ascii(substring(text, i, 1)) as bigint))"))
+          .as(Seq("p", "u")))
+      .filter($"p" < ($"n_frames" * 8)) // full frames only
+      .withColumn("frame", expr("p div 8"))
+      .groupBy($"doc_id", $"n_frames", $"frame")
+      .agg(sum(($"u" - 32L) * ($"u" - 32L)).as(energy))
+  }
+
+  /** [[frameEnergy]] as oracle CTEs `u`, `fr`. */
+  private def frameEnergySql(energy: String): String = s"""u AS (
+          SELECT doc_id,
+                 CAST(length(text) // 8 AS BIGINT) AS n_frames,
+                 unnest(generate_series(0, length(text) - 1)) AS p,
+                 unnest(list_transform(generate_series(1, length(text)),
+                   i -> CAST(unicode(text[i:i]) AS BIGINT))) AS un
+          FROM documents WHERE length(text) >= 8),
+        fr AS (
+          SELECT doc_id, n_frames, p // 8 AS frame,
+                 CAST(SUM((un - 32) * (un - 32)) AS BIGINT) AS $energy
+          FROM u WHERE p < n_frames * 8
+          GROUP BY doc_id, n_frames, p // 8)"""
 
   /** dHash-style perceptual sketch of a payload: resample to 61 units
     * (position of unit b = floor(b·(len−1)/60)+1 — always in range,
@@ -269,33 +429,16 @@ object Multimodal extends QueryPack {
     // so layout errors cannot cancel). 100 TB shape: map-only typed
     // partitions — the mapInPandas batch shape — no shuffle at all.
     "mm_decode" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val bytes = Bmp.fromText(id, t)
-            val img = Bmp.decode(bytes)
-            val (sr, sg, sb, ws) = pixelReadout(img.pixels)
-            (id, img.fileSize, img.width.toLong, img.height.toLong,
-              img.bpp.toLong, img.width.toLong * img.height, sr, sg, sb, ws)
-          }
-        }.toDF("doc_id", "byte_len", "width", "height", "bpp",
-          "n_pixels", "sum_r", "sum_g", "sum_b", "wsum")
-          .orderBy($"doc_id")
+      fn = (s, d) => decodePerDoc(s, d, "doc_id", "byte_len", "width",
+          "height", "bpp", "n_pixels", "sum_r", "sum_g", "sum_b", "wsum") {
+        (id, t) =>
+          val img = Bmp.decode(Bmp.fromText(id, t))
+          val (sr, sg, sb, ws) = pixelReadout(img.pixels)
+          (id, img.fileSize, img.width.toLong, img.height.toLong,
+            img.bpp.toLong, img.width.toLong * img.height, sr, sg, sb, ws)
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        dim AS (
-          SELECT doc_id, t, m, (m % 21) + 4 AS w, (m % 13) + 3 AS h
-          FROM p),
-        px AS (
-          SELECT doc_id, w, h, t, m,
-                 unnest(generate_series(0, w * h - 1)) AS i
-          FROM dim),
+      oracle = Some(s"""
+        WITH ${imagePixelsSql(21, 4, 13, 3)},
         ch AS (
           SELECT doc_id, w, h, i,
                  unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) % 256 AS r,
@@ -308,13 +451,7 @@ object Multimodal extends QueryPack {
           CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
           CAST(24 AS BIGINT) AS bpp,
           CAST(w * h AS BIGINT) AS n_pixels,
-          CAST(SUM(r) AS BIGINT) AS sum_r,
-          CAST(SUM(g) AS BIGINT) AS sum_g,
-          CAST(SUM(b) AS BIGINT) AS sum_b,
-          CAST(SUM((i + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
-        FROM ch
-        GROUP BY doc_id, w, h
-        ORDER BY doc_id""")),
+          ${readoutSql("i")}""")),
 
     // ── real COMPRESSED-format decode: PNG via the JDK's zlib ──
     // BMP/WAV prove fixed-layout parsing; this exercises the missing
@@ -331,33 +468,17 @@ object Multimodal extends QueryPack {
     // deliberately NOT emitted. 100 TB shape: map-only typed
     // partitions, no shuffle.
     "mm_png_decode" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val img = Png.decode(Png.fromText(id, t))
-            val (sr, sg, sb, ws) = pixelReadout(img.pixels)
-            (id, img.width.toLong, img.height.toLong,
-              img.bitDepth.toLong, img.colorType.toLong,
-              img.width.toLong * img.height, sr, sg, sb, ws)
-          }
-        }.toDF("doc_id", "width", "height", "bit_depth", "color_type",
-          "n_pixels", "sum_r", "sum_g", "sum_b", "wsum")
-          .orderBy($"doc_id")
+      fn = (s, d) => decodePerDoc(s, d, "doc_id", "width", "height",
+          "bit_depth", "color_type", "n_pixels", "sum_r", "sum_g", "sum_b",
+          "wsum") { (id, t) =>
+        val img = Png.decode(Png.fromText(id, t))
+        val (sr, sg, sb, ws) = pixelReadout(img.pixels)
+        (id, img.width.toLong, img.height.toLong,
+          img.bitDepth.toLong, img.colorType.toLong,
+          img.width.toLong * img.height, sr, sg, sb, ws)
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        dim AS (
-          SELECT doc_id, t, m, (m % 19) + 4 AS w, (m % 11) + 5 AS h
-          FROM p),
-        px AS (
-          SELECT doc_id, w, h, t, m,
-                 unnest(generate_series(0, w * h - 1)) AS i
-          FROM dim),
+      oracle = Some(s"""
+        WITH ${imagePixelsSql(19, 4, 11, 5)},
         ch AS (
           SELECT doc_id, w, h, i,
                  unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) % 256 AS r,
@@ -370,13 +491,7 @@ object Multimodal extends QueryPack {
           CAST(8 AS BIGINT) AS bit_depth,
           CAST(2 AS BIGINT) AS color_type,
           CAST(w * h AS BIGINT) AS n_pixels,
-          CAST(SUM(r) AS BIGINT) AS sum_r,
-          CAST(SUM(g) AS BIGINT) AS sum_g,
-          CAST(SUM(b) AS BIGINT) AS sum_b,
-          CAST(SUM((i + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
-        FROM ch
-        GROUP BY doc_id, w, h
-        ORDER BY doc_id""")),
+          ${readoutSql("i")}""")),
 
     // ── real DICTIONARY-coding decode: GIF87a with from-scratch LZW ──
     // The compression-family ladder's last classic rung: PNG exercised
@@ -394,34 +509,12 @@ object Multimodal extends QueryPack {
     // cannot cancel). 100 TB shape: map-only typed partitions, no
     // shuffle ([[Gif]]).
     "mm_gif_decode" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val img = Gif.decode(Gif.fromText(id, t))
-            val (sr, sg, sb, ws) = pixelReadout(img.pixels)
-            var sumIdx = 0L
-            img.indices.foreach(sumIdx += _)
-            (id, img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, sumIdx, sr, sg, sb, ws)
-          }
-        }.toDF("doc_id", "width", "height", "n_pixels", "sum_idx",
-          "sum_r", "sum_g", "sum_b", "wsum")
-          .orderBy($"doc_id")
+      fn = (s, d) => decodePerDoc(s, d, paletteCols: _*) { (id, t) =>
+        val img = Gif.decode(Gif.fromText(id, t))
+        paletteReadout(id, img.width, img.height, img.indices, img.pixels)
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        dim AS (
-          SELECT doc_id, t, m, (m % 17) + 5 AS w, (m % 7) + 4 AS h
-          FROM p),
-        px AS (
-          SELECT doc_id, w, h, t, m,
-                 unnest(generate_series(0, w * h - 1)) AS i
-          FROM dim),
+      oracle = Some(s"""
+        WITH ${imagePixelsSql(17, 5, 7, 4)},
         ix AS (
           SELECT doc_id, w, h, i,
                  (unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) * 13
@@ -433,17 +526,7 @@ object Multimodal extends QueryPack {
                  (3 * idx + 7) % 256 AS g,
                  (5 * idx + 11) % 256 AS b
           FROM ix)
-        SELECT doc_id,
-          CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-          CAST(w * h AS BIGINT) AS n_pixels,
-          CAST(SUM(idx) AS BIGINT) AS sum_idx,
-          CAST(SUM(r) AS BIGINT) AS sum_r,
-          CAST(SUM(g) AS BIGINT) AS sum_g,
-          CAST(SUM(b) AS BIGINT) AS sum_b,
-          CAST(SUM((i + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
-        FROM ch
-        GROUP BY doc_id, w, h
-        ORDER BY doc_id""")),
+        $paletteReadoutSql""")),
 
     // ── real nearest-neighbor image resize over decoded pixels ──
     // The thumbnail stage on REAL pixel semantics: decode the BMP
@@ -458,36 +541,25 @@ object Multimodal extends QueryPack {
     // how a thumbnail pass behaves at 100 TB.
     "mm_resize" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
         val (ow, oh) = (16, 12)
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val img = Bmp.decode(Bmp.fromText(id, t))
-            val out = new Array[Int](ow * oh)
-            var j = 0
-            while (j < out.length) {
-              val sx = (j % ow) * img.width / ow
-              val sy = (j / ow) * img.height / oh
-              out(j) = img.pixels(sy * img.width + sx)
-              j += 1
-            }
-            val (sr, sg, sb, ws) = pixelReadout(out)
-            (id, img.width.toLong, img.height.toLong,
-              ow.toLong, oh.toLong, sr, sg, sb, ws)
+        decodePerDoc(s, d, "doc_id", "src_w", "src_h", "out_w", "out_h",
+            "sum_r", "sum_g", "sum_b", "wsum") { (id, t) =>
+          val img = Bmp.decode(Bmp.fromText(id, t))
+          val out = new Array[Int](ow * oh)
+          var j = 0
+          while (j < out.length) {
+            val sx = (j % ow) * img.width / ow
+            val sy = (j / ow) * img.height / oh
+            out(j) = img.pixels(sy * img.width + sx)
+            j += 1
           }
-        }.toDF("doc_id", "src_w", "src_h", "out_w", "out_h",
-          "sum_r", "sum_g", "sum_b", "wsum")
-          .orderBy($"doc_id")
+          val (sr, sg, sb, ws) = pixelReadout(out)
+          (id, img.width.toLong, img.height.toLong,
+            ow.toLong, oh.toLong, sr, sg, sb, ws)
+        }
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        dim AS (
-          SELECT doc_id, t, m, (m % 21) + 4 AS w, (m % 13) + 3 AS h
-          FROM p),
+      oracle = Some(s"""
+        WITH ${imageDimsSql(21, 4, 13, 3)},
         o AS (
           SELECT doc_id, w, h, t, m,
                  unnest(generate_series(0, 16 * 12 - 1)) AS j
@@ -506,13 +578,7 @@ object Multimodal extends QueryPack {
         SELECT doc_id,
           CAST(w AS BIGINT) AS src_w, CAST(h AS BIGINT) AS src_h,
           CAST(16 AS BIGINT) AS out_w, CAST(12 AS BIGINT) AS out_h,
-          CAST(SUM(r) AS BIGINT) AS sum_r,
-          CAST(SUM(g) AS BIGINT) AS sum_g,
-          CAST(SUM(b) AS BIGINT) AS sum_b,
-          CAST(SUM((j + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
-        FROM ch
-        GROUP BY doc_id, w, h
-        ORDER BY doc_id""")),
+          ${readoutSql("j")}""")),
 
     // ── feature extraction: 16-bin payload-unit histogram ──
     // The feature-extraction stage (embedding-ish fixed-width vector per
@@ -572,19 +638,7 @@ object Multimodal extends QueryPack {
     "mm_energy_segments" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val frames = Tables.documents(s, d)
-          .filter(length($"text") >= 8)
-          .select($"doc_id",
-            expr("cast(length(text) div 8 as bigint)").as("n_frames"),
-            posexplode(expr(
-              "transform(sequence(1, length(text)), " +
-                // long units: a non-BMP codepoint squared overflows INT
-                "i -> cast(ascii(substring(text, i, 1)) as bigint))"))
-              .as(Seq("p", "u")))
-          .filter($"p" < ($"n_frames" * 8)) // full frames only
-          .withColumn("frame", expr("p div 8"))
-          .groupBy($"doc_id", $"n_frames", $"frame")
-          .agg(sum(($"u" - 32L) * ($"u" - 32L)).as("energy"))
+        val frames = frameEnergy(s, d, "energy")
         val active = frames.filter($"energy" >= 36000L)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"doc_id").orderBy($"frame")
@@ -605,19 +659,8 @@ object Multimodal extends QueryPack {
             coalesce($"longest_seg", lit(0L)).as("longest_seg"))
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH u AS (
-          SELECT doc_id,
-                 CAST(length(text) // 8 AS BIGINT) AS n_frames,
-                 unnest(generate_series(0, length(text) - 1)) AS p,
-                 unnest(list_transform(generate_series(1, length(text)),
-                   i -> CAST(unicode(text[i:i]) AS BIGINT))) AS un
-          FROM documents WHERE length(text) >= 8),
-        fr AS (
-          SELECT doc_id, n_frames, p // 8 AS frame,
-                 CAST(SUM((un - 32) * (un - 32)) AS BIGINT) AS energy
-          FROM u WHERE p < n_frames * 8
-          GROUP BY doc_id, n_frames, p // 8),
+      oracle = Some(s"""
+        WITH ${frameEnergySql("energy")},
         act AS (
           SELECT doc_id, frame,
                  frame - row_number() OVER (PARTITION BY doc_id
@@ -658,18 +701,7 @@ object Multimodal extends QueryPack {
         import s.implicits._
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"doc_id").orderBy($"frame")
-        Tables.documents(s, d)
-          .filter(length($"text") >= 8)
-          .select($"doc_id",
-            expr("cast(length(text) div 8 as bigint)").as("n_frames"),
-            posexplode(expr(
-              "transform(sequence(1, length(text)), " +
-                "i -> cast(ascii(substring(text, i, 1)) as bigint))"))
-              .as(Seq("p", "u")))
-          .filter($"p" < ($"n_frames" * 8))
-          .withColumn("frame", expr("p div 8"))
-          .groupBy($"doc_id", $"n_frames", $"frame")
-          .agg(sum(($"u" - 32L) * ($"u" - 32L)).as("e"))
+        frameEnergy(s, d, "e")
           .withColumn("pe", lag($"e", 1).over(w))
           .withColumn("cut",
             when($"pe".isNotNull &&
@@ -686,19 +718,8 @@ object Multimodal extends QueryPack {
             max($"shot_len").as("longest_shot"))
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH u AS (
-          SELECT doc_id,
-                 CAST(length(text) // 8 AS BIGINT) AS n_frames,
-                 unnest(generate_series(0, length(text) - 1)) AS p,
-                 unnest(list_transform(generate_series(1, length(text)),
-                   i -> CAST(unicode(text[i:i]) AS BIGINT))) AS un
-          FROM documents WHERE length(text) >= 8),
-        fr AS (
-          SELECT doc_id, n_frames, p // 8 AS frame,
-                 CAST(SUM((un - 32) * (un - 32)) AS BIGINT) AS e
-          FROM u WHERE p < n_frames * 8
-          GROUP BY doc_id, n_frames, p // 8),
+      oracle = Some(s"""
+        WITH ${frameEnergySql("e")},
         l AS (
           SELECT doc_id, n_frames, frame, e,
                  LAG(e) OVER w AS pe
@@ -765,11 +786,8 @@ object Multimodal extends QueryPack {
           "deflate_len", "roundtrip_ok", "wsum")
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
+      oracle = Some(s"""
+        WITH $asciiTextSql,
         p AS (
           SELECT doc_id, t, length(t) AS m, 1 + (doc_id % 200) AS reps
           FROM a WHERE length(t) > 0),
@@ -843,11 +861,8 @@ object Multimodal extends QueryPack {
           "archive_len", "roundtrip_ok", "wsum")
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
+      oracle = Some(s"""
+        WITH $asciiTextSql,
         p AS (
           SELECT doc_id, t, length(t) AS m,
                  12 + length(CAST(doc_id AS VARCHAR))
@@ -890,56 +905,10 @@ object Multimodal extends QueryPack {
     // 100 TB shape: map-only typed partitions — the mapInPandas
     // batch shape — no shuffle at all.
     "mm_wav_decode" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val au = Wav.decode(Wav.fromText(id, t))
-            var sum = 0L; var ws = 0L; var peak = 0L
-            var i = 0
-            while (i < au.samples.length) {
-              val v = au.samples(i)
-              sum += v
-              ws += (i + 1).toLong * v
-              val a = math.abs(v.toLong)
-              if (a > peak) peak = a
-              i += 1
-            }
-            (id, au.fileSize, au.sampleRate.toLong,
-              au.samples.length.toLong, sum, ws, peak)
-          }
-        }.toDF("doc_id", "byte_len", "sample_rate", "n_samples",
-          "sum_s", "wsum", "peak")
-          .orderBy($"doc_id")
+      fn = (s, d) => decodePerDoc(s, d, pcmCols: _*) { (id, t) =>
+        pcmReadout(id, Wav.decode(Wav.fromText(id, t)))
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        d AS (
-          SELECT doc_id, t, m, (m % 97) + 32 AS n,
-                 8000 + (m % 8) * 1000 AS rate
-          FROM p),
-        s AS (
-          SELECT doc_id, t, m, n, rate,
-                 unnest(generate_series(0, n - 1)) AS i
-          FROM d),
-        v AS (
-          SELECT doc_id, n, rate, i,
-                 ((unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) * 523
-                   + i * 1031 + doc_id) % 65536) - 32768 AS sv
-          FROM s)
-        SELECT doc_id,
-          CAST(44 + 2 * n AS BIGINT) AS byte_len,
-          CAST(rate AS BIGINT) AS sample_rate,
-          CAST(n AS BIGINT) AS n_samples,
-          CAST(SUM(sv) AS BIGINT) AS sum_s,
-          CAST(SUM((i + 1) * sv) AS BIGINT) AS wsum,
-          CAST(MAX(abs(sv)) AS BIGINT) AS peak
-        FROM v GROUP BY doc_id, n, rate
-        ORDER BY doc_id""")),
+      oracle = Some(pcmReadoutSql)),
 
     // ── frame-level audio analysis over decoded PCM samples ──
     // The frame stage every audio pipeline runs before filtering or
@@ -981,12 +950,8 @@ object Multimodal extends QueryPack {
         }.toDF("doc_id", "frame_idx", "energy", "zcr", "peak")
           .orderBy($"doc_id", $"frame_idx")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
+      oracle = Some(s"""
+        WITH $asciiDocsSql,
         d AS (SELECT doc_id, t, m, (m % 97) + 32 AS n FROM p),
         s AS (
           SELECT doc_id, t, m, n,
@@ -1025,34 +990,12 @@ object Multimodal extends QueryPack {
     // un-flip hash-mismatches via the position-weighted wsum. 100 TB
     // shape: map-only typed partitions, no shuffle.
     "mm_rle_decode" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        asciiDocs(s, d).mapPartitions { it =>
-          it.map { case (id, t) =>
-            val img = BmpRle.decode(BmpRle.fromText(id, t))
-            val (sr, sg, sb, ws) = pixelReadout(img.pixels)
-            var sumIdx = 0L
-            img.indices.foreach(sumIdx += _)
-            (id, img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, sumIdx, sr, sg, sb, ws)
-          }
-        }.toDF("doc_id", "width", "height", "n_pixels", "sum_idx",
-          "sum_r", "sum_g", "sum_b", "wsum")
-          .orderBy($"doc_id")
+      fn = (s, d) => decodePerDoc(s, d, paletteCols: _*) { (id, t) =>
+        val img = BmpRle.decode(BmpRle.fromText(id, t))
+        paletteReadout(id, img.width, img.height, img.indices, img.pixels)
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        dim AS (
-          SELECT doc_id, t, m, (m % 13) + 6 AS w, (m % 5) + 3 AS h
-          FROM p),
-        px AS (
-          SELECT doc_id, w, h, t, m,
-                 unnest(generate_series(0, w * h - 1)) AS i
-          FROM dim),
+      oracle = Some(s"""
+        WITH ${imagePixelsSql(13, 6, 5, 3)},
         ix AS (
           SELECT doc_id, w, h, i,
                  CASE WHEN (i // 4) % 4 = 0 THEN
@@ -1069,17 +1012,7 @@ object Multimodal extends QueryPack {
                  (11 * idx + 5) % 256 AS g,
                  (13 * idx + 9) % 256 AS b
           FROM ix)
-        SELECT doc_id,
-          CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-          CAST(w * h AS BIGINT) AS n_pixels,
-          CAST(SUM(idx) AS BIGINT) AS sum_idx,
-          CAST(SUM(r) AS BIGINT) AS sum_r,
-          CAST(SUM(g) AS BIGINT) AS sum_g,
-          CAST(SUM(b) AS BIGINT) AS sum_b,
-          CAST(SUM((i + 1) * (r + 2 * g + 4 * b)) AS BIGINT) AS wsum
-        FROM ch
-        GROUP BY doc_id, w, h
-        ORDER BY doc_id""")),
+        $paletteReadoutSql""")),
 
     // ── real binary ROW-format roundtrip: Avro object container ──
     // The codec tier a data pipeline actually moves rows in: each
@@ -1175,12 +1108,8 @@ object Multimodal extends QueryPack {
           "sum_num", "wsum_num")
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
+      oracle = Some(s"""
+        WITH $asciiDocsSql,
         d AS (SELECT doc_id, t, m, (m % 97) + 32 AS n,
                      8000 + (m % 8) * 1000 AS rate
               FROM p),
@@ -1268,12 +1197,8 @@ object Multimodal extends QueryPack {
             "sum_r", "sum_g", "sum_b", "wsum")
           .orderBy($"doc_id", $"kind")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
+      oracle = Some(s"""
+        WITH $asciiDocsSql,
         allk AS (
           SELECT doc_id, 'png' AS kind,
                  (m % 19) + 4 AS w, (m % 11) + 5 AS h, t, m FROM p
@@ -1335,56 +1260,14 @@ object Multimodal extends QueryPack {
         graft.sources.TarBundles.members(s, dir)
           .select($"name", $"data").as[(String, Array[Byte])]
           .filter(_._1.endsWith(".wav"))
-          .mapPartitions { it =>
-            it.map { case (name, bytes) =>
-              val id = name.substring(0, name.lastIndexOf('.')).toLong
-              val au = Wav.decode(bytes)
-              var sum = 0L; var ws = 0L; var peak = 0L
-              var i = 0
-              while (i < au.samples.length) {
-                val v = au.samples(i)
-                sum += v
-                ws += (i + 1).toLong * v
-                val a = math.abs(v.toLong)
-                if (a > peak) peak = a
-                i += 1
-              }
-              (id, au.fileSize, au.sampleRate.toLong,
-                au.samples.length.toLong, sum, ws, peak)
-            }
-          }
-          .toDF("doc_id", "byte_len", "sample_rate", "n_samples",
-            "sum_s", "wsum", "peak")
+          .mapPartitions(_.map { case (name, bytes) =>
+            pcmReadout(name.substring(0, name.lastIndexOf('.')).toLong,
+              Wav.decode(bytes))
+          })
+          .toDF(pcmCols: _*)
           .orderBy($"doc_id")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
-        p AS (SELECT doc_id, t, length(t) AS m FROM a WHERE length(t) > 0),
-        d AS (
-          SELECT doc_id, t, m, (m % 97) + 32 AS n,
-                 8000 + (m % 8) * 1000 AS rate
-          FROM p),
-        s AS (
-          SELECT doc_id, t, m, n, rate,
-                 unnest(generate_series(0, n - 1)) AS i
-          FROM d),
-        v AS (
-          SELECT doc_id, n, rate, i,
-                 ((unicode(substr(t, CAST((i % m) + 1 AS INT), 1)) * 523
-                   + i * 1031 + doc_id) % 65536) - 32768 AS sv
-          FROM s)
-        SELECT doc_id,
-          CAST(44 + 2 * n AS BIGINT) AS byte_len,
-          CAST(rate AS BIGINT) AS sample_rate,
-          CAST(n AS BIGINT) AS n_samples,
-          CAST(SUM(sv) AS BIGINT) AS sum_s,
-          CAST(SUM((i + 1) * sv) AS BIGINT) AS wsum,
-          CAST(MAX(abs(sv)) AS BIGINT) AS peak
-        FROM v GROUP BY doc_id, n, rate
-        ORDER BY doc_id""")),
+      oracle = Some(pcmReadoutSql)),
 
     // ── incremental shard maintenance: the drain discipline on the
     //    WebDataset artifact (round-14 stretch) ──
@@ -1437,11 +1320,8 @@ object Multimodal extends QueryPack {
             ($"hsh" === $"bh").as("bytes_match_batch"))
           .orderBy($"doc_id", $"kind")
       },
-      oracle = Some("""
-        WITH a AS (
-          SELECT doc_id,
-                 regexp_replace(text, '[^\x20-\x7e]', '', 'g') AS t
-          FROM documents),
+      oracle = Some(s"""
+        WITH $asciiTextSql,
         p AS (SELECT doc_id FROM a WHERE length(t) > 0),
         k AS (SELECT unnest(['bmp', 'gif', 'png', 'wav']) AS kind)
         SELECT p.doc_id, k.kind,

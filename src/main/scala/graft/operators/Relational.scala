@@ -261,20 +261,9 @@ object Relational extends QueryPack {
     * sharded/daily profiles union by sketch merge. No Expand, no
     * Window, one scan — PlanShapeSpec gates this helper's own plan;
     * `q_profile_approx` is its hash-checked accuracy contract. */
-  private[operators] def approxOrdersProfile(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val priceCents =
-      expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)")
-    val dateUs = expr("unix_micros(cast(o_orderdate as timestamp))")
-    approxTableProfile(
-      Tables.orders(s, d)
-        .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
-          priceCents.as("price_cents"), dateUs.as("date_us"),
-          $"o_orderpriority"),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "price_cents",
-        "date_us", "o_orderpriority"),
-      measure = "price_cents")
-  }
+  private[operators] def approxOrdersProfile(s: SparkSession, d: String): DataFrame =
+    approxTableProfile(ordersProfile.frame(s, d), ordersProfile.cols,
+      measure = ordersProfile.measure)
 
   /** The one-pass sketched profile of ANY pre-projected frame — the
     * generic core behind [[approxOrdersProfile]] and the
@@ -306,11 +295,9 @@ object Relational extends QueryPack {
     * the column-pruned measure histogram, and emits per column the
     * exact n_distinct next to hash-checked accuracy booleans (HLL
     * within ±5%; approximate-percentile rank within ±1% of target).
-    * `colLabels` are the emitted col_name values (a projected column
-    * may carry a unit-suffixed public name). */
+    * The column names are the emitted col_name values. */
   private def approxProfileContract(s: SparkSession, t: DataFrame,
-      cols: Seq[String], colLabels: Seq[String],
-      measure: String): DataFrame = {
+      cols: Seq[String], measure: String): DataFrame = {
     import s.implicits._
     val approx = approxTableProfile(t, cols, measure)
       .pin() // rank probe + final row assembly
@@ -345,7 +332,7 @@ object Relational extends QueryPack {
       val pcts =
         if (c == measure) "CAST(p50ok AS STRING), CAST(p99ok AS STRING)"
         else "CAST(NULL AS STRING), CAST(NULL AS STRING)"
-      s"'${colLabels(i)}', n - c${i + 1}, d${i + 1}, w${i + 1}, $pcts"
+      s"'$c', n - c${i + 1}, d${i + 1}, w${i + 1}, $pcts"
     }.mkString(",\n              ")
     wide.select(expr(s"""stack(${cols.size},
               $stackRows)
@@ -355,6 +342,183 @@ object Relational extends QueryPack {
       .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
         $"distinct_within_5pct",
         $"p50_rank_within_1pct", $"p99_rank_within_1pct")
+      .orderBy($"col_name")
+  }
+
+  /** One pipeline table as the profile queries read it: the Spark
+    * projection `frame` (output names are the emitted `col_name`s, in
+    * `cols` order) with its `measure` column, and the DuckDB spelling:
+    * an optional leading CTE (`withSql`, comma included), the relation
+    * the census reads, each column's expression over it, the columns
+    * that are strings already, and the measure's non-null values. */
+  private final case class ProfiledTable(
+      cols: Seq[String], measure: String,
+      frame: (SparkSession, String) => DataFrame,
+      withSql: String, fromSql: String, colSql: Seq[String],
+      stringCols: Set[String], valuesSql: String) {
+
+    private def census(perCol: (String, String, Int) => String): String =
+      s"""WITH $withSql a AS (
+          SELECT CAST(COUNT(*) AS BIGINT) AS n,
+            ${cols.indices.map(i => perCol(cols(i), colSql(i), i + 1)).mkString(",\n")}
+          FROM $fromSql)"""
+
+    private def unpivot(header: String, first: String, other: Int => String,
+        atMeasure: Int => String): String = {
+      val rows = cols.indices.map { i =>
+        val (c, n) = (cols(i), i + 1)
+        if (n == 1) s"SELECT n, '$c' AS col_name, n - c1 AS n_nulls, d1 AS n_distinct, $first FROM a"
+        else s"UNION ALL SELECT n, '$c', n - c$n, d$n, ${if (c == measure) atMeasure(n) else other(n)}"
+      }
+      s"""SELECT col_name, n AS n_rows, n_nulls, n_distinct, $header
+        FROM (
+          ${rows.mkString("\n        ")})
+        ORDER BY col_name"""
+    }
+
+    /** Oracle of [[exactProfile]]. */
+    def exactSql: String =
+      s"""${census { (c, x, n) =>
+        val (mn, mx) =
+          if (stringCols(c)) (s"MIN($x)", s"MAX($x)")
+          else (s"CAST(MIN($x) AS VARCHAR)", s"CAST(MAX($x) AS VARCHAR)")
+        s"CAST(COUNT($x) AS BIGINT) AS c$n, CAST(COUNT(DISTINCT $x) AS BIGINT) AS d$n, $mn AS mn$n, $mx AS mx$n"
+      }},
+        v AS ($valuesSql),
+        r AS (
+          SELECT val, ROW_NUMBER() OVER (ORDER BY val) AS rk,
+                 COUNT(*) OVER () AS nn
+          FROM v),
+        q AS (
+          SELECT
+            CAST(MIN(CASE WHEN rk >= (50 * nn + 99) // 100
+              THEN val END) AS VARCHAR) AS p50v,
+            CAST(MIN(CASE WHEN rk >= (99 * nn + 99) // 100
+              THEN val END) AS VARCHAR) AS p99v
+          FROM r)
+        ${unpivot("min_repr, max_repr, p50_repr, p99_repr",
+          "mn1 AS min_repr, mx1 AS max_repr, CAST(NULL AS VARCHAR) AS p50_repr, CAST(NULL AS VARCHAR) AS p99_repr",
+          n => s"mn$n, mx$n, NULL, NULL FROM a",
+          n => s"mn$n, mx$n, p50v, p99v FROM a CROSS JOIN q")}"""
+
+    /** Oracle of the sketched profile's contract row
+      * ([[approxProfileContract]]): exact census, accuracy booleans TRUE. */
+    def approxSql: String =
+      s"""${census((_, x, n) =>
+        s"CAST(COUNT($x) AS BIGINT) AS c$n, CAST(COUNT(DISTINCT $x) AS BIGINT) AS d$n")}
+        ${unpivot("distinct_within_5pct, p50_rank_within_1pct, p99_rank_within_1pct",
+          "TRUE AS distinct_within_5pct, CAST(NULL AS VARCHAR) AS p50_rank_within_1pct, CAST(NULL AS VARCHAR) AS p99_rank_within_1pct",
+          _ => "TRUE, NULL, NULL FROM a",
+          _ => "TRUE, 'true', 'true' FROM a")}"""
+  }
+
+  private lazy val ordersProfile = ProfiledTable(
+    cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+      "o_totalprice_cents", "o_orderdate_us", "o_orderpriority"),
+    measure = "o_totalprice_cents",
+    frame = (s, d) => Tables.orders(s, d).select(
+      col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+      expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)")
+        .as("o_totalprice_cents"),
+      // o_orderdate reads as TIMESTAMP_NTZ; the UTC session (Tuning)
+      // makes the NTZ->instant cast the same integer DuckDB's
+      // epoch_us computes on the naive value
+      expr("unix_micros(cast(o_orderdate as timestamp))")
+        .as("o_orderdate_us"),
+      col("o_orderpriority")),
+    withSql = "", fromSql = "orders",
+    colSql = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+      "CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT)",
+      "epoch_us(o_orderdate)", "o_orderpriority"),
+    stringCols = Set("o_orderstatus", "o_orderpriority"),
+    valuesSql = """
+        SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
+          AS BIGINT) AS val
+        FROM orders
+        WHERE o_totalprice IS NOT NULL""")
+
+  // events: the measure column is value (centi-units); ts rides the
+  // epoch-micros convention (`ts div 1000` on the nanos Long = DuckDB's
+  // epoch_us) shared with every evt_* oracle
+  private lazy val eventsProfile = ProfiledTable(
+    cols = Seq("event_id", "ts_us", "user_id", "event_type", "value_cents"),
+    measure = "value_cents",
+    frame = (s, d) => Tables.events(s, d).select(
+      col("event_id"),
+      expr("ts div 1000").as("ts_us"),
+      col("user_id"), col("event_type"),
+      expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
+        .as("value_cents")),
+    withSql = """e AS (
+        SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
+               CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
+                 AS value_cents
+        FROM events),""",
+    fromSql = "e",
+    colSql = Seq("event_id", "ts_us", "user_id", "event_type", "value_cents"),
+    stringCols = Set("event_type"),
+    valuesSql = "SELECT value_cents AS val FROM e WHERE value_cents IS NOT NULL")
+
+  // documents: the measure column is n_chars — the dataset-card length
+  // distribution every curation pass reads
+  private lazy val documentsProfile = ProfiledTable(
+    cols = Seq("doc_id", "lang", "source", "n_chars"),
+    measure = "n_chars",
+    frame = (s, d) => Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
+    withSql = "", fromSql = "documents",
+    colSql = Seq("doc_id", "lang", "source", "n_chars"),
+    stringCols = Set("lang", "source"),
+    valuesSql = "SELECT n_chars AS val FROM documents WHERE n_chars IS NOT NULL")
+
+  // embeddings: emb_dim's census (n_distinct = 1) IS the fixed-dimension
+  // contract check; the measure column is label
+  private lazy val embeddingsProfile = ProfiledTable(
+    cols = Seq("vec_id", "emb_dim", "label"),
+    measure = "label",
+    frame = (s, d) => Tables.embeddings(s, d).select(
+      col("vec_id"),
+      size(col("embedding")).cast(LongType).as("emb_dim"),
+      col("label").cast(LongType).as("label")),
+    withSql = """e AS (
+        SELECT vec_id, CAST(len(embedding) AS BIGINT) AS emb_dim,
+               CAST(label AS BIGINT) AS label
+        FROM embeddings),""",
+    fromSql = "e",
+    colSql = Seq("vec_id", "emb_dim", "label"),
+    stringCols = Set.empty,
+    valuesSql = "SELECT label AS val FROM e WHERE label IS NOT NULL")
+
+  /** The exact profile rows of `t`: per column the null count, exact
+    * distinct count and min/max as strings, and on the measure column
+    * the exact p50/p99 of [[exactPctlReprs]] — one map-side-combined
+    * aggregate that `stack` unpivots into the per-column census. */
+  private def exactProfile(s: SparkSession, d: String,
+      t: ProfiledTable): DataFrame = {
+    import s.implicits._
+    val frame = t.frame(s, d)
+    val qdf = exactPctlReprs(s, frame.select(col(t.measure).as("v")))
+    val aggs = t.cols.zipWithIndex.flatMap { case (c, i) =>
+      Seq(count(col(c)).as(s"c${i + 1}"),
+        countDistinct(col(c)).as(s"d${i + 1}"),
+        min(col(c)).cast(StringType).as(s"mn${i + 1}"),
+        max(col(c)).cast(StringType).as(s"mx${i + 1}"))
+    }
+    val stackRows = t.cols.zipWithIndex.map { case (c, i) =>
+      val pcts =
+        if (c == t.measure) "p50v, p99v"
+        else "CAST(NULL AS STRING), CAST(NULL AS STRING)"
+      s"'$c', n - c${i + 1}, d${i + 1}, mn${i + 1}, mx${i + 1}, $pcts"
+    }.mkString(",\n            ")
+    frame.agg(count(lit(1)).as("n"), aggs: _*)
+      .crossJoin(broadcast(qdf))
+      .select(expr(s"""stack(${t.cols.size},
+              $stackRows)
+            as (col_name, n_nulls, n_distinct, min_repr, max_repr,
+                p50_repr, p99_repr)"""),
+        $"n".as("n_rows"))
+      .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
+        $"min_repr", $"max_repr", $"p50_repr", $"p99_repr")
       .orderBy($"col_name")
   }
 
@@ -547,6 +711,23 @@ object Relational extends QueryPack {
               .otherwise(0L)).as("leaf")))
     }
     (rows, splits.result())
+  }
+
+  /** The customer rows the k-anonymity queries generalize: `id` and
+    * the quasi-identifiers `d0` (acctbal in cents) and `d1` (nation). */
+  private def kanonCustomers(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(
+      col("c_custkey").cast(LongType).as("id"),
+      expr("cast(cast(c_acctbal as decimal(12,2)) * 100 as bigint)")
+        .as("d0"),
+      col("c_nationkey").cast(LongType).as("d1"))
+
+  /** The arriving split (c_custkey % 8 == 0) walked through the frozen
+    * k=5, depth-8 scheme of the base split. */
+  private def kanonApplied(s: SparkSession, d: String): DataFrame = {
+    val cust = kanonCustomers(s, d)
+    mondrianApply(cust.filter(col("id") % 8 =!= 0),
+      cust.filter(col("id") % 8 === 0), k = 5L, depth = 8)
   }
 
   /** Apply a FROZEN Mondrian scheme to arriving rows — the serving
@@ -856,6 +1037,34 @@ $walk,
       .orderBy($"round")
   }
 
+  /** Every triangle of an undirected distinct edge list (u < v) once,
+    * as (a, b, c): wedges are oriented from each edge's lower-(degree,
+    * id) end, so a triangle is found once at its lowest vertex and
+    * per-vertex fan-out is C(outdeg, 2) with outdeg O(√m), never
+    * quadratic at hubs; one equality join closes each wedge. */
+  private def orientedTriangles(edges: DataFrame): DataFrame = {
+    val s = edges.sparkSession
+    import s.implicits._
+    val deg = edges.select($"u".as("n")).unionByName(
+        edges.select($"v".as("n")))
+      .groupBy($"n").agg(count(lit(1)).as("dg"))
+    val oe = edges
+      .join(deg.select($"n".as("u"), $"dg".as("du")), Seq("u"))
+      .join(deg.select($"n".as("v"), $"dg".as("dv")), Seq("v"))
+      .select(
+        when(struct($"du", $"u") < struct($"dv", $"v"), $"u")
+          .otherwise($"v").as("s"),
+        when(struct($"du", $"u") < struct($"dv", $"v"),
+          struct($"dv".as("td"), $"v".as("tn")))
+          .otherwise(struct($"du".as("td"), $"u".as("tn"))).as("t"))
+      .pin() // wedge (twice) + closing edge
+    oe.as("w1").join(oe.as("w2"),
+        $"w1.s" === $"w2.s" && $"w1.t" < $"w2.t")
+      .join(oe.as("e3"),
+        $"e3.s" === $"w1.t.tn" && $"e3.t" === $"w2.t")
+      .select($"w1.s".as("a"), $"w1.t.tn".as("b"), $"w2.t.tn".as("c"))
+  }
+
   /** k-truss edge peeling (Cohen 2008; Wang–Cheng VLDB'12) behind
     * `q_ktruss`, over any undirected DISTINCT edge list with u < v —
     * the EDGE-grade sibling of [[kCorePeel]]: where k-core keeps
@@ -889,24 +1098,7 @@ $walk,
     // support of every alive edge = triangles it closes, counted by
     // the oriented wedge join (each triangle once, then 3 credits)
     def support(alive: DataFrame): DataFrame = {
-      val sym = alive.unionByName(alive.select($"v".as("u"), $"u".as("v")))
-      val deg = sym.groupBy($"u").agg(count(lit(1)).as("dg"))
-        .select($"u".as("n"), $"dg")
-      val oe = alive
-        .join(deg.select($"n".as("u"), $"dg".as("du")), Seq("u"))
-        .join(deg.select($"n".as("v"), $"dg".as("dv")), Seq("v"))
-        .select(
-          when(struct($"du", $"u") < struct($"dv", $"v"), $"u")
-            .otherwise($"v").as("s"),
-          when(struct($"du", $"u") < struct($"dv", $"v"),
-            struct($"dv".as("td"), $"v".as("tn")))
-            .otherwise(struct($"du".as("td"), $"u".as("tn"))).as("t"))
-        .pin() // wedge (twice) + closing edge
-      val tri = oe.as("w1").join(oe.as("w2"),
-          $"w1.s" === $"w2.s" && $"w1.t" < $"w2.t")
-        .join(oe.as("e3"),
-          $"e3.s" === $"w1.t.tn" && $"e3.t" === $"w2.t")
-        .select($"w1.s".as("a"), $"w1.t.tn".as("b"), $"w2.t.tn".as("c"))
+      val tri = orientedTriangles(alive)
       tri.select(explode(array(
           struct(least($"a", $"b").as("u"), greatest($"a", $"b").as("v")),
           struct(least($"a", $"c").as("u"), greatest($"a", $"c").as("v")),
@@ -1232,15 +1424,7 @@ $walk,
     * node census for downstream sampling. */
   private def randomWalks(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, d)
-      .select($"l_orderkey", $"l_partkey").distinct()
-    val e0 = li.as("a").join(li.as("b"),
-        $"a.l_orderkey" === $"b.l_orderkey" &&
-          $"a.l_partkey" < $"b.l_partkey")
-      .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .agg(count(lit(1)).as("supp"))
-      .filter($"supp" >= 2)
-      .select($"u", $"v")
+    val e0 = supportEdges(s, d)
     val sym = e0.unionByName(e0.select($"v".as("u"), $"u".as("v")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"u").orderBy($"v")
@@ -1270,6 +1454,128 @@ $walk,
     out
   }
 
+  /** Distinct co-purchase edges (u < v): every pair of parts sharing an
+    * order, the graph behind the traversal and clustering queries. */
+  private def copurchaseEdges(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
+    li.as("a").join(li.as("b"),
+        $"a.l_orderkey" === $"b.l_orderkey" &&
+          $"a.l_partkey" < $"b.l_partkey")
+      .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
+      .distinct()
+  }
+
+  /** [[copurchaseEdges]] in both directions; unpinned. */
+  private def copurchaseSym(s: SparkSession, d: String): DataFrame = {
+    val edges = copurchaseEdges(s, d)
+    edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+  }
+
+  /** Co-purchase pairs (u < v) with `supp`, the number of orders
+    * holding both parts. */
+  private def copurchaseSupport(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val li = Tables.lineitem(s, d)
+      .select($"l_orderkey", $"l_partkey").distinct()
+    li.as("a").join(li.as("b"),
+        $"a.l_orderkey" === $"b.l_orderkey" &&
+          $"a.l_partkey" < $"b.l_partkey")
+      .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
+      .agg(count(lit(1)).as("supp"))
+  }
+
+  /** The support-≥2 co-purchase graph (u < v). */
+  private def supportEdges(s: SparkSession, d: String): DataFrame =
+    copurchaseSupport(s, d).filter(col("supp") >= 2).select(col("u"), col("v"))
+
+  /** Multi-source BFS behind `q_closeness` and `q_apsp_landmarks`: the
+    * 4 smallest vertices of the co-purchase graph ride ONE
+    * (src, node)-keyed frontier for 3 rounds, one checkpoint barrier
+    * per round; rows (src, node, d). */
+  private def landmarkLevels(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val sym = copurchaseSym(s, d).pin() // one join per round reads this
+    val srcs = sym.select($"u").distinct()
+      .orderBy($"u").limit(4).select($"u".as("src"))
+    var lvl = srcs
+      .select($"src", $"src".as("node"), lit(0L).as("d"))
+      .pin()
+    for (r <- 1 to 3) {
+      val frontier = lvl.filter($"d" === (r - 1L))
+        .join(sym, $"node" === $"u")
+        .select($"src", $"v".as("node")).distinct()
+      val fresh = frontier.join(lvl, Seq("src", "node"), "left_anti")
+        .select($"src", $"node", lit(r.toLong).as("d"))
+      lvl = lvl.unionByName(fresh).pin()
+    }
+    lvl
+  }
+
+  /** [[landmarkLevels]] as oracle CTEs ending in `l3` (src, node, d). */
+  private lazy val landmarkBfsCtes: String = """li AS MATERIALIZED (
+          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        e0 AS MATERIALIZED (
+          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+          FROM li a JOIN li b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        sym AS MATERIALIZED (
+          SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
+        srcs AS MATERIALIZED (
+          SELECT u AS src FROM (SELECT DISTINCT u FROM sym)
+          ORDER BY u LIMIT 4),
+        l0 AS MATERIALIZED (SELECT src, src AS node, 0 AS d FROM srcs),
+        f1 AS MATERIALIZED (
+          SELECT DISTINCT l.src, s.v AS node
+          FROM l0 l JOIN sym s ON s.u = l.node),
+        n1 AS MATERIALIZED (
+          SELECT f1.src, f1.node FROM f1
+          LEFT JOIN l0 ON l0.src = f1.src AND l0.node = f1.node
+          WHERE l0.node IS NULL),
+        l1 AS MATERIALIZED (
+          SELECT * FROM l0 UNION ALL SELECT src, node, 1 FROM n1),
+        f2 AS MATERIALIZED (
+          SELECT DISTINCT l.src, s.v AS node
+          FROM l1 l JOIN sym s ON s.u = l.node WHERE l.d = 1),
+        n2 AS MATERIALIZED (
+          SELECT f2.src, f2.node FROM f2
+          LEFT JOIN l1 ON l1.src = f2.src AND l1.node = f2.node
+          WHERE l1.node IS NULL),
+        l2 AS MATERIALIZED (
+          SELECT * FROM l1 UNION ALL SELECT src, node, 2 FROM n2),
+        f3 AS MATERIALIZED (
+          SELECT DISTINCT l.src, s.v AS node
+          FROM l2 l JOIN sym s ON s.u = l.node WHERE l.d = 2),
+        n3 AS MATERIALIZED (
+          SELECT f3.src, f3.node FROM f3
+          LEFT JOIN l2 ON l2.src = f3.src AND l2.node = f3.node
+          WHERE l2.node IS NULL),
+        l3 AS MATERIALIZED (
+          SELECT * FROM l2 UNION ALL SELECT src, node, 3 FROM n3)"""
+
+  /** Single-source BFS with shortest-path counts over a pinned
+    * symmetric edge list: from the minimum vertex, 3 rounds, where a
+    * node first reached at round r gets σ = Σ σ over its round-(r−1)
+    * neighbors; rows (node, lvl, sigma). */
+  private def sigmaLevels(sym: DataFrame): DataFrame = {
+    val s = sym.sparkSession
+    import s.implicits._
+    var lvl = sym.agg(min($"u").as("node"))
+      .select($"node", lit(0L).as("lvl"), lit(1L).as("sigma"))
+      .pin()
+    for (r <- 1 to 3) {
+      val cand = lvl.filter($"lvl" === (r - 1L))
+        .join(sym, $"node" === $"u")
+        .select($"v".as("node"), $"sigma")
+      val fresh = cand.join(lvl.select($"node"), Seq("node"), "left_anti")
+        .groupBy($"node")
+        .agg(sum($"sigma").as("sigma"))
+        .select($"node", lit(r.toLong).as("lvl"), $"sigma")
+      lvl = lvl.unionByName(fresh).pin()
+    }
+    lvl
+  }
+
   /** Truncated Brandes pass behind `q_brandes_delta`, over any
     * symmetric edge list (u, v): 3-level BFS with path counts from
     * the minimum vertex, then the backward dependency sweep with
@@ -1280,60 +1586,88 @@ $walk,
     import s.implicits._
     val dec206 = DecimalType(20, 6)
     val sym = symIn.pin() // forward + backward joins
-    var lvl = sym.agg(min($"u").as("node"))
-          .select($"node", lit(0L).as("lvl"), lit(1L).as("sigma"))
-          .pin()
-        for (r <- 1 to 3) {
-          val cand = lvl.filter($"lvl" === (r - 1L))
-            .join(sym, $"node" === $"u")
-            .select($"v".as("node"), $"sigma")
-          val fresh = cand.join(lvl.select($"node"), Seq("node"), "left_anti")
-            .groupBy($"node")
-            .agg(sum($"sigma").as("sigma"))
-            .select($"node", lit(r.toLong).as("lvl"), $"sigma")
-          lvl = lvl.unionByName(fresh).pin()
-        }
-        // backward sweep: δ at the 3-level frontier is 0 by the bound
-        var delta = lvl.filter($"lvl" === 3L)
-          .select($"node", lit(0).cast(dec206).as("delta"))
-          .pin()
-        var out = delta.join(lvl, Seq("node"))
-          .select($"node", $"lvl", $"sigma", $"delta")
-        for (ln <- 2 to 0 by -1) {
-          val wSide = lvl.filter($"lvl" === (ln + 1).toLong)
-            .select($"node".as("w"), $"sigma".as("sw"))
-            .join(delta.select($"node".as("w"), $"delta".as("dw")),
-              Seq("w"))
-          val contrib = lvl.filter($"lvl" === ln.toLong)
-            .select($"node", $"sigma".as("sv"))
-            .join(sym, $"node" === $"u")
-            .join(wSide, $"v" === $"w")
-            .withColumn("c",
-              round($"sv".cast(DoubleType) / $"sw".cast(DoubleType) *
-                (lit(1.0) + $"dw".cast(DoubleType)), 6).cast(dec206))
-            .groupBy($"node")
-            .agg(sum($"c").cast(dec206).as("delta"))
-          delta = lvl.filter($"lvl" === ln.toLong).select($"node")
-            .join(contrib, Seq("node"), "left")
-            .select($"node",
-              coalesce($"delta", lit(0).cast(dec206)).as("delta"))
-            .pin()
-          out = out.unionByName(delta.join(lvl, Seq("node"))
-            .select($"node", $"lvl", $"sigma", $"delta"))
-        }
-        out.select($"node", $"lvl", $"sigma",
-            $"delta".cast(DoubleType).as("delta"))
-          .orderBy($"node")
-      
+    val lvl = sigmaLevels(sym)
+    // backward sweep: δ at the 3-level frontier is 0 by the bound
+    var delta = lvl.filter($"lvl" === 3L)
+      .select($"node", lit(0).cast(dec206).as("delta"))
+      .pin()
+    var out = delta.join(lvl, Seq("node"))
+      .select($"node", $"lvl", $"sigma", $"delta")
+    for (ln <- 2 to 0 by -1) {
+      val wSide = lvl.filter($"lvl" === (ln + 1).toLong)
+        .select($"node".as("w"), $"sigma".as("sw"))
+        .join(delta.select($"node".as("w"), $"delta".as("dw")),
+          Seq("w"))
+      val contrib = lvl.filter($"lvl" === ln.toLong)
+        .select($"node", $"sigma".as("sv"))
+        .join(sym, $"node" === $"u")
+        .join(wSide, $"v" === $"w")
+        .withColumn("c",
+          round($"sv".cast(DoubleType) / $"sw".cast(DoubleType) *
+            (lit(1.0) + $"dw".cast(DoubleType)), 6).cast(dec206))
+        .groupBy($"node")
+        .agg(sum($"c").cast(dec206).as("delta"))
+      delta = lvl.filter($"lvl" === ln.toLong).select($"node")
+        .join(contrib, Seq("node"), "left")
+        .select($"node",
+          coalesce($"delta", lit(0).cast(dec206)).as("delta"))
+        .pin()
+      out = out.unionByName(delta.join(lvl, Seq("node"))
+        .select($"node", $"lvl", $"sigma", $"delta"))
+    }
+    out.select($"node", $"lvl", $"sigma",
+        $"delta".cast(DoubleType).as("delta"))
+      .orderBy($"node")
+  }
+
+  /** Oracle CTEs `li`, `e0`: the [[supportEdges]] derivation. */
+  private lazy val supportEdgeCtes: String = """li AS MATERIALIZED (
+          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+        e0 AS MATERIALIZED (
+          SELECT a.l_partkey AS u, b.l_partkey AS v
+          FROM li a JOIN li b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+          GROUP BY 1, 2 HAVING COUNT(*) >= 2)"""
+
+  /** Oracle of the top-3 orders per customer by total price, shared by
+    * the window (`q_window_topk`) and aggregator (`q_topk_aggregate`)
+    * plans. */
+  private lazy val top3OrdersPerCustomerSql: String = """
+        SELECT o_custkey, rk, o_orderkey, total_price FROM (
+          SELECT o_custkey, o_orderkey,
+            CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS total_price,
+            ROW_NUMBER() OVER (PARTITION BY o_custkey
+                               ORDER BY o_totalprice DESC, o_orderkey) AS rk
+          FROM orders)
+        WHERE rk <= 3
+        ORDER BY o_custkey, rk"""
+
+  /** Oracle CTE `e0`: the [[copurchaseEdges]] derivation. */
+  private lazy val copurchaseEdgeCte: String = """e0 AS (
+          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+          FROM lineitem a JOIN lineitem b
+            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
+
+  /** The three label-propagation rounds over [[copurchaseEdgeCte]] as
+    * oracle CTEs ending in `l3` (node, label) — single source for the
+    * `q_label_prop` and `q_modularity` oracles. */
+  private lazy val labelPropCtes: String = {
+    def vote(r: Int) = s"""
+        c$r AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
+               FROM sym s JOIN l${r - 1} l ON s.v = l.node GROUP BY 1, 2),
+        l$r AS (SELECT node, label FROM (
+                 SELECT node, label, ROW_NUMBER() OVER
+                   (PARTITION BY node ORDER BY c DESC, label) AS rn
+                 FROM c$r) WHERE rn = 1)"""
+    s"""$copurchaseEdgeCte,
+        sym AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
+        l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym),${(1 to 3).map(vote).mkString(",")}"""
   }
 
   /** The BFS + path-counting derivation as shared oracle CTEs ending
     * in `l3` (node, lvl, sigma) — single source for the `q_bfs_sigma`
     * and `q_brandes_delta` oracles. */
-  private lazy val bfsSigmaCtes: String = """e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+  private lazy val bfsSigmaCtes: String = s"""$copurchaseEdgeCte,
         sym AS (
           SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
         l0 AS (
@@ -1373,13 +1707,7 @@ $walk,
            AND n.rank = ${hex6SqlOn(
         s"md5(p.cur::VARCHAR || ':' || p.start::VARCHAR || ':$t')")}
                % n.deg)"""
-    s"""li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-          SELECT a.l_partkey AS u, b.l_partkey AS v
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+    s"""$supportEdgeCtes,
         sym AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
         nbr AS MATERIALIZED (
           SELECT u, v,
@@ -2083,409 +2411,17 @@ $walk,
     // rendering. The family covers all four pipeline tables: orders
     // (TPC-H face), events, documents, embeddings.
     "q_profile_table" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val priceCents =
-          expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)")
-        // o_orderdate reads as TIMESTAMP_NTZ; the UTC session (Tuning)
-        // makes the NTZ->instant cast the same integer DuckDB's
-        // epoch_us computes on the naive value
-        val dateUs = expr("unix_micros(cast(o_orderdate as timestamp))")
-        val qdf = exactPctlReprs(s,
-          Tables.orders(s, d).select(priceCents.as("v")))
-        val a = Tables.orders(s, d).agg(
-          count(lit(1)).as("n"),
-          count($"o_orderkey").as("c1"),
-          countDistinct($"o_orderkey").as("d1"),
-          min($"o_orderkey").cast(StringType).as("mn1"),
-          max($"o_orderkey").cast(StringType).as("mx1"),
-          count($"o_custkey").as("c2"),
-          countDistinct($"o_custkey").as("d2"),
-          min($"o_custkey").cast(StringType).as("mn2"),
-          max($"o_custkey").cast(StringType).as("mx2"),
-          count($"o_orderstatus").as("c3"),
-          countDistinct($"o_orderstatus").as("d3"),
-          min($"o_orderstatus").as("mn3"),
-          max($"o_orderstatus").as("mx3"),
-          count(priceCents).as("c4"),
-          countDistinct(priceCents).as("d4"),
-          min(priceCents).cast(StringType).as("mn4"),
-          max(priceCents).cast(StringType).as("mx4"),
-          count(dateUs).as("c5"),
-          countDistinct(dateUs).as("d5"),
-          min(dateUs).cast(StringType).as("mn5"),
-          max(dateUs).cast(StringType).as("mx5"),
-          count($"o_orderpriority").as("c6"),
-          countDistinct($"o_orderpriority").as("d6"),
-          min($"o_orderpriority").as("mn6"),
-          max($"o_orderpriority").as("mx6"))
-        a.crossJoin(broadcast(qdf)).select(expr("""stack(6,
-            'o_orderkey', n - c1, d1, mn1, mx1,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'o_custkey', n - c2, d2, mn2, mx2,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'o_orderstatus', n - c3, d3, mn3, mx3,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'o_totalprice_cents', n - c4, d4, mn4, mx4, p50v, p99v,
-            'o_orderdate_us', n - c5, d5, mn5, mx5,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'o_orderpriority', n - c6, d6, mn6, mx6,
-              CAST(NULL AS STRING), CAST(NULL AS STRING))
-            as (col_name, n_nulls, n_distinct, min_repr, max_repr,
-                p50_repr, p99_repr)"""),
-          $"n".as("n_rows"))
-          .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
-            $"min_repr", $"max_repr", $"p50_repr", $"p99_repr")
-          .orderBy($"col_name")
-      },
-      oracle = Some("""
-        WITH a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(o_orderkey) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS d1,
-            CAST(MIN(o_orderkey) AS VARCHAR) AS mn1,
-            CAST(MAX(o_orderkey) AS VARCHAR) AS mx1,
-            CAST(COUNT(o_custkey) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS d2,
-            CAST(MIN(o_custkey) AS VARCHAR) AS mn2,
-            CAST(MAX(o_custkey) AS VARCHAR) AS mx2,
-            CAST(COUNT(o_orderstatus) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS d3,
-            MIN(o_orderstatus) AS mn3,
-            MAX(o_orderstatus) AS mx3,
-            CAST(COUNT(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-              AS BIGINT)) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT CAST(CAST(o_totalprice AS DECIMAL(12,2))
-              * 100 AS BIGINT)) AS BIGINT) AS d4,
-            CAST(MIN(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-              AS BIGINT)) AS VARCHAR) AS mn4,
-            CAST(MAX(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-              AS BIGINT)) AS VARCHAR) AS mx4,
-            CAST(COUNT(epoch_us(o_orderdate)) AS BIGINT) AS c5,
-            CAST(COUNT(DISTINCT epoch_us(o_orderdate)) AS BIGINT) AS d5,
-            CAST(MIN(epoch_us(o_orderdate)) AS VARCHAR) AS mn5,
-            CAST(MAX(epoch_us(o_orderdate)) AS VARCHAR) AS mx5,
-            CAST(COUNT(o_orderpriority) AS BIGINT) AS c6,
-            CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS d6,
-            MIN(o_orderpriority) AS mn6,
-            MAX(o_orderpriority) AS mx6
-          FROM orders),
-        v AS (
-          SELECT CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-            AS BIGINT) AS val
-          FROM orders
-          WHERE o_totalprice IS NOT NULL),
-        r AS (
-          SELECT val, ROW_NUMBER() OVER (ORDER BY val) AS rk,
-                 COUNT(*) OVER () AS nn
-          FROM v),
-        q AS (
-          SELECT
-            CAST(MIN(CASE WHEN rk >= (50 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p50v,
-            CAST(MIN(CASE WHEN rk >= (99 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p99v
-          FROM r)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               min_repr, max_repr, p50_repr, p99_repr
-        FROM (
-          SELECT n, 'o_orderkey' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, mn1 AS min_repr, mx1 AS max_repr,
-                 CAST(NULL AS VARCHAR) AS p50_repr,
-                 CAST(NULL AS VARCHAR) AS p99_repr FROM a
-          UNION ALL SELECT n, 'o_custkey', n - c2, d2, mn2, mx2,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_orderstatus', n - c3, d3, mn3, mx3,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_totalprice_cents', n - c4, d4, mn4, mx4,
-            p50v, p99v FROM a CROSS JOIN q
-          UNION ALL SELECT n, 'o_orderdate_us', n - c5, d5, mn5, mx5,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_orderpriority', n - c6, d6, mn6, mx6,
-            NULL, NULL FROM a)
-        ORDER BY col_name""")),
-
-    // events profile: the measure column is value (centi-units);
-    // ts rides the epoch-micros convention (`ts div 1000` on the
-    // nanos Long = DuckDB's epoch_us) shared with every evt_* oracle
+      fn = (s, d) => exactProfile(s, d, ordersProfile),
+      oracle = Some(ordersProfile.exactSql)),
     "q_profile_events" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val ev = Tables.events(s, d).select(
-          $"event_id",
-          expr("ts div 1000").as("ts_us"),
-          $"user_id", $"event_type",
-          expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-            .as("value_cents"))
-        val qdf = exactPctlReprs(s, ev.select($"value_cents".as("v")))
-        val a = ev.agg(
-          count(lit(1)).as("n"),
-          count($"event_id").as("c1"),
-          countDistinct($"event_id").as("d1"),
-          min($"event_id").cast(StringType).as("mn1"),
-          max($"event_id").cast(StringType).as("mx1"),
-          count($"ts_us").as("c2"),
-          countDistinct($"ts_us").as("d2"),
-          min($"ts_us").cast(StringType).as("mn2"),
-          max($"ts_us").cast(StringType).as("mx2"),
-          count($"user_id").as("c3"),
-          countDistinct($"user_id").as("d3"),
-          min($"user_id").cast(StringType).as("mn3"),
-          max($"user_id").cast(StringType).as("mx3"),
-          count($"event_type").as("c4"),
-          countDistinct($"event_type").as("d4"),
-          min($"event_type").as("mn4"),
-          max($"event_type").as("mx4"),
-          count($"value_cents").as("c5"),
-          countDistinct($"value_cents").as("d5"),
-          min($"value_cents").cast(StringType).as("mn5"),
-          max($"value_cents").cast(StringType).as("mx5"))
-        a.crossJoin(broadcast(qdf)).select(expr("""stack(5,
-            'event_id', n - c1, d1, mn1, mx1,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'ts_us', n - c2, d2, mn2, mx2,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'user_id', n - c3, d3, mn3, mx3,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'event_type', n - c4, d4, mn4, mx4,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'value_cents', n - c5, d5, mn5, mx5, p50v, p99v)
-            as (col_name, n_nulls, n_distinct, min_repr, max_repr,
-                p50_repr, p99_repr)"""),
-          $"n".as("n_rows"))
-          .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
-            $"min_repr", $"max_repr", $"p50_repr", $"p99_repr")
-          .orderBy($"col_name")
-      },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-                   AS value_cents
-          FROM events),
-        a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(event_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT event_id) AS BIGINT) AS d1,
-            CAST(MIN(event_id) AS VARCHAR) AS mn1,
-            CAST(MAX(event_id) AS VARCHAR) AS mx1,
-            CAST(COUNT(ts_us) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT ts_us) AS BIGINT) AS d2,
-            CAST(MIN(ts_us) AS VARCHAR) AS mn2,
-            CAST(MAX(ts_us) AS VARCHAR) AS mx2,
-            CAST(COUNT(user_id) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS d3,
-            CAST(MIN(user_id) AS VARCHAR) AS mn3,
-            CAST(MAX(user_id) AS VARCHAR) AS mx3,
-            CAST(COUNT(event_type) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT event_type) AS BIGINT) AS d4,
-            MIN(event_type) AS mn4,
-            MAX(event_type) AS mx4,
-            CAST(COUNT(value_cents) AS BIGINT) AS c5,
-            CAST(COUNT(DISTINCT value_cents) AS BIGINT) AS d5,
-            CAST(MIN(value_cents) AS VARCHAR) AS mn5,
-            CAST(MAX(value_cents) AS VARCHAR) AS mx5
-          FROM e),
-        v AS (SELECT value_cents AS val FROM e
-              WHERE value_cents IS NOT NULL),
-        r AS (
-          SELECT val, ROW_NUMBER() OVER (ORDER BY val) AS rk,
-                 COUNT(*) OVER () AS nn
-          FROM v),
-        q AS (
-          SELECT
-            CAST(MIN(CASE WHEN rk >= (50 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p50v,
-            CAST(MIN(CASE WHEN rk >= (99 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p99v
-          FROM r)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               min_repr, max_repr, p50_repr, p99_repr
-        FROM (
-          SELECT n, 'event_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, mn1 AS min_repr, mx1 AS max_repr,
-                 CAST(NULL AS VARCHAR) AS p50_repr,
-                 CAST(NULL AS VARCHAR) AS p99_repr FROM a
-          UNION ALL SELECT n, 'ts_us', n - c2, d2, mn2, mx2,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'user_id', n - c3, d3, mn3, mx3,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'event_type', n - c4, d4, mn4, mx4,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'value_cents', n - c5, d5, mn5, mx5,
-            p50v, p99v FROM a CROSS JOIN q)
-        ORDER BY col_name""")),
-
-    // documents profile: the measure column is n_chars — the
-    // dataset-card length distribution every curation pass reads
+      fn = (s, d) => exactProfile(s, d, eventsProfile),
+      oracle = Some(eventsProfile.exactSql)),
     "q_profile_documents" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val t = Tables.documents(s, d)
-          .select($"doc_id", $"lang", $"source", $"n_chars")
-        val qdf = exactPctlReprs(s, t.select($"n_chars".as("v")))
-        val a = t.agg(
-          count(lit(1)).as("n"),
-          count($"doc_id").as("c1"),
-          countDistinct($"doc_id").as("d1"),
-          min($"doc_id").cast(StringType).as("mn1"),
-          max($"doc_id").cast(StringType).as("mx1"),
-          count($"lang").as("c2"),
-          countDistinct($"lang").as("d2"),
-          min($"lang").as("mn2"),
-          max($"lang").as("mx2"),
-          count($"source").as("c3"),
-          countDistinct($"source").as("d3"),
-          min($"source").as("mn3"),
-          max($"source").as("mx3"),
-          count($"n_chars").as("c4"),
-          countDistinct($"n_chars").as("d4"),
-          min($"n_chars").cast(StringType).as("mn4"),
-          max($"n_chars").cast(StringType).as("mx4"))
-        a.crossJoin(broadcast(qdf)).select(expr("""stack(4,
-            'doc_id', n - c1, d1, mn1, mx1,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'lang', n - c2, d2, mn2, mx2,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'source', n - c3, d3, mn3, mx3,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'n_chars', n - c4, d4, mn4, mx4, p50v, p99v)
-            as (col_name, n_nulls, n_distinct, min_repr, max_repr,
-                p50_repr, p99_repr)"""),
-          $"n".as("n_rows"))
-          .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
-            $"min_repr", $"max_repr", $"p50_repr", $"p99_repr")
-          .orderBy($"col_name")
-      },
-      oracle = Some("""
-        WITH a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(doc_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS d1,
-            CAST(MIN(doc_id) AS VARCHAR) AS mn1,
-            CAST(MAX(doc_id) AS VARCHAR) AS mx1,
-            CAST(COUNT(lang) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT lang) AS BIGINT) AS d2,
-            MIN(lang) AS mn2,
-            MAX(lang) AS mx2,
-            CAST(COUNT(source) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT source) AS BIGINT) AS d3,
-            MIN(source) AS mn3,
-            MAX(source) AS mx3,
-            CAST(COUNT(n_chars) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT n_chars) AS BIGINT) AS d4,
-            CAST(MIN(n_chars) AS VARCHAR) AS mn4,
-            CAST(MAX(n_chars) AS VARCHAR) AS mx4
-          FROM documents),
-        v AS (SELECT n_chars AS val FROM documents
-              WHERE n_chars IS NOT NULL),
-        r AS (
-          SELECT val, ROW_NUMBER() OVER (ORDER BY val) AS rk,
-                 COUNT(*) OVER () AS nn
-          FROM v),
-        q AS (
-          SELECT
-            CAST(MIN(CASE WHEN rk >= (50 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p50v,
-            CAST(MIN(CASE WHEN rk >= (99 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p99v
-          FROM r)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               min_repr, max_repr, p50_repr, p99_repr
-        FROM (
-          SELECT n, 'doc_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, mn1 AS min_repr, mx1 AS max_repr,
-                 CAST(NULL AS VARCHAR) AS p50_repr,
-                 CAST(NULL AS VARCHAR) AS p99_repr FROM a
-          UNION ALL SELECT n, 'lang', n - c2, d2, mn2, mx2,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'source', n - c3, d3, mn3, mx3,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'n_chars', n - c4, d4, mn4, mx4,
-            p50v, p99v FROM a CROSS JOIN q)
-        ORDER BY col_name""")),
-
-    // embeddings profile: emb_dim's census (n_distinct = 1) IS the
-    // fixed-dimension contract check; the measure column is label
+      fn = (s, d) => exactProfile(s, d, documentsProfile),
+      oracle = Some(documentsProfile.exactSql)),
     "q_profile_embeddings" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val t = Tables.embeddings(s, d).select(
-          $"vec_id",
-          size($"embedding").cast(LongType).as("emb_dim"),
-          $"label".cast(LongType).as("label"))
-        val qdf = exactPctlReprs(s, t.select($"label".as("v")))
-        val a = t.agg(
-          count(lit(1)).as("n"),
-          count($"vec_id").as("c1"),
-          countDistinct($"vec_id").as("d1"),
-          min($"vec_id").cast(StringType).as("mn1"),
-          max($"vec_id").cast(StringType).as("mx1"),
-          count($"emb_dim").as("c2"),
-          countDistinct($"emb_dim").as("d2"),
-          min($"emb_dim").cast(StringType).as("mn2"),
-          max($"emb_dim").cast(StringType).as("mx2"),
-          count($"label").as("c3"),
-          countDistinct($"label").as("d3"),
-          min($"label").cast(StringType).as("mn3"),
-          max($"label").cast(StringType).as("mx3"))
-        a.crossJoin(broadcast(qdf)).select(expr("""stack(3,
-            'vec_id', n - c1, d1, mn1, mx1,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'emb_dim', n - c2, d2, mn2, mx2,
-              CAST(NULL AS STRING), CAST(NULL AS STRING),
-            'label', n - c3, d3, mn3, mx3, p50v, p99v)
-            as (col_name, n_nulls, n_distinct, min_repr, max_repr,
-                p50_repr, p99_repr)"""),
-          $"n".as("n_rows"))
-          .select($"col_name", $"n_rows", $"n_nulls", $"n_distinct",
-            $"min_repr", $"max_repr", $"p50_repr", $"p99_repr")
-          .orderBy($"col_name")
-      },
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id, CAST(len(embedding) AS BIGINT) AS emb_dim,
-                 CAST(label AS BIGINT) AS label
-          FROM embeddings),
-        a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(vec_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS d1,
-            CAST(MIN(vec_id) AS VARCHAR) AS mn1,
-            CAST(MAX(vec_id) AS VARCHAR) AS mx1,
-            CAST(COUNT(emb_dim) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT emb_dim) AS BIGINT) AS d2,
-            CAST(MIN(emb_dim) AS VARCHAR) AS mn2,
-            CAST(MAX(emb_dim) AS VARCHAR) AS mx2,
-            CAST(COUNT(label) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT label) AS BIGINT) AS d3,
-            CAST(MIN(label) AS VARCHAR) AS mn3,
-            CAST(MAX(label) AS VARCHAR) AS mx3
-          FROM e),
-        v AS (SELECT label AS val FROM e WHERE label IS NOT NULL),
-        r AS (
-          SELECT val, ROW_NUMBER() OVER (ORDER BY val) AS rk,
-                 COUNT(*) OVER () AS nn
-          FROM v),
-        q AS (
-          SELECT
-            CAST(MIN(CASE WHEN rk >= (50 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p50v,
-            CAST(MIN(CASE WHEN rk >= (99 * nn + 99) // 100
-              THEN val END) AS VARCHAR) AS p99v
-          FROM r)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               min_repr, max_repr, p50_repr, p99_repr
-        FROM (
-          SELECT n, 'vec_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, mn1 AS min_repr, mx1 AS max_repr,
-                 CAST(NULL AS VARCHAR) AS p50_repr,
-                 CAST(NULL AS VARCHAR) AS p99_repr FROM a
-          UNION ALL SELECT n, 'emb_dim', n - c2, d2, mn2, mx2,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'label', n - c3, d3, mn3, mx3,
-            p50v, p99v FROM a CROSS JOIN q)
-        ORDER BY col_name""")),
+      fn = (s, d) => exactProfile(s, d, embeddingsProfile),
+      oracle = Some(embeddingsProfile.exactSql)),
 
     // ── SKETCHED table profile: the actual 100 TB dataset-card path ──
     // The exact profiler family above is the right ORACLE contract,
@@ -2515,59 +2451,9 @@ $walk,
     // and expects TRUE, so the accuracy claims are hash-checked, not
     // asserted in prose.
     "q_profile_approx" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val priceCents =
-          expr("cast(cast(o_totalprice as decimal(12,2)) * 100 as bigint)")
-        val dateUs = expr("unix_micros(cast(o_orderdate as timestamp))")
-        approxProfileContract(s,
-          Tables.orders(s, d)
-            .select($"o_orderkey", $"o_custkey", $"o_orderstatus",
-              priceCents.as("price_cents"), dateUs.as("date_us"),
-              $"o_orderpriority"),
-          cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-            "price_cents", "date_us", "o_orderpriority"),
-          colLabels = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-            "o_totalprice_cents", "o_orderdate_us", "o_orderpriority"),
-          measure = "price_cents")
-      },
-      oracle = Some("""
-        WITH a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(o_orderkey) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS d1,
-            CAST(COUNT(o_custkey) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS d2,
-            CAST(COUNT(o_orderstatus) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS d3,
-            CAST(COUNT(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-              AS BIGINT)) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT CAST(CAST(o_totalprice AS DECIMAL(12,2))
-              * 100 AS BIGINT)) AS BIGINT) AS d4,
-            CAST(COUNT(epoch_us(o_orderdate)) AS BIGINT) AS c5,
-            CAST(COUNT(DISTINCT epoch_us(o_orderdate)) AS BIGINT) AS d5,
-            CAST(COUNT(o_orderpriority) AS BIGINT) AS c6,
-            CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS d6
-          FROM orders)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               distinct_within_5pct,
-               p50_rank_within_1pct, p99_rank_within_1pct
-        FROM (
-          SELECT n, 'o_orderkey' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, TRUE AS distinct_within_5pct,
-                 CAST(NULL AS VARCHAR) AS p50_rank_within_1pct,
-                 CAST(NULL AS VARCHAR) AS p99_rank_within_1pct FROM a
-          UNION ALL SELECT n, 'o_custkey', n - c2, d2, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_orderstatus', n - c3, d3, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_totalprice_cents', n - c4, d4, TRUE,
-            'true', 'true' FROM a
-          UNION ALL SELECT n, 'o_orderdate_us', n - c5, d5, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'o_orderpriority', n - c6, d6, TRUE,
-            NULL, NULL FROM a)
-        ORDER BY col_name""")),
+      fn = (s, d) => approxProfileContract(s, ordersProfile.frame(s, d), ordersProfile.cols,
+        ordersProfile.measure),
+      oracle = Some(ordersProfile.approxSql)),
 
     // ── sketched profiles for the OTHER pipeline tables ──
     // (round-15 stretch) The 100 TB dataset-card path now covers the
@@ -2579,135 +2465,19 @@ $walk,
     // DuckDB's exact re-derivation — the sketched pass is never
     // trusted, it is MEASURED every round, per table.
     "q_profile_approx_events" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        approxProfileContract(s,
-          Tables.events(s, d).select(
-            $"event_id",
-            expr("ts div 1000").as("ts_us"),
-            $"user_id", $"event_type",
-            expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-              .as("value_cents")),
-          cols = Seq("event_id", "ts_us", "user_id", "event_type",
-            "value_cents"),
-          colLabels = Seq("event_id", "ts_us", "user_id", "event_type",
-            "value_cents"),
-          measure = "value_cents")
-      },
-      oracle = Some("""
-        WITH e AS (
-          SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
-                   AS value_cents
-          FROM events),
-        a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(event_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT event_id) AS BIGINT) AS d1,
-            CAST(COUNT(ts_us) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT ts_us) AS BIGINT) AS d2,
-            CAST(COUNT(user_id) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS d3,
-            CAST(COUNT(event_type) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT event_type) AS BIGINT) AS d4,
-            CAST(COUNT(value_cents) AS BIGINT) AS c5,
-            CAST(COUNT(DISTINCT value_cents) AS BIGINT) AS d5
-          FROM e)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               distinct_within_5pct,
-               p50_rank_within_1pct, p99_rank_within_1pct
-        FROM (
-          SELECT n, 'event_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, TRUE AS distinct_within_5pct,
-                 CAST(NULL AS VARCHAR) AS p50_rank_within_1pct,
-                 CAST(NULL AS VARCHAR) AS p99_rank_within_1pct FROM a
-          UNION ALL SELECT n, 'ts_us', n - c2, d2, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'user_id', n - c3, d3, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'event_type', n - c4, d4, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'value_cents', n - c5, d5, TRUE,
-            'true', 'true' FROM a)
-        ORDER BY col_name""")),
+      fn = (s, d) => approxProfileContract(s, eventsProfile.frame(s, d), eventsProfile.cols,
+        eventsProfile.measure),
+      oracle = Some(eventsProfile.approxSql)),
 
     "q_profile_approx_documents" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        approxProfileContract(s,
-          Tables.documents(s, d)
-            .select($"doc_id", $"lang", $"source", $"n_chars"),
-          cols = Seq("doc_id", "lang", "source", "n_chars"),
-          colLabels = Seq("doc_id", "lang", "source", "n_chars"),
-          measure = "n_chars")
-      },
-      oracle = Some("""
-        WITH a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(doc_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS d1,
-            CAST(COUNT(lang) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT lang) AS BIGINT) AS d2,
-            CAST(COUNT(source) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT source) AS BIGINT) AS d3,
-            CAST(COUNT(n_chars) AS BIGINT) AS c4,
-            CAST(COUNT(DISTINCT n_chars) AS BIGINT) AS d4
-          FROM documents)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               distinct_within_5pct,
-               p50_rank_within_1pct, p99_rank_within_1pct
-        FROM (
-          SELECT n, 'doc_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, TRUE AS distinct_within_5pct,
-                 CAST(NULL AS VARCHAR) AS p50_rank_within_1pct,
-                 CAST(NULL AS VARCHAR) AS p99_rank_within_1pct FROM a
-          UNION ALL SELECT n, 'lang', n - c2, d2, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'source', n - c3, d3, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'n_chars', n - c4, d4, TRUE,
-            'true', 'true' FROM a)
-        ORDER BY col_name""")),
+      fn = (s, d) => approxProfileContract(s, documentsProfile.frame(s, d), documentsProfile.cols,
+        documentsProfile.measure),
+      oracle = Some(documentsProfile.approxSql)),
 
     "q_profile_approx_embeddings" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        approxProfileContract(s,
-          Tables.embeddings(s, d).select(
-            $"vec_id",
-            size($"embedding").cast(LongType).as("emb_dim"),
-            $"label".cast(LongType).as("label")),
-          cols = Seq("vec_id", "emb_dim", "label"),
-          colLabels = Seq("vec_id", "emb_dim", "label"),
-          measure = "label")
-      },
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id, CAST(len(embedding) AS BIGINT) AS emb_dim,
-                 CAST(label AS BIGINT) AS label
-          FROM embeddings),
-        a AS (
-          SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(vec_id) AS BIGINT) AS c1,
-            CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS d1,
-            CAST(COUNT(emb_dim) AS BIGINT) AS c2,
-            CAST(COUNT(DISTINCT emb_dim) AS BIGINT) AS d2,
-            CAST(COUNT(label) AS BIGINT) AS c3,
-            CAST(COUNT(DISTINCT label) AS BIGINT) AS d3
-          FROM e)
-        SELECT col_name, n AS n_rows, n_nulls, n_distinct,
-               distinct_within_5pct,
-               p50_rank_within_1pct, p99_rank_within_1pct
-        FROM (
-          SELECT n, 'vec_id' AS col_name, n - c1 AS n_nulls,
-                 d1 AS n_distinct, TRUE AS distinct_within_5pct,
-                 CAST(NULL AS VARCHAR) AS p50_rank_within_1pct,
-                 CAST(NULL AS VARCHAR) AS p99_rank_within_1pct FROM a
-          UNION ALL SELECT n, 'emb_dim', n - c2, d2, TRUE,
-            NULL, NULL FROM a
-          UNION ALL SELECT n, 'label', n - c3, d3, TRUE,
-            'true', 'true' FROM a)
-        ORDER BY col_name""")),
+      fn = (s, d) => approxProfileContract(s, embeddingsProfile.frame(s, d), embeddingsProfile.cols,
+        embeddingsProfile.measure),
+      oracle = Some(embeddingsProfile.approxSql)),
 
     // ── join-key skew report (the pre-salting diagnostic) ──
     // The operational census a 100 TB operator runs BEFORE choosing a
@@ -3016,16 +2786,7 @@ $walk,
     // it directly, plus the partition property: leaves tile the
     // domain, every row inside its leaf's ranges).
     "q_kanon_generalize" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        mondrianAnonymize(
-          Tables.customer(s, d).select(
-            $"c_custkey".cast(LongType).as("id"),
-            expr("cast(cast(c_acctbal as decimal(12,2)) * 100 as bigint)")
-              .as("d0"),
-            $"c_nationkey".cast(LongType).as("d1")),
-          k = 5L, depth = 8)
-      },
+      fn = (s, d) => mondrianAnonymize(kanonCustomers(s, d), k = 5L, depth = 8),
       oracle = Some(mondrianOracleSql(k = 5L, depth = 8)),
       headline = false),
 
@@ -3045,16 +2806,7 @@ $walk,
     // walk over the arriving split, so the frozen-scheme application
     // is re-proven end to end.
     "q_kanon_apply" -> QueryDef(
-      fn = (s, d) => {
-        import s.implicits._
-        val cust = Tables.customer(s, d).select(
-          $"c_custkey".cast(LongType).as("id"),
-          expr("cast(cast(c_acctbal as decimal(12,2)) * 100 as bigint)")
-            .as("d0"),
-          $"c_nationkey".cast(LongType).as("d1"))
-        mondrianApply(cust.filter($"id" % 8 =!= 0),
-          cust.filter($"id" % 8 === 0), k = 5L, depth = 8)
-      },
+      fn = (s, d) => kanonApplied(s, d),
       oracle = Some(mondrianApplyOracleSql(k = 5L, depth = 8)),
       headline = false),
 
@@ -3074,13 +2826,7 @@ $walk,
     "q_kanon_drift" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val cust = Tables.customer(s, d).select(
-          $"c_custkey".cast(LongType).as("id"),
-          expr("cast(cast(c_acctbal as decimal(12,2)) * 100 as bigint)")
-            .as("d0"),
-          $"c_nationkey".cast(LongType).as("d1"))
-        val perLeaf = mondrianApply(cust.filter($"id" % 8 =!= 0),
-            cust.filter($"id" % 8 === 0), k = 5L, depth = 8)
+        val perLeaf = kanonApplied(s, d)
           .groupBy($"leaf")
           .agg(max($"d0_lo").as("d0_lo"), max($"d0_hi").as("d0_hi"),
             max($"d1_lo").as("d1_lo"), max($"d1_hi").as("d1_hi"),
@@ -3240,26 +2986,10 @@ $walk,
     // thresholds and the same integer cross-compare.
     "q_densest_subgraph" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
-          .filter($"supp" >= 2)
-          .select($"u", $"v")
-        densestPeel(e0, rounds = 3)
+        densestPeel(supportEdges(s, d), rounds = 3)
       },
-      oracle = Some("""
-        WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-          SELECT a.l_partkey AS u, b.l_partkey AS v
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+      oracle = Some(s"""
+        WITH $supportEdgeCtes,
         n0 AS (SELECT u AS node FROM e0 UNION SELECT v FROM e0),
         s0 AS (SELECT (SELECT COUNT(*) FROM n0) AS n,
                       (SELECT COUNT(*) FROM e0) AS e),
@@ -3665,15 +3395,7 @@ $walk,
             dec($"o_totalprice").cast(DoubleType).as("total_price"))
           .orderBy($"o_custkey", $"rk")
       },
-      oracle = Some("""
-        SELECT o_custkey, rk, o_orderkey, total_price FROM (
-          SELECT o_custkey, o_orderkey,
-            CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS total_price,
-            ROW_NUMBER() OVER (PARTITION BY o_custkey
-                               ORDER BY o_totalprice DESC, o_orderkey) AS rk
-          FROM orders)
-        WHERE rk <= 3
-        ORDER BY o_custkey, rk"""),
+      oracle = Some(top3OrdersPerCustomerSql),
       headline = false),
 
     // ── rollup aggregate with grouping() disambiguation ──
@@ -4252,15 +3974,7 @@ $walk,
             dec($"pair.scores").cast(DoubleType).as("total_price"))
           .orderBy($"o_custkey", $"rk")
       },
-      oracle = Some("""
-        SELECT o_custkey, rk, o_orderkey, total_price FROM (
-          SELECT o_custkey, o_orderkey,
-            CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS total_price,
-            ROW_NUMBER() OVER (PARTITION BY o_custkey
-                               ORDER BY o_totalprice DESC, o_orderkey) AS rk
-          FROM orders)
-        WHERE rk <= 3
-        ORDER BY o_custkey, rk"""),
+      oracle = Some(top3OrdersPerCustomerSql),
       headline = true),
 
     // ── top-k under GIANT groups: the regime the bounded-buffer
@@ -4639,42 +4353,16 @@ $walk,
     "q_triangle_count" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
+        val edges = copurchaseEdges(s, d)
           .pin() // degree agg + both orientation joins
-        val deg = edges.select($"u".as("n")).unionByName(
-            edges.select($"v".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("dg"))
-        val oe = edges
-          .join(deg.select($"n".as("u"), $"dg".as("du")), Seq("u"))
-          .join(deg.select($"n".as("v"), $"dg".as("dv")), Seq("v"))
-          .select(
-            when(struct($"du", $"u") < struct($"dv", $"v"), $"u")
-              .otherwise($"v").as("s"),
-            when(struct($"du", $"u") < struct($"dv", $"v"),
-              struct($"dv".as("td"), $"v".as("tn")))
-              .otherwise(struct($"du".as("td"), $"u".as("tn"))).as("t"))
-          .pin() // wedge (twice) + closing edge
-        val tri = oe.as("w1").join(oe.as("w2"),
-            $"w1.s" === $"w2.s" && $"w1.t" < $"w2.t")
-          .join(oe.as("e3"),
-            $"e3.s" === $"w1.t.tn" && $"e3.t" === $"w2.t")
-          .select($"w1.s".as("a"), $"w1.t.tn".as("b"), $"w2.t.tn".as("c"))
+        val tri = orientedTriangles(edges)
         tri.select(explode(array($"a", $"b", $"c")).as("part"))
           .groupBy($"part").agg(count(lit(1)).as("tri_cnt"))
           .orderBy($"tri_cnt".desc, $"part")
           .limit(20)
       },
-      oracle = Some("""
-        WITH e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      oracle = Some(s"""
+        WITH $copurchaseEdgeCte,
         deg AS (
           SELECT n, COUNT(*) AS dg FROM (
             SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
@@ -4904,14 +4592,7 @@ $walk,
     "q_bfs_levels" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        val sym = edges.unionByName(
-            edges.select($"v".as("u"), $"u".as("v")))
+        val sym = copurchaseSym(s, d)
           .pin() // one join per round reads this
         // u < v on every raw edge, so min(u) IS the smallest vertex
         var lvl = sym.agg(min($"u").as("node"))
@@ -4927,11 +4608,8 @@ $walk,
         }
         lvl.orderBy($"lvl", $"node")
       },
-      oracle = Some("""
-        WITH e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      oracle = Some(s"""
+        WITH $copurchaseEdgeCte,
         sym AS (
           SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
         l0 AS (
@@ -4976,30 +4654,8 @@ $walk,
     "q_bfs_sigma" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        val sym = edges.unionByName(
-            edges.select($"v".as("u"), $"u".as("v")))
-          .pin() // one join per round reads this
-        // u < v on every raw edge, so min(u) IS the smallest vertex
-        var lvl = sym.agg(min($"u").as("node"))
-          .select($"node", lit(0L).as("lvl"), lit(1L).as("sigma"))
-          .pin()
-        for (r <- 1 to 3) {
-          val cand = lvl.filter($"lvl" === (r - 1L))
-            .join(sym, $"node" === $"u")
-            .select($"v".as("node"), $"sigma")
-          val fresh = cand.join(lvl.select($"node"), Seq("node"), "left_anti")
-            .groupBy($"node")
-            .agg(sum($"sigma").as("sigma"))
-            .select($"node", lit(r.toLong).as("lvl"), $"sigma")
-          lvl = lvl.unionByName(fresh).pin()
-        }
-        lvl.orderBy($"lvl", $"node")
+        sigmaLevels(copurchaseSym(s, d).pin()) // one join per round reads it
+          .orderBy($"lvl", $"node")
       },
       oracle = Some(s"""
         WITH $bfsSigmaCtes
@@ -5022,15 +4678,7 @@ $walk,
     // sensitivity), and the next level consumes the decimal exactly.
     "q_brandes_delta" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        brandesDelta(edges.unionByName(
-          edges.select($"v".as("u"), $"u".as("v"))))
+        brandesDelta(copurchaseSym(s, d))
       },
       oracle = Some {
         def lvlCte(ln: Int) = s"""
@@ -5086,13 +4734,7 @@ $walk,
     "q_sssp_weighted" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
+        val e0 = copurchaseSupport(s, d)
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
         val sym = e0.unionByName(
             e0.select($"v".as("u"), $"u".as("v"), $"w"))
@@ -5162,13 +4804,7 @@ $walk,
     "q_boruvka_msf" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
+        val e0 = copurchaseSupport(s, d)
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
           .pin() // both rounds' label joins read it
         def chosen(labels: DataFrame): DataFrame = {
@@ -5271,13 +4907,7 @@ $walk,
     "q_maximal_matching" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
+        val e0 = copurchaseSupport(s, d)
           .filter($"supp" >= 2L)
           .select($"u", $"v", (expr("100 div supp") + 1L).as("w"))
           .pin() // every round's alive restriction
@@ -5377,29 +5007,7 @@ $walk,
     "q_apsp_landmarks" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        val sym = edges.unionByName(
-            edges.select($"v".as("u"), $"u".as("v")))
-          .pin() // one join per round reads this
-        val srcs = sym.select($"u").distinct()
-          .orderBy($"u").limit(4).select($"u".as("src"))
-        var lvl = srcs
-          .select($"src", $"src".as("node"), lit(0L).as("d"))
-          .pin()
-        for (r <- 1 to 3) {
-          val frontier = lvl.filter($"d" === (r - 1L))
-            .join(sym, $"node" === $"u")
-            .select($"src", $"v".as("node")).distinct()
-          val fresh = frontier.join(lvl, Seq("src", "node"), "left_anti")
-            .select($"src", $"node", lit(r.toLong).as("d"))
-          lvl = lvl.unionByName(fresh).pin()
-        }
-        val q = lvl.filter($"node" < 50L)
+        val q = landmarkLevels(s, d).filter($"node" < 50L)
         q.as("a").join(q.as("b"),
             $"a.src" === $"b.src" && $"a.node" < $"b.node")
           .groupBy($"a.node".as("u"), $"b.node".as("v"))
@@ -5407,46 +5015,8 @@ $walk,
             count(lit(1)).as("n_landmarks"))
           .orderBy($"u", $"v")
       },
-      oracle = Some("""
-        WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        sym AS MATERIALIZED (
-          SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-        srcs AS MATERIALIZED (
-          SELECT u AS src FROM (SELECT DISTINCT u FROM sym)
-          ORDER BY u LIMIT 4),
-        l0 AS MATERIALIZED (SELECT src, src AS node, 0 AS d FROM srcs),
-        f1 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l0 l JOIN sym s ON s.u = l.node),
-        n1 AS MATERIALIZED (
-          SELECT f1.src, f1.node FROM f1
-          LEFT JOIN l0 ON l0.src = f1.src AND l0.node = f1.node
-          WHERE l0.node IS NULL),
-        l1 AS MATERIALIZED (
-          SELECT * FROM l0 UNION ALL SELECT src, node, 1 FROM n1),
-        f2 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l1 l JOIN sym s ON s.u = l.node WHERE l.d = 1),
-        n2 AS MATERIALIZED (
-          SELECT f2.src, f2.node FROM f2
-          LEFT JOIN l1 ON l1.src = f2.src AND l1.node = f2.node
-          WHERE l1.node IS NULL),
-        l2 AS MATERIALIZED (
-          SELECT * FROM l1 UNION ALL SELECT src, node, 2 FROM n2),
-        f3 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l2 l JOIN sym s ON s.u = l.node WHERE l.d = 2),
-        n3 AS MATERIALIZED (
-          SELECT f3.src, f3.node FROM f3
-          LEFT JOIN l2 ON l2.src = f3.src AND l2.node = f3.node
-          WHERE l2.node IS NULL),
-        l3 AS MATERIALIZED (
-          SELECT * FROM l2 UNION ALL SELECT src, node, 3 FROM n3),
+      oracle = Some(s"""
+        WITH $landmarkBfsCtes,
         q AS (SELECT src, node, d FROM l3 WHERE node < 50)
         SELECT a.node AS u, b.node AS v,
                CAST(MIN(a.d + b.d) AS BIGINT) AS ub,
@@ -5552,17 +5122,7 @@ $walk,
     // replays a planted chain-into-clique cascade round for round.
     "q_kcore_peel" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
-          .filter($"supp" >= 2)
-          .select($"u", $"v")
-        kCorePeel(e0, k = 3, rounds = 4)
+        kCorePeel(supportEdges(s, d), k = 3, rounds = 4)
       },
       oracle = Some("""
         WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -5614,14 +5174,7 @@ $walk,
     // oriented plan against the definitional recount round by round.
     "q_ktruss" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        kTrussPeel(e0, k = 6, rounds = 3)
+        kTrussPeel(copurchaseEdges(s, d), k = 6, rounds = 3)
       },
       oracle = Some("""
         WITH li AS MATERIALIZED (
@@ -5689,73 +5242,13 @@ $walk,
     "q_closeness" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val edges = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        val sym = edges.unionByName(
-            edges.select($"v".as("u"), $"u".as("v")))
-          .pin() // one join per round reads this
-        val srcs = sym.select($"u").distinct()
-          .orderBy($"u").limit(4).select($"u".as("src"))
-        var lvl = srcs
-          .select($"src", $"src".as("node"), lit(0L).as("d"))
-          .pin()
-        for (r <- 1 to 3) {
-          val frontier = lvl.filter($"d" === (r - 1L))
-            .join(sym, $"node" === $"u")
-            .select($"src", $"v".as("node")).distinct()
-          val fresh = frontier.join(lvl, Seq("src", "node"), "left_anti")
-            .select($"src", $"node", lit(r.toLong).as("d"))
-          lvl = lvl.unionByName(fresh).pin()
-        }
-        lvl.groupBy($"src")
+        landmarkLevels(s, d).groupBy($"src")
           .agg((count(lit(1)) - 1L).as("n_reached"),
             sum($"d").as("sum_dist"))
           .orderBy($"src")
       },
-      oracle = Some("""
-        WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        sym AS MATERIALIZED (
-          SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-        srcs AS MATERIALIZED (
-          SELECT u AS src FROM (SELECT DISTINCT u FROM sym)
-          ORDER BY u LIMIT 4),
-        l0 AS MATERIALIZED (SELECT src, src AS node, 0 AS d FROM srcs),
-        f1 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l0 l JOIN sym s ON s.u = l.node),
-        n1 AS MATERIALIZED (
-          SELECT f1.src, f1.node FROM f1
-          LEFT JOIN l0 ON l0.src = f1.src AND l0.node = f1.node
-          WHERE l0.node IS NULL),
-        l1 AS MATERIALIZED (
-          SELECT * FROM l0 UNION ALL SELECT src, node, 1 FROM n1),
-        f2 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l1 l JOIN sym s ON s.u = l.node WHERE l.d = 1),
-        n2 AS MATERIALIZED (
-          SELECT f2.src, f2.node FROM f2
-          LEFT JOIN l1 ON l1.src = f2.src AND l1.node = f2.node
-          WHERE l1.node IS NULL),
-        l2 AS MATERIALIZED (
-          SELECT * FROM l1 UNION ALL SELECT src, node, 2 FROM n2),
-        f3 AS MATERIALIZED (
-          SELECT DISTINCT l.src, s.v AS node
-          FROM l2 l JOIN sym s ON s.u = l.node WHERE l.d = 2),
-        n3 AS MATERIALIZED (
-          SELECT f3.src, f3.node FROM f3
-          LEFT JOIN l2 ON l2.src = f3.src AND l2.node = f3.node
-          WHERE l2.node IS NULL),
-        l3 AS MATERIALIZED (
-          SELECT * FROM l2 UNION ALL SELECT src, node, 3 FROM n3)
+      oracle = Some(s"""
+        WITH $landmarkBfsCtes
         SELECT src, CAST(COUNT(*) - 1 AS BIGINT) AS n_reached,
                CAST(SUM(d) AS BIGINT) AS sum_dist
         FROM l3 GROUP BY src ORDER BY src""")),
@@ -5777,13 +5270,7 @@ $walk,
     "q_link_predict" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val li = Tables.lineitem(s, d)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .agg(count(lit(1)).as("supp"))
+        val e0 = copurchaseSupport(s, d)
           .filter($"supp" >= 2L)
           .select($"u", $"v")
           .pin() // sym (twice) + the anti-join
@@ -5805,14 +5292,8 @@ $walk,
           .orderBy($"cn".desc, $"u", $"v")
           .limit(20)
       },
-      oracle = Some("""
-        WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        e0 AS MATERIALIZED (
-          SELECT a.l_partkey AS u, b.l_partkey AS v
-          FROM li a JOIN li b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+      oracle = Some(s"""
+        WITH $supportEdgeCtes,
         sym AS MATERIALIZED (
           SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
         deg AS MATERIALIZED (
@@ -6005,40 +5486,10 @@ $walk,
     // here, same total order, so the hash checks every round's vote.
     "q_label_prop" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        labelPropagate(e0, rounds = 3)
+        labelPropagate(copurchaseEdges(s, d), rounds = 3)
       },
-      oracle = Some("""
-        WITH e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        sym AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-        l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym),
-        c1 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l0 l ON s.v = l.node GROUP BY 1, 2),
-        l1 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c1) WHERE rn = 1),
-        c2 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l1 l ON s.v = l.node GROUP BY 1, 2),
-        l2 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c2) WHERE rn = 1),
-        c3 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l2 l ON s.v = l.node GROUP BY 1, 2),
-        l3 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c3) WHERE rn = 1)
+      oracle = Some(s"""
+        WITH $labelPropCtes
         SELECT node, label FROM l3 ORDER BY node""")),
 
     // ── HITS hubs & authorities (2 iterations, PPM fixed point) ──
@@ -6052,20 +5503,10 @@ $walk,
     // maxima; the hash checks every floor division.
     "q_hits" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
-        hitsScores(e0, iters = 2)
+        hitsScores(copurchaseEdges(s, d), iters = 2)
       },
-      oracle = Some("""
-        WITH e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      oracle = Some(s"""
+        WITH $copurchaseEdgeCte,
         nodes AS (SELECT u AS node FROM e0 UNION SELECT v FROM e0),
         a1r AS (SELECT n.node,
                   -- sum h0 = 10^6 per MATCHED in-edge only: a bare
@@ -6116,41 +5557,12 @@ $walk,
     // arithmetic in HUGEINT.
     "q_modularity" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
-        val li = Tables.lineitem(s, d).select($"l_orderkey", $"l_partkey")
-        val e0 = li.as("a").join(li.as("b"),
-            $"a.l_orderkey" === $"b.l_orderkey" &&
-              $"a.l_partkey" < $"b.l_partkey")
-          .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-          .distinct()
+        val e0 = copurchaseEdges(s, d)
           .pin() // labels + degrees + intra all read it
         modularityByLabel(e0, labelPropagate(e0, rounds = 3))
       },
-      oracle = Some("""
-        WITH e0 AS (
-          SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-          FROM lineitem a JOIN lineitem b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        sym AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-        l0 AS (SELECT DISTINCT u AS node, u AS label FROM sym),
-        c1 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l0 l ON s.v = l.node GROUP BY 1, 2),
-        l1 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c1) WHERE rn = 1),
-        c2 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l1 l ON s.v = l.node GROUP BY 1, 2),
-        l2 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c2) WHERE rn = 1),
-        c3 AS (SELECT s.u AS node, l.label AS label, COUNT(*) AS c
-               FROM sym s JOIN l2 l ON s.v = l.node GROUP BY 1, 2),
-        l3 AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER
-                   (PARTITION BY node ORDER BY c DESC, label) AS rn
-                 FROM c3) WHERE rn = 1),
+      oracle = Some(s"""
+        WITH $labelPropCtes,
         deg AS (SELECT u AS node, COUNT(*) AS dg FROM sym GROUP BY u),
         mm AS (SELECT COUNT(*) AS m FROM e0),
         comm AS (SELECT l.label, COUNT(*) AS n_nodes, SUM(d.dg) AS deg_sum

@@ -299,35 +299,11 @@ object Similarity extends QueryPack {
     * MATCHED with the flat search (same entry count, beam, rounds —
     * the 8 centroid distances are index metadata, not corpus probes),
     * and the plan shape is identical past entry selection: frontier =
-    * queries × beam × M, never corpus-sized. */
-  private[operators] def graphBeamSearchHier(
-      s: SparkSession, e: DataFrame,
-      edgesIn: Option[DataFrame] = None,
-      modelIn: Option[(DataFrame, DataFrame)] = None)
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val q = graphQueries(s, e)
-    val (assigned, cents) = modelIn.getOrElse(ivfModel(s, e))
-    val wCell = Window.partitionBy($"query_id")
-      .orderBy($"dist".asc, $"centroid_id")
-    val qcell = q.crossJoin(broadcast(cents))
-      .withColumn("dist", l2sq($"qemb", $"cemb"))
-      .withColumn("r", row_number().over(wCell)).filter($"r" === 1)
-      .select($"query_id", $"centroid_id")
-    val wEnt = Window.partitionBy($"query_id").orderBy($"h", $"vec_id")
-    val entries = qcell
-      .join(assigned.select($"vec_id", $"centroid_id",
-        expr(seedHashSql).as("h")), Seq("centroid_id"))
-      .withColumn("rn", row_number().over(wEnt))
-      .filter($"rn" <= GraphEntries)
-      .select($"query_id", $"vec_id")
-    graphBeamFrom(s, e, q, entries, edgesIn = edgesIn)
-  }
-
-  /** FILTERED hierarchical graph search (`sim_ann_graph_filtered`):
-    * the beam walk of [[graphBeamSearchHier]] with a candidate
-    * predicate pushed INTO the walk — entry points are the
-    * [[GraphEntries]] smallest seed-hash PASSERS of the query's
+    * queries × beam × M, never corpus-sized.
+    *
+    * With `pred` this is the FILTERED search (`sim_ann_graph_filtered`):
+    * the candidate predicate is pushed INTO the walk — entry points are
+    * the [[GraphEntries]] smallest seed-hash PASSERS of the query's
     * nearest cell, and every round's expansion filters neighbor ids
     * against the predicate BEFORE any distance is computed, so the
     * beam width is spent entirely on survivors (post-filtering the
@@ -335,11 +311,11 @@ object Similarity extends QueryPack {
     * SimilaritySpec demonstrates). The graph and IVF coarse layer stay
     * unfiltered shared index artifacts; only the query-time candidate
     * universe shrinks, so candidate work scales with selectivity. */
-  private[operators] def graphBeamSearchFiltered(
+  private[operators] def graphBeamSearchHier(
       s: SparkSession, e: DataFrame,
-      pred: org.apache.spark.sql.Column,
       edgesIn: Option[DataFrame] = None,
-      modelIn: Option[(DataFrame, DataFrame)] = None)
+      modelIn: Option[(DataFrame, DataFrame)] = None,
+      pred: Option[org.apache.spark.sql.Column] = None)
       : (DataFrame, DataFrame) = {
     import s.implicits._
     val q = graphQueries(s, e)
@@ -352,12 +328,12 @@ object Similarity extends QueryPack {
       .select($"query_id", $"centroid_id")
     val wEnt = Window.partitionBy($"query_id").orderBy($"h", $"vec_id")
     val entries = qcell
-      .join(assigned.filter(pred).select($"vec_id", $"centroid_id",
-        expr(seedHashSql).as("h")), Seq("centroid_id"))
+      .join(pred.fold(assigned)(assigned.filter).select($"vec_id",
+        $"centroid_id", expr(seedHashSql).as("h")), Seq("centroid_id"))
       .withColumn("rn", row_number().over(wEnt))
       .filter($"rn" <= GraphEntries)
       .select($"query_id", $"vec_id")
-    graphBeamFrom(s, e, q, entries, Some(pred), edgesIn = edgesIn)
+    graphBeamFrom(s, e, q, entries, pred, edgesIn = edgesIn)
   }
 
   private def graphQueries(s: SparkSession, e: DataFrame): DataFrame = {
@@ -433,9 +409,10 @@ object Similarity extends QueryPack {
     // the identical pair set the incremental distinct produced.
     val scannedParts = scala.collection.mutable.ArrayBuffer[DataFrame](beam)
     for (round <- 1 to GraphRounds) labeled(s, s"beam: round $round") {
-      val hop1 = beam.select($"query_id", $"vec_id")
-        .join(broadcast(edges), $"vec_id" === $"u")
-        .select($"query_id", $"v".as("vec_id"))
+      def hop(from: DataFrame): DataFrame =
+        from.join(broadcast(edges), $"vec_id" === $"u")
+          .select($"query_id", $"v".as("vec_id"))
+      val hop1 = hop(beam.select($"query_id", $"vec_id"))
       // Under a predicate the passer-induced subgraph loses most of
       // its edges (effective degree ≈ deg × selectivity) and the
       // one-hop walk stalls; expanding THROUGH non-passing neighbors
@@ -447,9 +424,7 @@ object Similarity extends QueryPack {
       // size-independent.
       val expand =
         if (candPred.isEmpty) hop1
-        else hop1.unionByName(
-          hop1.join(broadcast(edges), $"vec_id" === $"u")
-            .select($"query_id", $"v".as("vec_id")))
+        else hop1.unionByName(hop(hop1))
       val candIds = beam.select($"query_id", $"vec_id")
         .unionByName(expand).distinct()
       val scored = score(candIds)
@@ -1095,6 +1070,16 @@ object Similarity extends QueryPack {
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
   }
 
+  /** The chosen (query_id, centroid_id, pr) probes as the partition
+    * list to scan and the broadcast (query_id, centroid_id) pairs. */
+  private def probeSet(s: SparkSession,
+      chosen: Array[(Long, Int, Int)]): (Seq[Int], DataFrame) = {
+    import s.implicits._
+    (chosen.map(_._2).distinct.toSeq,
+      chosen.map { case (qid, cell, _) => (qid, cell) }
+        .toSeq.toDF("query_id", "centroid_id"))
+  }
+
   /** Per-query probe budgets by the PLANNER arithmetic
     * (`sim_filtered_probe_plan` — round-14 verdict #1: the filtered
     * search now CONSUMES the budget the planner derives instead of
@@ -1267,10 +1252,8 @@ object Similarity extends QueryPack {
     import s.implicits._
     val eff: Map[Long, Int] = ranking.map(_._1).distinct
       .map(q => q -> budgets.getOrElse(q, IvfNProbeFiltered)).toMap
-    val chosen = ranking.filter { case (qid, _, pr) => pr <= eff(qid) }
-    val probedCells = chosen.map(_._2).distinct.toSeq
-    val probePairs = chosen.map { case (qid, cell, _) => (qid, cell) }
-      .toSeq.toDF("query_id", "centroid_id")
+    val (probedCells, probePairs) = probeSet(s,
+      ranking.filter { case (qid, _, pr) => pr <= eff(qid) })
     val budgetDf = eff.toSeq
       .map { case (qid, nb) => (qid, nb.toLong) }
       .toDF("query_id", "probes_used")
@@ -1299,14 +1282,25 @@ object Similarity extends QueryPack {
       pred: Option[org.apache.spark.sql.Column], k: Int,
       excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
-    val topk = udaf(new graft.functions.TopKAggregator(k))
     val scanned = cells.filter($"centroid_id".isin(probedCells: _*))
     val paired = pred.fold(scanned)(scanned.filter)
       .join(broadcast(probePairs), Seq("centroid_id"))
-    (if (excludeSelf) paired.filter($"vec_id" =!= $"query_id") else paired)
+    val cands = (if (excludeSelf) paired.filter($"vec_id" =!= $"query_id") else paired)
       .join(broadcast(lut), Seq("query_id"))
       .select($"query_id", $"vec_id",
         graft.functions.VectorExprs.pqAdcSum($"codes", $"lut").as("adist"))
+    topKByAdist(cands, k)
+  }
+
+  /** The `k` smallest `adist` per query of (query_id, vec_id, adist)
+    * rows through the bounded-buffer aggregator (vec_id tie-break):
+    * ≤k rows per query cross the shuffle. Rows (query_id, rnk,
+    * vec_id, adist). */
+  private def topKByAdist(scored: DataFrame, k: Int): DataFrame = {
+    val s = scored.sparkSession
+    import s.implicits._
+    val topk = udaf(new graft.functions.TopKAggregator(k))
+    scored
       .groupBy($"query_id")
       .agg(topk(-$"adist", $"vec_id").as("top"))
       .select($"query_id",
@@ -1477,15 +1471,8 @@ object Similarity extends QueryPack {
                 c.code) AS rn
             FROM sv JOIN $c c ON c.sub = sv.sub) x
           WHERE rn = 1)"""
-    def means(c: String, a: String): String = s"""
-        $c AS (
-          SELECT sub, code, list(m ORDER BY pos) AS cemb FROM (
-            SELECT a.sub, a.code, t.pos,
-              round(CAST(SUM(CAST(round(a.semb[t.pos], 7) AS DECIMAL(27,7)))
-                  AS DOUBLE) / COUNT(*), 6) AS m
-            FROM $a a, range(1, ${PqSubDim + 1}) t(pos)
-            GROUP BY a.sub, a.code, t.pos) g
-          GROUP BY sub, code)"""
+    def means(c: String, a: String): String =
+      decimalMeansCte(c, a, Seq("sub", "code"), "semb", PqSubDim)
     s"""
         sv AS (
           SELECT vec_id, s.sub,
@@ -1539,8 +1526,74 @@ object Similarity extends QueryPack {
           FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
           WHERE k.vec_id <> l.query_id
           GROUP BY l.query_id, k.vec_id)
-        SELECT query_id, rnk, vec_id, adist FROM (
-          SELECT query_id, vec_id, adist,
+        ${adcTop5Sql("vec_id, adist")}"""
+
+  /** Oracle expression `pr`: query `q`'s rank of IVF centroid `c`
+    * by l2 distance, centroid-id tie-break — the assignment argmin's
+    * arithmetic. */
+  private lazy val cellRankSql: String = s"""ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
+                list_sum(list_transform(generate_series(1, $Dim),
+                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
+                c.centroid_id) AS pr"""
+
+  /** Oracle CTEs `q` (the 5 query vectors of `e`) and `probes`: each
+    * query's `nprobe` nearest cells of the IVF chain's `c3`. */
+  private def ivfProbesSql(nprobe: Int): String = s"""q AS (
+          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
+        probes AS (
+          SELECT query_id, centroid_id AS pcell FROM (
+            SELECT q.query_id, c.centroid_id,
+              $cellRankSql
+            FROM q, c3 c) x
+          WHERE pr <= $nprobe)"""
+
+  /** [[ivfProbesSql]] over the IVF-only chain (queries read from
+    * `fin`), carrying each query's vector onto its probes. */
+  private lazy val cellProbesSql: String = s"""q AS (
+          SELECT vec_id AS query_id, emb AS qemb
+          FROM fin WHERE vec_id < 5),
+        probes AS (
+          SELECT query_id, qemb, centroid_id AS pcell FROM (
+            SELECT q.query_id, q.qemb, c.centroid_id,
+              $cellRankSql
+            FROM q, c3 c) x
+          WHERE pr <= $IvfNProbe)"""
+
+  /** Oracle CTEs `qsub` (the queries' sub-vectors from the PQ chain's
+    * `sv`) and `lut`: per (query, sub, code) the squared distance to
+    * the codebook entry, rounded into DECIMAL(27,9). */
+  private lazy val pqLutSql: String = s"""qsub AS (
+          SELECT vec_id AS query_id, sub, semb AS qsemb
+          FROM sv WHERE vec_id < 5),
+        lut AS (
+          SELECT qsub.query_id, c.sub, c.code,
+            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
+              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
+              AS DECIMAL(27,9)) AS pdist
+          FROM qsub JOIN pc2 c ON c.sub = qsub.sub)"""
+
+  /** Oracle CTE `adc`: ADC sums of the probed cells' candidates with
+    * their labels, restricted to label % 7 = 3 when `labelFilter`. */
+  private def labeledAdcSql(labelFilter: Boolean): String = {
+    val pred = if (labelFilter) "\n            AND em.label % 7 = 3" else ""
+    s"""adc AS (
+          SELECT p.query_id, f.vec_id,
+                 CAST(em.label AS BIGINT) AS label,
+                 CAST(SUM(l.pdist) AS DOUBLE) AS adist
+          FROM probes p
+          JOIN fin f ON f.centroid_id = p.pcell
+          JOIN embeddings em ON em.vec_id = f.vec_id
+          JOIN codes k ON k.vec_id = f.vec_id
+          JOIN lut l ON l.query_id = p.query_id
+                    AND l.sub = k.sub AND l.code = k.code
+          WHERE f.vec_id <> p.query_id$pred
+          GROUP BY p.query_id, f.vec_id, em.label)"""
+  }
+
+  /** Oracle tail: the 5 smallest `adist` per query from `adc`
+    * (vec_id tie-break), emitting `cols`. */
+  private def adcTop5Sql(cols: String): String = s"""SELECT query_id, rnk, $cols FROM (
+          SELECT query_id, $cols,
                  ROW_NUMBER() OVER (PARTITION BY query_id
                                     ORDER BY adist ASC, vec_id) AS rnk
           FROM adc) r
@@ -1557,26 +1610,8 @@ object Similarity extends QueryPack {
         $embCteSql,
         $ivfBuildChain,
         $pqBuildChain,
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, centroid_id AS pcell FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbe),
-        qsub AS (
-          SELECT vec_id AS query_id, sub, semb AS qsemb
-          FROM sv WHERE vec_id < 5),
-        lut AS (
-          SELECT qsub.query_id, c.sub, c.code,
-            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
-              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
-              AS DECIMAL(27,9)) AS pdist
-          FROM qsub JOIN pc2 c ON c.sub = qsub.sub),
+        ${ivfProbesSql(IvfNProbe)},
+        $pqLutSql,
         adc AS (
           SELECT p.query_id, f.vec_id, CAST(SUM(l.pdist) AS DOUBLE) AS adist
           FROM probes p
@@ -1586,13 +1621,7 @@ object Similarity extends QueryPack {
                     AND l.sub = k.sub AND l.code = k.code
           WHERE f.vec_id <> p.query_id
           GROUP BY p.query_id, f.vec_id)
-        SELECT query_id, rnk, vec_id, adist FROM (
-          SELECT query_id, vec_id, adist,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY adist ASC, vec_id) AS rnk
-          FROM adc) r
-        WHERE rnk <= 5
-        ORDER BY query_id, rnk"""
+        ${adcTop5Sql("vec_id, adist")}"""
 
   /** [[ivfPqOracleSql]] with the predicate pushed into the candidate
     * scan (`sim_ann_ivfpq_filtered`): identical probe plan and ADC
@@ -1603,46 +1632,10 @@ object Similarity extends QueryPack {
         $embCteSql,
         $ivfBuildChain,
         $pqBuildChain,
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, centroid_id AS pcell FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbeFiltered),
-        qsub AS (
-          SELECT vec_id AS query_id, sub, semb AS qsemb
-          FROM sv WHERE vec_id < 5),
-        lut AS (
-          SELECT qsub.query_id, c.sub, c.code,
-            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
-              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
-              AS DECIMAL(27,9)) AS pdist
-          FROM qsub JOIN pc2 c ON c.sub = qsub.sub),
-        adc AS (
-          SELECT p.query_id, f.vec_id,
-                 CAST(em.label AS BIGINT) AS label,
-                 CAST(SUM(l.pdist) AS DOUBLE) AS adist
-          FROM probes p
-          JOIN fin f ON f.centroid_id = p.pcell
-          JOIN embeddings em ON em.vec_id = f.vec_id
-          JOIN codes k ON k.vec_id = f.vec_id
-          JOIN lut l ON l.query_id = p.query_id
-                    AND l.sub = k.sub AND l.code = k.code
-          WHERE f.vec_id <> p.query_id
-            AND em.label % 7 = 3
-          GROUP BY p.query_id, f.vec_id, em.label)
-        SELECT query_id, rnk, vec_id, label, adist FROM (
-          SELECT query_id, vec_id, label, adist,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY adist ASC, vec_id) AS rnk
-          FROM adc) r
-        WHERE rnk <= 5
-        ORDER BY query_id, rnk"""
+        ${ivfProbesSql(IvfNProbeFiltered)},
+        $pqLutSql,
+        ${labeledAdcSql(labelFilter = true)}
+        ${adcTop5Sql("vec_id, label, adist")}"""
 
   /** Shared oracle CTE chain of the planner-arithmetic faces
     * (`sim_ann_ivfpq_adaptive`, `sim_filtered_strategy`): the passer
@@ -1663,10 +1656,7 @@ object Similarity extends QueryPack {
           SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
         rankedp AS (
           SELECT q.query_id, c.centroid_id,
-            ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-              list_sum(list_transform(generate_series(1, $Dim),
-                i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-              c.centroid_id) AS pr
+            $cellRankSql
           FROM q, c3 c),
         cum AS (
           SELECT r.query_id, r.pr, r.centroid_id,
@@ -1713,28 +1703,8 @@ object Similarity extends QueryPack {
           SELECT r.query_id, r.centroid_id AS pcell
           FROM rankedp r JOIN budget b USING (query_id)
           WHERE r.pr <= b.nb),
-        qsub AS (
-          SELECT vec_id AS query_id, sub, semb AS qsemb
-          FROM sv WHERE vec_id < 5),
-        lut AS (
-          SELECT qsub.query_id, c.sub, c.code,
-            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
-              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
-              AS DECIMAL(27,9)) AS pdist
-          FROM qsub JOIN pc2 c ON c.sub = qsub.sub),
-        adc AS (
-          SELECT p.query_id, f.vec_id,
-                 CAST(em.label AS BIGINT) AS label,
-                 CAST(SUM(l.pdist) AS DOUBLE) AS adist
-          FROM probes p
-          JOIN fin f ON f.centroid_id = p.pcell
-          JOIN embeddings em ON em.vec_id = f.vec_id
-          JOIN codes k ON k.vec_id = f.vec_id
-          JOIN lut l ON l.query_id = p.query_id
-                    AND l.sub = k.sub AND l.code = k.code
-          WHERE f.vec_id <> p.query_id
-            AND em.label % 7 = 3
-          GROUP BY p.query_id, f.vec_id, em.label)
+        $pqLutSql,
+        ${labeledAdcSql(labelFilter = true)}
         SELECT r.query_id, r.rnk, r.vec_id, r.label, r.adist,
                CAST(b.nb AS BIGINT) AS probes_used
         FROM (
@@ -1806,21 +1776,14 @@ object Similarity extends QueryPack {
       .join(broadcast(books), Seq("sub"))
       .select($"query_id", $"pcell", $"sub", $"code",
         round(l2sq($"qsemb", $"cemb"), 9).cast(DecimalType(27, 9)).as("pdist"))
-    val topk = udaf(new graft.functions.TopKAggregator(k))
-    assigned.select($"vec_id", $"centroid_id")
+    topKByAdist(assigned.select($"vec_id", $"centroid_id")
       .join(broadcast(probePairs.select($"query_id", $"pcell")),
         $"centroid_id" === $"pcell")
       .filter($"vec_id" =!= $"query_id")
       .join(codes.select($"vec_id", $"sub", $"code"), Seq("vec_id"))
       .join(broadcast(rlut), Seq("query_id", "pcell", "sub", "code"))
       .groupBy($"query_id", $"vec_id")
-      .agg(sum($"pdist").cast(DoubleType).as("adist"))
-      .groupBy($"query_id")
-      .agg(topk(-$"adist", $"vec_id").as("top"))
-      .select($"query_id",
-        posexplode(arrays_zip($"top.scores", $"top.ids")).as(Seq("i", "pair")))
-      .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-        $"pair.ids".as("vec_id"), (-$"pair.scores").as("adist"))
+      .agg(sum($"pdist").cast(DoubleType).as("adist")), k)
   }
 
   /** Self-contained value oracle for `sim_ann_ivfpq_residual`: the IVF
@@ -1838,17 +1801,7 @@ object Similarity extends QueryPack {
                    i -> f.emb[i] - c.cemb[i]) AS emb
           FROM fin f JOIN c3 c USING (centroid_id)),
         ${pqBuildChainFrom("er")},
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, centroid_id AS pcell FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbe),
+        ${ivfProbesSql(IvfNProbe)},
         rq AS (
           SELECT p.query_id, p.pcell,
                  list_transform(generate_series(1, $Dim),
@@ -1876,13 +1829,7 @@ object Similarity extends QueryPack {
                      AND l.sub = k.sub AND l.code = k.code
           WHERE f.vec_id <> p.query_id
           GROUP BY 1, 2)
-        SELECT query_id, rnk, vec_id, adist FROM (
-          SELECT query_id, vec_id, adist,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY adist ASC, vec_id) AS rnk
-          FROM adc) r
-        WHERE rnk <= 5
-        ORDER BY query_id, rnk"""
+        ${adcTop5Sql("vec_id, adist")}"""
 
   /** The IVF cell assignment over `d`'s embeddings — exposed to the
     * dedup pack: SemDeDup-style semantic dedup clusters with exactly
@@ -2072,15 +2019,8 @@ object Similarity extends QueryPack {
                 c.centroid_id) AS rn
             FROM e, $c c) x
           WHERE rn = 1)"""
-    def means(c: String, a: String): String = s"""
-        $c AS (
-          SELECT centroid_id, list(m ORDER BY pos) AS cemb FROM (
-            SELECT a.centroid_id, t.pos,
-              round(CAST(SUM(CAST(round(a.emb[t.pos], 7) AS DECIMAL(27,7)))
-                  AS DOUBLE) / COUNT(*), 6) AS m
-            FROM $a a, range(1, ${Dim + 1}) t(pos)
-            GROUP BY a.centroid_id, t.pos) g
-          GROUP BY centroid_id)"""
+    def means(c: String, a: String): String =
+      decimalMeansCte(c, a, Seq("centroid_id"), "emb", Dim)
     s"""
         seeds AS (
           SELECT vec_id, emb FROM e
@@ -2127,18 +2067,7 @@ object Similarity extends QueryPack {
     * and scans the top [[IvfNProbe]] cells per query. */
   private lazy val ivfProbeOracleSql: String = s"""
         $ivfBuildCtes,
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb
-          FROM fin WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, qemb, centroid_id AS pcell FROM (
-            SELECT q.query_id, q.qemb, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbe),
+        $cellProbesSql,
         scored AS (
           SELECT p.query_id, f.vec_id,
             round(
@@ -2228,19 +2157,7 @@ object Similarity extends QueryPack {
     s"""
         WITH e AS (
           SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        planes AS (
-          SELECT * FROM (VALUES
-            $planeRowsSql) t(j, p)),
-        bkt AS (
-          SELECT e.vec_id,
-                 CAST(SUM(CASE WHEN list_sum(list_transform(
-                        generate_series(1, $Dim), i -> e.emb[i] * pl.p[i])) > 0
-                      THEN (1::BIGINT << pl.j) ELSE 0 END) AS BIGINT) AS bucket
-          FROM e, planes pl
-          GROUP BY e.vec_id),
-        be AS (
-          SELECT e.vec_id, e.emb, bkt.bucket
-          FROM e JOIN bkt USING (vec_id)),
+        $lshBucketCtes,
         pr AS (
           SELECT vec_id AS u, emb AS uemb,
                  unnest(list_prepend(bucket,
@@ -2288,6 +2205,48 @@ object Similarity extends QueryPack {
         ORDER BY query_id, rnk"""
   }
 
+  /** Build-chain CTE `c`: per `keys` group of `a`, the mean of the
+    * `vec` vectors (dims 1..`dim`), each component summed exactly as
+    * DECIMAL(27,7) and rounded to 6 decimals — the Lloyd update of
+    * both the IVF and the PQ build. */
+  private def decimalMeansCte(c: String, a: String, keys: Seq[String],
+      vec: String, dim: Int): String = {
+    val (k, ak) = (keys.mkString(", "), keys.map("a." + _).mkString(", "))
+    s"""
+        $c AS (
+          SELECT $k, list(m ORDER BY pos) AS cemb FROM (
+            SELECT $ak, t.pos,
+              round(CAST(SUM(CAST(round(a.$vec[t.pos], 7) AS DECIMAL(27,7)))
+                  AS DOUBLE) / COUNT(*), 6) AS m
+            FROM $a a, range(1, ${dim + 1}) t(pos)
+            GROUP BY $ak, t.pos) g
+          GROUP BY $k)"""
+  }
+
+  /** Oracle CTEs `planes`, `bkt`, `be`: each vector of `e` with its
+    * random-hyperplane LSH bucket (sign bits against [[planeRowsSql]]). */
+  private lazy val lshBucketCtes: String = s"""planes AS (
+          SELECT * FROM (VALUES
+            $planeRowsSql) t(j, p)),
+        bkt AS (
+          SELECT e.vec_id,
+                 CAST(SUM(CASE WHEN list_sum(list_transform(
+                        generate_series(1, $Dim), i -> e.emb[i] * pl.p[i])) > 0
+                      THEN (1::BIGINT << pl.j) ELSE 0 END) AS BIGINT) AS bucket
+          FROM e, planes pl
+          GROUP BY e.vec_id),
+        be AS (
+          SELECT e.vec_id, e.emb, bkt.bucket
+          FROM e JOIN bkt USING (vec_id))"""
+
+  /** Oracle CTE `qc`: each query's nearest IVF cell. */
+  private lazy val nearestCellCte: String = s"""qc AS (
+          SELECT query_id, centroid_id FROM (
+            SELECT q.query_id, c.centroid_id,
+              $cellRankSql
+            FROM q, c3 c) x
+          WHERE pr = 1)"""
+
   /** Flat entries: one global seed-hash list shared by every query. */
   private lazy val graphOracleSql: String = graphOracleSqlFor(s"""
         ent AS (
@@ -2304,15 +2263,7 @@ object Similarity extends QueryPack {
     * (same l2 + tie-break arithmetic as the multiprobe oracle). */
   private lazy val graphHierOracleSql: String = graphOracleSqlFor(s"""
         $ivfBuildChain,
-        qc AS (
-          SELECT query_id, centroid_id FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr = 1),
+        $nearestCellCte,
         ent AS (
           SELECT query_id, vec_id FROM (
             SELECT qc.query_id, f.vec_id,
@@ -2328,15 +2279,7 @@ object Similarity extends QueryPack {
     * the Spark walk's discipline. */
   private lazy val graphFilteredOracleSql: String = graphOracleSqlFor(s"""
         $ivfBuildChain,
-        qc AS (
-          SELECT query_id, centroid_id FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr = 1),
+        $nearestCellCte,
         eu AS (
           SELECT vec_id, emb FROM e
           WHERE vec_id IN
@@ -2352,22 +2295,9 @@ object Similarity extends QueryPack {
           WHERE rn <= $GraphEntries)""", cu = "eu", twoHop = true)
 
   private lazy val lshOracleSql: String = {
-    val planeRows = planeRowsSql
     s"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        planes AS (
-          SELECT * FROM (VALUES
-            $planeRows) t(j, p)),
-        bkt AS (
-          SELECT e.vec_id,
-                 CAST(SUM(CASE WHEN list_sum(list_transform(
-                        generate_series(1, $Dim), i -> e.emb[i] * pl.p[i])) > 0
-                      THEN (1::BIGINT << pl.j) ELSE 0 END) AS BIGINT) AS bucket
-          FROM e, planes pl
-          GROUP BY e.vec_id),
-        be AS (
-          SELECT e.vec_id, e.emb, bkt.bucket
-          FROM e JOIN bkt USING (vec_id)),
+        $lshBucketCtes,
         q AS (
           SELECT vec_id AS query_id, emb AS qemb, bucket AS qbucket
           FROM be WHERE vec_id < 5),
@@ -2464,6 +2394,51 @@ object Similarity extends QueryPack {
           FROM votes)
         WHERE vr = 1
         ORDER BY query_id"""
+
+  /** Stage 2 of the two-stage rerank queries (`sim_binary_rerank`,
+    * `sim_prefix_rerank`): the Q×C stage-1 survivors `cands`
+    * (query_id, vec_id) broadcast onto the map-only full-embedding
+    * scan `e`, rescored by exact cosine (9 decimals), top 5 per query
+    * by the bounded-buffer aggregator. */
+  private def rescoreTop5(e: DataFrame, cands: DataFrame): DataFrame = {
+    val s = e.sparkSession
+    import s.implicits._
+    val q = e.filter($"vec_id" < 5)
+      .select($"vec_id".as("query_id"), $"emb".as("qemb"))
+    val top5 = udaf(new graft.functions.TopKAggregator(5))
+    e.join(broadcast(cands), Seq("vec_id"))
+      .join(broadcast(q), Seq("query_id"))
+      .withColumn("cos_sim", round(cosine($"qemb", $"emb"), 9))
+      .groupBy($"query_id")
+      .agg(top5($"cos_sim", $"vec_id").as("top"))
+      .select($"query_id",
+        posexplode(arrays_zip($"top.scores", $"top.ids"))
+          .as(Seq("i", "pair")))
+      .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
+        $"pair.ids".as("vec_id"), $"pair.scores".as("cos_sim"))
+      .orderBy($"query_id", $"rnk")
+  }
+
+  /** [[rescoreTop5]] as the oracle tail after a `cand` (query_id,
+    * vec_id) CTE over `e`. */
+  private lazy val rescoreTop5Sql: String = """q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
+        scored AS (
+          SELECT c.query_id, c.vec_id,
+            round(
+              list_sum(list_transform(generate_series(1, len(q.qemb)),
+                i -> q.qemb[i] * e.emb[i])) /
+              (sqrt(list_sum(list_transform(q.qemb, x -> x*x))) *
+               sqrt(list_sum(list_transform(e.emb, x -> x*x)))), 9) AS cos_sim
+          FROM cand c
+          JOIN e ON e.vec_id = c.vec_id
+          JOIN q ON q.query_id = c.query_id)
+        SELECT query_id, rnk, vec_id, cos_sim FROM (
+          SELECT query_id, vec_id, cos_sim,
+                 ROW_NUMBER() OVER (PARTITION BY query_id
+                                    ORDER BY cos_sim DESC, vec_id) AS rnk
+          FROM scored)
+        WHERE rnk <= 5
+        ORDER BY query_id, rnk"""
 
   override val queries: Map[String, QueryDef] = Map(
 
@@ -2882,9 +2857,10 @@ object Similarity extends QueryPack {
     "sim_ann_graph_filtered" -> QueryDef(
       fn = (s, d) => {
         lazy val e = embCheckpointed(s, d)
-        graphBeamSearchFiltered(s, e, col("label") % 7 === 3,
+        graphBeamSearchHier(s, e,
             edgesIn = Some(graphEdgesFor(s, d, e)),
-            modelIn = Some(ivfModelFor(s, d)))._1
+            modelIn = Some(ivfModelFor(s, d)),
+            pred = Some(col("label") % 7 === 3))._1
           .filter(col("rnk") <= 5)
           .orderBy(col("query_id"), col("rnk"))
       },
@@ -3071,18 +3047,7 @@ object Similarity extends QueryPack {
       },
       oracle = Some(s"""
         $ivfBuildCtes,
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb
-          FROM fin WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, qemb, centroid_id AS pcell FROM (
-            SELECT q.query_id, q.qemb, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbe),
+        $cellProbesSql,
         flt AS (
           SELECT f.vec_id, f.emb, f.centroid_id,
                  CAST(em.label AS BIGINT) AS label
@@ -3295,18 +3260,11 @@ object Similarity extends QueryPack {
       fn = (s, d) => {
         import s.implicits._
         val (codes, books) = pqPersistedModel(s, d)
-        val topk = udaf(new graft.functions.TopKAggregator(5))
-        codes.crossJoin(broadcast(pqQueryLutWide(s, d, books)))
+        topKByAdist(codes.crossJoin(broadcast(pqQueryLutWide(s, d, books)))
           .filter($"vec_id" =!= $"query_id")
           .select($"query_id", $"vec_id",
-            graft.functions.VectorExprs.pqAdcSum($"codes", $"lut").as("adist"))
-          .groupBy($"query_id")
-          .agg(topk(-$"adist", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids")).as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), (-$"pair.scores").as("adist"))
-          .orderBy($"query_id", $"rnk")
+            graft.functions.VectorExprs.pqAdcSum($"codes", $"lut").as("adist")),
+          5).orderBy($"query_id", $"rnk")
       },
       oracle = Some(pqAdcOracleSql),
       headline = false),
@@ -3331,36 +3289,12 @@ object Similarity extends QueryPack {
         import s.implicits._
         val (cells, cents) = ivfpqPersistedModel(s, d)
         val (_, books) = pqPersistedModel(s, d)
-        val q = embDouble(s, d).filter($"vec_id" < 5)
-          .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-        val wProbe = Window.partitionBy($"query_id")
-          .orderBy($"cdist".asc, $"centroid_id")
-        // the coordinator's probe list: queries × 8 cells, ranked by
-        // the same distance arithmetic as the assignment argmin
-        val probeRows = q.crossJoin(broadcast(cents))
-          .withColumn("cdist", l2sq($"qemb", $"cemb"))
-          .withColumn("pr", row_number().over(wProbe))
-          .filter($"pr" <= IvfNProbe)
-          .select($"query_id", $"centroid_id")
-          .collect()
-        val probedCells = probeRows.map(_.getInt(1)).distinct.toSeq
-        val probePairs = probeRows.map(r => (r.getLong(0), r.getInt(1)))
-          .toSeq.toDF("query_id", "centroid_id")
-        val topk = udaf(new graft.functions.TopKAggregator(5))
-        cells
-          // static partition pruning: only probed cells' files scan
-          .filter($"centroid_id".isin(probedCells: _*))
-          .join(broadcast(probePairs), Seq("centroid_id"))
-          .filter($"vec_id" =!= $"query_id")
-          .join(broadcast(pqQueryLutWide(s, d, books)), Seq("query_id"))
-          .select($"query_id", $"vec_id",
-            graft.functions.VectorExprs.pqAdcSum($"codes", $"lut").as("adist"))
-          .groupBy($"query_id")
-          .agg(topk(-$"adist", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids")).as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), (-$"pair.scores").as("adist"))
+        // the coordinator's probe list: each query's IvfNProbe nearest
+        // cells; static partition pruning scans only their files
+        val (probedCells, probePairs) =
+          probeSet(s, probeRanking(s, d, cents).filter(_._3 <= IvfNProbe))
+        adcTopK(s, cells, pqQueryLutWide(s, d, books), probedCells,
+            probePairs, None, 5)
           .orderBy($"query_id", $"rnk")
       },
       oracle = Some(ivfPqOracleSql),
@@ -3390,40 +3324,16 @@ object Similarity extends QueryPack {
         import s.implicits._
         val (cells, cents) = ivfpqPersistedModel(s, d)
         val (_, books) = pqPersistedModel(s, d)
-        val q = embDouble(s, d).filter($"vec_id" < 5)
-          .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-        val wProbe = Window.partitionBy($"query_id")
-          .orderBy($"cdist".asc, $"centroid_id")
         // a selective predicate WIDENS the probe budget (2× cells —
         // see [[IvfNProbeFiltered]]): each probed cell contributes
         // only its passers, so the wider scan restores the candidate
         // count at LESS total ADC work than the unfiltered path
-        val probeRows = q.crossJoin(broadcast(cents))
-          .withColumn("cdist", l2sq($"qemb", $"cemb"))
-          .withColumn("pr", row_number().over(wProbe))
-          .filter($"pr" <= IvfNProbeFiltered)
-          .select($"query_id", $"centroid_id")
-          .collect()
-        val probedCells = probeRows.map(_.getInt(1)).distinct.toSeq
-        val probePairs = probeRows.map(r => (r.getLong(0), r.getInt(1)))
-          .toSeq.toDF("query_id", "centroid_id")
-        val topk = udaf(new graft.functions.TopKAggregator(5))
-        val ranked = cells
-          .filter($"centroid_id".isin(probedCells: _*))
-          // predicate FIRST, on the STORED attribute: failing rows
-          // never pair with a query or reach the ADC fold
-          .filter($"label" % 7 === 3)
-          .join(broadcast(probePairs), Seq("centroid_id"))
-          .filter($"vec_id" =!= $"query_id")
-          .join(broadcast(pqQueryLutWide(s, d, books)), Seq("query_id"))
-          .select($"query_id", $"vec_id",
-            graft.functions.VectorExprs.pqAdcSum($"codes", $"lut").as("adist"))
-          .groupBy($"query_id")
-          .agg(topk(-$"adist", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids")).as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), (-$"pair.scores").as("adist"))
+        val (probedCells, probePairs) = probeSet(s,
+          probeRanking(s, d, cents).filter(_._3 <= IvfNProbeFiltered))
+        // predicate FIRST, on the STORED attribute: failing rows
+        // never pair with a query or reach the ADC fold
+        val ranked = adcTopK(s, cells, pqQueryLutWide(s, d, books),
+          probedCells, probePairs, Some($"label" % 7 === 3), 5)
         // label re-attaches AFTER the top-k: the ≤k-rows-per-query
         // ranked side broadcasts against the artifact's pruned
         // (vec_id, label) scan — never a per-candidate payload carry
@@ -3493,10 +3403,7 @@ object Similarity extends QueryPack {
           SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
         ranked AS (
           SELECT q.query_id, c.centroid_id,
-            ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-              list_sum(list_transform(generate_series(1, $Dim),
-                i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-              c.centroid_id) AS pr
+            $cellRankSql
           FROM q, c3 c),
         j AS (
           SELECT r.query_id, r.pr, s.n_rows, s.n_pass
@@ -3588,11 +3495,8 @@ object Similarity extends QueryPack {
         val kPrime =
           if (tPass <= 0L) 5L
           else math.min(200L, (5L * tRows + tPass - 1L) / tPass)
-        val chosen = probeRanking(s, d, cents)
-          .filter(_._3 <= IvfNProbe)
-        val probedCells = chosen.map(_._2).distinct.toSeq
-        val probePairs = chosen.map { case (qid, cell, _) => (qid, cell) }
-          .toSeq.toDF("query_id", "centroid_id")
+        val (probedCells, probePairs) =
+          probeSet(s, probeRanking(s, d, cents).filter(_._3 <= IvfNProbe))
         val ranked = adcTopK(s, cells, pqQueryLutWide(s, d, books),
             probedCells, probePairs, None, kPrime.toInt)
           .select($"query_id", $"vec_id", $"adist")
@@ -3622,38 +3526,9 @@ object Similarity extends QueryPack {
             ELSE LEAST(200, (5 * t_rows + t_pass - 1) // t_pass)
             END AS kprime
           FROM sel),
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, centroid_id AS pcell FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbe),
-        qsub AS (
-          SELECT vec_id AS query_id, sub, semb AS qsemb
-          FROM sv WHERE vec_id < 5),
-        lut AS (
-          SELECT qsub.query_id, c.sub, c.code,
-            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
-              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
-              AS DECIMAL(27,9)) AS pdist
-          FROM qsub JOIN pc2 c ON c.sub = qsub.sub),
-        adc AS (
-          SELECT p.query_id, f.vec_id,
-                 CAST(em.label AS BIGINT) AS label,
-                 CAST(SUM(l.pdist) AS DOUBLE) AS adist
-          FROM probes p
-          JOIN fin f ON f.centroid_id = p.pcell
-          JOIN embeddings em ON em.vec_id = f.vec_id
-          JOIN codes k ON k.vec_id = f.vec_id
-          JOIN lut l ON l.query_id = p.query_id
-                    AND l.sub = k.sub AND l.code = k.code
-          WHERE f.vec_id <> p.query_id
-          GROUP BY p.query_id, f.vec_id, em.label),
+        ${ivfProbesSql(IvfNProbe)},
+        $pqLutSql,
+        ${labeledAdcSql(labelFilter = false)},
         over AS (
           SELECT a.query_id, a.vec_id, a.label, a.adist
           FROM (
@@ -3853,26 +3728,8 @@ object Similarity extends QueryPack {
         alllab AS (
           SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings
           UNION ALL SELECT vec_id, CAST(vec_id % 7 AS BIGINT) FROM nv),
-        q AS (
-          SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        probes AS (
-          SELECT query_id, centroid_id AS pcell FROM (
-            SELECT q.query_id, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-                list_sum(list_transform(generate_series(1, $Dim),
-                  i -> (q.qemb[i] - c.cemb[i]) * (q.qemb[i] - c.cemb[i]))) ASC,
-                c.centroid_id) AS pr
-            FROM q, c3 c) x
-          WHERE pr <= $IvfNProbeFiltered),
-        qsub AS (
-          SELECT vec_id AS query_id, sub, semb AS qsemb
-          FROM sv WHERE vec_id < 5),
-        lut AS (
-          SELECT qsub.query_id, c.sub, c.code,
-            CAST(round(list_sum(list_transform(generate_series(1, $PqSubDim),
-              i -> (qsub.qsemb[i] - c.cemb[i]) * (qsub.qsemb[i] - c.cemb[i]))), 9)
-              AS DECIMAL(27,9)) AS pdist
-          FROM qsub JOIN pc2 c ON c.sub = qsub.sub),
+        ${ivfProbesSql(IvfNProbeFiltered)},
+        $pqLutSql,
         adc AS (
           SELECT p.query_id, f.vec_id, al.label,
                  CAST(SUM(l.pdist) AS DOUBLE) AS adist
@@ -4067,18 +3924,11 @@ object Similarity extends QueryPack {
         val lut = q.join(broadcast(books), Seq("sub"))
           .select($"query_id", $"sub", $"code",
             round(l2sq($"qsemb", $"cemb"), 9).cast(DecimalType(27, 9)).as("pdist"))
-        val topk = udaf(new graft.functions.TopKAggregator(5))
-        codes.select($"vec_id", $"sub", $"code")
+        topKByAdist(codes.select($"vec_id", $"sub", $"code")
           .join(broadcast(lut), Seq("sub", "code"))
           .filter($"vec_id" =!= $"query_id")
           .groupBy($"query_id", $"vec_id")
-          .agg(sum($"pdist").cast(DoubleType).as("adist"))
-          .groupBy($"query_id")
-          .agg(topk(-$"adist", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids")).as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), (-$"pair.scores").as("adist"))
+          .agg(sum($"pdist").cast(DoubleType).as("adist")), 5)
           .orderBy($"query_id", $"rnk")
       },
       oracle = Some(pqAdcOracleSql)),
@@ -4272,20 +4122,7 @@ object Similarity extends QueryPack {
           // -ham: aggregator ranks score desc, id asc == ham asc, id asc
           .agg(topC(-$"ham".cast(DoubleType), $"vec_id").as("top"))
           .select($"query_id", explode($"top.ids").as("vec_id"))
-        val q = e.filter($"vec_id" < 5)
-          .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-        val top5 = udaf(new graft.functions.TopKAggregator(5))
-        e.join(broadcast(cands), Seq("vec_id"))
-          .join(broadcast(q), Seq("query_id"))
-          .withColumn("cos_sim", round(cosine($"qemb", $"emb"), 9))
-          .groupBy($"query_id")
-          .agg(top5($"cos_sim", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids"))
-              .as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), $"pair.scores".as("cos_sim"))
-          .orderBy($"query_id", $"rnk")
+        rescoreTop5(e, cands)
       },
       oracle = Some(s"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
@@ -4310,24 +4147,7 @@ object Similarity extends QueryPack {
                 w.vec_id) AS cr
             FROM qw, w WHERE w.vec_id <> qw.query_id) x
           WHERE cr <= $BqRerankC),
-        q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        scored AS (
-          SELECT c.query_id, c.vec_id,
-            round(
-              list_sum(list_transform(generate_series(1, len(q.qemb)),
-                i -> q.qemb[i] * e.emb[i])) /
-              (sqrt(list_sum(list_transform(q.qemb, x -> x*x))) *
-               sqrt(list_sum(list_transform(e.emb, x -> x*x)))), 9) AS cos_sim
-          FROM cand c
-          JOIN e ON e.vec_id = c.vec_id
-          JOIN q ON q.query_id = c.query_id)
-        SELECT query_id, rnk, vec_id, cos_sim FROM (
-          SELECT query_id, vec_id, cos_sim,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY cos_sim DESC, vec_id) AS rnk
-          FROM scored)
-        WHERE rnk <= 5
-        ORDER BY query_id, rnk""")),
+        $rescoreTop5Sql""")),
 
     // ── prefix-dimension two-stage search (Matryoshka serving shape) ──
     // The OTHER two-stage pattern production stores ship: rank with a
@@ -4361,20 +4181,7 @@ object Similarity extends QueryPack {
           .groupBy($"query_id")
           .agg(topC($"pcos", $"vec_id").as("top"))
           .select($"query_id", explode($"top.ids").as("vec_id"))
-        val q = e.filter($"vec_id" < 5)
-          .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-        val top5 = udaf(new graft.functions.TopKAggregator(5))
-        e.join(broadcast(cands), Seq("vec_id"))
-          .join(broadcast(q), Seq("query_id"))
-          .withColumn("cos_sim", round(cosine($"qemb", $"emb"), 9))
-          .groupBy($"query_id")
-          .agg(top5($"cos_sim", $"vec_id").as("top"))
-          .select($"query_id",
-            posexplode(arrays_zip($"top.scores", $"top.ids"))
-              .as(Seq("i", "pair")))
-          .select($"query_id", ($"i" + 1).cast(LongType).as("rnk"),
-            $"pair.ids".as("vec_id"), $"pair.scores".as("cos_sim"))
-          .orderBy($"query_id", $"rnk")
+        rescoreTop5(e, cands)
       },
       oracle = Some(s"""
         WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
@@ -4394,24 +4201,7 @@ object Similarity extends QueryPack {
                 p.vec_id) AS cr
             FROM qp, pre p WHERE p.vec_id <> qp.query_id) x
           WHERE cr <= $BqRerankC),
-        q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 5),
-        scored AS (
-          SELECT c.query_id, c.vec_id,
-            round(
-              list_sum(list_transform(generate_series(1, len(q.qemb)),
-                i -> q.qemb[i] * e.emb[i])) /
-              (sqrt(list_sum(list_transform(q.qemb, x -> x*x))) *
-               sqrt(list_sum(list_transform(e.emb, x -> x*x)))), 9) AS cos_sim
-          FROM cand c
-          JOIN e ON e.vec_id = c.vec_id
-          JOIN q ON q.query_id = c.query_id)
-        SELECT query_id, rnk, vec_id, cos_sim FROM (
-          SELECT query_id, vec_id, cos_sim,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                                    ORDER BY cos_sim DESC, vec_id) AS rnk
-          FROM scored)
-        WHERE rnk <= 5
-        ORDER BY query_id, rnk""")),
+        $rescoreTop5Sql""")),
 
     // ── embedding drift monitor (centroid cosine between cohorts) ──
     // The production-monitoring face of embedding work: split the

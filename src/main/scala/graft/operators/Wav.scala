@@ -14,8 +14,11 @@ package graft.operators
   * The reference's data model treats payloads as opaque bytes
   * (`/root/reference/src/main/scala/com/eneco/trading/kafka/connect/ftp/source/SimpleFileConverter.scala:50-51`);
   * this codec is the decode step an audio pipeline bolts onto that
-  * model, kept deliberately small (canonical-header PCM16 mono only)
-  * because the container ships no audio libraries.
+  * model, kept deliberately small (canonical-header PCM16 mono only).
+  * It is not AudioSystem, which decodes headers this decoder rejects:
+  * a flipped RIFF-size bit decodes, flipping bit 3 of a 140-byte data
+  * size silently drops 8 bytes, and flipping bit 1 of the channel
+  * count yields 3-channel audio.
   */
 object Wav {
 

@@ -113,7 +113,6 @@ object StreamingAnnServe {
           sink(Similarity.ivfpqSearchOnRanking(s, cells, lut, ranking,
               pred, budgets, excludeSelf)
             .withColumn("batch_id", lit(batchId)))
-          q.unpersist()
         }
         ()
       }

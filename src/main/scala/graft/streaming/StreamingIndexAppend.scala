@@ -104,12 +104,10 @@ object StreamingIndexAppend {
           .select($"vec_id".cast("long").as("vec_id"), $"emb",
             $"label".cast("long").as("label"))
           .pin() // scalars + encode (2 readers) + label join
-        var rows: DataFrame = null
-        // unpersists ride a finally: the validation guards below throw
-        // AFTER the eager checkpoints have pinned blocks, and a stream
-        // that keeps failing against the same long-lived session must
-        // not accumulate dead pinned batches (round-16 review)
-        try {
+        // the validation guards below throw AFTER the eager checkpoint
+        // has pinned blocks; a failed batch's pins are reclaimed by the
+        // ContextCleaner once unreferenced, so a stream that keeps
+        // failing against one long-lived session holds no dead batches
         val scalars = q.agg(min($"vec_id"), max($"vec_id"),
           count(lit(1)), count_distinct($"vec_id")).collect()(0)
         if (!scalars.isNullAt(0) && scalars.getLong(2) != scalars.getLong(3))
@@ -128,7 +126,7 @@ object StreamingIndexAppend {
         // the artifact's inverted-list row shape: the SHARED widening
         // ([[Similarity.widenToArtifactRows]] — one copy between this
         // face and the extended serving view) + the stored attribute
-        rows = Similarity
+        val rows = Similarity
           .widenToArtifactRows(Similarity.encodeAgainstFrozen(
             s, cents, books, q.select($"vec_id", $"emb")))
           .join(q.select($"vec_id", $"label"), Seq("vec_id"))
@@ -178,10 +176,6 @@ object StreamingIndexAppend {
           .agg(count(lit(1)).as("n_vecs"))
           .withColumn("batch_id", lit(batchId))
           .orderBy($"centroid_id"))
-        } finally {
-          q.unpersist()
-          if (rows != null) rows.unpersist()
-        }
         ()
       }
       .start()

@@ -13,6 +13,93 @@ class MultimodalSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  /** Σr, Σg, Σb and Σ (i+1)·(r + 2g + 4b) of 0xRRGGBB pixels, written
+    * independently of the operator's readout. */
+  private def readout(px: Array[Int]): Seq[Long] = {
+    val rgb = px.toSeq.map(p => ((p >> 16) & 0xff, (p >> 8) & 0xff, p & 0xff))
+    Seq(rgb.map(_._1.toLong).sum, rgb.map(_._2.toLong).sum,
+      rgb.map(_._3.toLong).sum,
+      rgb.zipWithIndex.map { case ((r, g, b), i) =>
+        (i + 1L) * (r + 2L * g + 4L * b) }.sum)
+  }
+
+  private val decodeCases: Seq[(String, Seq[String], (Long, String) => Seq[Any])] = Seq(
+    ("mm_decode", Seq("doc_id", "byte_len", "width", "height", "bpp",
+        "n_pixels", "sum_r", "sum_g", "sum_b", "wsum"), { (id, t) =>
+      val img = Bmp.decode(Bmp.fromText(id, t))
+      Seq(id, img.fileSize, img.width.toLong, img.height.toLong,
+        img.bpp.toLong, img.width.toLong * img.height) ++ readout(img.pixels)
+    }),
+    ("mm_png_decode", Seq("doc_id", "width", "height", "bit_depth",
+        "color_type", "n_pixels", "sum_r", "sum_g", "sum_b", "wsum"), { (id, t) =>
+      val img = Png.decode(Png.fromText(id, t))
+      Seq(id, img.width.toLong, img.height.toLong, img.bitDepth.toLong,
+        img.colorType.toLong, img.width.toLong * img.height) ++
+        readout(img.pixels)
+    }),
+    ("mm_gif_decode", Seq("doc_id", "width", "height", "n_pixels",
+        "sum_idx", "sum_r", "sum_g", "sum_b", "wsum"), { (id, t) =>
+      val img = Gif.decode(Gif.fromText(id, t))
+      Seq(id, img.width.toLong, img.height.toLong,
+        img.width.toLong * img.height, img.indices.map(_.toLong).sum) ++
+        readout(img.pixels)
+    }),
+    ("mm_rle_decode", Seq("doc_id", "width", "height", "n_pixels",
+        "sum_idx", "sum_r", "sum_g", "sum_b", "wsum"), { (id, t) =>
+      val img = BmpRle.decode(BmpRle.fromText(id, t))
+      Seq(id, img.width.toLong, img.height.toLong,
+        img.width.toLong * img.height, img.indices.map(_.toLong).sum) ++
+        readout(img.pixels)
+    }),
+    ("mm_resize", Seq("doc_id", "src_w", "src_h", "out_w", "out_h",
+        "sum_r", "sum_g", "sum_b", "wsum"), { (id, t) =>
+      val img = Bmp.decode(Bmp.fromText(id, t))
+      val out = Array.tabulate(16 * 12) { j =>
+        img.pixels((j / 16) * img.height / 12 * img.width +
+          (j % 16) * img.width / 16)
+      }
+      Seq(id, img.width.toLong, img.height.toLong, 16L, 12L) ++ readout(out)
+    }),
+    ("mm_shard_audio", Seq("doc_id", "byte_len", "sample_rate",
+        "n_samples", "sum_s", "wsum", "peak"), { (id, t) =>
+      val au = Wav.decode(Wav.fromText(id, t))
+      val v = au.samples.toSeq.map(_.toLong)
+      Seq(id, au.fileSize, au.sampleRate.toLong, v.size.toLong, v.sum,
+        v.zipWithIndex.map { case (x, i) => (i + 1L) * x }.sum,
+        v.map(x => math.abs(x)).max)
+    }))
+
+  test("decode queries: every row equals a per-document recompute " +
+      "(ascii text -> fromText -> decode -> readout)") {
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sf)
+      .select($"doc_id", $"text").as[(Long, String)].collect()
+      .map { case (id, t) => id -> t.filter(c => c >= ' ' && c <= '~') }
+      .filter(_._2.nonEmpty).sortBy(_._1)
+    docs.length should be > 10
+    // mm_shard_audio reads the tar-shard artifact: a fresh root makes
+    // this run build it from the same documents
+    val artifacts =
+      java.nio.file.Files.createTempDirectory("graft-mm-artifacts").toString
+    val key = "spark.graft.artifactsRoot"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, artifacts)
+    try decodeCases.foreach { case (name, cols, recompute) =>
+      withClue(s"$name: ") {
+        val df = graft.SparkEntry.queries(name)(spark, sf)
+        df.columns.toSeq shouldBe cols
+        val rows = df.collect().map(_.toSeq)
+        rows.length shouldBe docs.length
+        rows.zip(docs).foreach { case (row, (id, t)) =>
+          withClue(s"doc $id: ") { row shouldBe recompute(id, t) }
+        }
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("perceptual near-dup: 100% recall on planted perturbed payloads") {
     import spark.implicits._
     val base = graft.Tables.documents(spark, sf)
