@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = graft.Tuning.configure(SparkSession.builder(), 4)
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
@@ -27,36 +27,41 @@ object Demo {
       if (append) Files.write(p, s.getBytes(UTF_8), StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       else Files.write(p, s.getBytes(UTF_8), StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
     }
-    def show(tag: String, recs: org.apache.spark.sql.Dataset[FileChangeRecord]): Unit =
-      recs.collect().sortBy(r => (r.path, r.offset)).foreach { r =>
-        println(s"$tag topic=${r.topic} path=${r.path.stripPrefix(root.toString)} " +
-          s"offset=${r.offset} value=${new String(r.value, UTF_8).replace("\n", "\\n")}")
-      }
-
     val dirs = Seq(
       MonitoredPath(s"$root/logs/", tail = true, topic = "logs"),
       MonitoredPath(s"$root/configs/", tail = false, topic = "configs"))
 
+    // one staged poll: the state publishes only after the records are
+    // printed (the at-least-once contract: commit after delivery)
+    def poll(tag: String): Unit = {
+      val (recs, commit) = Monitor.pollWithStateDirStaged(spark, dirs, stateDir)
+      recs.collect().sortBy(r => (r.path, r.offset)).foreach { r =>
+        println(s"$tag topic=${r.topic} path=${r.path.stripPrefix(root.toString)} " +
+          s"offset=${r.offset} value=${new String(r.value, UTF_8).replace("\n", "\\n")}")
+      }
+      commit()
+    }
+
     println("== poll 1: initial files")
     write("logs/app.log", "line1\n")
     write("configs/c.conf", "v=1")
-    show("poll1:", Monitor.pollWithStateDir(spark, dirs, stateDir))
+    poll("poll1:")
 
     println("== poll 2: append to the log, rewrite the config (state from parquet)")
     write("logs/app.log", "line2\n", append = true)
     write("configs/c.conf", "v=2")
-    show("poll2:", Monitor.pollWithStateDir(spark, dirs, stateDir))
+    poll("poll2:")
 
     println("== poll 3: nothing changed")
-    show("poll3:", Monitor.pollWithStateDir(spark, dirs, stateDir))
+    poll("poll3:")
 
     println("== poll 4 (simulated restart: fresh session reads the same state)")
     write("logs/app.log", "line3\n", append = true)
-    show("poll4:", Monitor.pollWithStateDir(spark, dirs, stateDir))
+    poll("poll4:")
 
     println("== poll 5: tailed file rewritten shorter (fallback case)")
     write("logs/app.log", "rewritten\n")
-    show("poll5:", Monitor.pollWithStateDir(spark, dirs, stateDir))
+    poll("poll5:")
 
     println("== kafka-shaped frame (struct keys)")
     import spark.implicits._

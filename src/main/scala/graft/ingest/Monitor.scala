@@ -5,6 +5,8 @@ import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.FsSwap
+
 /** The poll loop (SURVEY.md §3.2) as a pure batch transformation:
   * list → max-age filter → state lookup → change-detection →
   * fetch → tail/diff → records + new state.
@@ -208,41 +210,24 @@ object Monitor {
       () => { handled.unpersist(); () }, () => skippedAcc.value)
   }
 
-  /** Convenience: poll with parquet-persisted state (the batch analog of
-    * the streaming state store; survives process restarts like the
-    * reference's Connect offsets topic — SURVEY.md §3.3).
+  /** Poll with parquet-persisted state (the batch analog of the
+    * streaming state store; survives process restarts like the
+    * reference's Connect offsets topic — SURVEY.md §3.3). The state
+    * publish is DEFERRED to the returned `commit` thunk: callers that
+    * deliver records to a sink invoke it only after delivery succeeds,
+    * so a sink failure or crash re-detects (and re-emits) the same
+    * changes on the next poll — at-least-once, like the reference's
+    * uncommitted-offsets window. Committing BEFORE delivery would
+    * silently drop the batch on a sink failure.
     *
-    * `stateDir` must be a DRIVER-LOCAL directory (the generation swap
-    * renames through `java.io.File`; object stores have no atomic
-    * rename anyway) — for cluster-shared durability point it at a
-    * shared mount, or use the streaming pipeline whose state lives in
-    * the checkpointed state store. The returned Dataset reads this
-    * poll's `records.parquet` spool, which the NEXT poll overwrites:
-    * consumers must fully materialize it before polling again (the
-    * PollDriver sink contract does — it collects/writes per poll). */
-  def pollWithStateDir(
-      spark: SparkSession,
-      dirs: Seq[MonitoredPath],
-      stateDir: String,
-      maxAgeMs: Option[Long] = None,
-      maxFilesPerPoll: Int = 10000,
-      nowMs: Long = System.currentTimeMillis(),
-      inlineBodyMax: Long = Listing.DefaultInlineBodyMax,
-      maxRecordBytes: Int = TailDiff.DefaultMaxRecordBytes): Dataset[FileChangeRecord] = {
-    val (records, commit) =
-      pollWithStateDirStaged(spark, dirs, stateDir, maxAgeMs, maxFilesPerPoll,
-        nowMs, inlineBodyMax, maxRecordBytes)
-    commit()
-    records
-  }
-
-  /** Like [[pollWithStateDir]] but the state publish is DEFERRED to the
-    * returned `commit` thunk: callers that deliver records to a sink
-    * invoke it only after delivery succeeds, so a sink failure or crash
-    * re-detects (and re-emits) the same changes on the next poll —
-    * at-least-once, like the reference's uncommitted-offsets window
-    * (SURVEY.md §3.3). Committing BEFORE delivery would silently drop
-    * the batch on a sink failure. */
+    * `stateDir` is any Hadoop path whose directory rename is atomic
+    * (a local path, a `file:` URI, HDFS, a shared mount; not an object
+    * store), with ONE publisher per `stateDir` at a time — the
+    * [[graft.operators.FsSwap.publish]] contract. The returned Dataset
+    * reads this poll's `records.parquet` spool, which the NEXT poll
+    * overwrites: consumers must fully materialize it before polling
+    * again (the PollDriver sink contract does — it collects/writes per
+    * poll). */
   def pollWithStateDirStaged(
       spark: SparkSession,
       dirs: Seq[MonitoredPath],
@@ -253,12 +238,11 @@ object Monitor {
       inlineBodyMax: Long = Listing.DefaultInlineBodyMax,
       maxRecordBytes: Int = TailDiff.DefaultMaxRecordBytes): (Dataset[FileChangeRecord], () => Unit) = {
     import spark.implicits._
-    val statePath = s"$stateDir/state.parquet"
-    val stateOldPath = s"$stateDir/state.old.parquet"
-    // GenSwap fallback: a crash mid-publish leaves the previous state
-    // generation readable — the next poll then re-detects that
-    // generation's changes
-    val state = GenSwap.readable(statePath, stateOldPath) match {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val swap = FsSwap.spool(hconf, stateDir, "state")
+    // a crash mid-publish leaves the previous state generation
+    // readable — the next poll then re-detects that generation's changes
+    val state = swap.readable match {
       case Some(dir) => spark.read.parquet(dir).as[FileMetaData]
       case None => spark.emptyDataset[FileMetaData]
     }
@@ -270,14 +254,13 @@ object Monitor {
     // eviction, executor loss) fail with missing part-files. Spooling
     // records also means the caller's sink never re-runs the fetch.
     val recordsPath = s"$stateDir/records.parquet"
-    val tmp = s"$stateDir/state.tmp.parquet"
     out.records.write.mode("overwrite").parquet(recordsPath)
-    out.newState.write.mode("overwrite").parquet(tmp)
+    swap.stage(out.newState)
     out.cleanup()
     val records =
-      if (GenSwap.hasParts(recordsPath))
+      if (FsSwap.hasParts(hconf, recordsPath))
         spark.read.parquet(recordsPath).as[FileChangeRecord]
       else spark.emptyDataset[FileChangeRecord]
-    (records, () => GenSwap.publish(tmp, statePath, stateOldPath))
+    (records, () => swap.publish())
   }
 }

@@ -3,6 +3,8 @@ package graft.ingest
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.operators.FsSwap
+
 /** The poll *task* loop (SURVEY.md §3.2 steps 1-3; reference
   * `FtpSourceTask.scala:47-74`): repeatedly run `Monitor.poll` on the
   * configured cadence, escalate an exponential backoff on failure and
@@ -29,15 +31,16 @@ final class PollDriver(
     sinceMs = Long.MinValue / 2)
   private val converter = cfg.converter
 
-  private val carryPath = s"$stateDir/carryover.parquet"
-  private val carryOldPath = s"$stateDir/carryover.old.parquet"
+  // the carry-over spool, one FsSwap generation beside the poll state
+  private val carrySpool =
+    FsSwap.spool(spark.sparkContext.hadoopConfiguration, stateDir, "carryover")
 
   /** Reads the carry spool; falls back to the `.old` generation if a
     * crash landed between the rename steps of [[writeCarry]] — at worst
     * records are re-served (at-least-once), never lost. */
   private def readCarry(): Dataset[FileChangeRecord] = {
     import spark.implicits._
-    GenSwap.readable(carryPath, carryOldPath) match {
+    carrySpool.readable match {
       case Some(dir) => spark.read.parquet(dir).as[FileChangeRecord]
       case None => spark.emptyDataset[FileChangeRecord]
     }
@@ -45,22 +48,17 @@ final class PollDriver(
 
   /** Spool the unserved tail durably BEFORE the old spool is replaced —
     * the head Dataset's lineage may still read the old parquet; the
-    * crash-safety contract lives in [[GenSwap.publish]]. */
+    * crash-safety contract lives in [[FsSwap.publish]]. */
   private def writeCarry(tail: Dataset[FileChangeRecord]): Unit = {
-    val tmp = s"$stateDir/carryover.tmp.parquet"
-    tail.write.mode("overwrite").parquet(tmp) // materializes from old spool
-    GenSwap.publish(tmp, carryPath, carryOldPath)
+    carrySpool.stage(tail) // materializes from old spool
+    carrySpool.publish()
   }
 
   /** Remove a fully-drained spool so gated polls can skip the carry
     * probe with a pure file-existence check (no Spark job). Runs after
     * the sink consumed the served head; a crash before this re-serves
     * the carry (at-least-once), never loses it. */
-  private def dropCarry(): Unit =
-    Seq(carryPath, carryOldPath).foreach { p =>
-      val f = new java.io.File(p)
-      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-    }
+  private def dropCarry(): Unit = carrySpool.drop()
 
   // Carry-over serving ignores the (refresh-cadence) backoff like the
   // reference's buffer-first poll — EXCEPT right after a failure, where
@@ -90,7 +88,7 @@ final class PollDriver(
     // backoff window: after a failure nothing bypasses the gate, and
     // without a spool on disk (file-level check) there is no carry
     if (!backoff.passed(now) &&
-        (lastFailed || GenSwap.readable(carryPath, carryOldPath).isEmpty))
+        (lastFailed || carrySpool.readable.isEmpty))
       return 0L
     try {
       val carry = readCarry()
@@ -100,7 +98,7 @@ final class PollDriver(
       // unreachable while haveCarry is false, so the empty generation
       // would keep passing the cheap file-existence gate forever and
       // every gated poll would launch this read just to find it empty
-      if (!haveCarry && GenSwap.readable(carryPath, carryOldPath).nonEmpty)
+      if (!haveCarry && carrySpool.readable.nonEmpty)
         dropCarry()
       if (!haveCarry && !backoff.passed(now)) return 0L
       // state publish is DEFERRED past sink delivery (at-least-once:

@@ -27,7 +27,7 @@ object Bucketing {
     * Note `SaveMode.Overwrite` on a managed table is drop-then-recreate
     * — NOT atomic: a failed write leaves no table. A serving pipeline
     * should write to a versioned name and swap with ALTER/rename (the
-    * same generation pattern as `ingest.GenSwap`). */
+    * same generation pattern as [[FsSwap]]). */
   def writeBucketed(
       df: DataFrame,
       table: String,

@@ -722,7 +722,7 @@ object Dedup extends QueryPack {
     * partitioned by hash, so the keep-min window adds no exchange
     * either — BucketingSpec asserts exactly one exchange in the whole
     * plan). State update = append survivors' hashes as the next state
-    * generation (same GenSwap pattern as the ingest store). */
+    * generation (the [[FsSwap]] pattern of the ingest store). */
   def incrementalAgainstState(
       spark: SparkSession,
       increment: DataFrame,

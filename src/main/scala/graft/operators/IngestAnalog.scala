@@ -729,17 +729,14 @@ object IngestAnalog extends QueryPack {
         expr(s"(psum - size_b) div $binSize").as("bin"))
       .pin() // the last-bin scalar + the write
     // O(1) scalars: the open bin and the committed watermark. State
-    // rides [[FsSwap]], not the java.io GenSwap: stateDir lives under
-    // the artifacts root, which on a cluster is shared storage — a
-    // local-file swap there would desynchronize the watermark from
+    // rides [[FsSwap]] through the Hadoop FileSystem: stateDir lives
+    // under the artifacts root, which on a cluster is shared storage —
+    // a local-file swap there would desynchronize the watermark from
     // the bins it guards.
     val lastBin = binned.agg(coalesce(max($"bin"), lit(-1L)))
       .collect()(0).getLong(0)
-    val hconf = s.sparkContext.hadoopConfiguration
-    val target = s"$stateDir/wm"
-    val old = s"$stateDir/wm.old"
-    val tmp = s"$stateDir/wm.tmp"
-    val wm = FsSwap.readable(hconf, target, old) match {
+    val swap = FsSwap(s.sparkContext.hadoopConfiguration, stateDir, "wm")
+    val wm = swap.readable match {
       case Some(dir) => s.read.parquet(dir).collect().head.getLong(0)
       case None      => -1L
     }
@@ -754,9 +751,7 @@ object IngestAnalog extends QueryPack {
       // watermark commits AFTER the write: a crash between them
       // replays the same bins idempotently (dynamic overwrite of
       // deterministic content)
-      Seq(lastBin - 1).toDF("wm")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      FsSwap.publish(hconf, tmp, target, old)
+      swap.commit(Seq(lastBin - 1).toDF("wm"))
     }
     toDrain
   }

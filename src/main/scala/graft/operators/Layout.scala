@@ -513,7 +513,6 @@ object Layout extends QueryPack {
     "q_bloom_skipping" -> QueryDef(
       fn = (s, d) => {
         import s.implicits._
-        val S = 8
         // reduce the key below 1000003 BEFORE the multiply: a*key with a
         // raw BIGINT key overflows once keys pass ~3.5e9 (Spark would
         // wrap silently, DuckDB would raise) — bounded products keep the

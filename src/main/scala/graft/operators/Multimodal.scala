@@ -1575,10 +1575,8 @@ object Multimodal extends QueryPack {
     val lastBin = bins.agg(coalesce(max($"bin"), lit(-1L)))
       .collect()(0).getLong(0)
     val hconf = s.sparkContext.hadoopConfiguration
-    val target0 = s"$stateDir/wm"
-    val old = s"$stateDir/wm.old"
-    val tmp = s"$stateDir/wm.tmp"
-    val wm = FsSwap.readable(hconf, target0, old) match {
+    val swap = FsSwap(hconf, stateDir, "wm")
+    val wm = swap.readable match {
       case Some(dir) => s.read.parquet(dir).collect().head.getLong(0)
       case None      => -1L
     }
@@ -1596,9 +1594,7 @@ object Multimodal extends QueryPack {
       sweepAttemptTemps(s, outDir)
       // watermark commits AFTER the write, over CLOSED bins only
       if (wm < lastBin - 1) {
-        Seq(lastBin - 1).toDF("wm")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        FsSwap.publish(hconf, tmp, target0, old)
+        swap.commit(Seq(lastBin - 1).toDF("wm"))
       }
     }
     toWrite.groupBy($"bin")

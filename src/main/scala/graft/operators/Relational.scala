@@ -155,7 +155,6 @@ object Relational extends QueryPack {
   private[operators] def globalDenseRank(
       s: SparkSession, df: DataFrame, keyColNames: Seq[String],
       partsIn: Int = 0, onDistinct: Long => Unit = _ => ()): DataFrame = {
-    import s.implicits._
     require(!df.columns.contains("rk"),
       "globalDenseRank: input already has an 'rk' column — rename it first")
     val parts =
@@ -196,7 +195,6 @@ object Relational extends QueryPack {
   private[operators] def globalRank(
       s: SparkSession, df: DataFrame, sortCols: Seq[Column],
       partsIn: Int = 0, onCount: Long => Unit = _ => ()): DataFrame = {
-    import s.implicits._
     require(!df.columns.contains("rk"),
       "globalRank: input already has an 'rk' column — rename it first")
     val parts =
@@ -1408,8 +1406,7 @@ $walk,
         ELSE ascii(substring($src, $pos, 1)) - 48 END)"""
   private def hex6SqlOn(src: String): String =
     (1 to 6).map(p => nibOf(src, p)).reduceLeft((a, b) => s"($a * 16 + $b)")
-  private def hex6Sql: String = hex6SqlOn("h")
-  /** Spark-side spelling of [[hex6Sql]] (r17, the conv-chunk move):
+  /** Spark-side spelling of `hex6SqlOn("h")` (r17, the conv-chunk move):
     * the fold is BIG-endian (position 1 most significant), so ONE conv
     * of the 6-char prefix replaces six substring/ascii CASE trees —
     * value-identical, < 2^24; the DuckDB oracles keep [[hex6SqlOn]]. */
@@ -1749,7 +1746,6 @@ $walk,
       s: SparkSession, df: DataFrame, sortCols: Seq[Column],
       valueCol: String, partsIn: Int = 0,
       rankCol: String = null): DataFrame = {
-    import s.implicits._
     require(!df.columns.contains("psum"),
       "globalPrefixSum: input already has a 'psum' column — rename it")
     val parts =

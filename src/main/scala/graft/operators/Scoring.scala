@@ -77,8 +77,6 @@ object Scoring extends QueryPack {
 
   private def cmCol(fp: Column, a: Long, b: Long): Column =
     (lit(a) * fp + lit(b)) % CmMod % CmW
-  private def cmColSql(fp: String, a: Long, b: Long): String =
-    s"((($a * ($fp)) + $b) % $CmMod) % $CmW"
 
   /** Long-form Count-Min counters `(r, col, cnt)` over a frame with an
     * `fp` fingerprint column (one row per token OCCURRENCE). One

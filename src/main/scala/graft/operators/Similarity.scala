@@ -357,7 +357,7 @@ object Similarity extends QueryPack {
   private def graphBeamFrom(s: SparkSession, e: DataFrame,
       q: DataFrame, entries: DataFrame,
       candPred: Option[org.apache.spark.sql.Column] = None,
-      edgesIn: Option[DataFrame] = None)
+      edgesIn: Option[DataFrame])
       : (DataFrame, DataFrame) = {
     import s.implicits._
     // AQE is OFF for the superstep loop's own actions (r17): every
@@ -455,20 +455,16 @@ object Similarity extends QueryPack {
     }
   }
 
-  /** Final IVF cell assignment (vec_id, label, emb, centroid_id):
-    * k-means cells from deterministic seeds + 3 Lloyd rounds. Every
-    * arithmetic step is engine-reproducible — seed order is a pure
-    * BIGINT hash, and the per-dimension means are decimal-exact
-    * (values quantized to 7 digits, summed as DECIMAL — associative —
-    * then one double division, rounded to 6), so a SQL engine can
-    * rebuild the exact centroids and assignments: that is what makes
-    * `sim_ann_ivf`'s oracle self-contained. */
-  private def ivfAssignment(s: SparkSession, e: DataFrame): DataFrame =
-    ivfModel(s, e)._1
-
-  /** IVF build exposing both faces of the index: the final assignment
-    * AND the final 8-row centroid table (the multiprobe path ranks
-    * cells by distance against it). */
+  /** IVF build exposing both faces of the index: the final cell
+    * assignment (vec_id, label, emb, centroid_id) AND the final 8-row
+    * centroid table (the multiprobe path ranks cells by distance
+    * against it) — k-means cells from deterministic seeds + 3 Lloyd
+    * rounds. Every arithmetic step is engine-reproducible — seed order
+    * is a pure BIGINT hash, and the per-dimension means are
+    * decimal-exact (values quantized to 7 digits, summed as DECIMAL —
+    * associative — then one double division, rounded to 6), so a SQL
+    * engine can rebuild the exact centroids and assignments: that is
+    * what makes `sim_ann_ivf`'s oracle self-contained. */
   private[operators] def ivfModel(s: SparkSession, e: DataFrame): (DataFrame, DataFrame) = {
     import s.implicits._
     // Lloyd rounds pass over the vectors once per round — from the
@@ -621,7 +617,7 @@ object Similarity extends QueryPack {
       .orderBy($"a_id", $"b_id")
   }
 
-  /** Cell-restricted scored candidates over an [[ivfAssignment]] frame —
+  /** Cell-restricted scored candidates over an [[ivfModel]] assignment —
     * one scored row per scanned (query, candidate). */
   private def ivfCandidatesFrom(s: SparkSession, assigned: DataFrame): DataFrame = {
     import s.implicits._
@@ -633,7 +629,7 @@ object Similarity extends QueryPack {
       .withColumn("cos_sim", round(cosine($"qemb", $"emb"), 9))
   }
 
-  /** IVF top-k over an [[ivfAssignment]] frame (`sim_ann_ivf`). */
+  /** IVF top-k over an [[ivfModel]] assignment (`sim_ann_ivf`). */
   private def ivfTopKFrom(s: SparkSession, assigned: DataFrame, k: Int): DataFrame = {
     import s.implicits._
     val wRank = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
@@ -650,7 +646,7 @@ object Similarity extends QueryPack {
     * the final assignment, cell-restricted scan, and ranking. Distances
     * compare as doubles computed by the identical left-to-right fold
     * on both engines; centroid values are bit-identical because every
-    * mean is quantized decimal arithmetic (see [[ivfAssignment]]).
+    * mean is quantized decimal arithmetic (see [[ivfModel]]).
     * No side state: an earlier sidecar-parquet design could pair the
     * oracle with a stale export when another invocation interleaved. */
   // ──────────────────── product quantization (PQ) ────────────────────
@@ -2971,7 +2967,7 @@ object Similarity extends QueryPack {
     // near-tie assignment between runs.
     // FULLY value-checked with no side state: the whole k-means build
     // is engine-reproducible arithmetic (hash seeds, decimal-exact
-    // means — see [[ivfAssignment]]), so the oracle unrolls seeds +
+    // means — see [[ivfModel]]), so the oracle unrolls seeds +
     // 3 Lloyd rounds + final assignment + restricted search + ranking
     // entirely in SQL ([[ivfOracleSql]]).
     "sim_ann_ivf" -> QueryDef(
@@ -3090,7 +3086,6 @@ object Similarity extends QueryPack {
     // while the result stays brute-force-equal.
     "sim_range_search" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
         rangeSearch(ivfModelFor(s, d), r2 = 1.5)
       },
       oracle = Some {
@@ -3170,7 +3165,6 @@ object Similarity extends QueryPack {
     // clustered fixture with the result brute-force-equal.
     "sim_range_join" -> QueryDef(
       fn = (s, d) => {
-        import s.implicits._
         rangeJoin(ivfModelFor(s, d), r2 = 1.5)
       },
       oracle = Some {

@@ -188,10 +188,12 @@ object FileStreamPipeline {
     * `FtpMonitor.scala:87-95`) — is re-detected by running the batch
     * change-detection poll (`Monitor.pollWithStateDirStaged`: re-list →
     * state compare → fetch → tail/diff, state committed only after the
-    * sink succeeds) inside each micro-batch of a ticking stream. State lives in the poll's parquet store, offsets
-    * in the checkpoint; each tick is one reference `ftp.refresh` cycle,
-    * so streaming-only deployments no longer need a separate batch loop
-    * for mutating files.
+    * sink succeeds) inside each micro-batch of a ticking stream. State
+    * lives in the poll's parquet store under `stateDir` (any Hadoop
+    * path with an atomic directory rename), offsets in the checkpoint;
+    * each tick is one reference `ftp.refresh` cycle, so streaming-only
+    * deployments no longer need a separate batch loop for mutating
+    * files.
     *
     * `ticks` is any streaming DataFrame whose micro-batches set the
     * cadence — `rateTicks` for wall-clock refresh, a MemoryStream in

@@ -44,12 +44,9 @@ object StreamingCompaction {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val target = s"$stateDir/off"
-        val old = s"$stateDir/off.old"
-        val tmp = s"$stateDir/off.tmp"
-        val hconf = s.sparkContext.hadoopConfiguration
+        val swap = FsSwap(s.sparkContext.hadoopConfiguration, stateDir, "off")
         val (prevOff, nextOff, lastBatch) =
-          FsSwap.readable(hconf, target, old) match {
+          swap.readable match {
             case Some(dir) =>
               val r = s.read.parquet(dir).collect().head
               (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -64,12 +61,9 @@ object StreamingCompaction {
         // lastBatch means the streaming checkpoint was reset while
         // stateDir survived (batch ids restarted at 0) — recomputing
         // from the carried offset would silently assign wrong bins,
-        // so fail loudly instead (round-13 ADVICE).
-        if (batchId < lastBatch) throw new IllegalStateException(
-          s"StreamingCompaction: batch $batchId below committed " +
-            s"$lastBatch — checkpoint was reset while state dir " +
-            s"$stateDir survived; clear one or the other")
-        val off = if (batchId == lastBatch) prevOff else nextOff
+        // so the fence fails loudly instead (round-13 ADVICE).
+        val replay = swap.replay("StreamingCompaction", batchId, lastBatch)
+        val off = if (replay) prevOff else nextOff
         val assigned = Relational.globalPrefixSum(s,
             batch.select($"file_id".cast("long").as("file_id"),
               $"size_b".cast("long").as("size_b")),
@@ -78,17 +72,15 @@ object StreamingCompaction {
             expr(s"($off + psum - size_b) div $binSize").as("bin"),
             lit(batchId).as("batch_id"))
           .pin() // the total, the commit, and the sink
-        if (batchId > lastBatch) {
+        if (!replay) {
           val total = assigned.agg(
             coalesce(sum($"size_b"), lit(0L)).as("t"))
             .collect()(0).getLong(0)
           // commit BEFORE emitting (the heavyHittersStream discipline):
           // a crash between commit and sink re-runs the batch, hits
           // the guard above, and re-emits the identical assignment
-          Seq((off, off + total, batchId))
-            .toDF("prev_off", "next_off", "last_batch")
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          FsSwap.publish(hconf, tmp, target, old)
+          swap.commit(Seq((off, off + total, batchId))
+            .toDF("prev_off", "next_off", "last_batch"))
         }
         sink(assigned)
       }
@@ -133,22 +125,16 @@ object StreamingCompaction {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val target = s"$stateDir/drain"
-        val old = s"$stateDir/drain.old"
-        val tmp = s"$stateDir/drain.tmp"
-        val hconf = s.sparkContext.hadoopConfiguration
-        val st = FsSwap.readable(hconf, target, old)
+        val swap = FsSwap(s.sparkContext.hadoopConfiguration, stateDir, "drain")
+        val st = swap.readable
         val (prevOff, nextOff, lastBatch) = st match {
           case Some(dir) =>
             val r = s.read.parquet(s"$dir/scalars.parquet").collect().head
             (r.getLong(0), r.getLong(1), r.getLong(2))
           case None => (0L, 0L, -1L)
         }
-        if (batchId < lastBatch) throw new IllegalStateException(
-          s"StreamingCompaction.drainStream: batch $batchId below " +
-            s"committed $lastBatch — checkpoint was reset while state " +
-            s"dir $stateDir survived; clear one or the other")
-        val replay = batchId == lastBatch
+        val replay =
+          swap.replay("StreamingCompaction.drainStream", batchId, lastBatch)
         val off = if (replay) prevOff else nextOff
         val pendKind = if (replay) "prev" else "next"
         val pending = st match {
@@ -187,12 +173,12 @@ object StreamingCompaction {
           Seq((off, off + total, batchId))
             .toDF("prev_off", "next_off", "last_batch")
             .coalesce(1).write.mode("overwrite")
-            .parquet(s"$tmp/scalars.parquet")
+            .parquet(s"${swap.tmp}/scalars.parquet")
           pending.withColumn("kind", lit("prev"))
             .union(newPending.withColumn("kind", lit("next")))
             .coalesce(1).write.mode("overwrite")
-            .parquet(s"$tmp/pending.parquet")
-          FsSwap.publish(hconf, tmp, target, old)
+            .parquet(s"${swap.tmp}/pending.parquet")
+          swap.publish()
         }
         sink(closed.groupBy($"bin")
           .agg(count(lit(1)).as("n_files"), sum($"size_b").as("bin_bytes"))

@@ -344,8 +344,8 @@ object StreamingDedup {
     *
     * Alias overwrite uses managed-table Overwrite (drop-then-recreate,
     * not atomic — the documented caveat on [[graft.operators.Bucketing
-    * .writeBucketed]]); a deployment versions it with the GenSwap
-    * pattern. */
+    * .writeBucketed]]); a deployment versions it with the
+    * [[graft.operators.FsSwap]] generation pattern. */
   def componentStream(
       edges: DataFrame,
       labelsTable: String,

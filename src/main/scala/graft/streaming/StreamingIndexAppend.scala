@@ -90,16 +90,10 @@ object StreamingIndexAppend {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val target = s"$stateDir/append"
-        val old = s"$stateDir/append.old"
-        val tmp = s"$stateDir/append.tmp"
         val hconf = s.sparkContext.hadoopConfiguration
-        val (lastBatch, committedMaxVec) = readWatermark(s, stateDir)
-        if (batchId < lastBatch) throw new IllegalStateException(
-          s"StreamingIndexAppend: batch $batchId below committed " +
-            s"$lastBatch — checkpoint was reset while state dir " +
-            s"$stateDir survived; clear one or the other")
-        val replay = batchId == lastBatch
+        val swap = watermark(s, stateDir)
+        val (lastBatch, committedMaxVec) = readWatermark(s, swap)
+        val replay = swap.replay("StreamingIndexAppend", batchId, lastBatch)
         val q = batch
           .select($"vec_id".cast("long").as("vec_id"), $"emb",
             $"label".cast("long").as("label"))
@@ -166,11 +160,9 @@ object StreamingIndexAppend {
             }
           fs.delete(stagePath, true)
           // watermark commits AFTER the files, one FsSwap publish
-          Seq((batchId,
+          swap.commit(Seq((batchId,
               math.max(committedMaxVec, scalars.getLong(1))))
-            .toDF("last_batch", "max_vec")
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          FsSwap.publish(hconf, tmp, target, old)
+            .toDF("last_batch", "max_vec"))
         }
         sink(rows.groupBy($"centroid_id")
           .agg(count(lit(1)).as("n_vecs"))
@@ -194,7 +186,7 @@ object StreamingIndexAppend {
     * gate reads through it. */
   def committedExtension(s: SparkSession, stateDir: String,
       outDir: String): DataFrame = {
-    val (lastBatch, _) = readWatermark(s, stateDir)
+    val (lastBatch, _) = readWatermark(s, watermark(s, stateDir))
     val cellsPath = new org.apache.hadoop.fs.Path(outDir, "cells.parquet")
     val fs = cellsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     // fresh deployment / empty-batches-only stream: nothing committed
@@ -223,15 +215,17 @@ object StreamingIndexAppend {
     org.apache.spark.sql.types.StructField("centroid_id",
       org.apache.spark.sql.types.IntegerType)))
 
+  /** The committed watermark's generation, `stateDir/append`. */
+  private def watermark(s: SparkSession, stateDir: String): FsSwap =
+    FsSwap(s.sparkContext.hadoopConfiguration, stateDir, "append")
+
   /** The ONE reader of the committed watermark — (last_batch, max_vec)
     * from the FsSwap state, (-1, MinValue) before the first commit —
     * shared by the per-batch loop and [[committedExtension]] so the
     * state layout cannot desynchronize between writer and serving
     * view (round-16 review pass 2). */
-  private def readWatermark(s: SparkSession,
-      stateDir: String): (Long, Long) =
-    FsSwap.readable(s.sparkContext.hadoopConfiguration,
-        s"$stateDir/append", s"$stateDir/append.old") match {
+  private def readWatermark(s: SparkSession, swap: FsSwap): (Long, Long) =
+    swap.readable match {
       case Some(dir) =>
         val r = s.read.parquet(dir).collect().head
         (r.getLong(r.fieldIndex("last_batch")),

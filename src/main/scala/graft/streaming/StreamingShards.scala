@@ -74,11 +74,9 @@ object StreamingShards {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        val target = s"$stateDir/shards"
-        val old = s"$stateDir/shards.old"
-        val tmp = s"$stateDir/shards.tmp"
         val hconf = s.sparkContext.hadoopConfiguration
-        val st = FsSwap.readable(hconf, target, old)
+        val swap = FsSwap(hconf, stateDir, "shards")
+        val st = swap.readable
         val (prevOff, nextOff, lastBatch, committedMaxDoc) = st match {
           case Some(dir) =>
             val r = s.read.parquet(s"$dir/scalars.parquet").collect().head
@@ -90,11 +88,7 @@ object StreamingShards {
             (r.getLong(0), r.getLong(1), r.getLong(2), maxDoc)
           case None => (0L, 0L, -1L, Long.MinValue)
         }
-        if (batchId < lastBatch) throw new IllegalStateException(
-          s"StreamingShards: batch $batchId below committed " +
-            s"$lastBatch — checkpoint was reset while state dir " +
-            s"$stateDir survived; clear one or the other")
-        val replay = batchId == lastBatch
+        val replay = swap.replay("StreamingShards", batchId, lastBatch)
         val off = if (replay) prevOff else nextOff
         val pendKind = if (replay) "prev" else "next"
         val pending = st match {
@@ -219,12 +213,12 @@ object StreamingShards {
               math.max(committedMaxDoc, batchMaxDoc.getOrElse(committedMaxDoc))))
             .toDF("prev_off", "next_off", "last_batch", "max_doc")
             .coalesce(1).write.mode("overwrite")
-            .parquet(s"$tmp/scalars.parquet")
+            .parquet(s"${swap.tmp}/scalars.parquet")
           pending.withColumn("kind", lit("prev"))
             .union(newPending.withColumn("kind", lit("next")))
             .coalesce(1).write.mode("overwrite")
-            .parquet(s"$tmp/pending.parquet")
-          FsSwap.publish(hconf, tmp, target, old)
+            .parquet(s"${swap.tmp}/pending.parquet")
+          swap.publish()
         }
         sink(closed.groupBy($"bin")
           .agg(count(lit(1)).as("n_docs"), sum($"size_b").as("bin_bytes"))

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.TestSpark
+import graft.operators.FsSwap
 
 /** The backoff-wrapped poll task loop (SURVEY.md §3.2 / §2 #17, #19). */
 class PollDriverSpec extends AnyFunSuite with Matchers {
@@ -17,6 +18,11 @@ class PollDriverSpec extends AnyFunSuite with Matchers {
     Files.write(p, s.getBytes(UTF_8), StandardOpenOption.CREATE,
       StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
   }
+
+  /** The carry spool's generations, `carryover.parquet` and
+    * `carryover.old.parquet` under `stateDir`. */
+  private def carry(stateDir: String): FsSwap =
+    FsSwap.spool(spark.sparkContext.hadoopConfiguration, stateDir, "carryover")
 
   test("poll loop: records flow to the sink; backoff escalates on failure and resets") {
     val root = Files.createTempDirectory("graft-driver")
@@ -109,8 +115,7 @@ class PollDriverSpec extends AnyFunSuite with Matchers {
     // not rewritten as an empty generation
     driver.pollOnce() shouldBe 1L
     served shouldBe Vector("a", "b", "c")
-    GenSwap.readable(s"$stateDir/carryover.parquet",
-      s"$stateDir/carryover.old.parquet") shouldBe None
+    carry(stateDir).readable shouldBe None
 
     // 2 records against cap 2 (fresh poll, n == cap, empty tail): nothing
     // may be spooled — a stale empty generation would make every gated
@@ -119,8 +124,7 @@ class PollDriverSpec extends AnyFunSuite with Matchers {
     write(root.resolve("in/g.csv"), "d\ne")
     driver.pollOnce() shouldBe 2L
     served shouldBe Vector("a", "b", "c", "d", "e")
-    GenSwap.readable(s"$stateDir/carryover.parquet",
-      s"$stateDir/carryover.old.parquet") shouldBe None
+    carry(stateDir).readable shouldBe None
 
     // carry batch of exactly cap: poll 1 serves 2 of 4 and spools 2; poll 2
     // serves the 2-record carry (n == cap, empty tail) and must DROP the
@@ -130,8 +134,7 @@ class PollDriverSpec extends AnyFunSuite with Matchers {
     driver.pollOnce() shouldBe 2L
     driver.pollOnce() shouldBe 2L
     served shouldBe Vector("a", "b", "c", "d", "e", "f", "g", "h", "i")
-    GenSwap.readable(s"$stateDir/carryover.parquet",
-      s"$stateDir/carryover.old.parquet") shouldBe None
+    carry(stateDir).readable shouldBe None
   }
 
   test("carry-over survives a crash mid-publish: the .old generation is served") {
@@ -159,5 +162,27 @@ class PollDriverSpec extends AnyFunSuite with Matchers {
 
     driver.pollOnce() shouldBe 1L // "b" recovered from .old
     served shouldBe Vector("a", "b")
+  }
+
+  test("stateDir as a file: URI: emits, idles, emits only the delta, " +
+      "and publishes state.parquet under the URI") {
+    val root = Files.createTempDirectory("graft-uri")
+    val stateRoot = Files.createTempDirectory("graft-uri-state")
+    val cfg = MonitorConfig(Map(
+      MonitorConfig.MonitorTail -> s"$root/in/:t",
+      MonitorConfig.Refresh -> "PT0S",
+      MonitorConfig.SourceRecordConverter -> "graft.ingest.Records$LineSplitRecordConverter"))
+    var served = Vector.empty[String]
+    val driver = new PollDriver(spark, cfg, s"file:$stateRoot",
+      sink = ds => served ++= ds.collect().toSeq.map(r => new String(r.value, UTF_8)))
+
+    write(root.resolve("in/f.csv"), "a\nb\n")
+    driver.pollOnce() shouldBe 2L
+    driver.pollOnce() shouldBe 0L // idle: the state came back from the URI
+    Files.write(root.resolve("in/f.csv"), "c\n".getBytes(UTF_8),
+      StandardOpenOption.APPEND)
+    driver.pollOnce() shouldBe 1L // only the appended delta
+    served shouldBe Vector("a", "b", "c")
+    Files.isDirectory(stateRoot.resolve("state.parquet")) shouldBe true
   }
 }

@@ -19,7 +19,7 @@ import graft.TestSpark
   * BIT-IDENTICAL to an unkilled control run on the same batches
   * (doubles compared via raw bits). Run under BOTH state-store
   * providers: DGIM's flatMapGroupsWithState state lives in the
-  * provider itself; the GenSwap faces exercise the offset/commit-log
+  * provider itself; the FsSwap faces exercise the offset/commit-log
   * recovery the provider conf must not disturb.
   */
 class StreamingChaosAggSpec extends AnyFunSuite with Matchers {
@@ -529,7 +529,7 @@ class StreamingChaosAggSpec extends AnyFunSuite with Matchers {
       "AND the batch drain from scratch, both providers") {
     // a replayed fold would either advance the carried offset twice
     // (shifting every later bin) or drain the open bin's carried rows
-    // twice (duplicating file rows in a rewritten bin); the GenSwap
+    // twice (duplicating file rows in a rewritten bin); the FsSwap
     // pair of (offset, open-bin census) generations prevents both
     def fRows(sizes: Seq[Long], idBase: Long): Seq[String] =
       sizes.zipWithIndex.map { case (sz, i) =>

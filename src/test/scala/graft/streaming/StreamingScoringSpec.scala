@@ -95,6 +95,40 @@ class StreamingScoringSpec extends AnyFunSuite with Matchers {
     last.keySet.filter(t => truth(t) * (cap + 1) > n) shouldBe exactHH
   }
 
+  test("heavy hitters: a fresh checkpoint over a surviving stateDir fails " +
+      "instead of re-emitting the stale summary") {
+    val src = java.nio.file.Files.createTempDirectory("graft-shh-reset-src")
+    val state = java.nio.file.Files.createTempDirectory("graft-shh-reset-state")
+    @volatile var emitted = 0
+    def start(ckpt: java.nio.file.Path) = StreamingScoring.heavyHittersStream(
+      spark.readStream.schema("doc_id LONG, text STRING").json(src.toString),
+      state.toString, 4, ckpt.toString, sink = df => { df.collect(); emitted += 1 })
+    def writeDoc(name: String, text: String): Unit =
+      java.nio.file.Files.write(src.resolve(name),
+        s"""{"doc_id":0,"text":"$text"}""".getBytes(UTF_8))
+
+    // two folded batches: the state dir commits batch id 1
+    val q1 = start(java.nio.file.Files.createTempDirectory("graft-shh-reset-ck1"))
+    try {
+      writeDoc("b0.json", "hot hot cold")
+      q1.processAllAvailable()
+      writeDoc("b1.json", "hot warm")
+      q1.processAllAvailable()
+    } finally q1.stop()
+    emitted shouldBe 2
+
+    // a fresh checkpoint restarts batch ids at 0, below the committed 1
+    val q2 = start(java.nio.file.Files.createTempDirectory("graft-shh-reset-ck2"))
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      e.getMessage should include(
+        "StreamingScoring.heavyHittersStream: batch 0 below committed 1")
+    } finally q2.stop()
+    emitted shouldBe 2 // nothing stale reached the sink
+  }
+
   test("continuous count-min: counters fold exactly across batches and restarts, " +
       "estimates never undercount") {
     val src = java.nio.file.Files.createTempDirectory("graft-scm-src")
