@@ -14,7 +14,6 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val spark = graft.Tuning.configure(SparkSession.builder(), 4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

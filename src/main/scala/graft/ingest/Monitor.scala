@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.Path
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.graftshim.Shim.PinSyntax
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -144,7 +145,7 @@ object Monitor {
           Iterator.single(
             (Option(meta), FileChangeRecord(topic, path, delta.offset, delta.bytes)))
         } else {
-          val p = new org.apache.hadoop.fs.Path(uri)
+          val p = new Path(uri)
           // chunked: an oversized delta emits N bounded records with
           // advancing offsets instead of hitting the JVM array bound.
           // The state row rides ONLY the last chunk (finalMeta): a
@@ -258,7 +259,7 @@ object Monitor {
     swap.stage(out.newState)
     out.cleanup()
     val records =
-      if (FsSwap.hasParts(hconf, recordsPath))
+      if (FsSwap.hasParts(new Path(recordsPath).getFileSystem(hconf), recordsPath))
         spark.read.parquet(recordsPath).as[FileChangeRecord]
       else spark.emptyDataset[FileChangeRecord]
     (records, () => swap.publish())

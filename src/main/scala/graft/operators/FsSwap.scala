@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Crash-safe two-generation state at `dir/name`: the ingest poll
@@ -34,7 +34,7 @@ private[graft] final class FsSwap private (conf: Configuration, dir: String,
   /** The current readable generation: the target if present, else the
     * staged old generation (recovery after a crash mid-publish). */
   def readable: Option[String] =
-    Seq(target, old).find(FsSwap.hasParts(conf, _))
+    Seq(target, old).find(FsSwap.hasParts(fs, _))
 
   /** Write `df` as the tmp generation, replacing a crashed attempt's. */
   def stage(df: Dataset[_]): Unit = df.write.mode("overwrite").parquet(tmp)
@@ -97,10 +97,10 @@ private[graft] object FsSwap {
   def spool(conf: Configuration, dir: String, name: String): FsSwap =
     new FsSwap(conf, dir, name, ".parquet")
 
-  /** True when `dir` holds a parquet part (file or subdirectory). */
-  def hasParts(conf: Configuration, dir: String): Boolean = {
+  /** True when `dir` (on `fs`) holds a parquet part (file or
+    * subdirectory). */
+  def hasParts(fs: FileSystem, dir: String): Boolean = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
     fs.exists(p) && fs.listStatus(p)
       .exists(_.getPath.getName.endsWith(".parquet"))
   }

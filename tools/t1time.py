@@ -5,11 +5,13 @@ Sums the `time` of every <testsuite> report, counts its tests and
 failures, and lists the slowest suites, so a change can show what it
 did to the suite's wall budget.
 
-Usage: python3 tools/t1time.py [--top N] [--budget S] [report-dir]
-  (default dir: target/test-reports; default top 10; budget 2670 s)
+Usage: python3 tools/t1time.py [report-dir]   (default: target/test-reports)
 """
-import argparse, glob, os, sys
+import glob, os, sys
 import xml.etree.ElementTree as ET
+
+TOP = 10          # slowest suites listed
+BUDGET_S = 2670   # tier-1 wall budget the summed time is set against
 
 
 def suites(report_dir):
@@ -24,22 +26,17 @@ def suites(report_dir):
     return out
 
 
-def main(argv):
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("dir", nargs="?", default="target/test-reports")
-    ap.add_argument("--top", type=int, default=10)
-    ap.add_argument("--budget", type=float, default=2670.0)
-    a = ap.parse_args(argv)
-    rows = suites(a.dir)
+def main(report_dir):
+    rows = suites(report_dir)
     if not rows:
-        sys.exit(f"no JUnit reports under {a.dir}")
+        sys.exit(f"no JUnit reports under {report_dir}")
     total = sum(r[1] for r in rows)
-    print(f"{total:,.0f} s summed suite time ({100 * total / a.budget:.0f}% of "
-          f"{a.budget:,.0f} s), {sum(r[2] for r in rows)} tests, "
+    print(f"{total:,.0f} s summed suite time ({100 * total / BUDGET_S:.0f}% of "
+          f"{BUDGET_S:,} s), {sum(r[2] for r in rows)} tests, "
           f"{sum(r[3] for r in rows)} failed, {len(rows)} suites")
-    for name, secs, tests, _ in sorted(rows, key=lambda r: -r[1])[:a.top]:
+    for name, secs, tests, _ in sorted(rows, key=lambda r: -r[1])[:TOP]:
         print(f"  {secs:8.1f} s  {tests:4d} tests  {name}")
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    main(sys.argv[1] if len(sys.argv) > 1 else "target/test-reports")
